@@ -2,7 +2,7 @@ package graft
 
 import graft.fixtures.TranscriptGen
 import graft.pipeline.ExtractionPipeline
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.Files
 
@@ -31,6 +31,17 @@ object Bench {
       Some("/dev/shm") else None
   }
 
+  /** zstd effort for shuffle blocks; stamped into bench.json as
+    * `zstd_level`.
+    */
+  private val ZstdLevel = 3
+
+  /** Parallelism of the battery and the high scaling leg:
+    * `SPARK_GRAFT_CPUS`, else the host's processor count.
+    */
+  def configuredCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   private def session(cores: Int): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cores]")
@@ -52,8 +63,7 @@ object Bench {
       // parity on this box — compression CPU scales with cores, bytes
       // through the (non-scaling) memory bus and a real cluster's
       // network do not; A/B numbers in BASELINE.md
-      .config("spark.io.compression.zstd.level",
-        sys.env.getOrElse("SPARK_GRAFT_ZSTD_LEVEL", "3"))
+      .config("spark.io.compression.zstd.level", ZstdLevel.toString)
     val withLocal = shm.fold(b)(d => b.config("spark.local.dir", s"$d/graft-spark-local"))
     val s = withLocal.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
@@ -202,9 +212,57 @@ object Bench {
       case c => c.toString
     } + "\""
 
+  /** One battery pass over `queries`: seconds for each query that ran,
+    * and `name → reason` for each that threw. A failed query gets no
+    * time — a throw is not a fast run.
+    */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame])
+      : (Map[String, Double], Map[String, String]) = {
+    val times = Map.newBuilder[String, Double]
+    val failures = Map.newBuilder[String, String]
+    queries.foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val failure =
+        try { fn(spark, sfDir).count(); None }
+        catch { case e: Throwable => Some(e.toString.take(200)) }
+      // cached intermediates (hybrid funnel, minhash, jaccard) are scoped
+      // to their query — drop them so the battery's footprint is flat
+      spark.catalog.clearCache()
+      // sweep query-scoped checkpoints + fail on genuine leaks — the
+      // same contract the Verify gate enforces
+      graft.queries.PersistGuard.assertClean(spark, s"bench query $name")
+      failure match {
+        case Some(reason) => failures += name -> reason
+        case None => times += name -> (System.nanoTime() - t0) / 1e9
+      }
+    }
+    (times.result(), failures.result())
+  }
+
+  /** The battery phase: the cold pass's total, each query's MIN over
+    * the warm passes, and `name → reason` for every query that threw in
+    * any pass (its first reason). A failed query is left out of both
+    * timings.
+    */
+  private[graft] final case class Battery(
+      coldTotal: Double, mins: Map[String, Double], failures: Map[String, String])
+
+  private[graft] def runBattery(spark: SparkSession, sfDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame], warmReps: Int): Battery = {
+    require(warmReps >= 1, s"warmReps must be positive, got $warmReps")
+    val passes = (0 to warmReps).map(_ => timeQueries(spark, sfDir, queries))
+    val failures = passes.reverse.flatMap(_._2).toMap
+    val ok = queries.keySet -- failures.keySet
+    Battery(
+      passes.head._1.filter { case (q, _) => ok(q) }.values.sum,
+      ok.map(q => q -> passes.tail.map(_._1(q)).min).toMap,
+      failures)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = configuredCpus
     val lowCpus = math.max(1, cpus / 4)
     // transcripts sized so the low-parallelism leg runs tens of seconds
     // (sf0.1 → ~4k convs ≈ ~40k turns incl. mega-conversations)
@@ -235,18 +293,6 @@ object Bench {
     // battery's consumers, exactly as the Verify gate runs them
     // (values unchanged — SharedIntermediatesSpec)
     if (!sys.env.contains("SPARK_GRAFT_NO_SHARE")) graft.queries.Shared.enable()
-    def runBattery(): Map[String, Double] =
-      SparkEntry.queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        // cached intermediates (hybrid funnel, minhash, jaccard) are scoped
-        // to their query — drop them so the battery's footprint is flat
-        spark.catalog.clearCache()
-        // sweep query-scoped checkpoints + fail on genuine leaks — the
-        // same contract the Verify gate enforces
-        graft.queries.PersistGuard.assertClean(spark, s"bench query $name")
-        name -> (System.nanoTime() - t0) / 1e9
-      }
     // Machine-calibration stamps BRACKET the battery (VERDICT r3 #1a):
     // a short full-width ALU burst before and after, so the artifact
     // itself shows whether the battery ran inside a steal window (r3's
@@ -263,17 +309,14 @@ object Bench {
     // a per-row cost, and the min is the steal-resistant statistic
     // (VERDICT r3 #1a: one pass cannot tell a steal burst from a plan
     // regression).
+    // A query that throws is recorded under "query_failures" and fails
+    // the run once the artifact is written.
     val warmReps = sys.env.getOrElse("SPARK_GRAFT_QUERY_REPS", "2").toInt
-    val (coldTotal, results) =
-      if (sys.env.contains("SPARK_GRAFT_SKIP_QUERIES")) (0.0, Map.empty[String, Double])
-      else {
-        val cold = runBattery()
-        val warms = (1 to warmReps).map(_ => runBattery())
-        val mins = warms.head.keys.map { q =>
-          q -> warms.map(_(q)).min
-        }.toMap
-        (cold.values.sum, mins)
-      }
+    val Battery(coldTotal, results, failures) =
+      if (sys.env.contains("SPARK_GRAFT_SKIP_QUERIES")) Battery(0.0, Map.empty, Map.empty)
+      else runBattery(spark, sfDir, SparkEntry.queries, warmReps)
+    val failuresJson = failures.toSeq.sorted
+      .map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }.mkString("{", ",", "}")
     val calAfter = if (sys.env.contains("SPARK_GRAFT_SKIP_QUERIES")) 0.0 else calStamp()
     graft.queries.Shared.disable() // battery-scoped; the scaling legs don't use it
 
@@ -295,6 +338,7 @@ object Bench {
           s""""battery_cal_after_gops":${f"$calAfter%.2f"},""" +
           s""""query_warm_reps":$warmReps,""" +
           s""""queries_total_sec":${f"${results.values.sum}%.2f"},""" +
+          s""""query_failures":$failuresJson,""" +
           s""""queries_cold_total_sec":${f"$coldTotal%.2f"}$fields}""" + "\n")
           .getBytes("UTF-8"))
     }
@@ -353,11 +397,7 @@ object Bench {
       val outDir = s"$base/out-$cores-$rep"
       val t1 = System.nanoTime()
       val stats = ExtractionPipeline.run(s, turns,
-        ExtractionPipeline.Config(outDir, nBuckets = 256, waves = 1, resume = false,
-          // SPARK_GRAFT_MAPSIDE=1: A/B leg for the round-3 byte-diet
-          // measurement (map-side extraction — measured negative, see
-          // Config.mapSideExtract)
-          mapSideExtract = sys.env.getOrElse("SPARK_GRAFT_MAPSIDE", "0") == "1"))
+        ExtractionPipeline.Config(outDir, nBuckets = 256, waves = 1, resume = false))
       val fullTps = stats.turns / ((System.nanoTime() - t1) / 1e9)
       s.stop() // flushes the listener bus before we read the meter
       deleteRecursive(outDir) // keep tmpfs usage bounded across reps
@@ -507,7 +547,7 @@ object Bench {
       s""""compute_turns_per_sec_high":${f"$cThrHigh%.1f"},""" +
       s""""compute_scaling_efficiency":${f"$computeEfficiency%.3f"},""" +
       s""""shuffle_write_bytes_per_turn":${f"$shufPerTurn%.1f"},""" +
-      s""""zstd_level":${sys.env.getOrElse("SPARK_GRAFT_ZSTD_LEVEL", "3")},""" +
+      s""""zstd_level":$ZstdLevel,""" +
       s""""reps_interleaved_best_of":$reps,""" +
       s""""paired_efficiency_per_rep":[${pairedEffs.map(e => f"$e%.3f").mkString(",")}],""" +
       s""""paired_efficiency_median":${f"$pairedMedian%.3f"},""" +
@@ -523,6 +563,7 @@ object Bench {
       s""""battery_cal_after_gops":${f"$calAfter%.2f"},""" +
       s""""query_warm_reps":$warmReps,""" +
       s""""queries_total_sec":${f"$queriesSec%.2f"},""" +
+      s""""query_failures":$failuresJson,""" +
       s""""queries_cold_total_sec":${f"$coldTotal%.2f"}}"""
 
     // the metrics JSON is the SOLE content of a fixed, well-known file so
@@ -536,6 +577,11 @@ object Bench {
     // tmpfs hygiene: RAM-backed scratch does not outlive the bench
     (Seq(base, "/dev/shm/cluster-probe-transcripts") ++
       shm.map(d => s"$d/graft-spark-local")).foreach(deleteRecursive)
+
+    if (failures.nonEmpty)
+      throw new IllegalStateException(
+        s"${failures.size} battery queries failed (see query_failures in target/bench.json): " +
+          failures.keys.toSeq.sorted.mkString(", "))
   }
 
   private def deleteRecursive(dir: String): Unit = {

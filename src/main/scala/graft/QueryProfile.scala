@@ -9,6 +9,8 @@ import org.apache.spark.sql.SparkSession
   * reps is the steal-free signal.
   *
   * Usage: runMain graft.QueryProfile <sfDir> [q_a,q_b,...] [reps]
+  * Parallelism is `Bench`'s: `SPARK_GRAFT_CPUS`, else the host's
+  * processor count.
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
@@ -17,11 +19,12 @@ object QueryProfile {
       if (args.length > 1 && args(1).nonEmpty) args(1).split(",").toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val reps = if (args.length > 2) args(2).toInt else 3
+    val cpus = Bench.configuredCpus
 
     val spark = SparkSession.builder()
-      .master("local[32]")
+      .master(s"local[$cpus]")
       .appName("graft-query-profile")
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")

@@ -18,8 +18,9 @@ import org.apache.spark.sql.types._
   * expansion itself (N·d rows built, hashed, and probed per round) was
   * the CPU cost, and per-dimension `(cell, i)` keys + sum/count pairs
   * made the partial buffers ~2.4× the bytes of this aggregate's packed
-  * d+1-double buffer (measured in `probe/CentroidPerf`: 2.0 vs 5.0 MiB
-  * shuffled at N=10⁶, d=64, k=64; wall 8.0 vs 11.5 s/round at k=512).
+  * d+1-double buffer (BASELINE.md, Lloyd-round shuffle diet: 2.0 vs
+  * 5.0 MiB shuffled at N=10⁶, d=64, k=64; wall 8.0 vs 11.5 s/round at
+  * k=512).
   * Arithmetic is unchanged: per dimension the same doubles are added in
   * the same within-partition row order, and the final mean divides by
   * the same count (`VectorIndexSpec` pins centroid equality against

@@ -76,10 +76,7 @@ object Catalog {
     kept.write.mode(SaveMode.Overwrite).parquet(tmp)
     val src = java.nio.file.Paths.get(tmp)
     val dst = java.nio.file.Paths.get(catalogDir(outDir))
-    import scala.jdk.CollectionConverters._
-    scala.util.Using.resource(java.nio.file.Files.walk(dst))(
-      _.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.toVector)
-      .foreach(java.nio.file.Files.delete)
+    TableIO.deleteTree(dst)
     java.nio.file.Files.move(src, dst)
   }
 }

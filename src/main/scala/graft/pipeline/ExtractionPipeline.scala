@@ -72,21 +72,7 @@ object ExtractionPipeline {
       overlap: Int = Chunker.DefaultOverlap,
       resume: Boolean = true,
       mode: ChunkMode = ChunkFlat,
-      maxPayloadChars: Int = Extractor.DefaultMaxPayloadChars,
-      // Extract BEFORE the salted exchange (map-side), so the shuffle
-      // ships boilerplate-STRIPPED text instead of raw payloads.
-      // Extraction is per-turn pure, so outputs are bit-identical either
-      // side of the shuffle (`ExtractionPipelineSpec`); the post-shuffle
-      // sort fixes the within-bucket (conv_id, turn_idx) write order
-      // either way. MEASURED NEGATIVE on the bench mix (60% plain /
-      // 25% html / 15% pdf), hence default FALSE: the extracted rows'
-      // span/label/block arrays add MORE compressed shuffle bytes than
-      // the stripped boilerplate removes — 385.0 vs 357.5 B/turn at
-      // zstd-1, with no throughput win (80.3k vs 86.5k turns/s @32,
-      // within host noise). The flag stays for corpora where markup
-      // dominates (boilerplate-heavy html crawls), where the sign
-      // flips; numbers in BASELINE.md.
-      mapSideExtract: Boolean = false) {
+      maxPayloadChars: Int = Extractor.DefaultMaxPayloadChars) {
     require(outDir.nonEmpty, "outDir must be non-empty")
     require(nBuckets >= 1, s"nBuckets must be positive, got $nBuckets")
     require(waves >= 1, s"waves must be positive, got $waves")
@@ -272,7 +258,9 @@ object ExtractionPipeline {
     }
   }
 
-  /** Per-turn chunkers shared by the map-side and reduce-side layouts. */
+  /** Per-turn chunkers, one per chunk-mode family, run on each extracted
+    * turn inside the post-sort mapPartitions.
+    */
   private def flatChunks(e: ExtractedTurn, size: Int, ov: Int): Array[ChunkLite] =
     Chunker.splitTextWithOverlap(e.text, size, ov).zipWithIndex
       .map { case (c, i) => ChunkLite(i, c.content, c.start, c.end) }.toArray
@@ -284,18 +272,6 @@ object ExtractionPipeline {
       else Chunker.chunkWithStructure(blocks, size, ov)
     cs.map(sc => StructChunkLite(sc.chunkIndex, sc.content, sc.page,
       sc.sectionBoundary, sc.sectionHeading.getOrElse(""))).toArray
-  }
-
-  private val PhaseLog = sys.env.contains("SPARK_GRAFT_PHASE_LOG")
-
-  @inline private def phase[A](name: String)(f: => A): A = {
-    if (!PhaseLog) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[phase] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
   }
 
   /** Delete bucket directories NOT referenced by the manifest — the
@@ -317,23 +293,9 @@ object ExtractionPipeline {
             !b.exists(manifest.isDone)
           }
           .toVector)
-        orphans.foreach { d =>
-          scala.util.Using.resource(Files.walk(d))(
-            _.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.toVector)
-            .foreach(Files.delete)
-        }
+        orphans.foreach(TableIO.deleteTree)
       }
     }
-  }
-
-  private def deleteDir(dir: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val p = Paths.get(dir)
-    if (Files.exists(p))
-      scala.util.Using.resource(Files.walk(p))(
-        _.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.toVector)
-        .foreach(Files.delete)
   }
 
   /** Run (or resume) the full job. Returns aggregate stats. */
@@ -343,12 +305,13 @@ object ExtractionPipeline {
     val manifest0 = if (cfg.resume) TableIO.read(cfg.outDir) else {
       TableIO.clear(cfg.outDir)
       Seq(extractedDir(cfg.outDir), chunksDir(cfg.outDir),
-        lineageDir(cfg.outDir), metricsDir(cfg.outDir)).foreach(deleteDir)
+        lineageDir(cfg.outDir), metricsDir(cfg.outDir))
+        .foreach(d => TableIO.deleteTree(java.nio.file.Paths.get(d)))
       TableIO.Empty
     }
     cleanupOrphans(cfg.outDir, manifest0)
     val doneAtStart = manifest0.completed.keySet
-    val bucketed = phase("skew-prepass+bucket")(withBucket(turns, cfg.nBuckets))
+    val bucketed = withBucket(turns, cfg.nBuckets)
 
     var manifest = manifest0
     var totTurns = 0L
@@ -376,23 +339,27 @@ object ExtractionPipeline {
         // 2-3× straggler that caps the whole stage)
         val nPart = math.max(shufflePartitions, waveBuckets.size).max(1)
 
-        // SINGLE-PASS extract+chunk: the chunker runs inside the same job
-        // as extraction (same mapPartitions when reduce-side; the
-        // post-shuffle stage when map-side) and its output rides along as
-        // an array column WRITTEN WITH the extracted table; the chunks table
-        // is then exploded out of a column-pruned read-back of just that
-        // array column. Compared to the two alternatives measured on this
-        // box: (a) re-chunking from a full read-back re-decodes the text
-        // column and re-runs the chunker per wave; (b) persist() between
-        // the writes pushes ~2× the wave's bytes through the in-memory
-        // columnar cache — memory bandwidth is the binding resource at
-        // high core counts, and (b) measurably collapses the N→4N scaling
-        // of the whole stage. Carrying chunks as a column costs ~1.1×
-        // extracted-table storage and nothing else; the explode pass
-        // decodes ONLY (keys, chunks, bucket). Crash-safety is unchanged:
-        // neither table's buckets enter the manifest until the commit
-        // below, and the chunks column also gives resumed/structured runs
-        // their chunk provenance for free.
+        // SINGLE-PASS extract+chunk: raw turns ride the exchange, then
+        // extraction and chunking run fused in ONE post-sort mapPartitions
+        // (lineage pid = the reduce partition that did the work). The
+        // chunker's output rides along as an array column WRITTEN WITH
+        // the extracted table; the chunks table is then exploded out of a
+        // column-pruned read-back of just that array column. Compared to
+        // the alternatives measured on this box: (a) re-chunking from a
+        // full read-back re-decodes the text column and re-runs the
+        // chunker per wave; (b) persist() between the writes pushes ~2×
+        // the wave's bytes through the in-memory columnar cache — memory
+        // bandwidth is the binding resource at high core counts, and (b)
+        // measurably collapses the N→4N scaling of the whole stage;
+        // (c) extracting BEFORE the exchange ships more compressed
+        // shuffle bytes, not fewer — the extracted rows' span/label/block
+        // arrays outweigh the stripped boilerplate (BASELINE.md). Carrying
+        // chunks as a column costs ~1.1× extracted-table storage and
+        // nothing else; the explode pass decodes ONLY (keys, chunks,
+        // bucket). Crash-safety is unchanged: neither table's buckets
+        // enter the manifest until the commit below, and the chunks
+        // column also gives resumed/structured runs their chunk
+        // provenance for free.
         val chunkSize = cfg.chunkSize
         val overlap = cfg.overlap
         val maxPayload = cfg.maxPayloadChars
@@ -404,66 +371,37 @@ object ExtractionPipeline {
               col("c.section_boundary"), col("c.section_heading"))
         }
 
-        val withChunks = if (cfg.mapSideExtract) {
-          // MAP-SIDE extraction: strip boilerplate BEFORE the exchange —
-          // the shuffle carries extracted text + spans, not raw payloads
-          // (A/B'd on the bench input, numbers in BASELINE.md). Chunking
-          // stays post-shuffle so the chunks array (~1.1× text) never
-          // rides the exchange. Lineage pid = INPUT partition here (the
-          // stage that did the extraction work — the lineage contract).
-          val extracted = waveRaw.as[TurnWithBucket]
-            .mapPartitions(it => extractPartition(it, acc, maxPayload))
-            .repartition(nPart, col("bucket"))
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .as[ExtractedTurn]
-          cfg.mode match {
-            case ChunkFlat =>
-              extracted.mapPartitions(_.map(e => (e, flatChunks(e, chunkSize, overlap))))
-                .toDF("e", "chunks")
-            case m =>
-              extracted.mapPartitions(_.map(e =>
-                (e, structChunks(e, chunkSize, overlap, m == ChunkCharSlice))))
-                .toDF("e", "chunks")
-          }
-        } else {
-          // reduce-side layout (the round-2 shape): raw turns shuffle,
-          // extract+chunk fused in ONE post-sort mapPartitions
-          val waveDf = waveRaw
-            .repartition(nPart, col("bucket"))
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .as[TurnWithBucket]
-          cfg.mode match {
-            case ChunkFlat =>
-              waveDf.mapPartitions { it =>
-                extractPartition(it, acc, maxPayload)
-                  .map(e => (e, flatChunks(e, chunkSize, overlap)))
-              }.toDF("e", "chunks")
-            case m =>
-              waveDf.mapPartitions { it =>
-                extractPartition(it, acc, maxPayload)
-                  .map(e => (e, structChunks(e, chunkSize, overlap, m == ChunkCharSlice)))
-              }.toDF("e", "chunks")
-          }
+        val waveDf = waveRaw
+          .repartition(nPart, col("bucket"))
+          .sortWithinPartitions("conv_id", "turn_idx")
+          .as[TurnWithBucket]
+        val withChunks = cfg.mode match {
+          case ChunkFlat =>
+            waveDf.mapPartitions { it =>
+              extractPartition(it, acc, maxPayload)
+                .map(e => (e, flatChunks(e, chunkSize, overlap)))
+            }.toDF("e", "chunks")
+          case m =>
+            waveDf.mapPartitions { it =>
+              extractPartition(it, acc, maxPayload)
+                .map(e => (e, structChunks(e, chunkSize, overlap, m == ChunkCharSlice)))
+            }.toDF("e", "chunks")
         }
 
-        phase("extract+write") {
-          withChunks.select(col("e.*"), col("chunks")).write
-            .mode(SaveMode.Append)
-            .partitionBy("bucket")
-            .parquet(extractedDir(cfg.outDir))
-        }
+        withChunks.select(col("e.*"), col("chunks")).write
+          .mode(SaveMode.Append)
+          .partitionBy("bucket")
+          .parquet(extractedDir(cfg.outDir))
 
-        phase("chunk+write") {
-          spark.read.parquet(extractedDir(cfg.outDir))
-            .filter(col("bucket").isin(waveBuckets.map(Integer.valueOf): _*))
-            .select(col("conv_id"), col("turn_idx"),
-              col("bucket").cast("int").as("bucket"), explode(col("chunks")).as("c"))
-            .select(col("conv_id") +: col("turn_idx") +: chunkCols :+ col("bucket"): _*)
-            .write
-            .mode(SaveMode.Append)
-            .partitionBy("bucket")
-            .parquet(chunksDir(cfg.outDir))
-        }
+        spark.read.parquet(extractedDir(cfg.outDir))
+          .filter(col("bucket").isin(waveBuckets.map(Integer.valueOf): _*))
+          .select(col("conv_id"), col("turn_idx"),
+            col("bucket").cast("int").as("bucket"), explode(col("chunks")).as("c"))
+          .select(col("conv_id") +: col("turn_idx") +: chunkCols :+ col("bucket"): _*)
+          .write
+          .mode(SaveMode.Append)
+          .partitionBy("bucket")
+          .parquet(chunksDir(cfg.outDir))
 
         // lineage rows for this wave (executor-measured wall clock);
         // dedupe by (bucket, partition) — task retries/speculation could
@@ -471,12 +409,11 @@ object ExtractionPipeline {
         val lineageRows = acc.value.asScala.toSeq
           .groupBy(l => (l.bucket, l.partition_id))
           .map { case (_, ls) => ls.maxBy(_.wall_ms) }.toSeq
-        if (lineageRows.nonEmpty) phase("lineage-write") {
+        if (lineageRows.nonEmpty)
           spark.createDataset(lineageRows)
             .withColumn("wave", lit(wave))
             .coalesce(1)
             .write.mode(SaveMode.Append).parquet(lineageDir(cfg.outDir))
-        }
 
         val byBucket = lineageRows.groupBy(_.bucket)
         val entries = waveBuckets.map { b =>
@@ -498,9 +435,7 @@ object ExtractionPipeline {
         doneAtStart.size, cfg.nBuckets)))
       .toDF("snapshot_id", "turns", "bytes_parsed", "wall_ms",
         "turns_per_sec", "buckets_skipped", "n_buckets")
-    phase("metrics-write") {
-      metrics.coalesce(1).write.mode(SaveMode.Append).parquet(metricsDir(cfg.outDir))
-    }
+    metrics.coalesce(1).write.mode(SaveMode.Append).parquet(metricsDir(cfg.outDir))
 
     RunStats(cfg.nBuckets, doneAtStart.size, totTurns, totBytes, wallMs)
   }

@@ -226,10 +226,7 @@ object Ingestion {
     kept.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
     val src = java.nio.file.Paths.get(tmp)
     val dst = java.nio.file.Paths.get(embeddingsDir(outDir))
-    import scala.jdk.CollectionConverters._
-    scala.util.Using.resource(java.nio.file.Files.walk(dst))(
-      _.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.toVector)
-      .foreach(java.nio.file.Files.delete)
+    TableIO.deleteTree(dst)
     java.nio.file.Files.move(src, dst)
 
     // chunk ids are conv_id:turn_idx:chunk_index — derive the doomed set

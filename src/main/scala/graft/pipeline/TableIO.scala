@@ -160,6 +160,16 @@ object TableIO {
     expire
   }
 
+  /** Delete `p` and everything under it, children first; a missing `p`
+    * is a no-op. An entry that vanished between the walk and its delete
+    * is skipped; every other IO error propagates.
+    */
+  def deleteTree(p: Path): Unit =
+    if (Files.exists(p))
+      scala.util.Using.resource(Files.walk(p))(
+        _.sorted(java.util.Comparator.reverseOrder[Path]()).iterator().asScala.toVector)
+        .foreach(Files.deleteIfExists(_))
+
   def clear(tableDir: String): Unit = {
     val p = manifestPath(tableDir)
     if (Files.exists(p)) Files.delete(p)

@@ -58,9 +58,13 @@ object PersistGuard {
     * correctness is unaffected and the storage memory is freed, which
     * is the leak that mattered.
     *
-    * Consume the result inside the bracket: the returned frame's
-    * persisted intermediates are gone once `scoped` returns, so a lazy
-    * `DataFrame` escaping the bracket recomputes them on first action.
+    * Consume the result inside the bracket — for some queries that is
+    * a hard requirement, not a performance note. Once `scoped` returns,
+    * the body's blocks are gone. A lazy `DataFrame` escaping the bracket
+    * recomputes intermediates that were plain `persist`s, but one that
+    * depends on a `localCheckpoint` FAILS on its first action: the
+    * checkpoint truncated its lineage, so the released blocks cannot be
+    * rebuilt.
     */
   def scoped[T](s: SparkSession)(body: SparkSession => T): T = {
     val before = s.sparkContext.getPersistentRDDs.keySet

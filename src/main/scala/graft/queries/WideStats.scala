@@ -20,11 +20,13 @@ import org.apache.spark.sql.types.DataTypes
   * with ANSI off — while DuckDB's native HUGEINT promotion just keeps
   * going. With the knob ON, every moment sum and
   * final product computes as DECIMAL(38,0) in Spark — exactness to
-  * 10³⁸, same plan shape (one extra cast inside the hash aggregate) —
-  * and the paired oracle simply drops its `CAST(... AS BIGINT)`
-  * clamps, riding DuckDB's HUGEINT. Values are identical on both paths
-  * below the bound, and the wide path stays exact above it
-  * (`WideStatsSpec` pins both sides).
+  * 10³⁸, same plan shape (one extra cast inside the hash aggregate).
+  * Values are identical on both Spark paths below the bound, and the
+  * wide path stays exact above it (`WideStatsSpec` pins both sides).
+  * The paired DuckDB SQL twins do NOT follow the knob: they hard-code
+  * their `CAST(... AS BIGINT)` clamps, so Spark/oracle parity holds
+  * only below the bound. An oracle check above it needs those clamps
+  * dropped by hand (DuckDB's HUGEINT then carries the exact value).
   *
   * Knob: `SPARK_GRAFT_DECIMAL38=1` (env — the 100 TB operator's
   * switch), or `withWide(true) { ... }` (scoped — specs). Default OFF:

@@ -99,8 +99,8 @@ object VectorIndex {
       // d+1-double buffer in one tight loop — no row expansion, no
       // per-dimension keys, and ~2.4× fewer shuffle bytes (measured:
       // 2.0 vs 5.0 MiB at N=10⁶, d=64, k=64; wall 8.0 vs 11.5 s at
-      // k=512 — probe/CentroidPerf). Same adds in the same
-      // within-partition row order, same final sum/count division
+      // k=512 — BASELINE.md, Lloyd-round shuffle diet). Same adds in
+      // the same within-partition row order, same final sum/count division
       // (avg's own arithmetic), so centroids are unchanged
       // (VectorIndexSpec pins equality vs the relational form).
       // null/empty embeddings contribute nothing, exactly as the old

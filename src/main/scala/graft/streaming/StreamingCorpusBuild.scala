@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.model.Turn
+import graft.pipeline.TableIO.deleteTree
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -85,13 +86,6 @@ object StreamingCorpusBuild {
 
   private def committed(buildDir: String, batchId: Long): Boolean =
     Files.exists(stateDir(buildDir).resolve(s"v$batchId.json"))
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      scala.util.Using.resource(Files.walk(p))(
-        _.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().asScala.foreach(Files.deleteIfExists(_)))
-    }
 
   /** Process one micro-batch. Public so specs (and [[foreachBatch]]
     * replays) can drive it directly; idempotent by batch id.

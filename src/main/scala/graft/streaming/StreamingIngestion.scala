@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.model.Turn
 import graft.pipeline.{ExtractionPipeline, Ingestion}
+import graft.pipeline.TableIO.deleteTree
 import graft.retrieval.Bm25IndexTables
 import graft.text.Chunker
 import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
@@ -82,14 +83,6 @@ object StreamingIngestion {
   final case class BatchChunk(
       conv_id: String, turn_idx: Int, chunk_index: Int, content: String,
       start: Int, end: Int, embedding: Array[Float], bucket: Int)
-
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p))
-      scala.util.Using.resource(Files.walk(p))(
-        _.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.toVector)
-        .foreach(Files.delete)
-  }
 
   /** Crash-safe marker write: tmp file + atomic rename, so a reader (or
     * [[recover]]) never parses a torn/truncated marker as a valid one.

@@ -45,30 +45,6 @@ class ExtractionPipelineSpec extends AnyFunSuite {
     assert(ca.exceptAll(cb).isEmpty && cb.exceptAll(ca).isEmpty)
   }
 
-  test("map-side and reduce-side extraction layouts write identical tables") {
-    // the byte-diet A/B's correctness leg: extraction and chunking are
-    // per-turn pure, so which side of the salted exchange they run on
-    // must never show in the output — only in the shuffle-byte meter
-    val turns = TranscriptGen.transcripts(spark, nConvs = 30, numPartitions = 4)
-    val outM = tmp()
-    val outR = tmp()
-    ExtractionPipeline.run(spark, turns, ExtractionPipeline.Config(
-      outM, nBuckets = 8, waves = 2, resume = false, mapSideExtract = true))
-    ExtractionPipeline.run(spark, turns, ExtractionPipeline.Config(
-      outR, nBuckets = 8, waves = 2, resume = false, mapSideExtract = false))
-    val cols = Seq("conv_id", "turn_idx", "kind", "text", "skip_reason",
-      "bytes_parsed", "bucket").map(col)
-    val a = spark.read.parquet(ExtractionPipeline.extractedDir(outM)).select(cols: _*)
-    val b = spark.read.parquet(ExtractionPipeline.extractedDir(outR)).select(cols: _*)
-    assert(a.count() == b.count())
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    val ccols = Seq("conv_id", "turn_idx", "chunk_index", "content",
-      "start", "end").map(col)
-    val ca = spark.read.parquet(ExtractionPipeline.chunksDir(outM)).select(ccols: _*)
-    val cb = spark.read.parquet(ExtractionPipeline.chunksDir(outR)).select(ccols: _*)
-    assert(ca.exceptAll(cb).isEmpty && cb.exceptAll(ca).isEmpty)
-  }
-
   test("every input turn appears exactly once in the output") {
     import spark.implicits._
     val turns = TranscriptGen.transcripts(spark, nConvs = 20, numPartitions = 3)

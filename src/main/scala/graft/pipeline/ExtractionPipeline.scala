@@ -6,6 +6,7 @@ import graft.text.Chunker
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 import org.apache.spark.util.CollectionAccumulator
 
 import scala.collection.mutable
@@ -91,6 +92,14 @@ object ExtractionPipeline {
   def chunksDir(outDir: String): String = s"$outDir/chunks"
   def lineageDir(outDir: String): String = s"$outDir/lineage"
   def metricsDir(outDir: String): String = s"$outDir/metrics"
+
+  /** The chunks-table columns a reader of content reads, typed as [[run]]
+    * writes them in every chunking mode. A declared read schema spares the
+    * per-read schema-inference job.
+    */
+  val ChunksReadSchema: StructType = new StructType()
+    .add("conv_id", StringType).add("turn_idx", IntegerType)
+    .add("chunk_index", IntegerType).add("content", StringType)
 
   /** Time-travel read of an output table as of manifest snapshot `id`:
     * buckets are written once and committed append-only, so filtering

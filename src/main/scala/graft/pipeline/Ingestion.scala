@@ -4,6 +4,7 @@ import graft.model.ChunkEmbedding
 import graft.retrieval.Bm25IndexTables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StringType, StructType}
 
 /** Post-extraction ingestion stages completing the reference's upload
   * lifecycle (`app/services/document_service.py:173-355`: UPLOADED →
@@ -32,6 +33,15 @@ object Ingestion {
 
   def embeddingsDir(outDir: String): String = s"$outDir/embeddings"
   def indexDir(outDir: String): String = s"$outDir/index"
+
+  /** The embeddings-table columns a vector scorer reads, typed as
+    * [[embedChunks]] and [[add]] write them. A declared read schema spares
+    * the per-read schema-inference job.
+    */
+  val EmbeddingsReadSchema: StructType = new StructType()
+    .add("conv_id", StringType).add("turn_idx", IntegerType)
+    .add("chunk_index", IntegerType)
+    .add("embedding", ArrayType(FloatType))
 
   /** Deterministic hashed-feature embedding: each lowercase whitespace
     * token adds ±1 (hash-chosen sign) at a hash-chosen dimension;

@@ -25,13 +25,16 @@ object VersionedDir {
   /** The next version number a rebuild should write into. */
   def nextVersion(root: String): Long = currentVersion(root).getOrElse(0L) + 1
 
-  /** Resolve a table path inside the current version, or the legacy
-    * unversioned layout when no pointer exists yet.
+  /** The directory holding the current version's tables (`root/v<N>`),
+    * or `root` itself in the legacy unversioned layout (no pointer yet).
     */
-  def tableDir(root: String, table: String): String = currentVersion(root) match {
-    case Some(v) => s"$root/v$v/$table"
-    case None => s"$root/$table"
+  def currentDir(root: String): String = currentVersion(root) match {
+    case Some(v) => s"$root/v$v"
+    case None => root
   }
+
+  /** Resolve a table path inside the current version ([[currentDir]]). */
+  def tableDir(root: String, table: String): String = s"${currentDir(root)}/$table"
 
   /** Atomically point `current` at version `v` (the single-commit flip). */
   def flip(root: String, v: Long): Unit = {

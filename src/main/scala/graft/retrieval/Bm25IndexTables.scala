@@ -1,7 +1,14 @@
 package graft.retrieval
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.text.Tokenizer
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import java.nio.file.{Files, NoSuchFileException, Path, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import scala.jdk.CollectionConverters._
 
 /** The BM25 keyword index persisted as TABLES — the Spark-native
   * re-expression of the reference's JSON-blob index (rafalpronko/
@@ -13,11 +20,17 @@ import org.apache.spark.sql.functions._
   *   - `postings(doc_id, term, tf, dl)` — the inverted index
   *   - `doclens(doc_id, dl)` — row per doc incl. zero-token docs
   *     (they count toward N/avgdl in rank_bm25)
-  * Derived stats (N, avgdl, df, idf) are recomputed by aggregation at
-  * query time from the postings — they're one cheap pass, always
-  * consistent, and never serialized stale (the reference's "corruption
-  * detector" at `bm25_index.py:376-409` exists precisely because its
-  * parallel arrays CAN drift; tables can't).
+  * Derived stats are never serialized, so they cannot go stale (the
+  * reference's "corruption detector" at `bm25_index.py:376-409` exists
+  * precisely because its parallel arrays CAN drift; tables can't). The
+  * three corpus scalars — N, avgdl and the vocabulary's mean raw idf that
+  * the epsilon floor scales — are what rank_bm25 computes once per index
+  * build (`bm25_index.py:229-236`); here they are aggregated once per
+  * index SNAPSHOT and memoized ([[snapshot]]), keyed by the version
+  * directory and every data file's name, length and mtime, so any
+  * build/add/delete/compact moves the key. A question then reads only
+  * its own terms' postings rows: a term's df is its row count among
+  * them, since each postings row is one (doc, term).
   *
   * Maintenance is incremental at partition granularity instead of the
   * reference's full O(corpus) rebuild:
@@ -106,22 +119,117 @@ object Bm25IndexTables {
     gc(indexDir, v)
   }
 
-  /** Score one query against the persisted index — the shared scoring
-    * tail ([[Retrieval.bm25ScoresFromIndex]]) over the stored postings,
-    * with N/avgdl from the doclens table (which keeps zero-token docs,
-    * exactly like [[Retrieval.corpusStats]] over a live corpus).
+  /** The postings columns a scorer reads, typed as [[build]] and [[add]]
+    * write them; the id column keeps the corpus's own type. A declared
+    * read schema spares the per-read schema-inference job.
+    */
+  def postingsReadSchema(idCol: String, idType: DataType): StructType =
+    new StructType().add(idCol, idType).add("dl", IntegerType)
+      .add("term", StringType).add("tf", LongType)
+
+  /** The corpus scalars of one index snapshot, resolved at `dir` (the
+    * version directory): document count (zero-token docs included), mean
+    * document length, and the mean raw Okapi idf over the vocabulary.
+    * `postings` is the snapshot's stored postings schema.
+    */
+  final case class Snapshot(dir: String, nDocs: Long, avgdl: Double,
+      avgIdf: Double, postings: StructType)
+
+  private final case class SnapshotKey(dir: String, files: Vector[(String, Long, Long)])
+
+  private val MemoCapacity = 16
+
+  // access-ordered LRU: a get reorders entries, so every access holds its lock
+  private val memo = new java.util.LinkedHashMap[SnapshotKey, Snapshot](
+      MemoCapacity, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[SnapshotKey, Snapshot]): Boolean = size() > MemoCapacity
+  }
+
+  /** (path under `root`, length, mtime) of every data file below `root`,
+    * sorted. `_`/`.`-prefixed names are skipped before any stat, as
+    * Spark's file index does; an entry that vanishes between listing and
+    * stat (a concurrent append's committer clearing its `_temporary`
+    * files) is skipped, not an error.
+    */
+  private def dataFiles(root: Path): Vector[(String, Long, Long)] = {
+    def walk(dir: Path): Vector[(String, Long, Long)] = {
+      val entries =
+        try { val s = Files.newDirectoryStream(dir); try s.asScala.toVector finally s.close() }
+        catch { case _: NoSuchFileException => Vector.empty }
+      entries.filterNot { p =>
+        val n = p.getFileName.toString
+        n.startsWith("_") || n.startsWith(".")
+      }.flatMap { p =>
+        try {
+          val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+          if (a.isDirectory) walk(p)
+          else Vector((root.relativize(p).toString, a.size(), a.lastModifiedTime().toMillis))
+        } catch { case _: NoSuchFileException => Vector.empty }
+      }
+    }
+    walk(root).sorted
+  }
+
+  /** The current snapshot's corpus scalars, from the memo when the
+    * snapshot's files are unchanged, else aggregated over its tables.
+    */
+  def snapshot(spark: SparkSession, indexDir: String): Snapshot = {
+    val dir = VersionedDir.currentDir(indexDir)
+    // the version directory holds exactly the postings and doclens tables
+    val key = SnapshotKey(dir, dataFiles(Paths.get(dir)))
+    memo.synchronized(Option(memo.get(key))).getOrElse {
+      val post = spark.read.parquet(s"$dir/postings")
+      val stats = spark.read.schema(new StructType().add("dl", IntegerType))
+        .parquet(s"$dir/doclens")
+        .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl")).head()
+      val nDocs = stats.getLong(0)
+      val avgIdf = post.groupBy("term").agg(count(lit(1)).as("df"))
+        .agg(avg(Retrieval.idfRaw(lit(nDocs), col("df")))).head()
+      def orNaN(r: Row, i: Int) = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
+      val snap = Snapshot(dir, nDocs, orNaN(stats, 1), orNaN(avgIdf, 0), post.schema)
+      memo.synchronized(memo.put(key, snap))
+      snap
+    }
+  }
+
+  /** BM25Okapi scores of several queries against the persisted index:
+    * (v, idCol, score), only docs with at least one query term. The
+    * corpus scalars come from [[snapshot]]; the one postings scan reads
+    * only the query terms' rows, and df is counted among them. Same
+    * formula as [[Retrieval.bm25ScoresFromIndex]], without its tf_sum.
+    */
+  def scoreMulti(spark: SparkSession, indexDir: String,
+      queries: Seq[(Int, String)], idCol: String,
+      k1: Double = Retrieval.DefaultK1,
+      b: Double = Retrieval.DefaultB): DataFrame = {
+    val snap = snapshot(spark, indexDir)
+    val qRows = queries.flatMap { case (v, q) =>
+      Tokenizer.tokenize(q).groupBy(identity).map { case (t, os) => (v, t, os.size) }
+    }
+    val idType = snap.postings(idCol).dataType
+    if (qRows.isEmpty)
+      return spark.createDataFrame(java.util.List.of[Row](),
+        new StructType().add("v", IntegerType).add(idCol, idType).add("score", DoubleType))
+    val qDf = spark.createDataFrame(qRows).toDF("v", "term", "qn")
+    spark.read.schema(postingsReadSchema(idCol, idType)).parquet(s"${snap.dir}/postings")
+      .filter(col("term").isin(qRows.map(_._2).distinct: _*))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
+      .withColumn("idf", Retrieval.flooredIdf(
+        Retrieval.idfRaw(lit(snap.nDocs), col("df")), lit(snap.avgIdf)))
+      .join(broadcast(qDf), "term")
+      .withColumn("contrib", Retrieval.bm25Contrib(lit(snap.avgdl), k1, b))
+      .groupBy(col("v"), col(idCol))
+      .agg(sum(col("contrib")).as("score"))
+  }
+
+  /** Score one query against the persisted index: (idCol, score)
+    * ([[scoreMulti]] for a single query).
     */
   def score(spark: SparkSession, indexDir: String, query: String,
       idCol: String, k1: Double = Retrieval.DefaultK1,
-      b: Double = Retrieval.DefaultB): DataFrame = {
-    val post = spark.read.parquet(postingsDir(indexDir))
-    if (graft.text.Tokenizer.tokenize(query).isEmpty)
-      return post.select(col(idCol)).limit(0).withColumn("score", lit(0.0))
-    val stats = spark.read.parquet(doclensDir(indexDir))
-      .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-    Retrieval.bm25ScoresFromIndex(post, stats, idCol, Seq(0 -> query), k1, b)
-      .drop("v")
-  }
+      b: Double = Retrieval.DefaultB): DataFrame =
+    scoreMulti(spark, indexDir, Seq(0 -> query), idCol, k1, b).drop("v")
 
   /** The reference's index invariants (`bm25_index.py:376-409`), as
     * relational assertions. Returns (ok, message).

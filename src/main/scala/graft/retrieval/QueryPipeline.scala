@@ -13,10 +13,19 @@ import org.apache.spark.sql.functions._
   *     → vector top-2k over the `embeddings` table (cosine = dot on unit
   *       vectors; the query vector is a broadcast literal — one narrow
   *       scan, no shuffle on the big side)
-  *     ∥ BM25 top-2k over the postings/doclens index tables
+  *     ∥ BM25 top-2k over the postings index table
   *     → weighted RRF (0.7/0.3, k = 60, `hybrid_search.py:198-202`)
   *     → deterministic tie-break (score desc, chunk_id asc — SURVEY §7.3)
   *     → top-k cut → broadcast join back to chunk content (J6/J3).
+  *
+  * Per question, on an unchanged store: the BM25 corpus scalars (N,
+  * avgdl, mean idf) come from [[Bm25IndexTables.snapshot]]'s memo, the
+  * postings scan pushes `term IN (question terms)` down to the files,
+  * the doclens table is not read, and the postings, embeddings and chunks
+  * tables are read with declared schemas (no schema-inference job). The
+  * ≤ topK answer rows are ordered in one partition (no range-partition
+  * sampling job). The first question after an index write pays for the
+  * scalars' aggregation.
   */
 object QueryPipeline {
 
@@ -43,7 +52,8 @@ object QueryPipeline {
     */
   private def vecSource(spark: SparkSession, outDir: String,
       qv: Array[Float], nprobe: Int): DataFrame = {
-    val emb = () => spark.read.parquet(Ingestion.embeddingsDir(outDir))
+    val emb = () => spark.read.schema(Ingestion.EmbeddingsReadSchema)
+      .parquet(Ingestion.embeddingsDir(outDir))
       .select(chunkId.as("chunk_id"), col("embedding"))
     val base =
       if (VectorIndex.exists(VectorIndex.indexRoot(outDir)))
@@ -71,6 +81,21 @@ object QueryPipeline {
     require(topK >= 1 && topK <= MaxTopK,
       s"top_k must be in [1, $MaxTopK], got $topK")
 
+  /** Attach content (J6) to the fused ≤ topK answer rows (broadcast side)
+    * and order them in one partition: an `orderBy` would plan a range
+    * exchange, whose bounds cost a sampling job. `coalesce(1)` is not an
+    * option — it would run the chunks scan as one task.
+    */
+  private def withContent(spark: SparkSession, outDir: String,
+      fused: DataFrame): DataFrame =
+    spark.read.schema(ExtractionPipeline.ChunksReadSchema)
+      .parquet(ExtractionPipeline.chunksDir(outDir))
+      .select(chunkId.as("chunk_id"), col("conv_id"), col("turn_idx"),
+        col("chunk_index"), col("content"))
+      .join(broadcast(fused), "chunk_id")
+      .repartition(1)
+      .sortWithinPartitions(desc("rrf_score"), col("chunk_id"))
+
   def query(spark: SparkSession, outDir: String, question: String,
       topK: Int = 10, dim: Int = Ingestion.DefaultDim,
       nprobe: Int = VectorIndex.DefaultNprobe): DataFrame = {
@@ -95,12 +120,7 @@ object QueryPipeline {
       .orderBy(desc("rrf_score"), col("chunk_id"))
       .limit(topK)
 
-    // attach content (J6) — the fused side is ≤ topK rows, broadcast it
-    val chunks = spark.read.parquet(ExtractionPipeline.chunksDir(outDir))
-      .select(chunkId.as("chunk_id"), col("conv_id"), col("turn_idx"),
-        col("chunk_index"), col("content"))
-    chunks.join(broadcast(fused), "chunk_id")
-      .orderBy(desc("rrf_score"), col("chunk_id"))
+    withContent(spark, outDir, fused)
   }
 
   val RerankFetch = 20 // rerank_k * 2 per variation (query_service.py:259)
@@ -117,9 +137,10 @@ object QueryPipeline {
     * chunk vectors) → unweighted RRF re-fusion → top-k → content join.
     *
     * Scale shape: BM25 for ALL variations comes from one pass over the
-    * postings tables (multi-query scoring tail — one shuffle total, not
-    * one per variation); the vector side is per-variation [[vecSource]]
-    * calls (IVF probe, PQ scan+rerank, or brute scan by index presence);
+    * postings rows of their terms ([[Bm25IndexTables.scoreMulti]] — one
+    * scoring plan, not one per variation); the vector side is
+    * per-variation [[vecSource]] calls (IVF probe, PQ scan+rerank, or
+    * brute scan by index presence);
     * the rerank joins the big embeddings table once against the
     * broadcast ≤3·RerankFetch candidate pool.
     */
@@ -131,13 +152,8 @@ object QueryPipeline {
     val variations = (question +: expansions).distinct
 
     // keyword scores for every variation from ONE postings pass
-    val post = spark.read.parquet(
-      Bm25IndexTables.postingsDir(Ingestion.indexDir(outDir)))
-    val stats = spark.read.parquet(
-      Bm25IndexTables.doclensDir(Ingestion.indexDir(outDir)))
-      .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-    val kwAll = Retrieval.bm25ScoresFromIndex(post, stats, "chunk_id",
-      variations.zipWithIndex.map(_.swap))
+    val kwAll = Bm25IndexTables.scoreMulti(spark, Ingestion.indexDir(outDir),
+      variations.zipWithIndex.map(_.swap), "chunk_id")
 
     // per-variation hybrid ranking, tagged with arrival rank
     val perVariation = variations.zipWithIndex.map { case (q, v) =>
@@ -161,7 +177,8 @@ object QueryPipeline {
     val deduped = Retrieval.firstWinsDedup(
       perVariation.reduce(_ unionByName _), "chunk_id",
       col("v").asc, col("vrank").asc)
-    val candVecs = spark.read.parquet(Ingestion.embeddingsDir(outDir))
+    val candVecs = spark.read.schema(Ingestion.EmbeddingsReadSchema)
+      .parquet(Ingestion.embeddingsDir(outDir))
       .select(chunkId.as("chunk_id"), col("embedding"))
       .join(broadcast(deduped.select("chunk_id")), "chunk_id")
       .persist()
@@ -175,13 +192,8 @@ object QueryPipeline {
       }
       val fused = Retrieval.rrfFuse(rankings.map(_ -> 1.0), "chunk_id", "score")
         .orderBy(desc("rrf_score"), col("chunk_id")).limit(topK)
-      val chunks = spark.read.parquet(ExtractionPipeline.chunksDir(outDir))
-        .select(chunkId.as("chunk_id"), col("conv_id"), col("turn_idx"),
-          col("chunk_index"), col("content"))
-      chunks.join(broadcast(fused), "chunk_id")
-        .orderBy(desc("rrf_score"), col("chunk_id"))
-        // materialize before unpersisting the candidate pool the plan reads
-        .localCheckpoint(true)
+      // materialize before unpersisting the candidate pool the plan reads
+      withContent(spark, outDir, fused).localCheckpoint(true)
     } finally candVecs.unpersist()
   }
 

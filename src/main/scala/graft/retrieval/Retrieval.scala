@@ -108,9 +108,7 @@ object Retrieval {
       .join(broadcast(qDf), "term")
       .join(broadcast(idf), "term")
       .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        col("qn") * col("idf") * (col("tf") * lit(k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
+      .withColumn("contrib", bm25Contrib(col("avgdl"), k1, b))
       .groupBy(idCol)
       .agg(sum(col("contrib")).as("score"))
   }
@@ -138,6 +136,25 @@ object Retrieval {
     bm25ScoresFromIndex(postings(docs, idCol, textCol),
       corpusStats(docs, idCol, textCol), idCol, queries, k1, b)
 
+  /** Raw Okapi idf of a term with document frequency `df` in a corpus of
+    * `nDocs` documents: ln(N - df + 0.5) - ln(df + 0.5).
+    */
+  def idfRaw(nDocs: Column, df: Column): Column =
+    log(nDocs - df + lit(0.5)) - log(df + lit(0.5))
+
+  /** rank_bm25's epsilon floor: a negative raw idf becomes
+    * Epsilon × the vocabulary's mean raw idf.
+    */
+  def flooredIdf(idfRaw: Column, avgIdf: Column): Column =
+    when(idfRaw < 0, lit(Epsilon) * avgIdf).otherwise(idfRaw)
+
+  /** One (query term, doc) BM25Okapi contribution over a row's `qn`
+    * (query multiplicity), `idf`, `tf` and `dl` columns.
+    */
+  def bm25Contrib(avgdl: Column, k1: Double, b: Double): Column =
+    col("qn") * col("idf") * (col("tf") * lit(k1 + 1)) /
+      (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl))
+
   /** Epsilon-floored Okapi idf table (term, idf) from a postings table +
     * 1-row stats frame — the vocabulary-level half of the BM25 index,
     * exposed so consumers beyond plain scoring (e.g. pseudo-relevance
@@ -146,13 +163,10 @@ object Retrieval {
   def idfTable(post: DataFrame, stats: DataFrame): DataFrame = {
     val dfTable = post.groupBy("term").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(stats))
-      .withColumn("idf_raw",
-        log(col("n_docs") - col("df") + lit(0.5)) - log(col("df") + lit(0.5)))
+      .withColumn("idf_raw", idfRaw(col("n_docs"), col("df")))
     val idfStats = dfTable.agg(avg(col("idf_raw")).as("avg_idf"))
     dfTable.crossJoin(broadcast(idfStats))
-      .withColumn("idf",
-        when(col("idf_raw") < 0, lit(Epsilon) * col("avg_idf"))
-          .otherwise(col("idf_raw")))
+      .withColumn("idf", flooredIdf(col("idf_raw"), col("avg_idf")))
       .select(col("term"), col("idf"))
   }
 
@@ -186,9 +200,7 @@ object Retrieval {
       .join(broadcast(qDf), "term")
       .join(broadcast(idf), "term")
       .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        col("qn") * col("idf") * (col("tf") * lit(k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
+      .withColumn("contrib", bm25Contrib(col("avgdl"), k1, b))
       .groupBy(col("v"), col(idCol))
       // tf_sum rides along for free: the joined rows are one per
       // (v, query-term, doc), so Σtf is exactly the rerank stage's

@@ -2,14 +2,15 @@ package graft.functions
 
 import graft.extract.Html
 import graft.text.{Chunker, Tokenizer}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Generator, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -434,6 +435,41 @@ object ExprHelpers {
     }
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
+
+  /** See [[DotProduct]]: false when a non-zero weight's embedding
+    * element is null or missing, or a weight is null (the dot is null).
+    */
+  def dotDefined(e: ArrayData, w: ArrayData): Boolean = {
+    val n = w.numElements()
+    val m = e.numElements()
+    var i = 0
+    while (i < n) {
+      if (w.isNullAt(i) || (w.getDouble(i) != 0.0 && (i >= m || e.isNullAt(i)))) return false
+      i += 1
+    }
+    true
+  }
+
+  /** See [[DotProduct]]: Σ e[i]·w[i] over the non-zero weights in
+    * ascending index order, starting from the first product; float
+    * elements are widened to double first. No non-zero weight gives 0.0.
+    */
+  def dot(e: ArrayData, w: ArrayData, floats: Boolean): Double = {
+    val n = w.numElements()
+    var s = 0.0
+    var first = true
+    var i = 0
+    while (i < n) {
+      val wi = w.getDouble(i)
+      if (wi != 0.0) {
+        val p = (if (floats) e.getFloat(i).toDouble else e.getDouble(i)) * wi
+        s = if (first) p else s + p
+        first = false
+      }
+      i += 1
+    }
+    s
+  }
 }
 
 /** One-pass MOSS winnowing (Schleimer/Wilkerson/Aiken 2003) — the
@@ -664,6 +700,45 @@ final case class CosineSim(left: Expression, right: Expression)
   override def prettyName: String = "graft_cosine"
 }
 
+/** `graft_dot(e, w)` → the dot product of an embedding (array<float> or
+  * array<double>) with a weight vector (array<double>), summed over the
+  * non-zero weights only ([[ExprHelpers.dot]]), codegen'd. Null when `e`
+  * is null or lacks an element a non-zero weight needs. A weight literal
+  * is codegen'd as a reference object, so every weight vector shares one
+  * generated class.
+  */
+final case class DotProduct(left: Expression, right: Expression)
+    extends BinaryExpression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def nullIntolerant: Boolean = true
+  private def floats: Boolean = left.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(FloatType | DoubleType, _), ArrayType(DoubleType, _)) =>
+      TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires (array<float|double>, array<double>), got " +
+        s"(${left.dataType.sql}, ${right.dataType.sql})")
+  }
+  override protected def nullSafeEval(e: Any, w: Any): Any = {
+    val (ea, wa) = (e.asInstanceOf[ArrayData], w.asInstanceOf[ArrayData])
+    if (ExprHelpers.dotDefined(ea, wa)) ExprHelpers.dot(ea, wa, floats) else null
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (e, w) =>
+      s"""if (graft.functions.ExprHelpers.dotDefined($e, $w)) {
+         |  ${ev.value} = graft.functions.ExprHelpers.dot($e, $w, $floats);
+         |} else {
+         |  ${ev.isNull} = true;
+         |}""".stripMargin)
+  override protected def withNewChildrenInternal(
+      l: Expression, r: Expression): DotProduct = copy(left = l, right = r)
+  override def prettyName: String = "graft_dot"
+}
+
 /** `graft_best_cell(e, cents)` → index of the max-dot centroid in
   * `cents` (array<array<double>>) for embedding `e` — the IVF cell
   * assignment, codegen'd.
@@ -839,7 +914,10 @@ object GraftFunctions {
       s"graft_chunks expects 1 or 3 arguments, got ${cs.length}")
   }
 
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  /** Every graft_* SQL function by name: the one table both [[register]]
+    * and [[GraftExtensions]] install from.
+    */
+  private[graft] val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_chunks" -> (chunkGenBuilder _),
     "graft_html_strip" -> (cs => HtmlStrip(cs.head)),
     "graft_sentence_split" -> (cs => SentenceSplit(cs.head)),
@@ -858,6 +936,7 @@ object GraftFunctions {
     "graft_tri_ids" -> (cs => TriIds(cs.head)),
     "graft_tri_counts" -> (cs => TriCounts(cs.head)),
     "graft_cosine" -> (cs => CosineSim(cs(0), cs(1))),
+    "graft_dot" -> (cs => DotProduct(cs(0), cs(1))),
     "graft_best_cell" -> (cs => BestCell(cs(0), cs(1))),
     "graft_pq_encode" -> (cs => PqEncode(cs(0), cs(1))),
     "graft_pq_adc" -> (cs => PqAdc(cs(0), cs(1))),
@@ -871,12 +950,19 @@ object GraftFunctions {
     val reg = spark.sessionState.functionRegistry
     fns.foreach { case (name, builder) =>
       val id = FunctionIdentifier(name)
-      if (!reg.functionExists(id))
-        reg.registerFunction(id,
-          new ExpressionInfo("graft.functions.GraftFunctions", name),
-          builder)
+      if (!reg.functionExists(id)) reg.registerFunction(id, info(name), builder)
     }
   }
+
+  private[functions] def info(name: String): ExpressionInfo =
+    new ExpressionInfo("graft.functions.GraftFunctions", name)
+
+  /** `graft_dot(e, w)` ([[DotProduct]]) as a Column that needs no
+    * registered function, so it resolves in any session.
+    */
+  def dot(embedding: Column, weights: Column): Column =
+    PlanBridge.column(DotProduct(PlanBridge.expression(embedding),
+      PlanBridge.expression(weights)))
 }
 
 /** `--conf spark.sql.extensions=graft.functions.GraftExtensions` for
@@ -884,72 +970,9 @@ object GraftFunctions {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_chunks"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_chunks"),
-      cs => GraftFunctions.chunkGenBuilder(cs)))
-    ext.injectFunction((FunctionIdentifier("graft_html_strip"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_html_strip"),
-      cs => HtmlStrip(cs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_sentence_split"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_sentence_split"),
-      cs => SentenceSplit(cs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_tokenize"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_tokenize"),
-      cs => Bm25Tokenize(cs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_nfc"),
-      cs => NfcNormalize(cs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_shingles"),
-      cs => BigramShingles(cs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_ws_tokens"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_ws_tokens"),
-      cs => WsTokens(cs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_char_entropy"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_char_entropy"),
-      cs => CharEntropyStats(cs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_winnow"),
-      cs => WinnowKeys(cs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_l2q"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_l2q"),
-      cs => L2Quantized(cs(0), cs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_topk"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_topk"),
-      cs => TopKAgg(cs(0), cs(1), cs(2))))
-    ext.injectFunction((FunctionIdentifier("graft_hll"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_hll"),
-      cs => HllAgg(cs(0), cs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_gram"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_gram"),
-      cs => GramAgg(cs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_vec_sum"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_vec_sum"),
-      cs => VecSumAgg(cs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_lsh_sigs"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_lsh_sigs"),
-      cs => LshBandSigs(cs(0), cs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_cosine"),
-      cs => CosineSim(cs(0), cs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_best_cell"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_best_cell"),
-      cs => BestCell(cs(0), cs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_pq_encode"),
-      cs => PqEncode(cs(0), cs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_pq_adc"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_pq_adc"),
-      cs => PqAdc(cs(0), cs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_bytes"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_bytes"),
-      cs => BytesToInts(cs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_tri_ids"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_tri_ids"),
-      cs => TriIds(cs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_tri_counts"),
-      new ExpressionInfo("graft.functions.GraftFunctions", "graft_tri_counts"),
-      cs => TriCounts(cs.head)))
+    GraftFunctions.fns.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), GraftFunctions.info(name), builder))
+    }
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
     ext.injectOptimizerRule(_ => graft.plans.AsofJoinPruneRule)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)

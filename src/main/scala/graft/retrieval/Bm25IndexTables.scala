@@ -198,6 +198,10 @@ object Bm25IndexTables {
     * corpus scalars come from [[snapshot]]; the one postings scan reads
     * only the query terms' rows, and df is counted among them. Same
     * formula as [[Retrieval.bm25ScoresFromIndex]], without its tf_sum.
+    * The scalars enter as data, on every row of the broadcast query-term
+    * table (no extra broadcast, so no extra job), never as literals: a
+    * literal would be compiled into the scoring code, so each index
+    * snapshot would compile its own classes.
     */
   def scoreMulti(spark: SparkSession, indexDir: String,
       queries: Seq[(Int, String)], idCol: String,
@@ -205,20 +209,23 @@ object Bm25IndexTables {
       b: Double = Retrieval.DefaultB): DataFrame = {
     val snap = snapshot(spark, indexDir)
     val qRows = queries.flatMap { case (v, q) =>
-      Tokenizer.tokenize(q).groupBy(identity).map { case (t, os) => (v, t, os.size) }
+      Tokenizer.tokenize(q).groupBy(identity).map { case (t, os) =>
+        (v, t, os.size, snap.nDocs, snap.avgdl, snap.avgIdf)
+      }
     }
     val idType = snap.postings(idCol).dataType
     if (qRows.isEmpty)
       return spark.createDataFrame(java.util.List.of[Row](),
         new StructType().add("v", IntegerType).add(idCol, idType).add("score", DoubleType))
-    val qDf = spark.createDataFrame(qRows).toDF("v", "term", "qn")
+    val qDf = spark.createDataFrame(qRows)
+      .toDF("v", "term", "qn", "n_docs", "avgdl", "avg_idf")
     spark.read.schema(postingsReadSchema(idCol, idType)).parquet(s"${snap.dir}/postings")
       .filter(col("term").isin(qRows.map(_._2).distinct: _*))
       .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
-      .withColumn("idf", Retrieval.flooredIdf(
-        Retrieval.idfRaw(lit(snap.nDocs), col("df")), lit(snap.avgIdf)))
       .join(broadcast(qDf), "term")
-      .withColumn("contrib", Retrieval.bm25Contrib(lit(snap.avgdl), k1, b))
+      .withColumn("idf", Retrieval.flooredIdf(
+        Retrieval.idfRaw(col("n_docs"), col("df")), col("avg_idf")))
+      .withColumn("contrib", Retrieval.bm25Contrib(col("avgdl"), k1, b))
       .groupBy(col("v"), col(idCol))
       .agg(sum(col("contrib")).as("score"))
   }

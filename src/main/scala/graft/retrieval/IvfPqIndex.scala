@@ -171,23 +171,11 @@ object IvfPqIndex {
       nprobe: Int = DefaultNprobe, fetch: Int = QueryPipeline.PqFetch): DataFrame = {
     GraftFunctions.register(spark)
     import spark.implicits._
-    val cents = loadCentroids(spark, root)
-    val books = loadBooks(spark, root)
-    val qd = qv.map(_.toDouble)
-    def dot(c: Seq[Double]): Double = {
-      var s = 0.0; var i = 0
-      val n = math.min(qd.length, c.length)
-      while (i < n) { s += qd(i) * c(i); i += 1 }
-      s
-    }
-    val top = cents.zipWithIndex
-      .sortBy { case (c, i) => (-dot(c), i) }
-      .take(math.max(1, nprobe)).map(_._2)
-    val consts = spark.createDataset(top.map(c => (c, dot(cents(c)))))
-      .toDF("cell", "cconst")
-    val lut = PqIndex.lut(books, qv)
-    spark.read.parquet(codesDir(root))
-      .filter(col("cell").isin(top: _*))
+    val top = VectorIndex.topCells(loadCentroids(spark, root), qv, nprobe)
+    val consts = spark.createDataset(top).toDF("cell", "cconst")
+    val lut = PqIndex.lut(loadBooks(spark, root), qv)
+    spark.read.schema(VectorIndex.storedSchema(spark, root, "codes")).parquet(codesDir(root))
+      .filter(col("cell").isin(top.map(_._1): _*))
       .join(broadcast(consts), "cell")
       .select(col("chunk_id"),
         (call_function("graft_pq_adc", col("codes"), typedlit(lut)) +
@@ -204,4 +192,33 @@ object IvfPqIndex {
       emb: DataFrame, nprobe: Int, fetch: Int, topK: Int): DataFrame =
     VectorIndex.rerankExact(
       probe(spark, root, qv, nprobe, fetch).select("chunk_id"), emb, qv, topK)
+
+  /** [[rerank]] for several questions in one plan: each question `v`
+    * probes only its own cells, through a broadcast `(cell, v, cconst,
+    * lut)` join over the union of the probed cells (a partition-pruned
+    * codes scan), keeps its `fetch` best ADC candidates, and all are
+    * reranked exactly against `weights` ([[VectorIndex.weightsTable]] of
+    * the same `qvs`). Returns the `topK` best `(v, chunk_id, score, rn)`
+    * of each question, with [[rerank]]'s values.
+    */
+  private[retrieval] def rerankMulti(spark: SparkSession, root: String, qvs: Seq[(Int, Array[Float])],
+      weights: DataFrame, emb: DataFrame, nprobe: Int, fetch: Int,
+      topK: Int): DataFrame = {
+    GraftFunctions.register(spark)
+    val cents = loadCentroids(spark, root)
+    val books = loadBooks(spark, root)
+    val probes = qvs.flatMap { case (v, qv) =>
+      val lut: Seq[Seq[Double]] = PqIndex.lut(books, qv)
+      VectorIndex.topCells(cents, qv, nprobe).map { case (c, cconst) => (c, v, cconst, lut) }
+    }
+    val cand = Retrieval.topPer(
+      spark.read.schema(VectorIndex.storedSchema(spark, root, "codes")).parquet(codesDir(root))
+        .filter(array_contains(typedlit(probes.map(_._1).distinct), col("cell")))
+        .join(broadcast(spark.createDataFrame(probes).toDF("cell", "v", "cconst", "lut")), "cell")
+        .select(col("v"), col("chunk_id"),
+          (call_function("graft_pq_adc", col("codes"), col("lut")) +
+            col("cconst")).as("adc_score")),
+      "v", "chunk_id", "adc_score", fetch)
+    VectorIndex.rerankExactMulti(cand.select("v", "chunk_id"), emb, weights, topK)
+  }
 }

@@ -4,6 +4,7 @@ import graft.functions.GraftFunctions
 import graft.pipeline.VersionedDir
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructType}
 
 import java.nio.file.{Files, Paths}
 
@@ -139,9 +140,15 @@ object PqIndex {
     books.head.length
   }
 
+  /** The `codebooks` table as [[build]] writes it (and [[IvfPqIndex]]).
+    * Declared on every read, so no read pays a schema-inference job.
+    */
+  val BooksSchema: StructType = new StructType()
+    .add("j", IntegerType).add("cid", IntegerType).add("cent", ArrayType(DoubleType))
+
   def loadBooks(spark: SparkSession, root: String): Books = {
     import spark.implicits._
-    spark.read.parquet(codebooksDir(root))
+    spark.read.schema(BooksSchema).parquet(codebooksDir(root))
       .as[(Int, Int, Seq[Double])].collect()
       .groupBy(_._1).toIndexedSeq.sortBy(_._1)
       .map { case (_, rows) => rows.sortBy(_._2).map(_._3).toIndexedSeq }
@@ -215,7 +222,7 @@ object PqIndex {
       topK: Int): DataFrame = {
     GraftFunctions.register(spark)
     val l = lut(loadBooks(spark, root), qv)
-    spark.read.parquet(codesDir(root))
+    spark.read.schema(VectorIndex.storedSchema(spark, root, "codes")).parquet(codesDir(root))
       .select(col("chunk_id"),
         call_function("graft_pq_adc", col("codes"), typedlit(l)).as("adc_score"))
       .orderBy(desc("adc_score"), col("chunk_id"))
@@ -232,4 +239,26 @@ object PqIndex {
       emb: DataFrame, fetch: Int, topK: Int): DataFrame =
     VectorIndex.rerankExact(
       scan(spark, root, qv, fetch).select("chunk_id"), emb, qv, topK)
+
+  /** [[rerank]] for several questions in one plan: one codes scan crossed
+    * with a broadcast `(v, lut)` table (each question's own LUT as a
+    * column), the `fetch` best ADC candidates per question, then one
+    * exact rerank against `weights` ([[VectorIndex.weightsTable]] of the
+    * same `qvs`). Returns the `topK` best `(v, chunk_id, score, rn)` of
+    * each question, with [[rerank]]'s values.
+    */
+  private[retrieval] def rerankMulti(spark: SparkSession, root: String, qvs: Seq[(Int, Array[Float])],
+      weights: DataFrame, emb: DataFrame, fetch: Int, topK: Int): DataFrame = {
+    GraftFunctions.register(spark)
+    val books = loadBooks(spark, root)
+    val luts = spark.createDataFrame(qvs.map { case (v, qv) => (v, lut(books, qv): Seq[Seq[Double]]) })
+      .toDF("v", "lut")
+    val cand = Retrieval.topPer(
+      spark.read.schema(VectorIndex.storedSchema(spark, root, "codes")).parquet(codesDir(root))
+        .crossJoin(broadcast(luts))
+        .select(col("v"), col("chunk_id"),
+          call_function("graft_pq_adc", col("codes"), col("lut")).as("adc_score")),
+      "v", "chunk_id", "adc_score", fetch)
+    VectorIndex.rerankExactMulti(cand.select("v", "chunk_id"), emb, weights, topK)
+  }
 }

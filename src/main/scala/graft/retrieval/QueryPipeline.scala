@@ -11,21 +11,27 @@ import org.apache.spark.sql.functions._
   *
   *   question → embed (hashed-feature stand-in, same fn as ingestion)
   *     → vector top-2k over the `embeddings` table (cosine = dot on unit
-  *       vectors; the query vector is a broadcast literal — one narrow
+  *       vectors; `graft_dot` against the query vector, an array literal
+  *       the generated code references rather than inlines — one narrow
   *       scan, no shuffle on the big side)
   *     ∥ BM25 top-2k over the postings index table
   *     → weighted RRF (0.7/0.3, k = 60, `hybrid_search.py:198-202`)
+  *     → broadcast join back to chunk content (J6/J3)
   *     → deterministic tie-break (score desc, chunk_id asc — SURVEY §7.3)
-  *     → top-k cut → broadcast join back to chunk content (J6/J3).
+  *       and top-k cut.
   *
   * Per question, on an unchanged store: the BM25 corpus scalars (N,
   * avgdl, mean idf) come from [[Bm25IndexTables.snapshot]]'s memo, the
   * postings scan pushes `term IN (question terms)` down to the files,
-  * the doclens table is not read, and the postings, embeddings and chunks
-  * tables are read with declared schemas (no schema-inference job). The
-  * ≤ topK answer rows are ordered in one partition (no range-partition
-  * sampling job). The first question after an index write pays for the
-  * scalars' aggregation.
+  * the doclens table is not read, and the postings, embeddings, chunks
+  * and vector-index tables are read with declared schemas (no
+  * schema-inference job). The ≤ topK answer rows are taken from the
+  * content join's tasks (no range-partition sampling job, no exchange).
+  * The first question after an index write pays for the scalars'
+  * aggregation. No question-dependent value — query vector, BM25
+  * scalars — is compiled into generated code, so a warm question with
+  * as many distinct terms as an earlier one compiles no class (the
+  * `term IN (…)` filter is generated per list length).
   */
 object QueryPipeline {
 
@@ -52,23 +58,47 @@ object QueryPipeline {
     */
   private def vecSource(spark: SparkSession, outDir: String,
       qv: Array[Float], nprobe: Int): DataFrame = {
-    val emb = () => spark.read.schema(Ingestion.EmbeddingsReadSchema)
-      .parquet(Ingestion.embeddingsDir(outDir))
-      .select(chunkId.as("chunk_id"), col("embedding"))
     val base =
       if (VectorIndex.exists(VectorIndex.indexRoot(outDir)))
         VectorIndex.probe(spark, VectorIndex.indexRoot(outDir), qv, nprobe)
       else if (IvfPqIndex.exists(IvfPqIndex.indexRoot(outDir)))
-        IvfPqIndex.rerank(spark, IvfPqIndex.indexRoot(outDir), qv, emb(),
+        IvfPqIndex.rerank(spark, IvfPqIndex.indexRoot(outDir), qv, embeddings(spark, outDir),
           nprobe = nprobe, fetch = PqFetch, topK = PerSourceFetch)
       else if (PqIndex.exists(PqIndex.indexRoot(outDir)))
-        PqIndex.rerank(spark, PqIndex.indexRoot(outDir), qv, emb(),
+        PqIndex.rerank(spark, PqIndex.indexRoot(outDir), qv, embeddings(spark, outDir),
           fetch = PqFetch, topK = PerSourceFetch)
       else
-        emb().select(col("chunk_id"),
+        embeddings(spark, outDir).select(col("chunk_id"),
           VectorIndex.dotColumn(qv, col("embedding")).as("score"))
     base.orderBy(desc("score"), col("chunk_id")).limit(PerSourceFetch)
   }
+
+  /** [[vecSource]] for several query vectors in one plan, by the same
+    * index preference and with the same scores: `qvs` are `(v, query
+    * vector)`, `weights` their [[VectorIndex.weightsTable]]. Returns the
+    * [[PerSourceFetch]] best `(v, chunk_id, score, rn)` of each `v`.
+    */
+  private def vecSourceMulti(spark: SparkSession, outDir: String,
+      qvs: Seq[(Int, Array[Float])], weights: DataFrame, nprobe: Int): DataFrame = {
+    def top(scored: DataFrame) = Retrieval.topPer(scored, "v", "chunk_id", "score", PerSourceFetch)
+    if (VectorIndex.exists(VectorIndex.indexRoot(outDir)))
+      top(VectorIndex.probeMulti(spark, VectorIndex.indexRoot(outDir), qvs, nprobe))
+    else if (IvfPqIndex.exists(IvfPqIndex.indexRoot(outDir)))
+      IvfPqIndex.rerankMulti(spark, IvfPqIndex.indexRoot(outDir), qvs, weights,
+        embeddings(spark, outDir), nprobe = nprobe, fetch = PqFetch, topK = PerSourceFetch)
+    else if (PqIndex.exists(PqIndex.indexRoot(outDir)))
+      PqIndex.rerankMulti(spark, PqIndex.indexRoot(outDir), qvs, weights,
+        embeddings(spark, outDir), fetch = PqFetch, topK = PerSourceFetch)
+    else
+      top(embeddings(spark, outDir).crossJoin(broadcast(weights))
+        .select(col("v"), col("chunk_id"), VectorIndex.dotWeights.as("score")))
+  }
+
+  /** `(chunk_id, embedding)` of the store's embeddings table. */
+  private def embeddings(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.schema(Ingestion.EmbeddingsReadSchema)
+      .parquet(Ingestion.embeddingsDir(outDir))
+      .select(chunkId.as("chunk_id"), col("embedding"))
 
   /** The reference API's request-validation bounds
     * (`app/models/query.py:10` — `top_k` ∈ [1, 20], pinned by
@@ -81,20 +111,20 @@ object QueryPipeline {
     require(topK >= 1 && topK <= MaxTopK,
       s"top_k must be in [1, $MaxTopK], got $topK")
 
-  /** Attach content (J6) to the fused ≤ topK answer rows (broadcast side)
-    * and order them in one partition: an `orderBy` would plan a range
-    * exchange, whose bounds cost a sampling job. `coalesce(1)` is not an
-    * option — it would run the chunks scan as one task.
+  /** Attach content (J6) to the fused candidates (a small broadcast
+    * side) and keep the `topK` best, in order: `orderBy` + `limit` plans
+    * one top-k that a `collect` takes straight from the join's tasks, so
+    * the answer needs no exchange of its own and no range-sampling job.
     */
   private def withContent(spark: SparkSession, outDir: String,
-      fused: DataFrame): DataFrame =
+      fused: DataFrame, topK: Int): DataFrame =
     spark.read.schema(ExtractionPipeline.ChunksReadSchema)
       .parquet(ExtractionPipeline.chunksDir(outDir))
       .select(chunkId.as("chunk_id"), col("conv_id"), col("turn_idx"),
         col("chunk_index"), col("content"))
       .join(broadcast(fused), "chunk_id")
-      .repartition(1)
-      .sortWithinPartitions(desc("rrf_score"), col("chunk_id"))
+      .orderBy(desc("rrf_score"), col("chunk_id"))
+      .limit(topK)
 
   def query(spark: SparkSession, outDir: String, question: String,
       topK: Int = 10, dim: Int = Ingestion.DefaultDim,
@@ -113,14 +143,11 @@ object QueryPipeline {
       .orderBy(desc("score"), col("chunk_id"))
       .limit(PerSourceFetch)
 
-    // weighted RRF fusion + deterministic tie-break + cut
+    // weighted RRF fusion, then content + deterministic tie-break + cut
     val fused = Retrieval.rrfFuse(
-        Seq(vecScores -> Retrieval.VectorWeight, kwScores -> Retrieval.KeywordWeight),
-        "chunk_id", "score")
-      .orderBy(desc("rrf_score"), col("chunk_id"))
-      .limit(topK)
-
-    withContent(spark, outDir, fused)
+      Seq(vecScores -> Retrieval.VectorWeight, kwScores -> Retrieval.KeywordWeight),
+      "chunk_id", "score")
+    withContent(spark, outDir, fused, topK)
   }
 
   val RerankFetch = 20 // rerank_k * 2 per variation (query_service.py:259)
@@ -136,65 +163,59 @@ object QueryPipeline {
     * cross-encoder stand-in: query-embedding dot against the STORED
     * chunk vectors) → unweighted RRF re-fusion → top-k → content join.
     *
-    * Scale shape: BM25 for ALL variations comes from one pass over the
-    * postings rows of their terms ([[Bm25IndexTables.scoreMulti]] — one
-    * scoring plan, not one per variation); the vector side is
-    * per-variation [[vecSource]] calls (IVF probe, PQ scan+rerank, or
-    * brute scan by index presence);
-    * the rerank joins the big embeddings table once against the
-    * broadcast ≤3·RerankFetch candidate pool.
+    * Scale shape: ONE plan keyed by the variation number `v`, whose
+    * shape does not depend on how many variations there are, and whose
+    * generated code holds no question-dependent value — so a warm
+    * expanded question compiles nothing. The variations' query vectors
+    * are a broadcast `(v, qv)` table scored against the embeddings in one
+    * scan ([[vecSourceMulti]]); BM25 for all variations is one pass over
+    * the postings rows of their terms ([[Bm25IndexTables.scoreMulti]]).
+    * Each per-variation top list is a `row_number` window partitioned by
+    * `v` ([[Retrieval.topPer]], a partial `WindowGroupLimit` below the
+    * exchange); the weighted RRF and the final RRF are one `groupBy`
+    * each ([[Retrieval.rrfFuseRanked]]). The dedup feeds only the chunk
+    * set to the rerank, so it is a semi join of the embeddings (their
+    * second and last scan) against the broadcast ≤ V·RerankFetch
+    * candidate ids, crossed with the `(v, qv)` table; those ≤ V²·
+    * RerankFetch rows are ranked and fused in one partition. Nothing is
+    * persisted.
     */
   def queryExpanded(spark: SparkSession, outDir: String, question: String,
       expansions: Seq[String] = Nil, topK: Int = FinalTopK,
       dim: Int = Ingestion.DefaultDim,
       nprobe: Int = VectorIndex.DefaultNprobe): DataFrame = {
     validateTopK(topK)
-    val variations = (question +: expansions).distinct
+    val variations = (question +: expansions).distinct.zipWithIndex.map(_.swap)
+    val qvs = variations.map { case (v, q) => v -> Ingestion.hashedEmbedding(q, dim) }
+    val weights = VectorIndex.weightsTable(spark, qvs)
 
-    // keyword scores for every variation from ONE postings pass
-    val kwAll = Bm25IndexTables.scoreMulti(spark, Ingestion.indexDir(outDir),
-      variations.zipWithIndex.map(_.swap), "chunk_id")
+    // per-variation hybrid ranking: weighted RRF of each variation's
+    // vector and keyword top lists, cut to RerankFetch
+    val vec = vecSourceMulti(spark, outDir, qvs, weights, nprobe)
+    val kw = Retrieval.topPer(
+      Bm25IndexTables.scoreMulti(spark, Ingestion.indexDir(outDir), variations, "chunk_id")
+        .filter(col("score") > 0), // bm25_index.py:200-204
+      "v", "chunk_id", "score", PerSourceFetch)
+    val perVariation = Retrieval.topPer(
+      Retrieval.rrfFuseRanked(
+        Seq(vec -> Retrieval.VectorWeight, kw -> Retrieval.KeywordWeight),
+        Seq("v", "chunk_id")),
+      "v", "chunk_id", "rrf_score", RerankFetch)
 
-    // per-variation hybrid ranking, tagged with arrival rank
-    val perVariation = variations.zipWithIndex.map { case (q, v) =>
-      val qv = Ingestion.hashedEmbedding(q, dim)
-      val vec = vecSource(spark, outDir, qv, nprobe)
-      val kw = kwAll.filter(col("v") === v).select("chunk_id", "score")
-        .filter(col("score") > 0)
-        .orderBy(desc("score"), col("chunk_id")).limit(PerSourceFetch)
-      Retrieval.rrfFuse(
-          Seq(vec -> Retrieval.VectorWeight, kw -> Retrieval.KeywordWeight),
-          "chunk_id", "score")
-        .orderBy(desc("rrf_score"), col("chunk_id")).limit(RerankFetch)
-        .select(col("chunk_id"), lit(v).as("v"),
-          (row_number().over(org.apache.spark.sql.expressions.Window
-            .partitionBy(lit(1))
-            .orderBy(desc("rrf_score"), col("chunk_id")))).as("vrank"))
-    }
-
-    // first-wins dedup across variations (U2 arrival order), then ONE
-    // scan of the embeddings table against the broadcast candidate pool
-    val deduped = Retrieval.firstWinsDedup(
-      perVariation.reduce(_ unionByName _), "chunk_id",
-      col("v").asc, col("vrank").asc)
-    val candVecs = spark.read.schema(Ingestion.EmbeddingsReadSchema)
-      .parquet(Ingestion.embeddingsDir(outDir))
-      .select(chunkId.as("chunk_id"), col("embedding"))
-      .join(broadcast(deduped.select("chunk_id")), "chunk_id")
-      .persist()
-
-    try {
-      val rankings = variations.map { q =>
-        val qv = Ingestion.hashedEmbedding(q, dim)
-        candVecs.select(col("chunk_id"),
-          VectorIndex.dotColumn(qv, col("embedding")).as("score"))
-          .orderBy(desc("score"), col("chunk_id")).limit(FinalTopK)
-      }
-      val fused = Retrieval.rrfFuse(rankings.map(_ -> 1.0), "chunk_id", "score")
-        .orderBy(desc("rrf_score"), col("chunk_id")).limit(topK)
-      // materialize before unpersisting the candidate pool the plan reads
-      withContent(spark, outDir, fused).localCheckpoint(true)
-    } finally candVecs.unpersist()
+    // first-wins dedup across variations (U2 arrival order) keeps one
+    // row per chunk, and only that chunk set reaches the rerank: a semi
+    // join of the embeddings against the broadcast candidate ids, every
+    // variation scored by the same dot as the first pass. Those are at
+    // most V · V·RerankFetch rows, ranked and fused in one partition.
+    val rankings = Retrieval.topPer(
+      embeddings(spark, outDir)
+        .join(broadcast(perVariation.select("chunk_id")), Seq("chunk_id"), "left_semi")
+        .crossJoin(broadcast(weights))
+        .select(col("v"), col("chunk_id"), VectorIndex.dotWeights.as("score"))
+        .repartition(1),
+      "v", "chunk_id", "score", FinalTopK)
+    withContent(spark, outDir,
+      Retrieval.rrfFuseRanked(Seq(rankings -> 1.0), Seq("chunk_id")), topK)
   }
 
   /** Step 5 of the lifecycle — `_build_context_string`

@@ -253,6 +253,34 @@ object Retrieval {
       .agg(sum(col("contrib")).as("rrf_score"))
   }
 
+  /** The top `k` rows of each `key`, by `(scoreCol desc, idCol asc)`, with
+    * their 1-based position in `rn`. The filter is on the row number
+    * itself, so Spark plans a partial `WindowGroupLimit` below the
+    * exchange and ships at most `k` rows per key from each map task.
+    */
+  def topPer(df: DataFrame, key: String, idCol: String, scoreCol: String,
+      k: Int): DataFrame =
+    df.withColumn("rn", row_number().over(Window.partitionBy(col(key))
+        .orderBy(col(scoreCol).desc, col(idCol).asc)))
+      .filter(col("rn") <= k)
+
+  /** [[rrfFuse]] over ranked lists that carry their own 1-based rank in
+    * `rn` ([[topPer]]'s column; the 0-based rank + 1), each with its
+    * weight, summed per `groupCols`. With `groupCols = (key, id)` it fuses
+    * each key's lists separately, with the same values as [[rrfFuse]] of
+    * that key's lists; with `groupCols = (id)` it fuses every list.
+    * Returns `(groupCols…, rrf_score)`.
+    */
+  def rrfFuseRanked(lists: Seq[(DataFrame, Double)], groupCols: Seq[String],
+      k: Int = RrfK): DataFrame = {
+    require(lists.nonEmpty)
+    lists.map { case (df, w) =>
+      df.select(groupCols.map(col) :+ (lit(w) / (lit(k) + col("rn"))).as("contrib"): _*)
+    }.reduce(_ unionByName _)
+      .groupBy(groupCols.map(col): _*)
+      .agg(sum(col("contrib")).as("rrf_score"))
+  }
+
   /** Order-preserving first-occurrence dedup (P4,
     * `query_service.py:231-238`): within each id keep the row with the
     * smallest `orderCols` (arrival priority), not an arbitrary one.

@@ -4,6 +4,7 @@ import graft.functions.GraftFunctions
 import graft.pipeline.VersionedDir
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructType}
 
 import java.nio.file.{Files, Paths}
 
@@ -50,18 +51,33 @@ object VectorIndex {
     if (n > 0) v.map(_ / n) else v
   }
 
-  /** The same broadcast-literal dot product [[QueryPipeline]] uses for
-    * its brute-force branch — sum of `element_at` products over the
-    * query's non-zero components (sparse queries skip zeros), fully
-    * codegen'd. Shared so the probed and brute-force scores are
-    * bit-identical.
+  /** The dot product every vector path scores with: `graft_dot` over
+    * the query's non-zero components in ascending index order, each
+    * float widened to double, starting from the first product (sparse
+    * queries skip zeros). The weights are one array literal, which Spark
+    * codegens as a reference object, so every question runs the same
+    * generated class. An all-zero query scores the literal 0.0 (null
+    * embeddings included); otherwise a null embedding scores null.
+    * Shared so the probed, reranked and brute-force scores are
+    * bit-identical; needs no registered function.
     */
   def dotColumn(qv: Array[Float], embCol: Column): Column =
-    qv.toSeq.zipWithIndex
-      .filter { case (w, _) => w != 0f }
-      .map { case (w, i) => element_at(embCol, i + 1).cast("double") * w.toDouble }
-      .reduceOption(_ + _)
-      .getOrElse(lit(0.0))
+    if (qv.forall(_ == 0f)) lit(0.0)
+    else GraftFunctions.dot(embCol, typedlit(qv.toSeq.map(_.toDouble)))
+
+  /** [[dotColumn]] of the `embedding` column against a `qv` weight
+    * column (a [[weightsTable]] row): the same values, for plans that
+    * score several questions in one pass. An all-zero `qv` scores 0.0.
+    */
+  private[retrieval] def dotWeights: Column =
+    GraftFunctions.dot(col("embedding"), col("qv"))
+
+  /** `(v, qv)`: one row per question, its weights widened to double —
+    * the broadcast side of a multi-question scan ([[dotWeights]]).
+    */
+  private[retrieval] def weightsTable(spark: SparkSession, qvs: Seq[(Int, Array[Float])]): DataFrame =
+    spark.createDataFrame(qvs.map { case (v, qv) => (v, qv.toSeq.map(_.toDouble)) })
+      .toDF("v", "qv")
 
   /** Cell assignment column against a centroid literal. */
   private[retrieval] def cellCol(cents: Seq[Seq[Double]]): Column =
@@ -142,6 +158,31 @@ object VectorIndex {
       .as[(Int, Seq[Double])].collect().toMap
   }
 
+  /** The `centroids` table as [[build]] writes it (and [[IvfPqIndex]]).
+    * Declared on every read, so no read pays a schema-inference job.
+    */
+  val CentroidsSchema: StructType = new StructType()
+    .add("cell", IntegerType).add("centroid", ArrayType(DoubleType))
+
+  private val storedSchemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), StructType]()
+
+  /** The schema of `table` in the index at `root`, for the tables whose
+    * id and embedding columns keep the types of the rows the index was
+    * built from (IVF assignments, PQ and IVF-PQ codes). It is inferred
+    * once per index version, keyed by the resolved table directory and
+    * the version pointer's mtime (a rebuild at the same path reads it
+    * again; an `add` keeps the types), and then declared on every read.
+    */
+  private[graft] def storedSchema(spark: SparkSession, root: String,
+      table: String): StructType = {
+    val dir = VersionedDir.tableDir(root, table)
+    val pointer = Paths.get(root, "current")
+    val stamp = if (Files.exists(pointer)) Files.getLastModifiedTime(pointer).toMillis else -1L
+    if (storedSchemas.size > 64) storedSchemas.clear()
+    storedSchemas.computeIfAbsent((dir, stamp), _ => spark.read.parquet(dir).schema)
+  }
+
   /** `nlist = max(8, ⌊√N⌋)` unless overridden. */
   def defaultNlist(n: Long): Int = math.max(8, math.sqrt(n.toDouble).toInt)
 
@@ -174,7 +215,7 @@ object VectorIndex {
     */
   private[retrieval] def loadCentroids(spark: SparkSession, root: String): IndexedSeq[Seq[Double]] = {
     import spark.implicits._
-    spark.read.parquet(centroidsDir(root))
+    spark.read.schema(CentroidsSchema).parquet(centroidsDir(root))
       .as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2).toIndexedSeq
   }
 
@@ -240,14 +281,12 @@ object VectorIndex {
       .orderBy(desc("score"), col("chunk_id"))
       .limit(topK)
 
-  /** Probe: rank cells by centroid dot on the DRIVER (the centroid table
-    * is √N-small), then scan only the top-`nprobe` cells — a
-    * partition-pruned Parquet read. Returns `(chunk_id, score)` with the
-    * same dot-product scores as the brute-force scan.
+  /** The `nprobe` cells whose centroids score highest against `qv`
+    * (ties to the lower cell), ranked on the DRIVER: the centroid table
+    * is √N-small. Returns `(cell, q·centroid)` best first.
     */
-  def probe(spark: SparkSession, root: String, qv: Array[Float],
-      nprobe: Int = DefaultNprobe): DataFrame = {
-    val cents = loadCentroids(spark, root)
+  private[retrieval] def topCells(cents: IndexedSeq[Seq[Double]], qv: Array[Float],
+      nprobe: Int): Seq[(Int, Double)] = {
     val qd = qv.map(_.toDouble)
     def dot(c: Seq[Double]): Double = {
       var s = 0.0; var i = 0
@@ -255,11 +294,52 @@ object VectorIndex {
       while (i < m) { s += qd(i) * c(i); i += 1 }
       s
     }
-    val top = cents.zipWithIndex
-      .sortBy { case (c, i) => (-dot(c), i) }
-      .take(math.max(1, nprobe)).map(_._2)
-    spark.read.parquet(assignmentsDir(root))
+    cents.indices.map(i => (i, dot(cents(i))))
+      .sortBy { case (i, d) => (-d, i) }
+      .take(math.max(1, nprobe))
+  }
+
+  /** Exact re-scoring of each question's candidates against the raw
+    * embeddings table: [[rerankExact]] for many questions in one plan.
+    * `cand` is `(v, chunk_id)`, `weights` a [[weightsTable]]; returns the
+    * `topK` best `(v, chunk_id, score, rn)` of each question.
+    */
+  private[retrieval] def rerankExactMulti(cand: DataFrame, emb: DataFrame,
+      weights: DataFrame, topK: Int): DataFrame =
+    Retrieval.topPer(
+      emb.join(broadcast(cand), "chunk_id").join(broadcast(weights), "v")
+        .select(col("v"), col("chunk_id"), dotWeights.as("score")),
+      "v", "chunk_id", "score", topK)
+
+  /** Probe: rank cells by centroid dot on the DRIVER (the centroid table
+    * is √N-small), then scan only the top-`nprobe` cells — a
+    * partition-pruned Parquet read. Returns `(chunk_id, score)` with the
+    * same dot-product scores as the brute-force scan.
+    */
+  def probe(spark: SparkSession, root: String, qv: Array[Float],
+      nprobe: Int = DefaultNprobe): DataFrame = {
+    val top = topCells(loadCentroids(spark, root), qv, nprobe).map(_._1)
+    spark.read.schema(storedSchema(spark, root, "assignments")).parquet(assignmentsDir(root))
       .filter(col("cell").isin(top: _*))
       .select(col("chunk_id"), dotColumn(qv, col("embedding")).as("score"))
+  }
+
+  /** [[probe]] for several questions in one scan: each question `v`
+    * scores only its own top-`nprobe` cells, through a broadcast
+    * `(cell, v, qv)` join over the union of the probed cells (still a
+    * partition-pruned read; the cell list is an array literal, so its
+    * length does not change the generated code). Returns `(v, chunk_id,
+    * score)`.
+    */
+  private[retrieval] def probeMulti(spark: SparkSession, root: String, qvs: Seq[(Int, Array[Float])],
+      nprobe: Int = DefaultNprobe): DataFrame = {
+    val cents = loadCentroids(spark, root)
+    val probes = qvs.flatMap { case (v, qv) =>
+      topCells(cents, qv, nprobe).map { case (c, _) => (c, v, qv.toSeq.map(_.toDouble)) }
+    }
+    spark.read.schema(storedSchema(spark, root, "assignments")).parquet(assignmentsDir(root))
+      .filter(array_contains(typedlit(probes.map(_._1).distinct), col("cell")))
+      .join(broadcast(spark.createDataFrame(probes).toDF("cell", "v", "qv")), "cell")
+      .select(col("v"), col("chunk_id"), dotWeights.as("score"))
   }
 }

@@ -24,7 +24,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val s = SparkTestSession.spark.newSession()
     try {
 
-      // 1. injected SQL functions resolve with no register() call
+      // 1. injected SQL functions resolve with no register() call: every
+      // name of the one registration table, and one of them end to end
+      graft.functions.GraftFunctions.fns.map(_._1).foreach { name =>
+        assert(s.catalog.functionExists(name), s"$name not injected")
+      }
       val toks = s.sql("SELECT graft_tokenize('Hello, World! 42') AS t")
         .collect().head.getSeq[String](0)
       assert(toks.contains("hello") && toks.contains("42"), toks)

@@ -327,6 +327,71 @@ class GraftFunctionsSpec extends AnyFunSuite {
     assert(scanned.collect().forall(r => math.abs(r.getDouble(0) - 1.0) < 1e-9))
   }
 
+  /** The `element_at` fold `VectorIndex.dotColumn` was before
+    * `graft_dot`, kept as its semantic reference: the products over the
+    * non-zero weights, widened to double, added left to right.
+    */
+  private def dotFold(qv: Array[Float], emb: org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.functions.{element_at, lit}
+    qv.toSeq.zipWithIndex.filter { case (w, _) => w != 0f }
+      .map { case (w, i) => element_at(emb, i + 1).cast("double") * w.toDouble }
+      .reduceOption(_ + _).getOrElse(lit(0.0))
+  }
+
+  test("graft_dot equals the element_at fold bit for bit and resolves unregistered") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    val s = SparkTestSession.spark.newSession()
+    s.sessionState.functionRegistry.dropFunction(FunctionIdentifier("graft_dot"))
+    try {
+      val rng = new scala.util.Random(11)
+      val dim = 64
+      def vec(): Seq[Float] = Seq.fill(dim)(
+        if (rng.nextInt(9) == 0) -0.0f else (rng.nextGaussian() * 0.3).toFloat)
+      val rows = (0 until 300).map { i =>
+        val e = vec()
+        Row(i, e, e.map(_.toDouble * 1.5))
+      } ++ Seq(Row(300, null, null),
+        Row(301, vec().updated(5, null), Seq.fill(dim)(0.25).updated(5, null)))
+      val df = s.createDataFrame(s.sparkContext.parallelize(rows, 4), new StructType()
+        .add("id", IntegerType)
+        .add("e", ArrayType(FloatType, containsNull = true))
+        .add("d", ArrayType(DoubleType, containsNull = true)))
+      val dense = vec().toArray
+      val weights = Seq(
+        graft.pipeline.Ingestion.hashedEmbedding("the table of content code block"),
+        dense,
+        dense.zipWithIndex.map { case (w, i) => if (i % 3 == 0) 0f else w },
+        Array.tabulate(dim)(i => if (i == 5) -0.0f else if (i == 7) 2f else 0f),
+        Array.fill(dim)(0f))
+      weights.foreach { qv =>
+        Seq("e", "d").foreach { c =>
+          val got = df.select(col("id"),
+              graft.retrieval.VectorIndex.dotColumn(qv, col(c)).as("fast"),
+              dotFold(qv, col(c)).as("fold"))
+            .collect()
+          assert(got.length == rows.length)
+          got.foreach { r =>
+            assert(r.isNullAt(1) == r.isNullAt(2), s"null parity, id ${r.getInt(0)} on $c")
+            if (!r.isNullAt(1))
+              assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ==
+                java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+                s"id ${r.getInt(0)} on $c: ${r.getDouble(1)} vs ${r.getDouble(2)}")
+          }
+        }
+      }
+      val plan = df.select(graft.retrieval.VectorIndex.dotColumn(dense, col("e")))
+        .queryExecution.executedPlan.toString
+      assert(plan.matches("(?s).*\\*\\(\\d+\\) Project \\[graft_dot.*"),
+        s"projection not codegen'd:\n$plan")
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(SparkTestSession.spark)
+      org.apache.spark.sql.SparkSession.setActiveSession(SparkTestSession.spark)
+    }
+  }
+
   /** The interpreted composition graft_lsh_sigs replaced (the round-2
     * `SigsExpr`), kept as the semantic reference: [[graft.functions
     * .ExprHelpers.LshBands]] band signatures at `r` bits per band over the

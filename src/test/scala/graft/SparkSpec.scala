@@ -10,6 +10,14 @@ import org.apache.spark.sql.SparkSession
   * (both are idempotent, so suites calling them still pass). The driver's
   * own Verify/Bench mains run vanilla sessions, covering the no-extensions
   * path end-to-end.
+  *
+  * The generated-code cache holds 400 classes, not Spark's default 100:
+  * that cache is JVM-wide and split into four LRU segments, and an
+  * expanded question's plan alone caches about 64 classes, so at the
+  * default size roughly one JVM in 80 hashes more than 25 of them into
+  * one segment and recompiles part of the plan on every call. The
+  * compile-count guards (`QueryPathGuardSpec`) measure the code a
+  * question generates; cache capacity is not what they test.
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
@@ -18,6 +26,7 @@ object SparkTestSession {
       .appName("graft-test")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.codegen.cache.maxEntries", "400")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")

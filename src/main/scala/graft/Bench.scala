@@ -36,39 +36,47 @@ object Bench {
     */
   private val ZstdLevel = 3
 
-  /** Parallelism of the battery and the high scaling leg:
-    * `SPARK_GRAFT_CPUS`, else the host's processor count.
+  /** Parallelism of the battery, the high scaling leg, `Verify` and
+    * `QueryProfile`: `SPARK_GRAFT_CPUS`, else the host's processor count.
     */
   def configuredCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  private def session(cores: Int): SparkSession = {
-    val b = SparkSession.builder()
+  /** A `local[cores]` session with the settings every local main
+    * shares: one shuffle partition per core, UTC, no UI,
+    * `spark.driver.host` localhost and WARN logging. `conf` is applied on top and may
+    * override any of them.
+    */
+  def localSession(app: String, cores: Int, conf: (String, String)*): SparkSession = {
+    val base = SparkSession.builder()
       .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
+      .appName(app)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
+    val s = conf.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  private def session(cores: Int): SparkSession =
+    localSession(s"graft-bench-$cores", cores, Seq(
       // v2 committer: task-side renames, no serial driver-side move pass
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+      "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2",
       // zstd output: ~2x fewer bytes to the (non-scaling) device for CPU
       // that DOES scale with cores
-      .config("spark.sql.parquet.compression.codec", "zstd")
+      "spark.sql.parquet.compression.codec" -> "zstd",
       // same trade for shuffle blocks: the shuffle device is shared across
       // parallelism levels here (one box) and per-node on a real cluster
-      .config("spark.io.compression.codec", "zstd")
+      "spark.io.compression.codec" -> "zstd",
       // shuffle-codec effort: level 3 measured −5.8% shuffle bytes/turn
       // vs zstd's default level 1 (336.9 vs 357.5 B/turn) at throughput
       // parity on this box — compression CPU scales with cores, bytes
       // through the (non-scaling) memory bus and a real cluster's
       // network do not; A/B numbers in BASELINE.md
-      .config("spark.io.compression.zstd.level", ZstdLevel.toString)
-    val withLocal = shm.fold(b)(d => b.config("spark.local.dir", s"$d/graft-spark-local"))
-    val s = withLocal.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+      "spark.io.compression.zstd.level" -> ZstdLevel.toString) ++
+      shm.map(d => "spark.local.dir" -> s"$d/graft-spark-local"): _*)
 
   /** Machine-scaling calibration: a pure in-JVM integer loop (xorshift, no
     * memory traffic, no Spark) run on `threads` threads, returning ops/sec.

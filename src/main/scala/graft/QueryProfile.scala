@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiling main (not part of the driver contract): times a subset
   * of the battery with repetitions so a hypervisor-steal burst can't
   * masquerade as a plan regression — `Bench` runs each query once, so a
@@ -19,17 +17,7 @@ object QueryProfile {
       if (args.length > 1 && args(1).nonEmpty) args(1).split(",").toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = Bench.configuredCpus
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-query-profile")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession("graft-query-profile", Bench.configuredCpus)
     spark.read.parquet(s"$dir/documents.parquet").limit(100).count()
 
     val rows = names.map { name =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,19 +8,11 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").map(_.trim).toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // SPARK_GRAFT_NO_AQE=1: re-run the whole battery with adaptive
-      // execution off — results must be byte-identical (any diff means a
-      // query depends on runtime plan shape, i.e. hidden nondeterminism)
-      .config("spark.sql.adaptive.enabled",
-        (!sys.env.contains("SPARK_GRAFT_NO_AQE")).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_NO_AQE=1: re-run the whole battery with adaptive
+    // execution off — results must be byte-identical (any diff means a
+    // query depends on runtime plan shape, i.e. hidden nondeterminism)
+    val spark = Bench.localSession("graft-verify", Bench.configuredCpus,
+      "spark.sql.adaptive.enabled" -> (!sys.env.contains("SPARK_GRAFT_NO_AQE")).toString)
     new java.io.File(outDir).mkdirs()
     // Share expensive deterministic intermediates (lshPairDists,
     // probeScores) across the battery's independent consumers — RDD-block

@@ -1,8 +1,8 @@
 package graft.pipeline
 
 import graft.model.ChunkEmbedding
-import graft.retrieval.Bm25IndexTables
-import org.apache.spark.sql.SparkSession
+import graft.retrieval.{Bm25IndexTables, VectorFamily}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StringType, StructType}
 
@@ -25,7 +25,9 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StringType
   *
   * Both stages are idempotent re-runs over committed chunk buckets
   * (overwrite / atomic index replace), so a resume after a crash between
-  * extraction and ingestion just runs them again.
+  * extraction and ingestion just runs them again. New chunks enter a
+  * built store through one path, [[append]], shared by [[add]] and
+  * [[graft.streaming.StreamingIngestion]]'s micro-batches.
   */
 object Ingestion {
 
@@ -33,6 +35,12 @@ object Ingestion {
 
   def embeddingsDir(outDir: String): String = s"$outDir/embeddings"
   def indexDir(outDir: String): String = s"$outDir/index"
+
+  /** The `chunk_id` every index table and query keys chunks by:
+    * `conv_id:turn_idx:chunk_index`.
+    */
+  def chunkId: Column =
+    concat_ws(":", col("conv_id"), col("turn_idx"), col("chunk_index")).as("chunk_id")
 
   /** The embeddings-table columns a vector scorer reads, typed as
     * [[embedChunks]] and [[add]] write them. A declared read schema spares
@@ -102,10 +110,7 @@ object Ingestion {
     */
   def buildIndex(spark: SparkSession, outDir: String): Unit = {
     val chunks = spark.read.parquet(ExtractionPipeline.chunksDir(outDir))
-      .select(
-        concat_ws(":", col("conv_id"), col("turn_idx"), col("chunk_index"))
-          .as("chunk_id"),
-        col("content"))
+      .select(chunkId, col("content"))
     Bm25IndexTables.build(chunks, "chunk_id", "content", indexDir(outDir))
   }
 
@@ -116,6 +121,10 @@ object Ingestion {
     n
   }
 
+  /** `(chunk_id, embedding)` of the store's embeddings table. */
+  private def vectors(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.parquet(embeddingsDir(outDir)).select(chunkId, col("embedding"))
+
   /** Optional ANN acceleration: build the IVF vector index
     * ([[graft.retrieval.VectorIndex]]) over the store's embeddings table.
     * [[graft.retrieval.QueryPipeline.query]] auto-detects it and swaps
@@ -124,13 +133,8 @@ object Ingestion {
     */
   def buildVectorIndex(spark: SparkSession, outDir: String,
       nlist: Option[Int] = None): Int = {
-    val emb = spark.read.parquet(embeddingsDir(outDir))
-      .select(
-        concat_ws(":", col("conv_id"), col("turn_idx"), col("chunk_index"))
-          .as("chunk_id"),
-        col("embedding"))
     graft.retrieval.VectorIndex.build(
-      emb, graft.retrieval.VectorIndex.indexRoot(outDir), nlist)
+      vectors(spark, outDir), graft.retrieval.VectorIndex.indexRoot(outDir), nlist)
   }
 
   /** Optional ANN storage compression: build the product-quantization
@@ -143,13 +147,8 @@ object Ingestion {
   def buildPqIndex(spark: SparkSession, outDir: String,
       m: Int = graft.retrieval.PqIndex.DefaultM,
       ks: Int = graft.retrieval.PqIndex.DefaultKs): Int = {
-    val emb = spark.read.parquet(embeddingsDir(outDir))
-      .select(
-        concat_ws(":", col("conv_id"), col("turn_idx"), col("chunk_index"))
-          .as("chunk_id"),
-        col("embedding"))
     graft.retrieval.PqIndex.build(
-      emb, graft.retrieval.PqIndex.indexRoot(outDir), m, ks)
+      vectors(spark, outDir), graft.retrieval.PqIndex.indexRoot(outDir), m, ks)
   }
 
   /** Optional combined acceleration: build the IVF-PQ index
@@ -160,61 +159,70 @@ object Ingestion {
       nlist: Option[Int] = None,
       m: Int = graft.retrieval.PqIndex.DefaultM,
       ks: Int = graft.retrieval.PqIndex.DefaultKs): (Int, Int) = {
-    val emb = spark.read.parquet(embeddingsDir(outDir))
-      .select(
-        concat_ws(":", col("conv_id"), col("turn_idx"), col("chunk_index"))
-          .as("chunk_id"),
-        col("embedding"))
     graft.retrieval.IvfPqIndex.build(
-      emb, graft.retrieval.IvfPqIndex.indexRoot(outDir), nlist, m, ks)
+      vectors(spark, outDir), graft.retrieval.IvfPqIndex.indexRoot(outDir), nlist, m, ks)
   }
 
   /** Incremental document add — the reference's per-upload lifecycle
     * (`document_service.py:173-355` processes ONE new document at a time:
     * embed its chunks, `vector_store.add`, `bm25_index.add_documents`)
     * as a batch of NEW conversations extracted+chunked into their own
-    * pipeline output at `stagingDir` (same `nBuckets` as the store so
-    * bucket values line up): their embeddings rows are APPENDED to the
-    * store's table and their postings/doclens extended with
-    * [[Bm25IndexTables.add]] — no rebuild, no rewrite of existing rows.
+    * pipeline output at `stagingDir` (same `nBuckets` and chunking mode as
+    * the store, so bucket values and chunk columns line up): their chunks
+    * are embedded and [[append]]ed to the store's chunks, embeddings, BM25
+    * and vector index tables — no rebuild, no rewrite of existing rows.
+    * So the next [[graft.retrieval.QueryPipeline.query]] finds them with
+    * their content (read-your-writes). Returns the number of chunks added.
+    *
+    * The appended chunk rows land in bucket directories the store's
+    * extraction manifest already lists, but belong to no manifest
+    * snapshot. Time travel over `chunks` ([[ExtractionPipeline.tableAt]],
+    * [[ExtractionPipeline.tableChanges]]) selects by bucket, so it
+    * returns them at every snapshot that lists their bucket, including
+    * snapshots older than the add — just as the `embeddings` table, which
+    * has no snapshots, shows every added row.
     *
     * Caller guarantees the conv ids are new (the reference's upload mints
     * fresh ids); re-ingesting an EXISTING id is [[run]]'s overwrite path
     * or [[delete]]-then-add. Equivalence property (`IngestionAddSpec`):
     * a store built from corpus A then add-ed corpus B has the same
-    * embeddings and index CONTENTS as one batch build over A ∪ B.
+    * chunks, embeddings and index contents as one batch build over A ∪ B.
     */
   def add(spark: SparkSession, outDir: String, stagingDir: String,
       dim: Int = DefaultDim): Long = {
-    // persisted: the parquet append plus up to three index adds each
-    // consume this frame — without the cache every consumer re-reads the
-    // staging parquet and recomputes the hashed embeddings from scratch
-    val embedded = embeddedChunks(spark, stagingDir, dim).persist()
-    try {
-      embedded.write.mode("append").partitionBy("bucket")
-        .parquet(embeddingsDir(outDir))
-      val newChunks = spark.read.parquet(ExtractionPipeline.chunksDir(stagingDir))
-        .select(
-          concat_ws(":", col("conv_id"), col("turn_idx"), col("chunk_index"))
-            .as("chunk_id"),
-          col("content"))
-      Bm25IndexTables.add(newChunks, "chunk_id", "content", indexDir(outDir))
-      // extend whichever vector index families the store carries (frozen
-      // centroids/codebooks, append — the standard incremental add)
-      val embWithId = embedded.toDF()
-        .select(concat_ws(":", col("conv_id"), col("turn_idx"),
-          col("chunk_index")).as("chunk_id"), col("embedding"))
-      val vecRoot = graft.retrieval.VectorIndex.indexRoot(outDir)
-      if (graft.retrieval.VectorIndex.exists(vecRoot))
-        graft.retrieval.VectorIndex.add(embWithId, vecRoot)
-      val pqRoot = graft.retrieval.PqIndex.indexRoot(outDir)
-      if (graft.retrieval.PqIndex.exists(pqRoot))
-        graft.retrieval.PqIndex.add(embWithId, pqRoot)
-      val ivfPqRoot = graft.retrieval.IvfPqIndex.indexRoot(outDir)
-      if (graft.retrieval.IvfPqIndex.exists(ivfPqRoot))
-        graft.retrieval.IvfPqIndex.add(embWithId, ivfPqRoot)
-      newChunks.count()
-    } finally embedded.unpersist()
+    val embed = udf((content: String) => hashedEmbedding(content, dim))
+    val rows = spark.read.parquet(ExtractionPipeline.chunksDir(stagingDir))
+      .withColumn("embedding", embed(col("content")))
+      .persist()
+    try append(rows, outDir, Seq("bucket")) finally rows.unpersist()
+  }
+
+  /** The one path that appends a batch of new chunks to a store, shared
+    * by [[add]] and [[graft.streaming.StreamingIngestion.processBatch]]:
+    * `rows` are chunks-table rows plus their `embedding`, carrying the
+    * store's partition columns `partitions` (`bucket` for a batch-built
+    * store, `ingest_batch, bucket` for a streamed one). Appends the
+    * chunks and embeddings tables, extends the BM25 index
+    * ([[Bm25IndexTables.build]] when the store has none yet) and every
+    * vector index family the store carries. Every write reads `rows`, so
+    * callers persist it. Returns the number of rows.
+    */
+  private[graft] def append(rows: DataFrame, storeDir: String, partitions: Seq[String]): Long = {
+    rows.drop("embedding")
+      .write.mode(SaveMode.Append).partitionBy(partitions: _*)
+      .parquet(ExtractionPipeline.chunksDir(storeDir))
+    rows.select(Seq(col("conv_id"), col("turn_idx"), col("chunk_index"),
+        lit("text").as("modality"), col("embedding")) ++ partitions.map(col): _*)
+      .write.mode(SaveMode.Append).partitionBy(partitions: _*)
+      .parquet(embeddingsDir(storeDir))
+    val docs = rows.select(chunkId, col("content"))
+    if (VersionedDir.exists(indexDir(storeDir)))
+      Bm25IndexTables.add(docs, "chunk_id", "content", indexDir(storeDir))
+    else Bm25IndexTables.build(docs, "chunk_id", "content", indexDir(storeDir))
+    VectorFamily.present(storeDir).foreach { case (family, root) =>
+      family.add(rows.select(chunkId, col("embedding")), root)
+    }
+    rows.count()
   }
 
   /** Cascade delete of whole documents (conversations) from the STORING
@@ -222,10 +230,9 @@ object Ingestion {
     * `bm25_index.delete_documents` pair (`vector_store.py:154-191`,
     * `document_service.py:420-484`): embeddings rows are dropped by an
     * anti-join rewrite (same discipline as [[Catalog.delete]]), and the
-    * BM25 postings/doclens tables by [[Bm25IndexTables.delete]]'s
-    * versioned atomic swap. Deleting an unknown id is a no-op; rows of
-    * every other document are byte-identical afterwards (reference
-    * property P29, deletion isolation).
+    * index families' rows by [[deleteChunks]]. Deleting an unknown id is
+    * a no-op; rows of every other document are byte-identical afterwards
+    * (reference property P29, deletion isolation).
     */
   def delete(spark: SparkSession, outDir: String, convIds: Seq[String]): Unit = {
     import spark.implicits._
@@ -241,19 +248,22 @@ object Ingestion {
 
     // chunk ids are conv_id:turn_idx:chunk_index — derive the doomed set
     // from the index's own doclens table (no chunks-table scan needed)
-    val doomed = spark.read
+    deleteChunks(spark, outDir, spark.read
       .parquet(Bm25IndexTables.doclensDir(indexDir(outDir)))
       .filter(split(col("chunk_id"), ":").getItem(0).isin(convIds: _*))
-      .select("chunk_id")
-    Bm25IndexTables.delete(spark, doomed, "chunk_id", indexDir(outDir))
-    val vecRoot = graft.retrieval.VectorIndex.indexRoot(outDir)
-    if (graft.retrieval.VectorIndex.exists(vecRoot))
-      graft.retrieval.VectorIndex.delete(spark, doomed, "chunk_id", vecRoot)
-    val pqRoot = graft.retrieval.PqIndex.indexRoot(outDir)
-    if (graft.retrieval.PqIndex.exists(pqRoot))
-      graft.retrieval.PqIndex.delete(spark, doomed, "chunk_id", pqRoot)
-    val ivfPqRoot = graft.retrieval.IvfPqIndex.indexRoot(outDir)
-    if (graft.retrieval.IvfPqIndex.exists(ivfPqRoot))
-      graft.retrieval.IvfPqIndex.delete(spark, doomed, "chunk_id", ivfPqRoot)
+      .select("chunk_id"))
+  }
+
+  /** Drop the `chunk_id`s in `chunkIds` from the store's BM25 index (if
+    * built) and from every vector index family it carries, each by its
+    * versioned anti-join rewrite.
+    */
+  private[graft] def deleteChunks(spark: SparkSession, storeDir: String,
+      chunkIds: DataFrame): Unit = {
+    if (VersionedDir.exists(indexDir(storeDir)))
+      Bm25IndexTables.delete(spark, chunkIds, "chunk_id", indexDir(storeDir))
+    VectorFamily.present(storeDir).foreach { case (family, root) =>
+      family.delete(spark, chunkIds, "chunk_id", root)
+    }
   }
 }

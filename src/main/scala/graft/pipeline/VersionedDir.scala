@@ -1,20 +1,28 @@
 package graft.pipeline
 
+import org.apache.spark.sql.{DataFrameWriter, Row, SaveMode}
+
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-/** Snapshot discipline shared by the persisted index families
-  * ([[graft.retrieval.Bm25IndexTables]], [[graft.retrieval.VectorIndex]]):
-  * all tables of one index version live under `v<N>/` and a single
-  * `current` pointer file is atomically swapped per commit — a reader
-  * never sees tables from different rewrites, and a crash mid-rewrite
-  * leaves the old version intact (the same manifest-swap discipline
-  * [[TableIO]] uses). The previous version is retained for in-flight
-  * readers; older ones are garbage-collected.
+/** Snapshot discipline shared by the four persisted index families
+  * ([[graft.retrieval.Bm25IndexTables]], [[graft.retrieval.VectorIndex]],
+  * [[graft.retrieval.PqIndex]], [[graft.retrieval.IvfPqIndex]]): all
+  * tables of one index version live under `v<N>/` and a single `current`
+  * pointer file is atomically swapped per commit — a reader never sees
+  * tables from different rewrites, and a crash mid-rewrite leaves the old
+  * version intact (the same manifest-swap discipline [[TableIO]] uses).
+  * Every build, delete and compaction commits through [[commit]]; an
+  * incremental add appends inside the current version instead. The
+  * previous version is retained for in-flight readers; older ones are
+  * garbage-collected.
   */
 object VersionedDir {
 
   private def pointer(root: String) = Paths.get(root, "current")
+
+  /** Whether an index has been committed at `root`. */
+  def exists(root: String): Boolean = Files.exists(pointer(root))
 
   def currentVersion(root: String): Option[Long] = {
     val p = pointer(root)
@@ -43,6 +51,21 @@ object VersionedDir {
     Files.write(tmp, v.toString.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, pointer(root),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Commit one new version of the index at `root`: each `(table, rows)`
+    * writes `rows` (a plan over the current version's tables where it
+    * rewrites them) as that table of the next version, then one [[flip]]
+    * publishes them all and [[gc]] drops versions older than the previous
+    * one.
+    */
+  def commit(root: String, tables: (String, DataFrameWriter[Row])*): Unit = {
+    val v = nextVersion(root)
+    tables.foreach { case (table, rows) =>
+      rows.mode(SaveMode.Overwrite).parquet(s"$root/v$v/$table")
+    }
+    flip(root, v)
+    gc(root, v)
   }
 
   /** Drop versions older than the previous one (kept for live readers). */

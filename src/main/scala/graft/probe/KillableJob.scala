@@ -1,7 +1,5 @@
 package graft.probe
 
-import org.apache.spark.sql.SparkSession
-
 /** Forked-JVM target for `KillResumeSpec`: runs the extraction pipeline
   * over a pre-written transcripts parquet so the spec can SIGKILL this
   * process mid-job (a REAL crash — torn bucket dirs, lost JVM state —
@@ -13,15 +11,8 @@ object KillableJob {
     val in = args(0)
     val out = args(1)
     // few cores on purpose: the job must outlive the spec's poll loop
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("killable-job")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.localSession("killable-job", 2,
+      "spark.sql.shuffle.partitions" -> "8")
     import spark.implicits._
     val turns = spark.read.parquet(in).as[graft.model.Turn]
     graft.pipeline.ExtractionPipeline.run(spark, turns,

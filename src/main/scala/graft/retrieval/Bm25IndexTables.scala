@@ -55,34 +55,30 @@ object Bm25IndexTables {
   def doclensDir(indexDir: String): String =
     VersionedDir.tableDir(indexDir, "doclens")
 
-  private def flip(indexDir: String, v: Long): Unit = VersionedDir.flip(indexDir, v)
-  private def gc(indexDir: String, v: Long): Unit = VersionedDir.gc(indexDir, v)
+  /** `(doclens, postings)` rows of a corpus: one doclens row per doc,
+    * one postings row per (doc, term).
+    */
+  private def tables(docs: DataFrame, idCol: String, textCol: String): (DataFrame, DataFrame) = {
+    val toks = Retrieval.tokenized(docs, idCol, textCol)
+    (toks.select(col(idCol), col("dl")),
+      toks.select(col(idCol), col("dl"), explode(col("tokens")).as("term"))
+        .groupBy(col(idCol), col("dl"), col("term"))
+        .agg(count(lit(1)).as("tf")))
+  }
 
   /** Build (overwrite) the index tables from a corpus: write a fresh
     * version directory, then flip the pointer once.
     */
   def build(docs: DataFrame, idCol: String, textCol: String, indexDir: String): Unit = {
-    val v = VersionedDir.nextVersion(indexDir)
-    val toks = Retrieval.tokenized(docs, idCol, textCol)
-    toks.select(col(idCol), col("dl"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/v$v/doclens")
-    toks.select(col(idCol), col("dl"), explode(col("tokens")).as("term"))
-      .groupBy(col(idCol), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/v$v/postings")
-    flip(indexDir, v)
-    gc(indexDir, v)
+    val (doclens, postings) = tables(docs, idCol, textCol)
+    VersionedDir.commit(indexDir, "doclens" -> doclens.write, "postings" -> postings.write)
   }
 
   /** Append new documents (incremental add; caller guarantees new ids). */
   def add(docs: DataFrame, idCol: String, textCol: String, indexDir: String): Unit = {
-    val toks = Retrieval.tokenized(docs, idCol, textCol)
-    toks.select(col(idCol), col("dl"))
-      .write.mode(SaveMode.Append).parquet(doclensDir(indexDir))
-    toks.select(col(idCol), col("dl"), explode(col("tokens")).as("term"))
-      .groupBy(col(idCol), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .write.mode(SaveMode.Append).parquet(postingsDir(indexDir))
+    val (doclens, postings) = tables(docs, idCol, textCol)
+    doclens.write.mode(SaveMode.Append).parquet(doclensDir(indexDir))
+    postings.write.mode(SaveMode.Append).parquet(postingsDir(indexDir))
   }
 
   /** Cascade delete: anti-join rewrite of both tables (S10 shape) into a
@@ -90,15 +86,10 @@ object Bm25IndexTables {
     * either the old pair or the new pair, never a mix or a missing table.
     */
   def delete(spark: SparkSession, ids: DataFrame, idCol: String, indexDir: String): Unit = {
-    val v = VersionedDir.nextVersion(indexDir)
-    spark.read.parquet(postingsDir(indexDir))
-      .join(broadcast(ids), Seq(idCol), "left_anti")
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/v$v/postings")
-    spark.read.parquet(doclensDir(indexDir))
-      .join(broadcast(ids), Seq(idCol), "left_anti")
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/v$v/doclens")
-    flip(indexDir, v)
-    gc(indexDir, v)
+    def kept(dir: String) =
+      spark.read.parquet(dir).join(broadcast(ids), Seq(idCol), "left_anti").write
+    VersionedDir.commit(indexDir,
+      "postings" -> kept(postingsDir(indexDir)), "doclens" -> kept(doclensDir(indexDir)))
   }
 
   /** File compaction: incremental [[add]]s append a few small files per
@@ -107,17 +98,11 @@ object Bm25IndexTables {
     * count and flip — contents unchanged, atomic like every other
     * version swap.
     */
-  def compact(spark: SparkSession, indexDir: String, targetPartitions: Int = 8): Unit = {
-    val v = VersionedDir.nextVersion(indexDir)
-    spark.read.parquet(postingsDir(indexDir))
-      .repartition(targetPartitions)
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/v$v/postings")
-    spark.read.parquet(doclensDir(indexDir))
-      .repartition(math.max(1, targetPartitions / 2))
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/v$v/doclens")
-    flip(indexDir, v)
-    gc(indexDir, v)
-  }
+  def compact(spark: SparkSession, indexDir: String, targetPartitions: Int = 8): Unit =
+    VersionedDir.commit(indexDir,
+      "postings" -> spark.read.parquet(postingsDir(indexDir)).repartition(targetPartitions).write,
+      "doclens" -> spark.read.parquet(doclensDir(indexDir))
+        .repartition(math.max(1, targetPartitions / 2)).write)
 
   /** The postings columns a scorer reads, typed as [[build]] and [[add]]
     * write them; the id column keeps the corpus's own type. A declared

@@ -5,8 +5,6 @@ import graft.pipeline.VersionedDir
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Paths}
-
 /** IVF-PQ ("IVFADC", Jégou et al. TPAMI 2011 §IV) — the composition of
   * [[VectorIndex]]'s compute pruning with [[PqIndex]]'s storage
   * compression, and the standard billion-scale ANN serving layout:
@@ -34,18 +32,19 @@ import java.nio.file.{Files, Paths}
   *     (residual-space codewords);
   *   - `codes` — `(chunk_id, codes:binary)` partitioned by `cell`.
   */
-object IvfPqIndex {
+object IvfPqIndex extends VectorFamily {
 
   val DefaultNprobe = 2
 
-  /** Conventional index root inside an ingestion store. */
   def indexRoot(storeDir: String): String = s"$storeDir/ivfpqindex"
 
   def centroidsDir(root: String): String = VersionedDir.tableDir(root, "centroids")
   def codebooksDir(root: String): String = VersionedDir.tableDir(root, "codebooks")
   def codesDir(root: String): String = VersionedDir.tableDir(root, "codes")
 
-  def exists(root: String): Boolean = Files.exists(Paths.get(root, "current"))
+  protected def frozenTables: Seq[String] = Seq("centroids", "codebooks")
+  protected def vectorTable: String = "codes"
+  protected def cellPartitioned: Boolean = true
 
   /** The `centroids`/`codebooks` table names match [[VectorIndex]] and
     * [[PqIndex]]'s layouts, so their readers apply directly.
@@ -73,7 +72,6 @@ object IvfPqIndex {
       iters: Int = PqIndex.DefaultIters): (Int, Int) = {
     require(ks >= 1 && ks <= 256, s"ks must be in [1,256] (byte codes), got $ks")
     val spark = emb.sparkSession
-    import spark.implicits._
     GraftFunctions.register(spark)
     val e = emb.select(col("chunk_id"), col("embedding"))
 
@@ -90,24 +88,11 @@ object IvfPqIndex {
     try {
       val books = PqIndex.train(resid.select("chunk_id", "embedding"), m, ks, iters)
 
-      val v = VersionedDir.nextVersion(root)
-      spark.createDataset(cents.zipWithIndex.map { case (c, i) => (i, c) })
-        .toDF("cell", "centroid")
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/centroids")
-      spark.createDataset(for {
-        (book, j) <- books.zipWithIndex
-        (cent, c) <- book.zipWithIndex
-      } yield (j, c, cent))
-        .toDF("j", "cid", "cent")
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/codebooks")
-      resid.select(col("chunk_id"), col("cell"),
-        PqIndex.encodeCol(books).as("codes"))
-        .write.mode(SaveMode.Overwrite).partitionBy("cell")
-        .parquet(s"$root/v$v/codes")
-      VersionedDir.flip(root, v)
-      VersionedDir.gc(root, v)
+      VersionedDir.commit(root,
+        "centroids" -> VectorIndex.centroidsTable(spark, cents).write,
+        "codebooks" -> PqIndex.booksTable(spark, books).write,
+        "codes" -> resid.select(col("chunk_id"), col("cell"), PqIndex.encodeCol(books).as("codes"))
+          .write.partitionBy("cell"))
       (cents.length, books.head.length)
     } finally resid.unpersist()
   }
@@ -126,40 +111,6 @@ object IvfPqIndex {
       .select(col("chunk_id"), col("cell"), PqIndex.encodeCol(books).as("codes"))
       .write.mode(SaveMode.Append).partitionBy("cell")
       .parquet(codesDir(root))
-  }
-
-  /** Cascade delete: anti-join rewrite of the codes into a new version
-    * (centroids and codebooks frozen — carried over), one pointer flip.
-    */
-  def delete(spark: SparkSession, ids: DataFrame, idCol: String, root: String): Unit = {
-    val v = VersionedDir.nextVersion(root)
-    spark.read.parquet(centroidsDir(root)).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/centroids")
-    spark.read.parquet(codebooksDir(root)).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/codebooks")
-    spark.read.parquet(codesDir(root))
-      .join(broadcast(ids), Seq(idCol), "left_anti")
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(s"$root/v$v/codes")
-    VersionedDir.flip(root, v)
-    VersionedDir.gc(root, v)
-  }
-
-  /** File compaction after many [[add]] batches: rewrite the codes (one
-    * file per cell) into a new version; contents unchanged.
-    */
-  def compact(spark: SparkSession, root: String): Unit = {
-    val v = VersionedDir.nextVersion(root)
-    spark.read.parquet(centroidsDir(root)).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/centroids")
-    spark.read.parquet(codebooksDir(root)).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/codebooks")
-    spark.read.parquet(codesDir(root))
-      .repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(s"$root/v$v/codes")
-    VersionedDir.flip(root, v)
-    VersionedDir.gc(root, v)
   }
 
   /** ADC probe: rank cells by centroid dot on the DRIVER, scan the

@@ -6,8 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructType}
 
-import java.nio.file.{Files, Paths}
-
 /** Persisted product-quantization index over an embeddings table — the
   * 100 TB STORAGE path of the ANN family (S7, `vector_store.py:154-223`;
   * Jégou et al., "Product Quantization for Nearest Neighbor Search",
@@ -40,19 +38,20 @@ import java.nio.file.{Files, Paths}
   *   - `codebooks` — `(j:int, cid:int, cent:array<double>)`, m×ks rows;
   *   - `codes` — `(chunk_id, codes:binary)`, m bytes per vector.
   */
-object PqIndex {
+object PqIndex extends VectorFamily {
 
   val DefaultM = 8
   val DefaultKs = 256
   val DefaultIters = 2
 
-  /** Conventional index root inside an ingestion store. */
   def indexRoot(storeDir: String): String = s"$storeDir/pqindex"
 
   def codebooksDir(root: String): String = VersionedDir.tableDir(root, "codebooks")
   def codesDir(root: String): String = VersionedDir.tableDir(root, "codes")
 
-  def exists(root: String): Boolean = Files.exists(Paths.get(root, "current"))
+  protected def frozenTables: Seq[String] = Seq("codebooks")
+  protected def vectorTable: String = "codes"
+  protected def cellPartitioned: Boolean = false
 
   /** codebooks[j][c] = codeword c of subspace j. */
   type Books = IndexedSeq[IndexedSeq[Seq[Double]]]
@@ -61,11 +60,6 @@ object PqIndex {
     call_function("graft_pq_encode",
       col("embedding").cast("array<double>"), typedlit(books))
 
-  /** Build (or atomically rebuild) from `(chunk_id,
-    * embedding:array<float>)` rows. Returns the number of codewords per
-    * subspace actually trained (< the requested ks when the corpus holds
-    * fewer vectors).
-    */
   /** Deterministic per-subspace k-means over `(chunk_id, embedding)`
     * rows: seeds are the ks smallest-`xxhash64(chunk_id)` vectors (the
     * same seedless uniform sample VectorIndex uses, so any re-run
@@ -116,28 +110,34 @@ object PqIndex {
     books
   }
 
+  /** Build (or atomically rebuild) from `(chunk_id,
+    * embedding:array<float>)` rows. Returns the number of codewords per
+    * subspace actually trained (< the requested ks when the corpus holds
+    * fewer vectors).
+    */
   def build(emb: DataFrame, root: String, m: Int = DefaultM,
       ks: Int = DefaultKs, iters: Int = DefaultIters): Int = {
     require(ks >= 1 && ks <= 256, s"ks must be in [1,256] (byte codes), got $ks")
     val spark = emb.sparkSession
-    import spark.implicits._
     GraftFunctions.register(spark)
     val e = emb.select(col("chunk_id"), col("embedding"))
     val books = train(e, m, ks, iters)
+    VersionedDir.commit(root,
+      "codebooks" -> booksTable(spark, books).write,
+      "codes" -> e.select(col("chunk_id"), encodeCol(books).as("codes")).write)
+    books.head.length
+  }
 
-    val v = VersionedDir.nextVersion(root)
+  /** The `codebooks` table of `books`, one file — shared with
+    * [[IvfPqIndex]].
+    */
+  private[retrieval] def booksTable(spark: SparkSession, books: Books): DataFrame = {
+    import spark.implicits._
     spark.createDataset(for {
       (book, j) <- books.zipWithIndex
       (cent, c) <- book.zipWithIndex
     } yield (j, c, cent))
-      .toDF("j", "cid", "cent")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/codebooks")
-    e.select(col("chunk_id"), encodeCol(books).as("codes"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/codes")
-    VersionedDir.flip(root, v)
-    VersionedDir.gc(root, v)
-    books.head.length
+      .toDF("j", "cid", "cent").coalesce(1)
   }
 
   /** The `codebooks` table as [[build]] writes it (and [[IvfPqIndex]]).
@@ -163,36 +163,6 @@ object PqIndex {
     val books = loadBooks(spark, root)
     emb.select(col("chunk_id"), encodeCol(books).as("codes"))
       .write.mode(SaveMode.Append).parquet(codesDir(root))
-  }
-
-  /** Cascade delete: anti-join rewrite of the codes into a new version
-    * (codebooks frozen — carried over), one pointer flip.
-    */
-  def delete(spark: SparkSession, ids: DataFrame, idCol: String, root: String): Unit = {
-    val v = VersionedDir.nextVersion(root)
-    spark.read.parquet(codebooksDir(root))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/codebooks")
-    spark.read.parquet(codesDir(root))
-      .join(broadcast(ids), Seq(idCol), "left_anti")
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/codes")
-    VersionedDir.flip(root, v)
-    VersionedDir.gc(root, v)
-  }
-
-  /** File compaction after many [[add]] batches: rewrite the codes into
-    * a new version and flip; contents unchanged.
-    */
-  def compact(spark: SparkSession, root: String): Unit = {
-    val v = VersionedDir.nextVersion(root)
-    spark.read.parquet(codebooksDir(root))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/codebooks")
-    spark.read.parquet(codesDir(root))
-      .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/codes")
-    VersionedDir.flip(root, v)
-    VersionedDir.gc(root, v)
   }
 
   /** The per-query ADC lookup table: lut[j][c] = q_subⱼ · codeword (the

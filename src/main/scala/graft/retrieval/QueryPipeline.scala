@@ -37,10 +37,6 @@ object QueryPipeline {
 
   val PerSourceFetch = 40 // 2 × retrieval_k per source (hybrid_search.py:67-68)
 
-  /** chunk_id used across the ingested tables. */
-  private def chunkId = concat_ws(":",
-    col("conv_id"), col("turn_idx"), col("chunk_index"))
-
   /** ADC candidates fetched before the exact rerank on the PQ path —
     * generous (4× the per-source cut) because PQ codes tie within tight
     * clusters (see [[PqIndex]]).
@@ -98,7 +94,7 @@ object QueryPipeline {
   private def embeddings(spark: SparkSession, outDir: String): DataFrame =
     spark.read.schema(Ingestion.EmbeddingsReadSchema)
       .parquet(Ingestion.embeddingsDir(outDir))
-      .select(chunkId.as("chunk_id"), col("embedding"))
+      .select(Ingestion.chunkId, col("embedding"))
 
   /** The reference API's request-validation bounds
     * (`app/models/query.py:10` — `top_k` ∈ [1, 20], pinned by
@@ -120,7 +116,7 @@ object QueryPipeline {
       fused: DataFrame, topK: Int): DataFrame =
     spark.read.schema(ExtractionPipeline.ChunksReadSchema)
       .parquet(ExtractionPipeline.chunksDir(outDir))
-      .select(chunkId.as("chunk_id"), col("conv_id"), col("turn_idx"),
+      .select(Ingestion.chunkId, col("conv_id"), col("turn_idx"),
         col("chunk_index"), col("content"))
       .join(broadcast(fused), "chunk_id")
       .orderBy(desc("rrf_score"), col("chunk_id"))

@@ -33,18 +33,19 @@ import java.nio.file.{Files, Paths}
   * √N-small (31k × 64 doubles ≈ 16 MB at N = 10⁹), comfortably a task
   * literal at any realistic corpus size.
   */
-object VectorIndex {
+object VectorIndex extends VectorFamily {
 
   val DefaultIters = 2
   val DefaultNprobe = 2
 
-  /** Conventional index root inside an ingestion store. */
   def indexRoot(storeDir: String): String = s"$storeDir/vecindex"
 
   def centroidsDir(root: String): String = VersionedDir.tableDir(root, "centroids")
   def assignmentsDir(root: String): String = VersionedDir.tableDir(root, "assignments")
 
-  def exists(root: String): Boolean = Files.exists(Paths.get(root, "current"))
+  protected def frozenTables: Seq[String] = Seq("centroids")
+  protected def vectorTable: String = "assignments"
+  protected def cellPartitioned: Boolean = true
 
   private def normalize(v: Seq[Double]): Seq[Double] = {
     val n = math.sqrt(v.map(x => x * x).sum)
@@ -84,11 +85,6 @@ object VectorIndex {
     call_function("graft_best_cell",
       col("embedding").cast("array<double>"), typedlit(cents))
 
-  /** Build (or atomically rebuild) the index from `(chunk_id,
-    * embedding:array<float>)` rows. Returns the number of centroids
-    * actually written (less than the requested nlist when the corpus
-    * holds fewer vectors).
-    */
   /** Deterministic k-means over `(chunk_id, embedding)` rows: seeds are
     * the k smallest-`xxhash64(chunk_id)` vectors (a uniform, seedless
     * sample any re-run reproduces), then `iters` Lloyd rounds with the
@@ -186,10 +182,14 @@ object VectorIndex {
   /** `nlist = max(8, ⌊√N⌋)` unless overridden. */
   def defaultNlist(n: Long): Int = math.max(8, math.sqrt(n.toDouble).toInt)
 
+  /** Build (or atomically rebuild) the index from `(chunk_id,
+    * embedding:array<float>)` rows. Returns the number of centroids
+    * actually written (less than the requested nlist when the corpus
+    * holds fewer vectors).
+    */
   def build(emb: DataFrame, root: String, nlist: Option[Int] = None,
       iters: Int = DefaultIters): Int = {
     val spark = emb.sparkSession
-    import spark.implicits._
     GraftFunctions.register(spark)
     val e = emb.select(col("chunk_id"), col("embedding"))
 
@@ -197,17 +197,19 @@ object VectorIndex {
     val k = nlist.getOrElse(defaultNlist(n))
     val cents = trainCentroids(e, k, iters)
 
-    val v = VersionedDir.nextVersion(root)
-    spark.createDataset(cents.zipWithIndex.map { case (c, i) => (i, c) })
-      .toDF("cell", "centroid")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/centroids")
-    e.withColumn("cell", cellCol(cents))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(s"$root/v$v/assignments")
-    VersionedDir.flip(root, v)
-    VersionedDir.gc(root, v)
+    VersionedDir.commit(root,
+      "centroids" -> centroidsTable(spark, cents).write,
+      "assignments" -> e.withColumn("cell", cellCol(cents)).write.partitionBy("cell"))
     cents.length
+  }
+
+  /** The `centroids` table of `cents`, one file — shared with
+    * [[IvfPqIndex]].
+    */
+  private[retrieval] def centroidsTable(spark: SparkSession, cents: IndexedSeq[Seq[Double]]): DataFrame = {
+    import spark.implicits._
+    spark.createDataset(cents.zipWithIndex.map { case (c, i) => (i, c) })
+      .toDF("cell", "centroid").coalesce(1)
   }
 
   /** Reads the `centroids` table under `root`'s current version —
@@ -231,41 +233,6 @@ object VectorIndex {
       .withColumn("cell", cellCol(cents))
       .write.mode(SaveMode.Append).partitionBy("cell")
       .parquet(assignmentsDir(root))
-  }
-
-  /** Cascade delete: anti-join rewrite of the assignments into a new
-    * version (centroids are frozen — carried over unchanged), committed
-    * by one pointer flip. Same S10 discipline as
-    * [[Bm25IndexTables.delete]].
-    */
-  def delete(spark: SparkSession, ids: DataFrame, idCol: String, root: String): Unit = {
-    val v = VersionedDir.nextVersion(root)
-    spark.read.parquet(centroidsDir(root))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/centroids")
-    spark.read.parquet(assignmentsDir(root))
-      .join(broadcast(ids), Seq(idCol), "left_anti")
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(s"$root/v$v/assignments")
-    VersionedDir.flip(root, v)
-    VersionedDir.gc(root, v)
-  }
-
-  /** File compaction: [[add]] appends a few small files per cell per
-    * batch; rewrite the assignments (one file per cell) into a new
-    * version and flip. Centroids are carried over; contents unchanged.
-    */
-  def compact(spark: SparkSession, root: String): Unit = {
-    val v = VersionedDir.nextVersion(root)
-    spark.read.parquet(centroidsDir(root))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/v$v/centroids")
-    spark.read.parquet(assignmentsDir(root))
-      .repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(s"$root/v$v/assignments")
-    VersionedDir.flip(root, v)
-    VersionedDir.gc(root, v)
   }
 
   /** Exact re-scoring of a small candidate set against the raw

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.model.Turn
 import graft.pipeline.{ExtractionPipeline, Ingestion}
 import graft.pipeline.TableIO.deleteTree
-import graft.retrieval.Bm25IndexTables
+import graft.retrieval.{Bm25IndexTables, VectorFamily}
 import graft.text.Chunker
 import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,15 +16,18 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 /** Continuous END-TO-END ingestion: a stream of raw turns → extract →
   * chunk → embed → vector + BM25 store, incrementally per micro-batch —
   * the streaming composition of [[StreamingExtraction]] (stateless
-  * extract) and [[graft.pipeline.Ingestion.add]] (per-upload incremental
-  * store add, the reference's upload lifecycle `document_service.py:
-  * 173-355` UPLOADED → PARSING → CHUNKING → EMBEDDING → STORING).
+  * extract) and the store append [[graft.pipeline.Ingestion.add]] also
+  * uses ([[graft.pipeline.Ingestion.append]]: the reference's upload
+  * lifecycle `document_service.py:173-355` UPLOADED → PARSING → CHUNKING
+  * → EMBEDDING → STORING).
   *
   * The store it maintains is QUERY-COMPATIBLE with a batch-built one:
-  * `chunks/`, `embeddings/`, `index/` under `storeDir`, so
-  * [[graft.retrieval.QueryPipeline.query]] runs unchanged against it.
-  * The only layout difference is an extra leading partition column
-  * `ingest_batch` on chunks/embeddings — the unit of crash scrubbing.
+  * `chunks/`, `embeddings/`, `index/` and any vector index under
+  * `storeDir`, so [[graft.retrieval.QueryPipeline.query]] runs unchanged
+  * against it. The only layout difference is an extra leading partition
+  * column `ingest_batch` on chunks/embeddings — the unit of crash
+  * scrubbing. A store is either streamed or batch-built: `Ingestion.add`
+  * appends `bucket`-only partitions, which a streamed table cannot mix.
   *
   * == Exactly-once protocol ==
   *
@@ -37,21 +40,20 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *  2. replay with an `<id>.intent` marker but no commit → a crash
   *     happened mid-append: SCRUB the partial state — drop the batch's
   *     `ingest_batch=<id>` partitions (chunks + embeddings) and
-  *     anti-join the batch's chunk ids out of the BM25 tables (a
-  *     [[Bm25IndexTables.delete]] versioned swap, itself crash-safe) —
-  *     then re-ingest from scratch;
+  *     anti-join the batch's chunk ids out of the BM25 tables and every
+  *     vector index ([[graft.pipeline.Ingestion.deleteChunks]], versioned
+  *     swaps, each crash-safe) — then re-ingest from scratch;
   *  3. fresh batch: write intent, append chunks/embeddings/postings/
-  *     doclens, then atomically move the intent to commit.
+  *     doclens/vector indexes, then atomically move the intent to commit.
   *
   * Scale notes: extraction/chunking/embedding are one narrow
   * `mapPartitions` pass over the micro-batch (no shuffle); the only
   * shuffle is the BM25 postings `groupBy`, sized by the BATCH, not the
-  * store. The per-batch driver-side `collect` is limited to the batch's
-  * distinct conv ids (the doomed-id set of a scrub — same bounded shape
-  * as [[Ingestion.delete]]'s API). Store growth is append-only; postings
-  * never rewrite on add, so ingesting N batches is O(their own data),
-  * not O(corpus) per batch (the reference rebuilds its whole in-memory
-  * index per add, `bm25_index.py:140-141`).
+  * store. Nothing is collected per batch: a scrub's doomed chunk ids stay
+  * a DataFrame, broadcast into the index rewrites. Store growth is
+  * append-only; postings never rewrite on add, so ingesting N batches is
+  * O(their own data), not O(corpus) per batch (the reference rebuilds
+  * its whole in-memory index per add, `bm25_index.py:140-141`).
   */
 object StreamingIngestion {
 
@@ -77,7 +79,7 @@ object StreamingIngestion {
   }
 
   /** One embedded chunk row of a micro-batch (content kept alongside the
-    * vector so the chunks write and the BM25 add share one computation).
+    * vector so every table of the append shares one computation).
     * Not `private`: Spark's generated (de)serializer code must reach it.
     */
   final case class BatchChunk(
@@ -95,6 +97,11 @@ object StreamingIngestion {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** Delete batch `id`'s partitions of the chunks and embeddings tables. */
+  private def dropBatch(storeDir: String, id: Long): Unit =
+    Seq(chunksDir(storeDir), embeddingsDir(storeDir))
+      .foreach(dir => deleteTree(Paths.get(dir, s"ingest_batch=$id")))
+
   /** Remove every trace of a half-ingested batch: the batch's partition
     * directories and ITS EXACT chunk ids in the index families. Keyed by
     * the replayed batch's own chunk ids (recomputed deterministically) —
@@ -106,22 +113,12 @@ object StreamingIngestion {
     */
   private def scrub(spark: SparkSession, storeDir: String, batchId: Long,
       chunkIds: org.apache.spark.sql.DataFrame): Unit = {
-    deleteTree(Paths.get(chunksDir(storeDir), s"ingest_batch=$batchId"))
-    deleteTree(Paths.get(embeddingsDir(storeDir), s"ingest_batch=$batchId"))
-    if (Files.exists(Paths.get(indexDir(storeDir), "current")))
-      Bm25IndexTables.delete(spark, chunkIds, "chunk_id", indexDir(storeDir))
-    val vecRoot = graft.retrieval.VectorIndex.indexRoot(storeDir)
-    if (graft.retrieval.VectorIndex.exists(vecRoot))
-      graft.retrieval.VectorIndex.delete(spark, chunkIds, "chunk_id", vecRoot)
-    val pqRoot = graft.retrieval.PqIndex.indexRoot(storeDir)
-    if (graft.retrieval.PqIndex.exists(pqRoot))
-      graft.retrieval.PqIndex.delete(spark, chunkIds, "chunk_id", pqRoot)
-    val ivfPqRoot = graft.retrieval.IvfPqIndex.indexRoot(storeDir)
-    if (graft.retrieval.IvfPqIndex.exists(ivfPqRoot))
-      graft.retrieval.IvfPqIndex.delete(spark, chunkIds, "chunk_id", ivfPqRoot)
+    dropBatch(storeDir, batchId)
+    Ingestion.deleteChunks(spark, storeDir, chunkIds)
   }
 
-  /** Ingest one micro-batch under the two-phase marker protocol.
+  /** Ingest one micro-batch under the two-phase marker protocol, through
+    * the store append [[graft.pipeline.Ingestion.add]] also uses.
     * Idempotent under replay with the same (batchId, rows). Returns the
     * number of chunks ingested (0 for an already-committed replay).
     */
@@ -146,59 +143,18 @@ object StreamingIngestion {
               Ingestion.hashedEmbedding(c.content, dim), e.bucket)
           }
       })
+      .withColumn("ingest_batch", lit(batchId))
       .persist(StorageLevel.MEMORY_AND_DISK) // consumed by the writes below
     try {
-      def chunkIdCol = concat_ws(":",
-        col("conv_id"), col("turn_idx"), col("chunk_index")).as("chunk_id")
-
       // crash replay: the recomputed chunk ids ARE the scrub keys — the
       // replayed batch carries the same rows, so this names exactly what
       // the crashed attempt could have appended (computed only on the
       // rare replay path; a fresh batch pays no extra job)
       if (Files.exists(intentMarker(storeDir, batchId)))
-        scrub(spark, storeDir, batchId, derived.toDF().select(chunkIdCol))
+        scrub(spark, storeDir, batchId, derived.select(Ingestion.chunkId))
 
       writeMarker(intentMarker(storeDir, batchId), "")
-
-      derived.toDF()
-        .withColumn("ingest_batch", lit(batchId))
-        .select(col("ingest_batch"), col("conv_id"), col("turn_idx"),
-          col("chunk_index"), col("content"), col("start"), col("end"),
-          col("bucket"))
-        .write.mode(SaveMode.Append).partitionBy("ingest_batch", "bucket")
-        .parquet(chunksDir(storeDir))
-
-      derived.toDF()
-        .withColumn("ingest_batch", lit(batchId))
-        .select(col("ingest_batch"), col("conv_id"), col("turn_idx"),
-          col("chunk_index"), lit("text").as("modality"), col("embedding"),
-          col("bucket"))
-        .write.mode(SaveMode.Append).partitionBy("ingest_batch", "bucket")
-        .parquet(embeddingsDir(storeDir))
-
-      val chunkDocs = derived.toDF().select(chunkIdCol, col("content"))
-      if (Files.exists(Paths.get(indexDir(storeDir), "current")))
-        Bm25IndexTables.add(chunkDocs, "chunk_id", "content", indexDir(storeDir))
-      else
-        Bm25IndexTables.build(chunkDocs, "chunk_id", "content", indexDir(storeDir))
-
-      // keep the IVF index covering the stream (same frozen-centroid add
-      // as Ingestion.add) — without this, streamed chunks would be
-      // invisible to the probe path QueryPipeline auto-selects
-      val vecRoot = graft.retrieval.VectorIndex.indexRoot(storeDir)
-      if (graft.retrieval.VectorIndex.exists(vecRoot))
-        graft.retrieval.VectorIndex.add(
-          derived.toDF().select(chunkIdCol, col("embedding")), vecRoot)
-      val pqRoot = graft.retrieval.PqIndex.indexRoot(storeDir)
-      if (graft.retrieval.PqIndex.exists(pqRoot))
-        graft.retrieval.PqIndex.add(
-          derived.toDF().select(chunkIdCol, col("embedding")), pqRoot)
-      val ivfPqRoot = graft.retrieval.IvfPqIndex.indexRoot(storeDir)
-      if (graft.retrieval.IvfPqIndex.exists(ivfPqRoot))
-        graft.retrieval.IvfPqIndex.add(
-          derived.toDF().select(chunkIdCol, col("embedding")), ivfPqRoot)
-
-      val n = derived.count()
+      val n = Ingestion.append(derived, storeDir, Seq("ingest_batch", "bucket"))
       // atomic intent → commit flip seals the batch
       Files.move(intentMarker(storeDir, batchId), commitMarker(storeDir, batchId),
         StandardCopyOption.ATOMIC_MOVE)
@@ -223,10 +179,7 @@ object StreamingIngestion {
         .linesIterator.toVector
       lines.headOption.flatMap(_.toLongOption).foreach { gen =>
         if (Files.exists(commitMarker(storeDir, gen))) rollForward(storeDir, gen)
-        else {
-          deleteTree(Paths.get(chunksDir(storeDir), s"ingest_batch=$gen"))
-          deleteTree(Paths.get(embeddingsDir(storeDir), s"ingest_batch=$gen"))
-        }
+        else dropBatch(storeDir, gen)
       }
       Files.delete(intent)
     }
@@ -240,8 +193,7 @@ object StreamingIngestion {
   private def rollForward(storeDir: String, gen: Long): Unit = {
     new String(Files.readAllBytes(commitMarker(storeDir, gen)), StandardCharsets.UTF_8)
       .linesIterator.flatMap(_.toLongOption).foreach { id =>
-        deleteTree(Paths.get(chunksDir(storeDir), s"ingest_batch=$id"))
-        deleteTree(Paths.get(embeddingsDir(storeDir), s"ingest_batch=$id"))
+        dropBatch(storeDir, id)
         Files.deleteIfExists(commitMarker(storeDir, id))
       }
   }
@@ -302,15 +254,7 @@ object StreamingIngestion {
 
     // index families compact independently (atomic version swaps)
     Bm25IndexTables.compact(spark, indexDir(storeDir))
-    val vecRoot = graft.retrieval.VectorIndex.indexRoot(storeDir)
-    if (graft.retrieval.VectorIndex.exists(vecRoot))
-      graft.retrieval.VectorIndex.compact(spark, vecRoot)
-    val pqRoot = graft.retrieval.PqIndex.indexRoot(storeDir)
-    if (graft.retrieval.PqIndex.exists(pqRoot))
-      graft.retrieval.PqIndex.compact(spark, pqRoot)
-    val ivfPqRoot = graft.retrieval.IvfPqIndex.indexRoot(storeDir)
-    if (graft.retrieval.IvfPqIndex.exists(ivfPqRoot))
-      graft.retrieval.IvfPqIndex.compact(spark, ivfPqRoot)
+    VectorFamily.present(storeDir).foreach { case (family, root) => family.compact(spark, root) }
   }
 
   /** Wire a landing directory of turn parquet files into a continuously

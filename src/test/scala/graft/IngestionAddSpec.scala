@@ -1,8 +1,9 @@
 package graft
 
 import graft.fixtures.TranscriptGen
+import graft.model.Turn
 import graft.pipeline.{ExtractionPipeline, Ingestion}
-import graft.retrieval.Bm25IndexTables
+import graft.retrieval.{Bm25IndexTables, QueryPipeline}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,23 +12,46 @@ import java.nio.file.Files
 /** Incremental ingestion — the reference's per-upload lifecycle
   * (`document_service.py:173-355`) — must be CONTENT-equivalent to a
   * batch rebuild: a store built from corpus A then `Ingestion.add`-ed
-  * corpus B carries exactly the embeddings and BM25 index rows of one
-  * build over A ∪ B, and the extended index still validates and scores.
+  * corpus B carries exactly the chunks, embeddings and BM25 index rows of
+  * one build over A ∪ B, the extended index still validates and scores,
+  * and the next question reads the added chunks (read-your-writes).
   */
 class IngestionAddSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private val NBuckets = 4
 
-  private def extractConvs(range: Range): String = {
+  private def extract(turns: Seq[Turn]): String = {
     import spark.implicits._
     val out = Files.createTempDirectory("ingadd").toString
-    val turns = spark.createDataset(
-      range.flatMap(i => TranscriptGen.conversation(7L, i.toLong)))
-    ExtractionPipeline.run(spark, turns,
+    ExtractionPipeline.run(spark, spark.createDataset(turns),
       ExtractionPipeline.Config(out, nBuckets = NBuckets, waves = 1, resume = false))
     out
   }
+
+  private def convs(range: Range): Seq[Turn] =
+    range.flatMap(i => TranscriptGen.conversation(7L, i.toLong))
+
+  private def extractConvs(range: Range): String = extract(convs(range))
+
+  /** A token no generated conversation holds, and a turn of only it. */
+  private val Token = "zqxreadback"
+  private val tokenTurn =
+    convs(9 until 10).last.copy(turn_idx = 10000, role = "user", text = s"$Token $Token $Token", tool = "")
+
+  /** Store over A (convs 0-5) with B (convs 6-9 plus [[tokenTurn]])
+    * added, and the batch store over A ∪ B.
+    */
+  private lazy val (added, batch) = {
+    val store = extractConvs(0 until 6)
+    Ingestion.run(spark, store)
+    Ingestion.add(spark, store, extract(convs(6 until 10) :+ tokenTurn))
+    val all = extract(convs(0 until 10) :+ tokenTurn)
+    Ingestion.run(spark, all)
+    (store, all)
+  }
+
+  private def tableRows(dir: String): Seq[String] = sortedRows(spark.read.parquet(dir))
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -85,5 +109,30 @@ class IngestionAddSpec extends AnyFunSuite {
       .select("conv_id").distinct()
       .filter(col("conv_id") >= "conv-000005").count()
     assert(newConvs == 3)
+  }
+
+  test("add appends the chunks: the store's chunks rows equal the batch build's") {
+    assert(tableRows(ExtractionPipeline.chunksDir(added)) ==
+      tableRows(ExtractionPipeline.chunksDir(batch)))
+  }
+
+  test("a question right after add finds the added chunk first, with its content") {
+    val top = QueryPipeline.query(spark, added, Token, topK = 3).collect()
+    assert(top.nonEmpty, "the question found nothing")
+    assert(top.head.getAs[String]("content").contains(Token),
+      s"added chunk not first: ${top.map(_.getAs[String]("chunk_id")).mkString(", ")}")
+    assert(top.head.getAs[String]("conv_id") == tokenTurn.conv_id)
+  }
+
+  test("re-running Ingestion.run after add rebuilds the batch store's tables") {
+    val store = extractConvs(0 until 6)
+    Ingestion.run(spark, store)
+    Ingestion.add(spark, store, extract(convs(6 until 10) :+ tokenTurn))
+    Ingestion.run(spark, store)
+    Seq(Ingestion.embeddingsDir(_: String),
+      (d: String) => Bm25IndexTables.doclensDir(Ingestion.indexDir(d)),
+      (d: String) => Bm25IndexTables.postingsDir(Ingestion.indexDir(d))).foreach { dir =>
+      assert(tableRows(dir(store)) == tableRows(dir(batch)), dir(store))
+    }
   }
 }

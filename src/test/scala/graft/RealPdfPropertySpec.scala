@@ -97,18 +97,60 @@ class RealPdfPropertySpec extends AnyFunSuite {
     assert(imgs.forall(i => i.width > 0 && i.height > 0))
   }
 
+  private def deflate(s: String): Array[Byte] = {
+    val d = new java.util.zip.Deflater()
+    d.setInput(s.getBytes("ISO-8859-1")); d.finish()
+    val out = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](4096)
+    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+    d.end(); out.toByteArray
+  }
+
+  /** A PDF of one FlateDecode content stream per page, each drawing its
+    * text (the same construction as `PdfDirectorySourceSpec.pdf`).
+    */
+  private def flatePdf(pages: Seq[String]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
+    w("%PDF-1.4\n")
+    pages.zipWithIndex.foreach { case (text, i) =>
+      val z = deflate(s"BT /F1 12 Tf 72 720 Td ($text) Tj ET")
+      w(s"${3 + i} 0 obj << /Length ${z.length} /Filter /FlateDecode >> stream\n")
+      out.write(z)
+      w("\nendstream endobj\n")
+    }
+    w("%%EOF\n")
+    out.toByteArray
+  }
+
+  /** Zero every 7th byte of the middle third, as P8 damages its file. */
+  private def corrupted(bytes: Array[Byte]): Array[Byte] = {
+    val b = bytes.clone()
+    var i = b.length / 3
+    while (i < 2 * b.length / 3) { b(i) = 0; i += 7 }
+    b
+  }
+
   test("P8: partial failure resilience — non-PDF and corrupted bytes") {
     // non-PDF bytes: rejected by signature, extraction total and empty
     val notPdf = "Not a PDF".getBytes("ISO-8859-1")
     assert(!PdfFile.looksPdfFile(notPdf))
     assert(PdfFile.extract(notPdf).isEmpty)
-    // a real file with a corrupted interior must not throw
-    assume(rawDir.isDirectory)
-    val bytes = pdf("1512.03385v1.pdf")
-    var i = bytes.length / 3
-    while (i < 2 * bytes.length / 3) { bytes(i) = 0; i += 7 }
-    PdfFile.mainText(bytes) // survives; content is best-effort
-    // truncation must not throw either
+    val words = Seq("alpha", "bravo", "charlie", "delta", "echo", "foxtrot")
+    val bytes = flatePdf(words.map(w => s"$w section " + s"$w words " * 30))
+    val intact = PdfFile.mainText(bytes)
+    assert(words.forall(w => intact.contains(s"$w section")), intact.take(200))
+    // a corrupted interior must not throw; the first page lies before it
+    val damaged = PdfFile.mainText(corrupted(bytes))
+    assert(damaged.contains("alpha section"), damaged.take(200))
+    // truncation must not throw either, and keeps the pages before the cut
+    val truncated = PdfFile.mainText(java.util.Arrays.copyOf(bytes, bytes.length / 2))
+    assert(truncated.contains("alpha section"), truncated.take(200))
+  }
+
+  test("P8: partial failure resilience on the sample corpus") {
+    assume(rawDir.isDirectory, "reference sample corpus not present")
+    PdfFile.mainText(corrupted(pdf("1512.03385v1.pdf"))) // survives; content is best-effort
     PdfFile.mainText(java.util.Arrays.copyOf(pdf("Bodea Brochure.pdf"), 40000))
   }
 }

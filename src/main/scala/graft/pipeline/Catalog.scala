@@ -69,14 +69,7 @@ object Catalog {
   /** S10 companion: drop catalog rows for deleted documents (anti-join
     * rewrite, same shape as the chunk/index deletes).
     */
-  def delete(spark: SparkSession, outDir: String, ids: DataFrame): Unit = {
-    val kept = spark.read.parquet(catalogDir(outDir))
-      .join(broadcast(ids), Seq("conv_id"), "left_anti")
-    val tmp = s"${catalogDir(outDir)}.rewrite"
-    kept.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val src = java.nio.file.Paths.get(tmp)
-    val dst = java.nio.file.Paths.get(catalogDir(outDir))
-    TableIO.deleteTree(dst)
-    java.nio.file.Files.move(src, dst)
-  }
+  def delete(spark: SparkSession, outDir: String, ids: DataFrame): Unit =
+    TableIO.replace(spark.read.parquet(catalogDir(outDir))
+      .join(broadcast(ids), Seq("conv_id"), "left_anti"), catalogDir(outDir))
 }

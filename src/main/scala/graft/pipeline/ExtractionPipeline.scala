@@ -102,11 +102,14 @@ object ExtractionPipeline {
     .add("chunk_index", IntegerType).add("content", StringType)
 
   /** Time-travel read of an output table as of manifest snapshot `id`:
-    * buckets are written once and committed append-only, so filtering
-    * the bucket-partitioned parquet to the snapshot's committed bucket
-    * set reproduces that snapshot exactly — and the filter is a
-    * partition-pruned scan (only those buckets' files open). Current
-    * snapshot ids: [[TableIO.snapshots]].
+    * [[run]] writes each bucket once and commits append-only, so
+    * filtering the bucket-partitioned parquet to the snapshot's committed
+    * bucket set reproduces what [[run]] had written by then — and the
+    * filter is a partition-pruned scan (only those buckets' files open).
+    * Two later writes to `chunks` are not snapshotted: rows that
+    * [[Ingestion.add]] appends show up at every snapshot listing their
+    * bucket, and rows that [[Ingestion.delete]] drops are gone from
+    * every snapshot. Current snapshot ids: [[TableIO.snapshots]].
     */
   private def bucketTableDir(outDir: String, table: String): String =
     table match {
@@ -136,7 +139,9 @@ object ExtractionPipeline {
     * the new buckets' files, letting a downstream consumer re-process
     * an increment without ever re-reading (or diffing) the 100 TB of
     * already-consumed history. `fromId = 0` means "from the beginning"
-    * (every bucket of `toId` is new).
+    * (every bucket of `toId` is new). Chunk rows that [[Ingestion.add]]
+    * appends are no change of their own: a delta returns them only when
+    * it newly lists their bucket.
     */
   def tableChanges(spark: SparkSession, outDir: String, table: String,
       fromId: Long, toId: Long): DataFrame = {

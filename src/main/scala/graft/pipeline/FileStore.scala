@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.security.MessageDigest
 import java.time.Instant
 
@@ -73,11 +73,7 @@ object FileStore {
       throw FileValidationError(
         s"File too large: ${content.length} bytes exceeds maximum $MaxBytes")
     val dst = storagePath(root, fileId, filename)
-    Files.createDirectories(dst.getParent)
-    val tmp = dst.resolveSibling(dst.getFileName.toString + ".tmp")
-    Files.write(tmp, content)
-    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    TableIO.writeAtomically(dst, content)
     val digest = MessageDigest.getInstance("SHA-256").digest(content)
     FileMeta(fileId, filename, content.length.toLong,
       digest.map("%02x".format(_)).mkString, dst.toString, Instant.now())

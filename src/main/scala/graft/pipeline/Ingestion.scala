@@ -184,7 +184,9 @@ object Ingestion {
     *
     * Caller guarantees the conv ids are new (the reference's upload mints
     * fresh ids); re-ingesting an EXISTING id is [[run]]'s overwrite path
-    * or [[delete]]-then-add. Equivalence property (`IngestionAddSpec`):
+    * or [[delete]]-then-add ([[delete]] drops the id's chunks rows too,
+    * so each re-added chunk is stored once). Equivalence property
+    * (`IngestionAddSpec`):
     * a store built from corpus A then add-ed corpus B has the same
     * chunks, embeddings and index contents as one batch build over A ∪ B.
     */
@@ -225,26 +227,25 @@ object Ingestion {
     rows.count()
   }
 
-  /** Cascade delete of whole documents (conversations) from the STORING
-    * tables — the reference's `vector_store.delete_document` +
+  /** Cascade delete of whole documents (conversations) from the store —
+    * the reference's `vector_store.delete_document` +
     * `bm25_index.delete_documents` pair (`vector_store.py:154-191`,
-    * `document_service.py:420-484`): embeddings rows are dropped by an
-    * anti-join rewrite (same discipline as [[Catalog.delete]]), and the
-    * index families' rows by [[deleteChunks]]. Deleting an unknown id is
-    * a no-op; rows of every other document are byte-identical afterwards
+    * `document_service.py:420-484`): chunks and embeddings rows are
+    * dropped by an anti-join rewrite ([[TableIO.replace]]) that keeps each table's partition columns
+    * (`bucket`, and `ingest_batch` on a streamed store), and the index
+    * families' rows by [[deleteChunks]]. So a later [[add]] of the same
+    * ids, or [[run]], sees no trace of them. Deleting an unknown id is a
+    * no-op; rows of every other document are byte-identical afterwards
     * (reference property P29, deletion isolation).
     */
   def delete(spark: SparkSession, outDir: String, convIds: Seq[String]): Unit = {
     import spark.implicits._
-    val ids = convIds.toDF("conv_id")
-    val kept = spark.read.parquet(embeddingsDir(outDir))
-      .join(broadcast(ids), Seq("conv_id"), "left_anti")
-    val tmp = s"${embeddingsDir(outDir)}.rewrite"
-    kept.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    val src = java.nio.file.Paths.get(tmp)
-    val dst = java.nio.file.Paths.get(embeddingsDir(outDir))
-    TableIO.deleteTree(dst)
-    java.nio.file.Files.move(src, dst)
+    val ids = broadcast(convIds.toDF("conv_id"))
+    Seq(ExtractionPipeline.chunksDir(outDir), embeddingsDir(outDir)).foreach { dir =>
+      val rows = spark.read.parquet(dir)
+      TableIO.replace(rows.join(ids, Seq("conv_id"), "left_anti"), dir,
+        Seq("ingest_batch", "bucket").filter(rows.columns.contains): _*)
+    }
 
     // chunk ids are conv_id:turn_idx:chunk_index — derive the doomed set
     // from the index's own doclens table (no chunks-table scan needed)

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -121,13 +121,9 @@ object SchemaEvolution {
     Paths.get(tableDir, s"schema-v$id.json")
 
   /** Record `schema` as snapshot `snapshotId`'s schema (atomic swap). */
-  def commitSchema(tableDir: String, snapshotId: Long, schema: TableSchema): Unit = {
-    Files.createDirectories(Paths.get(tableDir))
-    val tmp = Paths.get(tableDir, s"schema-v$snapshotId.json.tmp")
-    Files.write(tmp, render(schema).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, schemaPath(tableDir, snapshotId),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def commitSchema(tableDir: String, snapshotId: Long, schema: TableSchema): Unit =
+    TableIO.writeAtomically(schemaPath(tableDir, snapshotId),
+      render(schema).getBytes(StandardCharsets.UTF_8))
 
   /** The schema in force AT snapshot `id`: the newest committed schema
     * with version ≤ id (schemas only change on commits that declare one).

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import org.apache.spark.sql.{DataFrame, SaveMode}
+
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
@@ -78,11 +80,7 @@ object TableIO {
     // buckets re-listed from prev keep their original stamp
     val next = Manifest(id,
       prev.completed ++ done.map(e => e.bucket -> e.copy(writer = id)))
-    Files.createDirectories(Paths.get(tableDir))
-    val tmp = Paths.get(tableDir, "manifest.json.tmp")
-    Files.write(tmp, render(next).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifestPath(tableDir),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    writeAtomically(manifestPath(tableDir), render(next).getBytes(StandardCharsets.UTF_8))
     // history copy strictly AFTER the atomic swap: a crash between the
     // two then loses only the snapshot file (readAt → Empty), never
     // publishes an id the table never committed — the reverse order
@@ -169,6 +167,28 @@ object TableIO {
       scala.util.Using.resource(Files.walk(p))(
         _.sorted(java.util.Comparator.reverseOrder[Path]()).iterator().asScala.toVector)
         .foreach(Files.deleteIfExists(_))
+
+  /** Write `bytes` to `dst` through a `.tmp` sibling and one atomic
+    * rename, creating the parent directory: a reader never sees a torn
+    * file — the single-file-swap every manifest, pointer and marker uses.
+    */
+  def writeAtomically(dst: Path, bytes: Array[Byte]): Unit = {
+    Files.createDirectories(dst.getParent)
+    val tmp = dst.resolveSibling(dst.getFileName.toString + ".tmp")
+    Files.write(tmp, bytes)
+    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Replace the parquet table at `dir` with `rows` (a plan that may read
+    * it), partitioned by `partitions`: written beside the table, then
+    * swapped in — the anti-join rewrite every whole-document delete uses.
+    */
+  def replace(rows: DataFrame, dir: String, partitions: String*): Unit = {
+    val tmp = Paths.get(s"$dir.rewrite")
+    rows.write.mode(SaveMode.Overwrite).partitionBy(partitions: _*).parquet(tmp.toString)
+    deleteTree(Paths.get(dir))
+    Files.move(tmp, Paths.get(dir))
+  }
 
   def clear(tableDir: String): Unit = {
     val p = manifestPath(tableDir)

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrameWriter, Row, SaveMode}
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** Snapshot discipline shared by the four persisted index families
   * ([[graft.retrieval.Bm25IndexTables]], [[graft.retrieval.VectorIndex]],
@@ -30,9 +30,6 @@ object VersionedDir {
     else new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLongOption
   }
 
-  /** The next version number a rebuild should write into. */
-  def nextVersion(root: String): Long = currentVersion(root).getOrElse(0L) + 1
-
   /** The directory holding the current version's tables (`root/v<N>`),
     * or `root` itself in the legacy unversioned layout (no pointer yet).
     */
@@ -45,13 +42,8 @@ object VersionedDir {
   def tableDir(root: String, table: String): String = s"${currentDir(root)}/$table"
 
   /** Atomically point `current` at version `v` (the single-commit flip). */
-  def flip(root: String, v: Long): Unit = {
-    Files.createDirectories(Paths.get(root))
-    val tmp = Paths.get(root, "current.tmp")
-    Files.write(tmp, v.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, pointer(root),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def flip(root: String, v: Long): Unit =
+    TableIO.writeAtomically(pointer(root), v.toString.getBytes(StandardCharsets.UTF_8))
 
   /** Commit one new version of the index at `root`: each `(table, rows)`
     * writes `rows` (a plan over the current version's tables where it
@@ -60,7 +52,7 @@ object VersionedDir {
     * one.
     */
   def commit(root: String, tables: (String, DataFrameWriter[Row])*): Unit = {
-    val v = nextVersion(root)
+    val v = currentVersion(root).getOrElse(0L) + 1
     tables.foreach { case (table, rows) =>
       rows.mode(SaveMode.Overwrite).parquet(s"$root/v$v/$table")
     }

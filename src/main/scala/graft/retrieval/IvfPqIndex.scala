@@ -42,9 +42,14 @@ object IvfPqIndex extends VectorFamily {
   def codebooksDir(root: String): String = VersionedDir.tableDir(root, "codebooks")
   def codesDir(root: String): String = VersionedDir.tableDir(root, "codes")
 
-  protected def frozenTables: Seq[String] = Seq("centroids", "codebooks")
-  protected def vectorTable: String = "codes"
-  protected def cellPartitioned: Boolean = true
+  protected def rewrite(spark: SparkSession, root: String)(f: DataFrame => DataFrame): Unit =
+    VersionedDir.commit(root, VectorFamily.carried(spark, root, "centroids"),
+      VectorFamily.carried(spark, root, "codebooks"),
+      "codes" -> f(spark.read.parquet(codesDir(root))).write.partitionBy("cell"))
+
+  /** File compaction: one codes file per cell. */
+  def compact(spark: SparkSession, root: String): Unit =
+    rewrite(spark, root)(_.repartition(col("cell")))
 
   /** The `centroids`/`codebooks` table names match [[VectorIndex]] and
     * [[PqIndex]]'s layouts, so their readers apply directly.

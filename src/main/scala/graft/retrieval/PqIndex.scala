@@ -49,9 +49,13 @@ object PqIndex extends VectorFamily {
   def codebooksDir(root: String): String = VersionedDir.tableDir(root, "codebooks")
   def codesDir(root: String): String = VersionedDir.tableDir(root, "codes")
 
-  protected def frozenTables: Seq[String] = Seq("codebooks")
-  protected def vectorTable: String = "codes"
-  protected def cellPartitioned: Boolean = false
+  protected def rewrite(spark: SparkSession, root: String)(f: DataFrame => DataFrame): Unit =
+    VersionedDir.commit(root, VectorFamily.carried(spark, root, "codebooks"),
+      "codes" -> f(spark.read.parquet(codesDir(root))).write)
+
+  /** File compaction: the codes in a quarter of the default parallelism's files. */
+  def compact(spark: SparkSession, root: String): Unit =
+    rewrite(spark, root)(_.coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4)))
 
   /** codebooks[j][c] = codeword c of subspace j. */
   type Books = IndexedSeq[IndexedSeq[Seq[Double]]]

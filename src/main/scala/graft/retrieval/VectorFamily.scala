@@ -1,7 +1,7 @@
 package graft.retrieval
 
 import graft.pipeline.VersionedDir
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** What a store's maintenance paths need of a vector index family
@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * store, whether it is built, an incremental add against its frozen
   * quantizers, and delete and compaction. Both rewrite the family's
   * per-vector table into a new [[VersionedDir]] version and carry its
-  * trained tables over unchanged (one file each).
+  * trained tables over unchanged.
   */
 trait VectorFamily {
 
@@ -23,34 +23,18 @@ trait VectorFamily {
     */
   def add(emb: DataFrame, root: String): Unit
 
-  /** The trained tables every rewrite carries over. */
-  protected def frozenTables: Seq[String]
-
-  /** The per-vector table, keyed by `chunk_id`. */
-  protected def vectorTable: String
-
-  /** Whether [[vectorTable]] is partitioned by `cell`. */
-  protected def cellPartitioned: Boolean
+  /** Commit the next version: the per-vector table is `f` of the current
+    * one, written in the family's layout; the trained tables are carried
+    * over ([[VectorFamily.carried]]).
+    */
+  protected def rewrite(spark: SparkSession, root: String)(f: DataFrame => DataFrame): Unit
 
   /** Cascade delete: anti-join rewrite of the per-vector table. */
   def delete(spark: SparkSession, ids: DataFrame, idCol: String, root: String): Unit =
     rewrite(spark, root)(_.join(broadcast(ids), Seq(idCol), "left_anti"))
 
-  /** File compaction after many [[add]] batches: one file per cell, or
-    * a quarter of the default parallelism for an unpartitioned table;
-    * contents unchanged.
-    */
-  def compact(spark: SparkSession, root: String): Unit =
-    rewrite(spark, root)(rows =>
-      if (cellPartitioned) rows.repartition(col("cell"))
-      else rows.coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4)))
-
-  private def rewrite(spark: SparkSession, root: String)(f: DataFrame => DataFrame): Unit = {
-    def read(table: String) = spark.read.parquet(VersionedDir.tableDir(root, table))
-    val rows = f(read(vectorTable)).write
-    VersionedDir.commit(root, frozenTables.map(t => t -> read(t).coalesce(1).write) :+
-      (vectorTable -> (if (cellPartitioned) rows.partitionBy("cell") else rows)): _*)
-  }
+  /** File compaction after many [[add]] batches; contents unchanged. */
+  def compact(spark: SparkSession, root: String): Unit
 }
 
 object VectorFamily {
@@ -63,4 +47,11 @@ object VectorFamily {
   /** The families built in the store at `storeDir`, with their roots. */
   def present(storeDir: String): Seq[(VectorFamily, String)] =
     all.map(f => f -> f.indexRoot(storeDir)).filter { case (f, root) => f.exists(root) }
+
+  /** A trained `table` of `root`'s current version, rewritten as one
+    * file into the next version.
+    */
+  private[retrieval] def carried(spark: SparkSession, root: String,
+      table: String): (String, DataFrameWriter[Row]) =
+    table -> spark.read.parquet(VersionedDir.tableDir(root, table)).coalesce(1).write
 }

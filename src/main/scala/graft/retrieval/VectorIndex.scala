@@ -43,9 +43,13 @@ object VectorIndex extends VectorFamily {
   def centroidsDir(root: String): String = VersionedDir.tableDir(root, "centroids")
   def assignmentsDir(root: String): String = VersionedDir.tableDir(root, "assignments")
 
-  protected def frozenTables: Seq[String] = Seq("centroids")
-  protected def vectorTable: String = "assignments"
-  protected def cellPartitioned: Boolean = true
+  protected def rewrite(spark: SparkSession, root: String)(f: DataFrame => DataFrame): Unit =
+    VersionedDir.commit(root, VectorFamily.carried(spark, root, "centroids"),
+      "assignments" -> f(spark.read.parquet(assignmentsDir(root))).write.partitionBy("cell"))
+
+  /** File compaction: one assignments file per cell. */
+  def compact(spark: SparkSession, root: String): Unit =
+    rewrite(spark, root)(_.repartition(col("cell")))
 
   private def normalize(v: Seq[Double]): Seq[Double] = {
     val n = math.sqrt(v.map(x => x * x).sum)

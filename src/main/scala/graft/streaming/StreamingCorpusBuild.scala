@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.model.Turn
+import graft.pipeline.TableIO
 import graft.pipeline.TableIO.deleteTree
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -8,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Continuous corpus building — the streaming twin of
@@ -187,12 +188,8 @@ object StreamingCorpusBuild {
     clean.unpersist(); packed.unpersist()
 
     // commit: state write is the atomic marker, strictly last
-    Files.createDirectories(stateDir(buildDir))
-    val tmp = stateDir(buildDir).resolve(s"v$batchId.json.tmp")
-    Files.write(tmp, render(State(batchId, st.cursor + keptTokens, bloom))
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, stateDir(buildDir).resolve(s"v$batchId.json"),
-      StandardCopyOption.ATOMIC_MOVE)
+    TableIO.writeAtomically(stateDir(buildDir).resolve(s"v$batchId.json"),
+      render(State(batchId, st.cursor + keptTokens, bloom)).getBytes(StandardCharsets.UTF_8))
   }
 
   /** Continuous build: wire a streaming Dataset[Turn] through

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.model.Turn
-import graft.pipeline.{ExtractionPipeline, Ingestion}
+import graft.pipeline.{ExtractionPipeline, Ingestion, TableIO}
 import graft.pipeline.TableIO.deleteTree
 import graft.retrieval.{Bm25IndexTables, VectorFamily}
 import graft.text.Chunker
@@ -86,16 +86,11 @@ object StreamingIngestion {
       conv_id: String, turn_idx: Int, chunk_index: Int, content: String,
       start: Int, end: Int, embedding: Array[Float], bucket: Int)
 
-  /** Crash-safe marker write: tmp file + atomic rename, so a reader (or
-    * [[recover]]) never parses a torn/truncated marker as a valid one.
+  /** Crash-safe marker write ([[TableIO.writeAtomically]]), so a reader
+    * (or [[recover]]) never parses a torn/truncated marker as a valid one.
     */
-  private def writeMarker(p: java.nio.file.Path, content: String): Unit = {
-    Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeMarker(p: java.nio.file.Path, content: String): Unit =
+    TableIO.writeAtomically(p, content.getBytes(StandardCharsets.UTF_8))
 
   /** Delete batch `id`'s partitions of the chunks and embeddings tables. */
   private def dropBatch(storeDir: String, id: Long): Unit =

@@ -53,6 +53,14 @@ class IngestionAddSpec extends AnyFunSuite {
 
   private def tableRows(dir: String): Seq[String] = sortedRows(spark.read.parquet(dir))
 
+  /** [[tableRows]] with the columns in name order, so a table whose files
+    * were rewritten in a different column order still compares equal.
+    */
+  private def namedRows(dir: String): Seq[String] = {
+    val df = spark.read.parquet(dir)
+    sortedRows(df.select(df.columns.sorted.map(df.col): _*))
+  }
+
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
@@ -133,6 +141,27 @@ class IngestionAddSpec extends AnyFunSuite {
       (d: String) => Bm25IndexTables.doclensDir(Ingestion.indexDir(d)),
       (d: String) => Bm25IndexTables.postingsDir(Ingestion.indexDir(d))).foreach { dir =>
       assert(tableRows(dir(store)) == tableRows(dir(batch)), dir(store))
+    }
+  }
+
+  test("delete then add of a conversation returns its chunks once and rebuilds to the batch store") {
+    val store = extractConvs(0 until 6)
+    Ingestion.run(spark, store)
+    Ingestion.add(spark, store, extract(convs(6 until 10) :+ tokenTurn))
+    Ingestion.delete(spark, store, Seq(tokenTurn.conv_id))
+    Ingestion.add(spark, store, extract(convs(9 until 10) :+ tokenTurn))
+
+    val top = QueryPipeline.query(spark, store, Token, topK = 5).collect()
+      .map(r => (r.getAs[String]("chunk_id"), r.getAs[String]("content")))
+    assert(top.headOption.exists(_._2.contains(Token)), top.map(_._1).mkString(", "))
+    assert(top.count(_._2.contains(Token)) == 1 && top.map(_._1).distinct.length == top.length,
+      s"a re-added chunk came back more than once: ${top.map(_._1).mkString(", ")}")
+
+    Ingestion.run(spark, store)
+    Seq(ExtractionPipeline.chunksDir(_: String), Ingestion.embeddingsDir(_: String),
+      (d: String) => Bm25IndexTables.doclensDir(Ingestion.indexDir(d)),
+      (d: String) => Bm25IndexTables.postingsDir(Ingestion.indexDir(d))).foreach { dir =>
+      assert(namedRows(dir(store)) == namedRows(dir(batch)), dir(store))
     }
   }
 }

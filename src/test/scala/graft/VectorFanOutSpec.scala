@@ -11,8 +11,8 @@ import java.nio.file.Files
 
 /** A store carrying all three vector index families at once keeps each
   * of them covering exactly the embeddings table through every write:
-  * `Ingestion.add`, `Ingestion.delete`, a streamed micro-batch and
-  * `StreamingIngestion.compact`. The families are named here one by one,
+  * `Ingestion.add`, `Ingestion.delete` (on a batch-built and on a
+  * streamed store), a streamed micro-batch and `StreamingIngestion.compact`. The families are named here one by one,
   * so a family the store's fan-out skips leaves its chunk-id set behind.
   */
 class VectorFanOutSpec extends AnyFunSuite {
@@ -84,7 +84,7 @@ class VectorFanOutSpec extends AnyFunSuite {
     assert(versions(store) == built.map(_ + 1), "a delete commits one new version per family")
   }
 
-  test("a streamed batch and a compaction keep every vector family covering the store") {
+  test("streamed batches, a compaction and a delete keep every vector family covering the store") {
     import spark.implicits._
     val store = Files.createTempDirectory("fanout-stream").toString
     def batch(convs: Range, id: Long) = StreamingIngestion.processBatch(
@@ -101,5 +101,11 @@ class VectorFanOutSpec extends AnyFunSuite {
     StreamingIngestion.compact(spark, store)
     assert(assertCovered(store, "compact") == before)
     assert(versions(store) == built.map(_ + 1), "a compaction commits one new version per family")
+
+    // a delete keeps the streamed layout, so the next batch still appends
+    Ingestion.delete(spark, store, Seq("conv-000001"))
+    assert(!assertCovered(store, "a streamed-store delete").exists(_.startsWith("conv-000001:")))
+    batch(6 until 7, 3L)
+    assert(assertCovered(store, "a batch after a delete").exists(_.startsWith("conv-000006:")))
   }
 }

@@ -220,6 +220,16 @@ object Bench {
       case c => c.toString
     } + "\""
 
+  /** The effective values of the knobs that change what the battery
+    * computes, as bench.json's `"knobs"` field: `cs_win`, the
+    * `q_common_substring` audit window (`SPARK_GRAFT_CS_WIN`; full text
+    * reads as its cap), and `decimal38`, whether integer moments run at
+    * DECIMAL(38,0) (`SPARK_GRAFT_DECIMAL38`).
+    */
+  private[graft] def knobsJson: String =
+    s""""knobs":{"cs_win":${graft.queries.CurationQueries.CsWin},""" +
+      s""""decimal38":${graft.queries.WideStats.wide}}"""
+
   /** One battery pass over `queries`: seconds for each query that ran,
     * and `name → reason` for each that threw. A failed query gets no
     * time — a throw is not a fast run.
@@ -346,7 +356,7 @@ object Bench {
           s""""battery_cal_after_gops":${f"$calAfter%.2f"},""" +
           s""""query_warm_reps":$warmReps,""" +
           s""""queries_total_sec":${f"${results.values.sum}%.2f"},""" +
-          s""""query_failures":$failuresJson,""" +
+          s""""query_failures":$failuresJson,$knobsJson,""" +
           s""""queries_cold_total_sec":${f"$coldTotal%.2f"}$fields}""" + "\n")
           .getBytes("UTF-8"))
     }
@@ -571,7 +581,7 @@ object Bench {
       s""""battery_cal_after_gops":${f"$calAfter%.2f"},""" +
       s""""query_warm_reps":$warmReps,""" +
       s""""queries_total_sec":${f"$queriesSec%.2f"},""" +
-      s""""query_failures":$failuresJson,""" +
+      s""""query_failures":$failuresJson,$knobsJson,""" +
       s""""queries_cold_total_sec":${f"$coldTotal%.2f"}}"""
 
     // the metrics JSON is the SOLE content of a fixed, well-known file so

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.BatteryHelpers.{TokensCte, cosSql, simpleTokens}
 import graft.queries.Tables.t
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -29,27 +30,6 @@ import org.apache.spark.sql.functions._
   * double, deterministic tie-breaks on every ordering.
   */
 object CurationQueries {
-
-  /** Whitespace tokenizer (column form) — same as the dedup family's:
-    * the codegen'd `graft_ws_tokens`, bit-identical to the interpreted
-    * `filter(split(lower(c), "\\s+"), _ != "")` composition it replaces.
-    */
-  private def simpleTokens(c: Column): Column = {
-    graft.functions.GraftFunctions.register(SparkSession.active)
-    call_function("graft_ws_tokens", c)
-  }
-
-  private val TokensCte =
-    """toks AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS ts
-      |  FROM documents)""".stripMargin
-
-  /** DuckDB cosine with graft_cosine's accumulation order (bit-exact). */
-  private def cosSql(a: String, b: String): String =
-    s"""(list_sum(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i])) /
-       |    (sqrt(list_sum(list_transform($a, x -> x * x))) *
-       |     sqrt(list_sum(list_transform($b, x -> x * x)))))""".stripMargin
 
   // --- Gopher document-quality rules (Rae et al. 2021, §A1.1) ---------------
   //
@@ -212,7 +192,7 @@ object CurationQueries {
   // full text = 1.6× the gram/pair volume of the 240-char default and
   // 3.36 s vs 2.47 s min-over-3 — (sub)linear in characters, as the
   // scale story asserts (VERDICT r4 #3; BASELINE.md round-5 table).
-  private val CsWin = sys.env.get("SPARK_GRAFT_CS_WIN").map(_.toInt)
+  private[graft] val CsWin = sys.env.get("SPARK_GRAFT_CS_WIN").map(_.toInt)
     .map(w => if (w <= 0) Int.MaxValue / 4 else w).getOrElse(240)
   private val CsDfCap = 64 // drop grams occurring more often corpus-wide
 

@@ -1,10 +1,10 @@
 package graft.queries
 
+import graft.queries.BatteryHelpers.stopListSql
 import graft.queries.Tables.t
-import graft.retrieval.Retrieval
+import graft.retrieval.{QueryPipeline, Retrieval}
 import graft.text.Tokenizer
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Retrieval-layer queries over the `documents` table with DuckDB oracles.
@@ -15,9 +15,6 @@ object RetrievalQueries {
 
   /** The fixed keyword query used by the BM25/hybrid battery. */
   val KeywordQuery = "spark join table scan"
-
-  private val stopListSql =
-    Tokenizer.StopWords.toSeq.sorted.map(w => s"'$w'").mkString("[", ", ", "]")
 
   /** DuckDB expression computing the reference tokenizer (P1) with the
     * all-filtered fallback, as a CTE body over `documents`.
@@ -38,6 +35,46 @@ object RetrievalQueries {
        |        x -> len(x) >= 2 AND NOT list_contains($stopListSql, x))
        |    END AS tokens
        |  FROM toks)""".stripMargin
+
+  /** DuckDB twin of the BM25 index ([[Retrieval.postings]],
+    * [[Retrieval.corpusStats]], [[Retrieval.idfTable]]) over `documents`,
+    * as CTEs: `stats` (n_docs, avgdl), `tf` (doc_id, dl, term, tf) and
+    * `idf` (term, idf), after the tokens CTEs.
+    */
+  private val bm25IndexCtes =
+    s"""$tokensCte,
+       |stats AS (SELECT count(*) AS n_docs, avg(len(tokens)) AS avgdl FROM kept),
+       |posting AS (
+       |  SELECT doc_id, len(tokens) AS dl, unnest(tokens) AS term FROM kept),
+       |tf AS (
+       |  SELECT doc_id, dl, term, count(*) AS tf
+       |  FROM posting GROUP BY 1, 2, 3),
+       |dfreq AS (
+       |  SELECT term, count(*) AS df,
+       |    ln((SELECT n_docs FROM stats) - count(*) + 0.5) - ln(count(*) + 0.5) AS idf_raw
+       |  FROM tf GROUP BY 1),
+       |idf AS (
+       |  SELECT term,
+       |    CASE WHEN idf_raw < 0
+       |      THEN 0.25 * (SELECT avg(idf_raw) FROM dfreq)
+       |      ELSE idf_raw END AS idf
+       |  FROM dfreq)""".stripMargin
+
+  /** DuckDB twin of [[Retrieval.bm25Contrib]] over the `tf` and `idf`
+    * CTEs, weighted by the SQL expression `w`.
+    */
+  private def bm25ContribSql(w: String): String =
+    s"""$w * idf.idf * (tf.tf * (1.5 + 1)) /
+       |    (tf.tf + 1.5 * (1 - 0.75 + 0.75 * tf.dl / (SELECT avgdl FROM stats)))""".stripMargin
+
+  /** A CTE `name(term, qn)` of a query's terms with their
+    * multiplicities.
+    */
+  private def queryTermsCte(name: String, query: String): String =
+    Tokenizer.tokenize(query)
+      .groupBy(identity).map { case (t0, os) => (t0, os.size) }
+      .map { case (t0, n) => s"('$t0', $n)" }
+      .mkString(s"$name(term, qn) AS (VALUES ", ", ", ")")
 
   /** ONE postings/stats materialization for the whole retrieval family
     * (q_token_tf, q_bm25_docs, q_rm3_feedback, q_hybrid_funnel) — under
@@ -82,36 +119,13 @@ object RetrievalQueries {
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(100)
 
-  private def bm25OracleSql: String = {
-    val qTerms = Tokenizer.tokenize(KeywordQuery)
-      .groupBy(identity).map { case (k, v) => (k, v.size) }
-    val qValues = qTerms.map { case (t0, n) => s"('$t0', $n)" }.mkString(", ")
-    s"""WITH $tokensCte,
-       |stats AS (SELECT count(*) AS n_docs, avg(len(tokens)) AS avgdl FROM kept),
-       |posting AS (
-       |  SELECT doc_id, len(tokens) AS dl, unnest(tokens) AS term FROM kept),
-       |tf AS (
-       |  SELECT doc_id, dl, term, count(*) AS tf
-       |  FROM posting GROUP BY 1, 2, 3),
-       |dfreq AS (
-       |  SELECT term, count(*) AS df,
-       |    ln((SELECT n_docs FROM stats) - count(*) + 0.5) - ln(count(*) + 0.5) AS idf_raw
-       |  FROM tf GROUP BY 1),
-       |idf AS (
-       |  SELECT term,
-       |    CASE WHEN idf_raw < 0
-       |      THEN 0.25 * (SELECT avg(idf_raw) FROM dfreq)
-       |      ELSE idf_raw END AS idf
-       |  FROM dfreq),
-       |q(term, qn) AS (VALUES $qValues)
-       |SELECT tf.doc_id, floor((sum(
-       |    q.qn * idf.idf * (tf.tf * (1.5 + 1)) /
-       |    (tf.tf + 1.5 * (1 - 0.75 + 0.75 * tf.dl / (SELECT avgdl FROM stats)))
-       |  )) * 1e4 + 0.5) / 1e4 AS score
+  private def bm25OracleSql: String =
+    s"""WITH $bm25IndexCtes,
+       |${queryTermsCte("q", KeywordQuery)}
+       |SELECT tf.doc_id, ${Rounding.rSql(s"sum(${bm25ContribSql("q.qn")})", 4)} AS score
        |FROM tf JOIN q ON tf.term = q.term JOIN idf ON tf.term = idf.term
        |GROUP BY 1
        |ORDER BY score DESC, doc_id LIMIT 100""".stripMargin
-  }
 
   // --- weighted RRF fusion (J1/W2/W3) of two deterministic rankings
   private def qRrfDocs(s: SparkSession, dir: String): DataFrame = {
@@ -165,13 +179,6 @@ object RetrievalQueries {
   private val Rm3ExpWeight = 0.5
   private val Rm3TopK = 20
 
-  /** Per-(doc, term) BM25 contribution with weight column `w`. */
-  private def bm25Contrib(w: Column): Column =
-    w * col("idf") * (col("tf") * lit(Retrieval.DefaultK1 + 1)) /
-      (col("tf") + lit(Retrieval.DefaultK1) *
-        (lit(1 - Retrieval.DefaultB) +
-          lit(Retrieval.DefaultB) * col("dl") / col("avgdl")))
-
   private def qRm3Feedback(s: SparkSession, dir: String): DataFrame = {
     val post = docPostings(s, dir).persist()
     val stats = docStats(s, dir)
@@ -185,7 +192,8 @@ object RetrievalQueries {
       .join(broadcast(idf), "term")
       .crossJoin(broadcast(stats))
       .groupBy("doc_id")
-      .agg(Rounding.fpSum(bm25Contrib(col("qn")), 1e6).as("score"))
+      .agg(Rounding.fpSum(
+        Retrieval.bm25Contrib(col("avgdl"), Retrieval.DefaultK1, Retrieval.DefaultB), 1e6).as("score"))
     val fb = base.orderBy(col("score").desc, col("doc_id").asc)
       .limit(Rm3FbDocs).select("doc_id")
 
@@ -202,36 +210,18 @@ object RetrievalQueries {
       .join(broadcast(idf), "term")
       .crossJoin(broadcast(stats))
       .groupBy("doc_id")
-      .agg(Rounding.fpSum(bm25Contrib(col("w")), 1e6).as("score"))
+      .agg(Rounding.fpSum(Retrieval.bm25Contrib(col("avgdl"),
+        Retrieval.DefaultK1, Retrieval.DefaultB, col("w")), 1e6).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(Rm3TopK)
   }
 
   private def qRm3FeedbackSql: String = {
-    val qTerms = Tokenizer.tokenize(KeywordQuery)
-      .groupBy(identity).map { case (t0, os) => (t0, os.size) }
-    val qValues = qTerms.map { case (t0, n) => s"('$t0', $n)" }.mkString(", ")
-    val qIn = qTerms.keys.toSeq.sorted.map(t0 => s"'$t0'").mkString(", ")
-    def contrib(w: String) =
-      s"""$w * idf.idf * (tf.tf * (1.5 + 1)) /
-         |      (tf.tf + 1.5 * (1 - 0.75 + 0.75 * tf.dl / (SELECT avgdl FROM stats)))""".stripMargin
-    s"""WITH $tokensCte,
-       |stats AS (SELECT count(*) AS n_docs, avg(len(tokens)) AS avgdl FROM kept),
-       |posting AS (
-       |  SELECT doc_id, len(tokens) AS dl, unnest(tokens) AS term FROM kept),
-       |tf AS (
-       |  SELECT doc_id, dl, term, count(*) AS tf FROM posting GROUP BY 1, 2, 3),
-       |dfreq AS (
-       |  SELECT term, count(*) AS df,
-       |    ln((SELECT n_docs FROM stats) - count(*) + 0.5) - ln(count(*) + 0.5) AS idf_raw
-       |  FROM tf GROUP BY 1),
-       |idf AS (
-       |  SELECT term, CASE WHEN idf_raw < 0
-       |    THEN 0.25 * (SELECT avg(idf_raw) FROM dfreq) ELSE idf_raw END AS idf
-       |  FROM dfreq),
-       |q(term, qn) AS (VALUES $qValues),
+    val qIn = Tokenizer.tokenize(KeywordQuery).distinct.sorted.map(t0 => s"'$t0'").mkString(", ")
+    s"""WITH $bm25IndexCtes,
+       |${queryTermsCte("q", KeywordQuery)},
        |base AS (
-       |  SELECT tf.doc_id, ${Rounding.fpSumSql(contrib("q.qn"), "1e6")} AS score
+       |  SELECT tf.doc_id, ${Rounding.fpSumSql(bm25ContribSql("q.qn"), "1e6")} AS score
        |  FROM tf JOIN q ON tf.term = q.term JOIN idf ON tf.term = idf.term
        |  GROUP BY 1),
        |fb AS (SELECT doc_id FROM base ORDER BY score DESC, doc_id LIMIT $Rm3FbDocs),
@@ -243,7 +233,7 @@ object RetrievalQueries {
        |wt AS (
        |  SELECT term, qn::DOUBLE AS w FROM q
        |  UNION ALL SELECT term, $Rm3ExpWeight AS w FROM expn)
-       |SELECT tf.doc_id, ${Rounding.fpSumSql(contrib("wt.w"), "1e6")} AS score
+       |SELECT tf.doc_id, ${Rounding.fpSumSql(bm25ContribSql("wt.w"), "1e6")} AS score
        |FROM tf JOIN wt ON tf.term = wt.term JOIN idf ON tf.term = idf.term
        |GROUP BY 1
        |ORDER BY score DESC, doc_id LIMIT $Rm3TopK""".stripMargin
@@ -255,119 +245,65 @@ object RetrievalQueries {
   // per-variation hybrid search (vector-standin ∪ BM25 → weighted RRF) →
   // first-wins dedup across variations → per-variation deterministic
   // "cross-encoder" (query-term tf overlap) rankings → unweighted RRF
-  // re-fusion → final top-10. Mirrors query_service.py:149-358.
+  // re-fusion → final top-10. Mirrors query_service.py:149-358, with the
+  // funnel constants and the variation-keyed plan of
+  // `QueryPipeline.queryExpanded`.
 
-  private[queries] val Variations =
+  private val Variations =
     Seq(KeywordQuery, "partition shuffle stream batch", "filter index merge sort")
 
-  private val PerSourceFetch = 40 // 2 × retrieval_k per source
-  private val PerVariationCut = 20 // rerank_k * 2
-  private val FinalTopK = 10
-
-  /** Deterministic vector-score standin: pure integer arithmetic so the
-    * oracle reproduces it exactly (external embeddings are pluggable
-    * columns per SURVEY §7.3).
+  /** Deterministic vector-score standin for variation `v`: pure integer
+    * arithmetic so the oracle reproduces it exactly (external embeddings
+    * are pluggable columns per SURVEY §7.3).
     */
-  private def vecScore(v: Int): Column =
-    pmod(col("doc_id") * (97 + v), lit(1009)) / 1009.0
+  private def vecScore(v: Column): Column =
+    pmod(col("doc_id") * (lit(97) + v), lit(1009)) / 1009.0
 
   private def qHybridFunnel(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
     val docs = t(s, dir, "documents")
+    val vs = broadcast(Variations.indices.toDF("v"))
 
-    // ALL variations' BM25 scores from ONE corpus pass (postings/idf built
-    // once — one wide shuffle, not one per variation), cached for the
-    // three per-variation funnels below. The postings feed the battery's
-    // shared materialization (docPostings) but are deliberately NOT
-    // persist()ed through the COLUMNAR cache within this query: measured
-    // in round 2, caching a ~20M-row postings table that way and
-    // re-reading it per consumer costs ~10× the task time of letting
-    // exchange reuse share the compressed postings shuffle (the
-    // in-memory columnar codec is memory-bandwidth-bound on wide
-    // tables; persist pays off only for SMALL hot frames like the
-    // per-variation score lists below).
+    // ALL variations' BM25 scores (and the rerank's tf overlap, tf_sum)
+    // from ONE pass over the shared postings (docPostings)
     val kwAll = Retrieval.bm25ScoresFromIndex(docPostings(s, dir),
-      docStats(s, dir), "doc_id", Variations.zipWithIndex.map(_.swap)).persist()
+      docStats(s, dir), "doc_id", Variations.zipWithIndex.map(_.swap))
 
-    // per-variation hybrid ranking (rank within variation by rrf)
-    val hybrids = Variations.indices.map { v =>
-      val vec = docs.select(col("doc_id"), vecScore(v).as("score"))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(PerSourceFetch)
-      val kw = kwAll.filter(col("v") === v).select("doc_id", "score")
-        .filter(col("score") > 0)
-        .orderBy(col("score").desc, col("doc_id").asc).limit(PerSourceFetch)
-      Retrieval.rrfFuse(Seq(vec -> Retrieval.VectorWeight, kw -> Retrieval.KeywordWeight),
-          "doc_id", "score")
-        .orderBy(col("rrf_score").desc, col("doc_id").asc).limit(PerVariationCut)
-        .withColumn("v", lit(v))
-        .withColumn("vrank",
-          row_number().over(Window.partitionBy(lit(1))
-            .orderBy(col("rrf_score").desc, col("doc_id").asc)))
-    }
-    val all = hybrids.reduce(_ unionByName _)
-    // first-wins dedup in (variation, rank) arrival order (P4/U2);
-    // persisted — it is re-read once per variation below, and without the
-    // cache each read re-executes the WHOLE per-variation funnel above
-    val deduped = Retrieval.firstWinsDedup(all.select("doc_id", "v", "vrank"),
-      "doc_id", col("v").asc, col("vrank").asc).persist()
+    // per-variation hybrid ranking, keyed by v: the vector standin scores
+    // docs × (v) in one scan
+    val vecTop = Retrieval.topPer(
+      docs.crossJoin(vs).select(col("v"), col("doc_id"), vecScore(col("v")).as("score")),
+      "v", "doc_id", "score", QueryPipeline.PerSourceFetch)
+    val perVariation = Retrieval.hybridFusePer(vecTop, kwAll, "v", "doc_id",
+      QueryPipeline.PerSourceFetch, QueryPipeline.RerankFetch)
 
-    // deterministic cross-encoder standin: tf-overlap of variation terms.
-    // kwAll's aggregation rows are one per (v, query-term, doc), so its
-    // tf_sum column IS this overlap — the second full tokenize+postings
-    // pass the earlier form paid is gone (measured 4.8 s → ~3 s at sf0.1)
-    val ceAll = kwAll.select(col("v"), col("doc_id"), col("tf_sum").as("ce"))
-
-    val rankings = Variations.indices.map { v =>
-      deduped.select("doc_id")
-        .join(ceAll.filter(col("v") === v).select("doc_id", "ce"), Seq("doc_id"), "left")
-        .na.fill(0, Seq("ce"))
-        .select(col("doc_id"), col("ce").cast("double").as("score"))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(FinalTopK)
-    }
-    // unweighted RRF re-fusion of the per-variation reranks
-    Retrieval.rrfFuse(rankings.map(_ -> 1.0), "doc_id", "score")
+    // dedup across variations (P4/U2): only the candidate doc SET reaches
+    // the rerank, so it is a distinct; every variation ranks that pool by
+    // its tf overlap (kwAll's tf_sum, 0 for a doc without a variation
+    // term), and the rankings are re-fused unweighted
+    val rankings = Retrieval.topPer(
+      perVariation.select("doc_id").distinct().crossJoin(vs)
+        .join(kwAll.select("v", "doc_id", "tf_sum"), Seq("v", "doc_id"), "left")
+        .select(col("v"), col("doc_id"),
+          coalesce(col("tf_sum"), lit(0L)).cast("double").as("score")),
+      "v", "doc_id", "score", QueryPipeline.FinalTopK)
+    Retrieval.rrfFuseRanked(Seq(rankings -> 1.0), Seq("doc_id"))
       .select(col("doc_id"), Rounding.r(col("rrf_score"), 6).as("fused"))
       .orderBy(col("fused").desc, col("doc_id").asc)
-      .limit(FinalTopK)
-  }
-
-  /** BM25 score CTEs for one query, suffixed to avoid collisions. */
-  private def bm25Ctes(query: String, sfx: String): String = {
-    val qTerms = Tokenizer.tokenize(query)
-      .groupBy(identity).map { case (t0, n) => (t0, n.size) }
-    val qValues = qTerms.map { case (t0, n) => s"('$t0', $n)" }.mkString(", ")
-    s"""q$sfx(term, qn) AS (VALUES $qValues),
-       |scores$sfx AS (
-       |  SELECT tf.doc_id, sum(
-       |    q$sfx.qn * idf.idf * (tf.tf * (1.5 + 1)) /
-       |    (tf.tf + 1.5 * (1 - 0.75 + 0.75 * tf.dl / (SELECT avgdl FROM stats)))
-       |  ) AS score
-       |  FROM tf JOIN q$sfx ON tf.term = q$sfx.term
-       |  JOIN idf ON tf.term = idf.term
-       |  GROUP BY 1)""".stripMargin
+      .limit(QueryPipeline.FinalTopK)
   }
 
   private def qHybridFunnelSql: String = {
-    val sharedCtes =
-      s"""$tokensCte,
-         |stats AS (SELECT count(*) AS n_docs, avg(len(tokens)) AS avgdl FROM kept),
-         |posting AS (
-         |  SELECT doc_id, len(tokens) AS dl, unnest(tokens) AS term FROM kept),
-         |tf AS (
-         |  SELECT doc_id, dl, term, count(*) AS tf
-         |  FROM posting GROUP BY 1, 2, 3),
-         |dfreq AS (
-         |  SELECT term, count(*) AS df,
-         |    ln((SELECT n_docs FROM stats) - count(*) + 0.5) - ln(count(*) + 0.5) AS idf_raw
-         |  FROM tf GROUP BY 1),
-         |idf AS (
-         |  SELECT term,
-         |    CASE WHEN idf_raw < 0
-         |      THEN 0.25 * (SELECT avg(idf_raw) FROM dfreq)
-         |      ELSE idf_raw END AS idf
-         |  FROM dfreq)""".stripMargin
-
+    import QueryPipeline.{FinalTopK, PerSourceFetch, RerankFetch}
     val perVariation = Variations.zipWithIndex.map { case (q, v) =>
-      s"""${bm25Ctes(q, s"_$v")},
+      s"""${queryTermsCte(s"q_$v", q)},
+         |scores_$v AS (
+         |  SELECT tf.doc_id, sum(
+         |    ${bm25ContribSql(s"q_$v.qn")}
+         |  ) AS score
+         |  FROM tf JOIN q_$v ON tf.term = q_$v.term
+         |  JOIN idf ON tf.term = idf.term
+         |  GROUP BY 1),
          |vec_$v AS (
          |  SELECT doc_id, ((doc_id * ${97 + v}) % 1009) / 1009.0 AS score
          |  FROM documents ORDER BY score DESC, doc_id LIMIT $PerSourceFetch),
@@ -383,7 +319,7 @@ object RetrievalQueries {
          |  SELECT doc_id, $v AS v,
          |    row_number() OVER (ORDER BY rrf DESC, doc_id) AS vrank
          |  FROM (SELECT doc_id, sum(contrib) AS rrf FROM ranked_$v GROUP BY 1)
-         |  ORDER BY rrf DESC, doc_id LIMIT $PerVariationCut)""".stripMargin
+         |  ORDER BY rrf DESC, doc_id LIMIT $RerankFetch)""".stripMargin
     }.mkString(",\n")
 
     val dedupCte =
@@ -404,7 +340,7 @@ object RetrievalQueries {
          |  FROM ce_$v ORDER BY score DESC, doc_id LIMIT $FinalTopK)""".stripMargin
     }.mkString(",\n")
 
-    s"""WITH $sharedCtes,
+    s"""WITH $bm25IndexCtes,
        |$perVariation,
        |$dedupCte,
        |$rerankCtes,

@@ -1,12 +1,50 @@
 package graft.queries
 
+import graft.text.Tokenizer
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{floor, lit, sum}
+import org.apache.spark.sql.functions.{call_function, floor, lit, sum}
 
 /** Table access for the driver-provided testdata directory. */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
+}
+
+/** Tokenizer and DuckDB fragments shared by several battery families. */
+object BatteryHelpers {
+
+  /** Whitespace tokenizer (column form) of the dedup and curation
+    * families: the codegen'd `graft_ws_tokens`, bit-identical to
+    * `filter(split(lower(c), "\\s+"), x -> x != '')`, whose `filter` HOF
+    * is interpreted per row (parity-spec'd in `GraftFunctionsSpec`).
+    * Registration is idempotent and keyed off the active session, so every
+    * battery builder stays a pure `(SparkSession, dir) => DataFrame`.
+    */
+  def simpleTokens(c: Column): Column = {
+    graft.functions.GraftFunctions.register(SparkSession.active)
+    call_function("graft_ws_tokens", c)
+  }
+
+  /** DuckDB twin of [[simpleTokens]] over `documents`: the `toks`
+    * (doc_id, ts) CTE.
+    */
+  val TokensCte: String =
+    """toks AS (
+      |  SELECT doc_id,
+      |    list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS ts
+      |  FROM documents)""".stripMargin
+
+  /** DuckDB cosine between two double-list expressions, with
+    * `graft_cosine`'s left-to-right accumulation order (bit-exact).
+    */
+  def cosSql(a: String, b: String): String =
+    s"""(list_sum(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i])) /
+       |    (sqrt(list_sum(list_transform($a, x -> x * x))) *
+       |     sqrt(list_sum(list_transform($b, x -> x * x)))))""".stripMargin
+
+  /** The reference tokenizer's stoplist as a sorted DuckDB list literal. */
+  val stopListSql: String =
+    Tokenizer.StopWords.toSeq.sorted.map(w => s"'$w'").mkString("[", ", ", "]")
 }
 
 /** Cross-engine-deterministic decimal rounding for oracle-paired values.

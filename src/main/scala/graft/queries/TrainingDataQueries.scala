@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.BatteryHelpers.{TokensCte, cosSql, simpleTokens, stopListSql}
 import graft.queries.Tables.t
 import graft.text.Tokenizer
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -31,24 +32,6 @@ import org.apache.spark.sql.functions._
 object TrainingDataQueries {
 
   private val P31 = 2147483647L // 2^31 - 1 (Mersenne prime modulus)
-
-  /** Simple whitespace tokenizer used by the dedup family (column form).
-    * Promoted to the codegen'd `graft_ws_tokens` expression — bit-identical
-    * to `filter(split(lower(c), "\\s+"), x -> x != '')`, whose `filter`
-    * HOF is interpreted per row (parity-spec'd in `GraftFunctionsSpec`).
-    * Registration is idempotent and keyed off the active session, so every
-    * battery builder stays a pure `(SparkSession, dir) => DataFrame`.
-    */
-  private def simpleTokens(c: Column): Column = {
-    graft.functions.GraftFunctions.register(SparkSession.active)
-    call_function("graft_ws_tokens", c)
-  }
-
-  private val TokensCte =
-    """toks AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS ts
-      |  FROM documents)""".stripMargin
 
   /** Deterministic token id shared by the minhash/simhash/fingerprint
     * plans: the first `hexLen` hex chars of md5 as int64 — identical in
@@ -1665,15 +1648,6 @@ object TrainingDataQueries {
 
   // --- ANN recall measurement ----------------------------------------------
 
-  /** DuckDB cosine between two double-list columns — the same
-    * left-to-right accumulation order as `graft_cosine`, so the doubles
-    * match bit-for-bit across engines.
-    */
-  private def cosSql(a: String, b: String): String =
-    s"""(list_sum(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i])) /
-       |    (sqrt(list_sum(list_transform($a, x -> x * x))) *
-       |     sqrt(list_sum(list_transform($b, x -> x * x)))))""".stripMargin
-
   /** Recall@10 of the IVF top-2-multiprobe against the exact brute-force
     * top-10, measured in-engine over 8 probe vectors — "measure, don't
     * guess" for the ANN family: the approximation quality of the
@@ -3115,8 +3089,6 @@ object TrainingDataQueries {
 
   // --- language ID (stopword-ratio heuristic) -------------------------------
 
-  private val stopListSql =
-    Tokenizer.StopWords.toSeq.sorted.map(w => s"'$w'").mkString("[", ", ", "]")
   private val stopArray = typedLit(Tokenizer.StopWords.toSeq.sorted)
 
   private def qLangId(s: SparkSession, dir: String): DataFrame =

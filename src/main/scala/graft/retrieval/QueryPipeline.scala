@@ -49,25 +49,22 @@ object QueryPipeline {
     * (partition-pruned AND byte-compressed); else a PQ ADC scan + exact
     * rerank; else the exact brute-force dot scan. Every path emits
     * scores from the same dotColumn fold, so ranks are comparable —
-    * only the candidate set differs. One definition for both [[query]]
-    * and [[queryExpanded]], so the paths cannot drift.
+    * only the candidate set differs. Returns `(chunk_id, score)`, which
+    * [[Retrieval.hybridFuse]] cuts to the [[PerSourceFetch]] best.
     */
   private def vecSource(spark: SparkSession, outDir: String,
-      qv: Array[Float], nprobe: Int): DataFrame = {
-    val base =
-      if (VectorIndex.exists(VectorIndex.indexRoot(outDir)))
-        VectorIndex.probe(spark, VectorIndex.indexRoot(outDir), qv, nprobe)
-      else if (IvfPqIndex.exists(IvfPqIndex.indexRoot(outDir)))
-        IvfPqIndex.rerank(spark, IvfPqIndex.indexRoot(outDir), qv, embeddings(spark, outDir),
-          nprobe = nprobe, fetch = PqFetch, topK = PerSourceFetch)
-      else if (PqIndex.exists(PqIndex.indexRoot(outDir)))
-        PqIndex.rerank(spark, PqIndex.indexRoot(outDir), qv, embeddings(spark, outDir),
-          fetch = PqFetch, topK = PerSourceFetch)
-      else
-        embeddings(spark, outDir).select(col("chunk_id"),
-          VectorIndex.dotColumn(qv, col("embedding")).as("score"))
-    base.orderBy(desc("score"), col("chunk_id")).limit(PerSourceFetch)
-  }
+      qv: Array[Float], nprobe: Int): DataFrame =
+    if (VectorIndex.exists(VectorIndex.indexRoot(outDir)))
+      VectorIndex.probe(spark, VectorIndex.indexRoot(outDir), qv, nprobe)
+    else if (IvfPqIndex.exists(IvfPqIndex.indexRoot(outDir)))
+      IvfPqIndex.rerank(spark, IvfPqIndex.indexRoot(outDir), qv, embeddings(spark, outDir),
+        nprobe = nprobe, fetch = PqFetch, topK = PerSourceFetch)
+    else if (PqIndex.exists(PqIndex.indexRoot(outDir)))
+      PqIndex.rerank(spark, PqIndex.indexRoot(outDir), qv, embeddings(spark, outDir),
+        fetch = PqFetch, topK = PerSourceFetch)
+    else
+      embeddings(spark, outDir).select(col("chunk_id"),
+        VectorIndex.dotColumn(qv, col("embedding")).as("score"))
 
   /** [[vecSource]] for several query vectors in one plan, by the same
     * index preference and with the same scores: `qvs` are `(v, query
@@ -127,22 +124,14 @@ object QueryPipeline {
       nprobe: Int = VectorIndex.DefaultNprobe): DataFrame = {
     validateTopK(topK)
     val qv = Ingestion.hashedEmbedding(question, dim)
-
     // vector source: IVF probe when indexed (partition-pruned — the
-    // 100 TB plan), exact brute-force scan otherwise ([[vecSource]])
-    val vecScores = vecSource(spark, outDir, qv, nprobe)
-
-    // keyword source: BM25 over the index tables
-    val kwScores = Bm25IndexTables
-      .score(spark, Ingestion.indexDir(outDir), question, "chunk_id")
-      .filter(col("score") > 0) // bm25_index.py:200-204
-      .orderBy(desc("score"), col("chunk_id"))
-      .limit(PerSourceFetch)
-
-    // weighted RRF fusion, then content + deterministic tie-break + cut
-    val fused = Retrieval.rrfFuse(
-      Seq(vecScores -> Retrieval.VectorWeight, kwScores -> Retrieval.KeywordWeight),
-      "chunk_id", "score")
+    // 100 TB plan), exact brute-force scan otherwise ([[vecSource]]);
+    // keyword source: BM25 over the index tables; weighted RRF fusion,
+    // then content + deterministic tie-break + cut
+    val fused = Retrieval.hybridFuse(
+      vecSource(spark, outDir, qv, nprobe),
+      Bm25IndexTables.score(spark, Ingestion.indexDir(outDir), question, "chunk_id"),
+      "chunk_id", PerSourceFetch)
     withContent(spark, outDir, fused, topK)
   }
 
@@ -168,13 +157,13 @@ object QueryPipeline {
     * the postings rows of their terms ([[Bm25IndexTables.scoreMulti]]).
     * Each per-variation top list is a `row_number` window partitioned by
     * `v` ([[Retrieval.topPer]], a partial `WindowGroupLimit` below the
-    * exchange); the weighted RRF and the final RRF are one `groupBy`
-    * each ([[Retrieval.rrfFuseRanked]]). The dedup feeds only the chunk
-    * set to the rerank, so it is a semi join of the embeddings (their
-    * second and last scan) against the broadcast ≤ V·RerankFetch
-    * candidate ids, crossed with the `(v, qv)` table; those ≤ V²·
-    * RerankFetch rows are ranked and fused in one partition. Nothing is
-    * persisted.
+    * exchange); the weighted RRF ([[Retrieval.hybridFusePer]]) and the
+    * final RRF are one `groupBy` each ([[Retrieval.rrfFuseRanked]]). The
+    * dedup feeds only the chunk set to the rerank, so it is a semi join
+    * of the embeddings (their second and last scan) against the
+    * broadcast ≤ V·RerankFetch candidate ids, crossed with the `(v, qv)`
+    * table; those ≤ V²·RerankFetch rows are ranked and fused in one
+    * partition. Nothing is persisted.
     */
   def queryExpanded(spark: SparkSession, outDir: String, question: String,
       expansions: Seq[String] = Nil, topK: Int = FinalTopK,
@@ -187,16 +176,10 @@ object QueryPipeline {
 
     // per-variation hybrid ranking: weighted RRF of each variation's
     // vector and keyword top lists, cut to RerankFetch
-    val vec = vecSourceMulti(spark, outDir, qvs, weights, nprobe)
-    val kw = Retrieval.topPer(
-      Bm25IndexTables.scoreMulti(spark, Ingestion.indexDir(outDir), variations, "chunk_id")
-        .filter(col("score") > 0), // bm25_index.py:200-204
-      "v", "chunk_id", "score", PerSourceFetch)
-    val perVariation = Retrieval.topPer(
-      Retrieval.rrfFuseRanked(
-        Seq(vec -> Retrieval.VectorWeight, kw -> Retrieval.KeywordWeight),
-        Seq("v", "chunk_id")),
-      "v", "chunk_id", "rrf_score", RerankFetch)
+    val perVariation = Retrieval.hybridFusePer(
+      vecSourceMulti(spark, outDir, qvs, weights, nprobe),
+      Bm25IndexTables.scoreMulti(spark, Ingestion.indexDir(outDir), variations, "chunk_id"),
+      "v", "chunk_id", PerSourceFetch, RerankFetch)
 
     // first-wins dedup across variations (U2 arrival order) keeps one
     // row per chunk, and only that chunk set reaches the rerank: a semi

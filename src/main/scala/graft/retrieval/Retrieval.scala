@@ -64,16 +64,16 @@ object Retrieval {
 
   /** Term postings: (idCol, dl, term, tf). */
   def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    postingsFromTokens(tokenized(docs, idCol, textCol), idCol)
-
-  private def postingsFromTokens(toks: DataFrame, idCol: String): DataFrame =
-    toks.select(col(idCol), col("dl"), explode(col("tokens")).as("term"))
+    tokenized(docs, idCol, textCol)
+      .select(col(idCol), col("dl"), explode(col("tokens")).as("term"))
       .groupBy(col(idCol), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
 
   /** BM25Okapi document scores for one query: (idCol, score), only docs
     * with at least one matching term (the reference filters score <= 0
-    * downstream, `bm25_index.py:200-204`).
+    * downstream, `bm25_index.py:200-204`). [[bm25ScoresFromIndex]] over
+    * the corpus's own postings and stats, for one variation; a query with
+    * no terms gives an empty frame typed like the scored one.
     */
   def bm25Scores(
       docs: DataFrame,
@@ -81,37 +81,13 @@ object Retrieval {
       textCol: String,
       query: String,
       k1: Double = DefaultK1,
-      b: Double = DefaultB): DataFrame = {
-    val toks = tokenized(docs, idCol, textCol)
-    val post = postingsFromTokens(toks, idCol)
-
-    // corpus stats as a 1-row broadcast (no collect); zero-token docs count
-    val stats = toks.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-
-    // document frequency + epsilon-floored Okapi idf over the vocabulary
-    val idf = idfTable(post, stats)
-
-    // query terms with multiplicity (each occurrence contributes,
-    // rank_bm25 get_scores semantics)
-    val qTerms = Tokenizer.tokenize(query)
-      .groupBy(identity).map { case (t, os) => (t, os.size) }.toSeq
-    if (qTerms.isEmpty) {
-      return docs.sparkSession.createDataFrame(
-        docs.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        new org.apache.spark.sql.types.StructType()
-          .add(idCol, docs.schema(idCol).dataType)
-          .add("score", org.apache.spark.sql.types.DoubleType))
-    }
-    val qDf = docs.sparkSession.createDataFrame(qTerms).toDF("term", "qn")
-
-    post
-      .join(broadcast(qDf), "term")
-      .join(broadcast(idf), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib", bm25Contrib(col("avgdl"), k1, b))
-      .groupBy(idCol)
-      .agg(sum(col("contrib")).as("score"))
-  }
+      b: Double = DefaultB): DataFrame =
+    if (Tokenizer.tokenize(query).isEmpty)
+      docs.select(col(idCol), lit(0.0).as("score")).where(lit(false))
+    else
+      bm25ScoresFromIndex(postings(docs, idCol, textCol),
+        corpusStats(docs, idCol, textCol), idCol, Seq(0 -> query), k1, b)
+        .select(col(idCol), col("score"))
 
   /** Corpus stats (n_docs, avgdl) as a 1-row frame. Computed from the
     * TOKENIZED corpus, not the postings — zero-token docs carry no
@@ -120,21 +96,6 @@ object Retrieval {
   def corpusStats(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     tokenized(docs, idCol, textCol)
       .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-
-  /** BM25 scores for SEVERAL queries in ONE pass over the corpus:
-    * postings/stats/idf are built once and joined against a broadcast
-    * (variation, term, multiplicity) table — at scale this is one shuffle
-    * instead of one per query variation. Output: (v, idCol, score).
-    */
-  def bm25ScoresMulti(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      queries: Seq[(Int, String)],
-      k1: Double = DefaultK1,
-      b: Double = DefaultB): DataFrame =
-    bm25ScoresFromIndex(postings(docs, idCol, textCol),
-      corpusStats(docs, idCol, textCol), idCol, queries, k1, b)
 
   /** Raw Okapi idf of a term with document frequency `df` in a corpus of
     * `nDocs` documents: ln(N - df + 0.5) - ln(df + 0.5).
@@ -148,11 +109,13 @@ object Retrieval {
   def flooredIdf(idfRaw: Column, avgIdf: Column): Column =
     when(idfRaw < 0, lit(Epsilon) * avgIdf).otherwise(idfRaw)
 
-  /** One (query term, doc) BM25Okapi contribution over a row's `qn`
-    * (query multiplicity), `idf`, `tf` and `dl` columns.
+  /** One (query term, doc) BM25Okapi contribution over a row's `idf`,
+    * `tf` and `dl` columns, weighted by `weight` (by default `qn`, the
+    * term's multiplicity in the query).
     */
-  def bm25Contrib(avgdl: Column, k1: Double, b: Double): Column =
-    col("qn") * col("idf") * (col("tf") * lit(k1 + 1)) /
+  def bm25Contrib(avgdl: Column, k1: Double, b: Double,
+      weight: Column = col("qn")): Column =
+    weight * col("idf") * (col("tf") * lit(k1 + 1)) /
       (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl))
 
   /** Epsilon-floored Okapi idf table (term, idf) from a postings table +
@@ -236,22 +199,17 @@ object Retrieval {
 
   /** Weighted reciprocal rank fusion of ranked lists (`rrf.py:6-35`).
     * Each input: (idCol, scoreCol) ranked desc; output (idCol, rrf_score).
+    * Each list is ranked by [[withRank]] and fused by [[rrfFuseRanked]].
     */
   def rrfFuse(
       lists: Seq[(DataFrame, Double)],
       idCol: String,
       scoreCol: String,
-      k: Int = RrfK): DataFrame = {
-    require(lists.nonEmpty)
-    val contribs = lists.map { case (df, w) =>
+      k: Int = RrfK): DataFrame =
+    rrfFuseRanked(lists.map { case (df, w) =>
       withRank(df.select(col(idCol), col(scoreCol)), idCol, scoreCol)
-        .select(col(idCol),
-          (lit(w) / (lit(k) + col("rank") + lit(1))).as("contrib"))
-    }
-    contribs.reduce(_ unionByName _)
-      .groupBy(idCol)
-      .agg(sum(col("contrib")).as("rrf_score"))
-  }
+        .withColumn("rn", col("rank") + 1) -> w
+    }, Seq(idCol), k)
 
   /** The top `k` rows of each `key`, by `(scoreCol desc, idCol asc)`, with
     * their 1-based position in `rn`. The filter is on the row number
@@ -264,12 +222,12 @@ object Retrieval {
         .orderBy(col(scoreCol).desc, col(idCol).asc)))
       .filter(col("rn") <= k)
 
-  /** [[rrfFuse]] over ranked lists that carry their own 1-based rank in
-    * `rn` ([[topPer]]'s column; the 0-based rank + 1), each with its
-    * weight, summed per `groupCols`. With `groupCols = (key, id)` it fuses
-    * each key's lists separately, with the same values as [[rrfFuse]] of
-    * that key's lists; with `groupCols = (id)` it fuses every list.
-    * Returns `(groupCols…, rrf_score)`.
+  /** Weighted RRF over ranked lists that carry their own 1-based rank in
+    * `rn` ([[topPer]]'s column; [[withRank]]'s 0-based rank + 1), each
+    * with its weight: Σ w / (k + rn), summed per `groupCols`. With
+    * `groupCols = (key, id)` it fuses each key's lists separately; with
+    * `groupCols = (id)` it fuses every list. Returns `(groupCols…,
+    * rrf_score)`.
     */
   def rrfFuseRanked(lists: Seq[(DataFrame, Double)], groupCols: Seq[String],
       k: Int = RrfK): DataFrame = {
@@ -279,6 +237,44 @@ object Retrieval {
     }.reduce(_ unionByName _)
       .groupBy(groupCols.map(col): _*)
       .agg(sum(col("contrib")).as("rrf_score"))
+  }
+
+  /** The hybrid funnel of one question (`hybrid_search.py:45-82`): the
+    * `fetch` best of `vecScores` ∪ the `fetch` best positive keyword
+    * scores (`bm25_index.py:200-204`), each by `(score desc, id asc)`, →
+    * weighted RRF. Both inputs carry `(idCol, score)`; returns
+    * `(idCol, rrf_score)`, unordered.
+    */
+  def hybridFuse(
+      vecScores: DataFrame,
+      kwScores: DataFrame,
+      idCol: String,
+      fetch: Int,
+      vectorWeight: Double = VectorWeight,
+      keywordWeight: Double = KeywordWeight): DataFrame = {
+    def top(df: DataFrame) = df.orderBy(col("score").desc, col(idCol).asc).limit(fetch)
+    rrfFuse(Seq(top(vecScores) -> vectorWeight,
+      top(kwScores.filter(col("score") > 0)) -> keywordWeight), idCol, "score")
+  }
+
+  /** [[hybridFuse]] for many questions at once, keyed by `key` (the
+    * question-variation number): `vecTop` is each key's vector top list,
+    * already ranked (`(key, idCol, rn)`, as [[topPer]] gives it); the
+    * keyword side is the `fetch` best positive `kwScores` of each key.
+    * Their weighted RRF per `(key, id)` is cut to the `cut` best per key.
+    * Returns `(key, idCol, rrf_score, rn)`.
+    */
+  def hybridFusePer(
+      vecTop: DataFrame,
+      kwScores: DataFrame,
+      key: String,
+      idCol: String,
+      fetch: Int,
+      cut: Int): DataFrame = {
+    val kwTop = topPer(kwScores.filter(col("score") > 0), key, idCol, "score", fetch)
+    topPer(
+      rrfFuseRanked(Seq(vecTop -> VectorWeight, kwTop -> KeywordWeight), Seq(key, idCol)),
+      key, idCol, "rrf_score", cut)
   }
 
   /** Order-preserving first-occurrence dedup (P4,
@@ -320,9 +316,10 @@ object Retrieval {
     }
   }
 
-  /** Hybrid search funnel (`hybrid_search.py:45-82`): vector top-2k ∪ BM25
-    * top-2k → weighted RRF(k=60) → top-k with deterministic tie-break.
-    * `vectorScores` must carry (idCol, score).
+  /** Hybrid search (`hybrid_search.py:45-82`): [[hybridFuse]] of the
+    * vector scores and the corpus's BM25 scores at 2·topK per source, then
+    * the top-k with deterministic tie-break. `vectorScores` must carry
+    * (idCol, score).
     */
   def hybridSearch(
       vectorScores: DataFrame,
@@ -332,15 +329,9 @@ object Retrieval {
       query: String,
       topK: Int,
       vectorWeight: Double = VectorWeight,
-      keywordWeight: Double = KeywordWeight): DataFrame = {
-    val overFetch = topK * 2
-    val vec = vectorScores
-      .orderBy(col("score").desc, col(idCol).asc).limit(overFetch)
-    val kw = bm25Scores(docs, idCol, textCol, query)
-      .filter(col("score") > 0)
-      .orderBy(col("score").desc, col(idCol).asc).limit(overFetch)
-    rrfFuse(Seq(vec -> vectorWeight, kw -> keywordWeight), idCol, "score")
+      keywordWeight: Double = KeywordWeight): DataFrame =
+    hybridFuse(vectorScores, bm25Scores(docs, idCol, textCol, query), idCol,
+        2 * topK, vectorWeight, keywordWeight)
       .orderBy(col("rrf_score").desc, col(idCol).asc)
       .limit(topK)
-  }
 }

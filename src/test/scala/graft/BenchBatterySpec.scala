@@ -41,4 +41,19 @@ class BenchBatterySpec extends AnyFunSuite {
     assert(b.mins.keySet == Set("q_ok"))
     assert(b.failures == Map("q_flaky" -> "java.lang.IllegalStateException: flaky call 2"))
   }
+
+  test("bench.json's knobs field carries the effective cs_win and decimal38") {
+    def knobs: com.fasterxml.jackson.databind.JsonNode =
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree("{" + Bench.knobsJson + "}").get("knobs")
+    val csWin = graft.queries.CurationQueries.CsWin
+    if (!sys.env.contains("SPARK_GRAFT_CS_WIN")) assert(csWin == 240)
+    assert(knobs.get("cs_win").isInt && knobs.get("cs_win").asInt() == csWin)
+    graft.queries.WideStats.withWide(true) {
+      assert(knobs.get("decimal38").isBoolean && knobs.get("decimal38").asBoolean())
+    }
+    graft.queries.WideStats.withWide(false) {
+      assert(knobs.get("decimal38").isBoolean && !knobs.get("decimal38").asBoolean())
+    }
+  }
 }

@@ -54,6 +54,15 @@ class RetrievalParitySpec extends AnyFunSuite {
     }
   }
 
+  test("BM25 of a query with no terms is a typed (id, score) frame with no rows") {
+    val docs = Seq((7L, "spark join scan"), (8L, "table")).toDF("doc_id", "text")
+    val got = Retrieval.bm25Scores(docs, "doc_id", "text", "  ?! ")
+    assert(got.columns.toSeq == Seq("doc_id", "score"))
+    assert(got.schema("doc_id").dataType == org.apache.spark.sql.types.LongType)
+    assert(got.schema("score").dataType == org.apache.spark.sql.types.DoubleType)
+    assert(got.collect().isEmpty)
+  }
+
   test("weighted RRF matches the reference") {
     Golden.elems(Golden.load("rrf_cases.json")).foreach { c =>
       val lists = Golden.elems(c.get("lists")).map(Golden.strings)

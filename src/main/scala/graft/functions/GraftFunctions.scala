@@ -436,6 +436,31 @@ object ExprHelpers {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
+  /** See [[TermCounts]]: the distinct non-null strings of `tokens` with
+    * their occurrence counts, as `(term, tf)` structs in ascending term
+    * order. Sort, then run-length encode.
+    */
+  def termCounts(tokens: ArrayData): ArrayData = {
+    val n = tokens.numElements()
+    val ts = new Array[UTF8String](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (!tokens.isNullAt(i)) { ts(m) = tokens.getUTF8String(i); m += 1 }
+      i += 1
+    }
+    java.util.Arrays.sort(ts, 0, m, (a: UTF8String, b: UTF8String) => a.compareTo(b))
+    val out = new java.util.ArrayList[InternalRow]()
+    i = 0
+    while (i < m) {
+      var j = i + 1
+      while (j < m && ts(j) == ts(i)) j += 1
+      out.add(InternalRow(ts(i), (j - i).toLong))
+      i = j
+    }
+    new GenericArrayData(out.toArray)
+  }
+
   /** See [[DotProduct]]: false when a non-zero weight's embedding
     * element is null or missing, or a weight is null (the dot is null).
     */
@@ -547,8 +572,9 @@ final case class SentenceSplit(child: Expression) extends GraftStringExpression 
 }
 
 /** `graft_tokenize(text)` → BM25 tokens (reference P1 semantics,
-  * `bm25_index.py:208-227`), as a single codegen'd expression instead of
-  * the 5-function built-in composition in `Retrieval.tokenizeCol`.
+  * `bm25_index.py:208-227`): [[graft.text.Tokenizer.tokenize]], the
+  * golden-tested tokenizer, as one codegen'd call. It is the column
+  * tokenizer of the whole retrieval layer (`Retrieval.tokenizeCol`).
   */
 final case class Bm25Tokenize(child: Expression) extends GraftStringExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -557,6 +583,33 @@ final case class Bm25Tokenize(child: Expression) extends GraftStringExpression {
     ExprHelpers.tokenize(input.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): Bm25Tokenize = copy(child = c)
   override def prettyName: String = "graft_tokenize"
+}
+
+/** `graft_term_counts(tokens)` → the distinct terms of one document's
+  * token array with their counts, `array<struct<term: string, tf:
+  * bigint>>` in ascending term order ([[ExprHelpers.termCounts]]); null
+  * tokens are skipped. `inline` of it is the document's postings rows, so
+  * a corpus whose rows are one per document needs no aggregation, and no
+  * exchange, to count its terms.
+  */
+final case class TermCounts(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(
+    StructType(Seq(
+      StructField("term", StringType, nullable = false),
+      StructField("tf", LongType, nullable = false))),
+    containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<string> argument, got ${t.sql}")
+  }
+  override protected def nullSafeEval(input: Any): Any =
+    ExprHelpers.termCounts(input.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.ExprHelpers.termCounts($c)")
+  override protected def withNewChildInternal(c: Expression): TermCounts = copy(child = c)
+  override def prettyName: String = "graft_term_counts"
 }
 
 /** `graft_nfc(text)` → Unicode NFC (canonical composition) normalization,
@@ -922,6 +975,7 @@ object GraftFunctions {
     "graft_html_strip" -> (cs => HtmlStrip(cs.head)),
     "graft_sentence_split" -> (cs => SentenceSplit(cs.head)),
     "graft_tokenize" -> (cs => Bm25Tokenize(cs.head)),
+    "graft_term_counts" -> (cs => TermCounts(cs.head)),
     "graft_nfc" -> (cs => NfcNormalize(cs.head)),
     "graft_shingles" -> (cs => BigramShingles(cs.head)),
     "graft_ws_tokens" -> (cs => WsTokens(cs.head)),
@@ -963,6 +1017,10 @@ object GraftFunctions {
   def dot(embedding: Column, weights: Column): Column =
     PlanBridge.column(DotProduct(PlanBridge.expression(embedding),
       PlanBridge.expression(weights)))
+
+  /** `graft_term_counts(tokens)` ([[TermCounts]]) as a Column, like [[dot]]. */
+  def termCounts(tokens: Column): Column =
+    PlanBridge.column(TermCounts(PlanBridge.expression(tokens)))
 }
 
 /** `--conf spark.sql.extensions=graft.functions.GraftExtensions` for

@@ -325,7 +325,9 @@ object ExtractionPipeline {
     }
     cleanupOrphans(cfg.outDir, manifest0)
     val doneAtStart = manifest0.completed.keySet
-    val bucketed = withBucket(turns, cfg.nBuckets)
+    // the skew pre-pass scans the input: a resume with every bucket
+    // committed has no wave to feed, so it never runs
+    lazy val bucketed = withBucket(turns, cfg.nBuckets)
 
     var manifest = manifest0
     var totTurns = 0L
@@ -402,15 +404,16 @@ object ExtractionPipeline {
             }.toDF("e", "chunks")
         }
 
-        withChunks.select(col("e.*"), col("chunks")).write
+        val written = withChunks.select(col("e.*"), col("chunks"))
+        written.write
           .mode(SaveMode.Append)
           .partitionBy("bucket")
           .parquet(extractedDir(cfg.outDir))
 
-        spark.read.parquet(extractedDir(cfg.outDir))
+        spark.read.schema(written.schema).parquet(extractedDir(cfg.outDir))
           .filter(col("bucket").isin(waveBuckets.map(Integer.valueOf): _*))
-          .select(col("conv_id"), col("turn_idx"),
-            col("bucket").cast("int").as("bucket"), explode(col("chunks")).as("c"))
+          .select(col("conv_id"), col("turn_idx"), col("bucket"),
+            explode(col("chunks")).as("c"))
           .select(col("conv_id") +: col("turn_idx") +: chunkCols :+ col("bucket"): _*)
           .write
           .mode(SaveMode.Append)

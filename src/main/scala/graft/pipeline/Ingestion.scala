@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StringType
   *    embeddings table (vector sink analog, bucket-partitioned like the
   *    other tables) and the BM25 postings/doclens index tables
   *    ([[graft.retrieval.Bm25IndexTables]] — the reference rebuilds its
-  *    whole in-memory index per add, `bm25_index.py:140-141`; ours is a
-  *    corpus-wide hash aggregation).
+  *    whole in-memory index per add, `bm25_index.py:140-141`; ours is one
+  *    narrow tokenize-and-count pass per table, no shuffle).
   *
   * Both stages are idempotent re-runs over committed chunk buckets
   * (overwrite / atomic index replace), so a resume after a crash between
@@ -87,9 +87,10 @@ object Ingestion {
   private def embeddedChunks(
       spark: SparkSession, pipelineOut: String, dim: Int) = {
     import spark.implicits._
-    spark.read.parquet(ExtractionPipeline.chunksDir(pipelineOut))
+    spark.read.schema(ExtractionPipeline.ChunksReadSchema.add("bucket", IntegerType))
+      .parquet(ExtractionPipeline.chunksDir(pipelineOut))
       .select(col("conv_id"), col("turn_idx"), col("chunk_index"),
-        col("content"), col("bucket").cast("int").as("bucket"))
+        col("content"), col("bucket"))
       .as[(String, Int, Int, String, Int)]
       .mapPartitions(_.map { case (cid, tidx, cidx, content, bucket) =>
         ChunkEmbedding(cid, tidx, cidx, "text", hashedEmbedding(content, dim), bucket)
@@ -102,14 +103,15 @@ object Ingestion {
   def embedChunks(spark: SparkSession, outDir: String, dim: Int = DefaultDim): Long = {
     embeddedChunks(spark, outDir, dim).write.mode("overwrite").partitionBy("bucket")
       .parquet(embeddingsDir(outDir))
-    spark.read.parquet(embeddingsDir(outDir)).count()
+    spark.read.schema(EmbeddingsReadSchema).parquet(embeddingsDir(outDir)).count()
   }
 
   /** STORING stage (keyword side): chunks table → BM25 postings/doclens
     * index tables with atomic replace.
     */
   def buildIndex(spark: SparkSession, outDir: String): Unit = {
-    val chunks = spark.read.parquet(ExtractionPipeline.chunksDir(outDir))
+    val chunks = spark.read.schema(ExtractionPipeline.ChunksReadSchema)
+      .parquet(ExtractionPipeline.chunksDir(outDir))
       .select(chunkId, col("content"))
     Bm25IndexTables.build(chunks, "chunk_id", "content", indexDir(outDir))
   }

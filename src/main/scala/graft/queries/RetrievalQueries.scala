@@ -78,7 +78,7 @@ object RetrievalQueries {
 
   /** ONE postings/stats materialization for the whole retrieval family
     * (q_token_tf, q_bm25_docs, q_rm3_feedback, q_hybrid_funnel) — under
-    * [[Shared]] the corpus tokenize+shuffle runs once per battery, not
+    * [[Shared]] the corpus tokenize-and-count runs once per battery, not
     * once per query. Note the asymmetry with the round-2 negative
     * result (persisting postings through Spark's COLUMNAR cache cost
     * ~10× — the in-memory columnar codec is membw-bound on wide
@@ -167,7 +167,7 @@ object RetrievalQueries {
   // (weight qn) and expansion terms (weight `Rm3ExpWeight`). Everything
   // reuses ONE postings materialization (persisted): base scoring, term
   // mining, and final scoring are three consumers of the same (doc, dl,
-  // term, tf) table — at 100 TB that is one tokenize+shuffle, not three.
+  // term, tf) table — at 100 TB that is one tokenize pass, not three.
   // Per-(doc, term) BM25 contributions fixed-point at 1e6 before summing
   // (`Rounding.fpSum`) so doc ordering — and hence the feedback set and
   // the final list — is bit-identical across engines and partitionings.

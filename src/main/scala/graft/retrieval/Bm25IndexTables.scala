@@ -32,6 +32,12 @@ import scala.jdk.CollectionConverters._
   * its own terms' postings rows: a term's df is its row count among
   * them, since each postings row is one (doc, term).
   *
+  * Each table is written in one narrow pass over the corpus, with no
+  * exchange: `graft_tokenize`, then the document's length (doclens) or
+  * its inlined `graft_term_counts` (postings, [[Retrieval.postings]]).
+  * That needs one corpus row per id, which chunk ids and the new ids of
+  * an [[add]] are.
+  *
   * Maintenance is incremental at partition granularity instead of the
   * reference's full O(corpus) rebuild:
   *   - add: append the new docs' postings/doclens
@@ -56,15 +62,13 @@ object Bm25IndexTables {
     VersionedDir.tableDir(indexDir, "doclens")
 
   /** `(doclens, postings)` rows of a corpus: one doclens row per doc,
-    * one postings row per (doc, term).
+    * one postings row per (doc, term). Each is one narrow pass over
+    * `docs`, which holds one row per id ([[Retrieval.postings]]'
+    * contract).
     */
-  private def tables(docs: DataFrame, idCol: String, textCol: String): (DataFrame, DataFrame) = {
-    val toks = Retrieval.tokenized(docs, idCol, textCol)
-    (toks.select(col(idCol), col("dl")),
-      toks.select(col(idCol), col("dl"), explode(col("tokens")).as("term"))
-        .groupBy(col(idCol), col("dl"), col("term"))
-        .agg(count(lit(1)).as("tf")))
-  }
+  private def tables(docs: DataFrame, idCol: String, textCol: String): (DataFrame, DataFrame) =
+    (Retrieval.tokenized(docs, idCol, textCol).select(col(idCol), col("dl")),
+      Retrieval.postings(docs, idCol, textCol))
 
   /** Build (overwrite) the index tables from a corpus: write a fresh
     * version directory, then flip the pointer once.
@@ -74,7 +78,9 @@ object Bm25IndexTables {
     VersionedDir.commit(indexDir, "doclens" -> doclens.write, "postings" -> postings.write)
   }
 
-  /** Append new documents (incremental add; caller guarantees new ids). */
+  /** Append new documents (incremental add; caller guarantees new ids,
+    * one row each).
+    */
   def add(docs: DataFrame, idCol: String, textCol: String, indexDir: String): Unit = {
     val (doclens, postings) = tables(docs, idCol, textCol)
     doclens.write.mode(SaveMode.Append).parquet(doclensDir(indexDir))

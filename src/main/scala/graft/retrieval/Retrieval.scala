@@ -1,7 +1,9 @@
 package graft.retrieval
 
+import graft.functions.{Bm25Tokenize, GraftFunctions}
 import graft.text.Tokenizer
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,10 +28,11 @@ import org.apache.spark.sql.functions._
   * Ties in ranked lists are under-specified in the reference (Python dict
   * insertion order); we fix `(score desc, id asc)` and document it.
   *
-  * Scale notes: every step is a hash aggregation or window the optimizer
-  * can plan with partial aggregation; the postings `groupBy` is the one
-  * wide shuffle. Stats (N, avgdl, avg idf) join back via broadcast of
-  * single-row aggregates — no `collect()`.
+  * Scale notes: tokenizing and per-document term counting are one narrow
+  * pass over the corpus (one row per document, so the postings need no
+  * exchange); every later step is a hash aggregation or window the
+  * optimizer can plan with partial aggregation. Stats (N, avgdl, avg idf)
+  * join back via broadcast of single-row aggregates — no `collect()`.
   */
 object Retrieval {
 
@@ -40,20 +43,11 @@ object Retrieval {
   val DefaultB = 0.75
   val Epsilon = 0.25
 
-  private val stopArray = typedLit(Tokenizer.StopWords.toSeq.sorted)
-
-  /** Column form of the BM25 tokenizer (P1). Catalyst built-ins only, so
-    * it stays inside whole-stage codegen; `(?U)` pins unicode `\w`/`\s`
-    * like Python's. The pure-Scala twin (`Tokenizer.tokenize`) is the
-    * golden-tested source of truth; this mirrors it for SQL pipelines.
+  /** Column form of the BM25 tokenizer (P1): the golden-tested
+    * `Tokenizer.tokenize` as the codegen'd `graft_tokenize` expression.
     */
-  def tokenizeCol(c: Column): Column = {
-    val cleaned = regexp_replace(lower(c), "(?U)[^\\w\\s]", " ")
-    val all = filter(split(cleaned, "(?U)\\s+"), t => t =!= "")
-    val kept = filter(all, t =>
-      length(t) >= Tokenizer.MinTokenLength && !array_contains(stopArray, t))
-    when(size(kept) === 0, all).otherwise(kept)
-  }
+  def tokenizeCol(c: Column): Column =
+    PlanBridge.column(Bm25Tokenize(PlanBridge.expression(c)))
 
   /** Tokenized corpus: (idCol, tokens, dl). Zero-token docs keep a row —
     * they count toward N and avgdl in rank_bm25.
@@ -62,12 +56,18 @@ object Retrieval {
     docs.select(col(idCol), tokenizeCol(col(textCol)).as("tokens"))
       .withColumn("dl", size(col("tokens")))
 
-  /** Term postings: (idCol, dl, term, tf). */
+  /** Term postings: (idCol, dl, term, tf), one row per (doc, term) —
+    * each document's `graft_term_counts` inlined, in one narrow pass with
+    * no exchange.
+    *
+    * CONTRACT: `docs` holds one row per id. Terms are counted per row, so
+    * two rows of one id would give two postings rows for a shared term,
+    * where a grouped count gives one. Chunk ids, the new ids an index add
+    * takes, and the battery's `documents.doc_id` are all unique.
+    */
   def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     tokenized(docs, idCol, textCol)
-      .select(col(idCol), col("dl"), explode(col("tokens")).as("term"))
-      .groupBy(col(idCol), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
+      .select(col(idCol), col("dl"), inline(GraftFunctions.termCounts(col("tokens"))))
 
   /** BM25Okapi document scores for one query: (idCol, score), only docs
     * with at least one matching term (the reference filters score <= 0

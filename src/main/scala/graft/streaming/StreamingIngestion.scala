@@ -47,10 +47,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *     doclens/vector indexes, then atomically move the intent to commit.
   *
   * Scale notes: extraction/chunking/embedding are one narrow
-  * `mapPartitions` pass over the micro-batch (no shuffle); the only
-  * shuffle is the BM25 postings `groupBy`, sized by the BATCH, not the
-  * store. Nothing is collected per batch: a scrub's doomed chunk ids stay
-  * a DataFrame, broadcast into the index rewrites. Store growth is
+  * `mapPartitions` pass over the micro-batch (no shuffle), and so is each
+  * BM25 index table's write (per-chunk term counts): sized by the BATCH,
+  * not the store. Nothing is collected per batch: a scrub's doomed chunk
+  * ids stay a DataFrame, broadcast into the index rewrites. Store growth is
   * append-only; postings never rewrite on add, so ingesting N batches is
   * O(their own data), not O(corpus) per batch (the reference rebuilds
   * its whole in-memory index per add, `bm25_index.py:140-141`).

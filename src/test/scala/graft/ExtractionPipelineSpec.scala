@@ -2,16 +2,21 @@ package graft
 
 import graft.fixtures.TranscriptGen
 import graft.pipeline.{ExtractionPipeline, TableIO}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** End-to-end checks of the north-rule job: per-turn equality independent
   * of parallelism and input order, checkpoint resume with zero
   * reprocessing, mega-conversation salting, lineage/metrics emission.
   */
-class ExtractionPipelineSpec extends AnyFunSuite {
+class ExtractionPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
 
   private def tmp(): String =
@@ -84,6 +89,34 @@ class ExtractionPipelineSpec extends AnyFunSuite {
       .select("conv_id", "turn_idx")
     assert(got.count() == turns.count())
     assert(got.distinct().count() == got.count())
+  }
+
+  test("a no-op resume runs no job that scans the input") {
+    import spark.implicits._
+    val input = tmp() + "/turns"
+    TranscriptGen.transcripts(spark, nConvs = 10, numPartitions = 2).write.parquet(input)
+    val turns = spark.read.parquet(input).as[graft.model.Turn]
+    val out = tmp()
+    val cfg = ExtractionPipeline.Config(out, nBuckets = 4, waves = 2)
+    ExtractionPipeline.run(spark, turns, cfg.copy(resume = false))
+
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val resumed = try {
+      val r = ExtractionPipeline.run(spark, turns, cfg)
+      ListenerBusDrain.drain(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(resumed.skippedBuckets == cfg.nBuckets && resumed.turns == 0)
+    val inputScans = plans.asScala.toSeq.flatMap(qe => collect(qe.executedPlan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.endsWith("/turns")) => s
+    })
+    assert(inputScans.isEmpty, s"a no-op resume scanned the input ${inputScans.length} times")
   }
 
   test("structured mode: pipeline chunks equal direct chunk_with_structure") {

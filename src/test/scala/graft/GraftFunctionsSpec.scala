@@ -284,6 +284,19 @@ class GraftFunctionsSpec extends AnyFunSuite {
     }
   }
 
+  test("graft_term_counts gives each distinct term once with its count, in term order") {
+    import spark.implicits._
+    val rows = Seq(Some(Seq("b", "a", "b", null, "c", "b")), Some(Seq.empty[String]), None)
+      .toDF("toks")
+      .selectExpr("graft_term_counts(toks) AS tc")
+      .select($"tc.term", $"tc.tf").as[(Option[Seq[String]], Option[Seq[Long]])]
+      .collect().toSeq
+    assert(rows == Seq(
+      (Some(Seq("a", "b", "c")), Some(Seq(1L, 3L, 1L))),
+      (Some(Nil), Some(Nil)),
+      (None, None)))
+  }
+
   test("expressions compose with built-ins in one SQL pipeline") {
     import spark.implicits._
     val n = Seq(html).toDF("h")

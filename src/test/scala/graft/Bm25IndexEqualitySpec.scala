@@ -64,7 +64,7 @@ class Bm25IndexEqualitySpec extends AnyFunSuite {
 
   private val Words = Vector("spark", "Shuffle", "JOIN", "łódź", "data", "x",
     "partition", "42", "e.g", "Dr", "ZAŻÓŁĆ", "the", "of", "and", "is", "a",
-    "café", "naïve", "数据", "𝔘𝔫𝔦", "🙂", "don't", "co-op", "_id", "ǅemal")
+    "café", "naïve", "数据", "𝔘𝔫𝔦", "𝑥", "𠀀", "🙂", "don't", "co-op", "_id", "ǅemal")
   private val Glue = Vector(" ", "  ", ". ", "! ", "? ", ".\n", "\n", "\t",
     "... ", ".", "", " . ", ", ", " ", "—", "(", ")")
 
@@ -82,26 +82,17 @@ class Bm25IndexEqualitySpec extends AnyFunSuite {
     assertEqualIndex((0 until 300).map(_ => randomText(r)))
   }
 
-  test("named cases: repeats, stop-word fallback, zero tokens, null, non-ASCII") {
+  test("named cases: repeats, stop-word fallback, zero tokens, null, non-ASCII, one-letter astral") {
     assertEqualIndex(Seq(
       "spark spark SPARK shuffle spark, Shuffle!",
+      "spark spark",
       "the of and a is",
       "!!! ... ,,, ?",
       "",
       null,
       "łódź ZAŻÓŁĆ café naïve 数据 データ",
-      "𝔘𝔫𝔦𝔠𝔬𝔡𝔢 🙂 𐐀𐐨 astral 𝔘𝔫𝔦𝔠𝔬𝔡𝔢"))
-  }
-
-  test("zero-token and null docs keep their doclens row and have no postings") {
-    import spark.implicits._
-    val docs = Seq((1L, "!!! ..."), (2L, null), (3L, "spark spark")).toDF("id", "text")
-    val dir = Files.createTempDirectory("bm25eq").toString
-    Bm25IndexTables.build(docs, "id", "text", dir)
-    val lens = spark.read.parquet(Bm25IndexTables.doclensDir(dir))
-    assert(lens.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
-    val post = spark.read.parquet(Bm25IndexTables.postingsDir(dir))
-      .select("id", "dl", "term", "tf").as[(Long, Int, String, Long)].collect().toSeq
-    assert(post == Seq((3L, 2, "spark", 2L)))
+      "𝔘𝔫𝔦𝔠𝔬𝔡𝔢 🙂 𐐀𐐨 astral 𝔘𝔫𝔦𝔠𝔬𝔡𝔢",
+      "𝑥 spark 𠀀 data",
+      "𝑥 𠀀"))
   }
 }

@@ -17,4 +17,10 @@ class TokenizerParitySpec extends AnyFunSuite {
     assert(Tokenizer.tokenize("the spark engine") == Vector("spark", "engine"))
     assert(Tokenizer.tokenize("") == Vector.empty)
   }
+
+  test("token length counts code points, as Python's len does") {
+    assert(Tokenizer.tokenize("𝑥 spark 𠀀 data") == Vector("spark", "data"))
+    assert(Tokenizer.tokenize("𝑥 𠀀") == Vector("𝑥", "𠀀"))
+    assert(Tokenizer.tokenize("𝑥𝑦 𝔘") == Vector("𝑥𝑦"))
+  }
 }

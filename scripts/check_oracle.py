@@ -1,25 +1,54 @@
 #!/usr/bin/env python3
 """Local simulation of the driver's correctness gate.
 
-Usage: python3 scripts/check_oracle.py <verify_out_dir> <sf_dir>
+Usage: python3 scripts/check_oracle.py <verify_out_dir> <sf_dir> [q_a,q_b,...]
 
 Reads each <name>/ parquet written by graft.Verify plus oracle_sql.json,
 runs the oracle SQL in DuckDB against the sf parquet tables, and compares
 (sorted columns, sorted rows, string-normalized values) — a stricter local
-stand-in for the driver's row/schema/hash check.
+stand-in for a row/schema/hash check. The optional third argument checks
+only the named queries (comma-separated, as Verify's filter).
+
+DuckDB runs under a memory limit of half the memory this process may use
+and spills to a temporary directory beyond it. The limit covers only
+DuckDB's buffer manager: the LSH-pair graph oracles (q_dbscan,
+q_boruvka_mst, q_mutual_knn, q_neighborhood_growth) allocate past it,
+over 7 GB within seconds even at sf0.001, so leave them out of the filter
+on a small host, or cap the process (`ulimit -v`) to fail fast.
 """
 
 import json
 import math
+import os
+import shutil
 import sys
+import tempfile
 from pathlib import Path
 
 import duckdb
 import pandas as pd
 
 out_dir, sf_dir = Path(sys.argv[1]), Path(sys.argv[2])
+only = {n.strip() for n in sys.argv[3].split(",")} if len(sys.argv) > 3 else set()
 
-con = duckdb.connect()
+
+def memory_bytes() -> int:
+    """Physical memory, or the cgroup v2 limit where a lower one is set."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        limit = Path("/sys/fs/cgroup/memory.max").read_text().strip()
+        if limit.isdigit():
+            total = min(total, int(limit))
+    except OSError:
+        pass
+    return total
+
+
+spill_dir = tempfile.mkdtemp(prefix="check_oracle_")
+con = duckdb.connect(config={
+    "memory_limit": f"{memory_bytes() // 2 // 2**20}MB",
+    "temp_directory": spill_dir,
+})
 for p in sorted(sf_dir.glob("*.parquet")):
     con.execute(
         f"CREATE VIEW {p.stem} AS SELECT * FROM read_parquet('{p}')"
@@ -44,6 +73,8 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 
 fails = []
 names = sorted(set(list(oracles.keys()) + [d.name for d in out_dir.iterdir() if d.is_dir()]))
+if only:
+    names = [n for n in names if n in only]
 for name in names:
     spark_path = out_dir / name
     if not spark_path.is_dir():
@@ -80,6 +111,8 @@ for name in names:
         continue
     print(f"  {name:24s} OK ({len(g)} rows, {len(g.columns)} cols)")
 
+con.close()
+shutil.rmtree(spill_dir, ignore_errors=True)
 print()
 if fails:
     print(f"FAILED {len(fails)}:")

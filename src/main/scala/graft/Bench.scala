@@ -212,23 +212,33 @@ object Bench {
     lines.iterator().asScala.toVector.collect { case Tps(t) => t.toDouble }
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** A JSON string literal: backslash, quote and every control char
+    * (< 0x20) escaped, `\n`, `\r` and `\t` by name and the rest as
+    * `\u00XX`, so a tab or CR in a query name, a failure reason or the
+    * oracle SQL cannot break a reader's `json.load`.
+    */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** The effective values of the knobs that change what the battery
-    * computes, as bench.json's `"knobs"` field: `cs_win`, the
-    * `q_common_substring` audit window (`SPARK_GRAFT_CS_WIN`; full text
-    * reads as its cap), and `decimal38`, whether integer moments run at
-    * DECIMAL(38,0) (`SPARK_GRAFT_DECIMAL38`).
+    * computes, as a JSON object: `cs_win`, the `q_common_substring` audit
+    * window (`SPARK_GRAFT_CS_WIN`; full text reads as its cap), and
+    * `decimal38`, whether integer moments run at DECIMAL(38,0)
+    * (`SPARK_GRAFT_DECIMAL38`). Verify writes it as `knobs.json`.
     */
-  private[graft] def knobsJson: String =
-    s""""knobs":{"cs_win":${graft.queries.CurationQueries.CsWin},""" +
+  private[graft] def knobsObject: String =
+    s"""{"cs_win":${graft.queries.CurationQueries.CsWin},""" +
       s""""decimal38":${graft.queries.WideStats.wide}}"""
+
+  /** [[knobsObject]] as bench.json's `"knobs"` field. */
+  private[graft] def knobsJson: String = s""""knobs":$knobsObject"""
 
   /** One battery pass over `queries`: seconds for each query that ran,
     * and `name → reason` for each that threw. A failed query gets no

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB compare and knobs.json. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query-name filter]
@@ -38,22 +38,20 @@ object Verify {
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} failed: " +
         failures.map { case (name, reason) => s"$name → $reason" }.mkString("; "))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeArtifacts(outDir)
     spark.stop()
+  }
+
+  /** The dump's two JSON files beside the query outputs: `oracle_sql.json`,
+    * each battery query's DuckDB SQL, and `knobs.json`, the effective knob
+    * values the outputs were computed under ([[Bench.knobsObject]], the
+    * same object bench.json carries as `"knobs"`).
+    */
+  def writeArtifacts(outDir: String): Unit = {
+    val json = SparkEntry.oracleSql
+      .map { case (k, v) => s"${Bench.jsonStr(k)}: ${Bench.jsonStr(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/knobs.json"), Bench.knobsObject)
   }
 
   /** Write one query's result to `$outDir/$name` as parquet, after

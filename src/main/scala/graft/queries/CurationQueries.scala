@@ -408,22 +408,13 @@ object CurationQueries {
   // audits exist to measure.
 
   private def qSemDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val emb0 = t(s, dir, "embeddings").select(col("vec_id"),
-      expr("transform(embedding, x -> cast(x AS double))").as("e"))
+    val emb0 = TrainingDataQueries.embDouble(s, dir)
     val aug = emb0.unionByName(
       emb0.filter(col("vec_id") % 50 === 0).select(
         (col("vec_id") + lit(100000L)).as("vec_id"),
         expr("transform(e, (x, i) -> IF(i = 0, x + cast(0.05 AS double), x))").as("e")))
-    val stats = aug.agg(count(lit(1)).as("n"))
-      .withColumn("nlist", greatest(lit(8L), floor(sqrt(col("n")))))
-    val cents = emb0.crossJoin(broadcast(stats))
-      .filter(col("vec_id") < col("nlist"))
-      .select(col("vec_id").as("cid"), col("e").as("ce"))
-    val assigned = aug.crossJoin(broadcast(cents))
-      .withColumn("ccos", expr("graft_cosine(e, ce)"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(desc("ccos"), col("cid"))))
+    val (_, cents) = TrainingDataQueries.ivfCents(emb0, aug)
+    val assigned = TrainingDataQueries.cellRanks(aug, cents, "vec_id", "e")
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("e"), col("cid").as("cell"))
     val a = assigned.select(col("vec_id").as("keep_vec"), col("e").as("ea"), col("cell"))
@@ -437,9 +428,7 @@ object CurationQueries {
   }
 
   private val qSemDedupSql =
-    s"""WITH e0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-       |  FROM embeddings),
+    s"""WITH ${TrainingDataQueries.E0Cte},
        |aug AS (
        |  SELECT vec_id, e FROM e0
        |  UNION ALL
@@ -447,8 +436,7 @@ object CurationQueries {
        |    list_transform(generate_series(1, len(e)),
        |      i -> CASE WHEN i = 1 THEN e[i] + 0.05 ELSE e[i] END) AS e
        |  FROM e0 WHERE vec_id % 50 = 0),
-       |st AS (SELECT greatest(8, CAST(floor(sqrt(count(*))) AS BIGINT)) AS nlist FROM aug),
-       |cents AS (SELECT vec_id AS cid, e AS ce FROM e0 CROSS JOIN st WHERE vec_id < nlist),
+       |${TrainingDataQueries.ivfCentsCtes("aug")},
        |scored AS (
        |  SELECT aug.vec_id, aug.e, cents.cid,
        |    row_number() OVER (PARTITION BY aug.vec_id ORDER BY

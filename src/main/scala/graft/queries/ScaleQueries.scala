@@ -1,6 +1,9 @@
 package graft.queries
 
+import graft.queries.BatteryHelpers.{sqL2Long, sqL2LongSql}
 import graft.queries.Tables.t
+import graft.queries.TrainingDataQueries.{FpCte, PairVecsSql, L2qSql, bandCollisions,
+  embFixed, lshJoinSql, lshPairDistsCtes, lshPairsCte}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -160,8 +163,7 @@ object ScaleQueries {
 
   private def kmAssign(fp: DataFrame, cents: DataFrame): DataFrame =
     fp.crossJoin(broadcast(cents))
-      .withColumn("dist",
-        expr("aggregate(zip_with(x, c, (a, b) -> (a - b) * (a - b)), 0L, (acc, v) -> acc + v)"))
+      .withColumn("dist", sqL2Long("x", "c"))
       .groupBy("vec_id")
       .agg(min(col("dist") * lit(16L) + col("cid")).as("key"))
       .select(col("vec_id"), expr("key div 16").as("dist"),
@@ -193,10 +195,7 @@ object ScaleQueries {
   private def qKmeans(s: SparkSession, dir: String): DataFrame = {
     // persisted: the fixed-point projection feeds init + both assignment
     // passes + the centroid update
-    val fp = t(s, dir, "embeddings")
-      .select(col("vec_id"),
-        expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1048576.0) AS BIGINT))").as("x"))
-      .persist()
+    val fp = embFixed(s, dir).persist()
     val c2 = kmCentroids(fp)
     val a2 = kmAssign(fp, c2)
     val cl1 = c2.select(col("cid"),
@@ -212,10 +211,7 @@ object ScaleQueries {
     * q_kmeans and the silhouette audit's oracle.
     */
   private val KmCentroidCtes =
-    s"""fp AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, v -> CAST(floor(v::DOUBLE * 1048576.0) AS BIGINT)) AS x
-       |  FROM embeddings),
+    s"""$FpCte,
        |sd AS (
        |  SELECT vec_id, x FROM fp
        |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $KmK),
@@ -226,8 +222,7 @@ object ScaleQueries {
        |  FROM sd),
        |a1 AS (
        |  SELECT f.vec_id,
-       |    min(CAST(list_sum(list_transform(generate_series(1, len(f.x)),
-       |      i -> (f.x[i] - c.c[i]) * (f.x[i] - c.c[i]))) AS BIGINT) * 16 + c.cid) AS key
+       |    min(${sqL2LongSql("f.x", "c.c")} * 16 + c.cid) AS key
        |  FROM fp f CROSS JOIN c1 c GROUP BY 1),
        |a1d AS (SELECT vec_id, key // 16 AS dist, key % 16 AS cid FROM a1),
        |ex AS (
@@ -247,8 +242,7 @@ object ScaleQueries {
     s"""WITH $KmCentroidCtes,
        |a2 AS (
        |  SELECT f.vec_id,
-       |    min(CAST(list_sum(list_transform(generate_series(1, len(f.x)),
-       |      i -> (f.x[i] - c.c[i]) * (f.x[i] - c.c[i]))) AS BIGINT) * 16 + c.cid) AS key
+       |    min(${sqL2LongSql("f.x", "c.c")} * 16 + c.cid) AS key
        |  FROM fp f CROSS JOIN c2 c GROUP BY 1),
        |a2d AS (SELECT vec_id, key // 16 AS dist, key % 16 AS cid FROM a2),
        |l1 AS (
@@ -276,16 +270,12 @@ object ScaleQueries {
   // centroids → s near 0 or negative.
 
   private def qSilhouette(s: SparkSession, dir: String): DataFrame = {
-    val fp = t(s, dir, "embeddings")
-      .select(col("vec_id"),
-        expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1048576.0) AS BIGINT))").as("x"))
-      .persist()
+    val fp = embFixed(s, dir).persist()
     val c2 = kmCentroids(fp)
     // persisted: the per-(vec, centroid) distance table feeds both the
     // own-cluster argmin and the other-cluster min
     val dists = fp.crossJoin(broadcast(c2))
-      .withColumn("d",
-        expr("aggregate(zip_with(x, c, (a, b) -> (a - b) * (a - b)), 0L, (acc, v) -> acc + v)"))
+      .withColumn("d", sqL2Long("x", "c"))
       .select("vec_id", "cid", "d").persist()
     val own = dists.groupBy("vec_id")
       .agg(min(col("d") * lit(16L) + col("cid")).as("key"))
@@ -309,8 +299,7 @@ object ScaleQueries {
     s"""WITH $KmCentroidCtes,
        |dd AS (
        |  SELECT f.vec_id, c.cid,
-       |    CAST(list_sum(list_transform(generate_series(1, len(f.x)),
-       |      i -> (f.x[i] - c.c[i]) * (f.x[i] - c.c[i]))) AS BIGINT) AS d
+       |    ${sqL2LongSql("f.x", "c.c")} AS d
        |  FROM fp f CROSS JOIN c2 c),
        |onk AS (SELECT vec_id, min(d * 16 + cid) AS key FROM dd GROUP BY 1),
        |ow AS (SELECT vec_id, key // 16 AS a, key % 16 AS own FROM onk),
@@ -352,15 +341,11 @@ object ScaleQueries {
 
   private def kcMinDist(fp: DataFrame, cents: DataFrame): DataFrame =
     fp.crossJoin(broadcast(cents))
-      .withColumn("d",
-        expr("aggregate(zip_with(x, c, (a, b) -> (a - b) * (a - b)), 0L, (acc, v) -> acc + v)"))
+      .withColumn("d", sqL2Long("x", "c"))
       .groupBy("vec_id").agg(min("d").as("mind"))
 
   private def qKcenter(s: SparkSession, dir: String): DataFrame = {
-    val fp = t(s, dir, "embeddings")
-      .select(col("vec_id"),
-        expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1048576.0) AS BIGINT))").as("x"))
-      .persist()
+    val fp = embFixed(s, dir).persist()
     var centers = fp
       .withColumn("m", md5(col("vec_id").cast("string")))
       .orderBy("m", "vec_id").limit(1)
@@ -377,8 +362,7 @@ object ScaleQueries {
     }
     // final assignment: nearest center, ties to the earliest-selected cid
     val assigned = fp.crossJoin(broadcast(centers))
-      .withColumn("d",
-        expr("aggregate(zip_with(x, c, (a, b) -> (a - b) * (a - b)), 0L, (acc, v) -> acc + v)"))
+      .withColumn("d", sqL2Long("x", "c"))
       .groupBy("vec_id")
       .agg(min(col("d") * lit(16L) + col("cid")).as("key"))
       .select(col("vec_id"), expr("key div 16").as("dist"),
@@ -392,9 +376,7 @@ object ScaleQueries {
   }
 
   private val qKcenterSql = {
-    val dist =
-      """CAST(list_sum(list_transform(generate_series(1, len(f.x)),
-        |      i -> (f.x[i] - c.c[i]) * (f.x[i] - c.c[i]))) AS BIGINT)""".stripMargin
+    val dist = sqL2LongSql("f.x", "c.c")
     def round(i: Int): String =
       s"""d$i AS (
          |  SELECT f.vec_id, min($dist) AS mind
@@ -406,10 +388,7 @@ object ScaleQueries {
          |  SELECT CAST($i AS BIGINT) AS cid, vec_id AS cvec, x AS c
          |  FROM fp WHERE vec_id = (SELECT nvec FROM n$i)),
          |cs$i AS (SELECT * FROM cs${i - 1} UNION ALL SELECT * FROM c$i)""".stripMargin
-    s"""WITH fp AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, v -> CAST(floor(v::DOUBLE * 1048576.0) AS BIGINT)) AS x
-       |  FROM embeddings),
+    s"""WITH $FpCte,
        |cs0 AS (
        |  SELECT CAST(0 AS BIGINT) AS cid, vec_id AS cvec, x AS c FROM fp
        |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 1),
@@ -638,16 +617,12 @@ object ScaleQueries {
     // persisted: the b·r-hyperplane signature pass feeds both sides of
     // the candidate self-join
     val sigs = TrainingDataQueries.bandSigs(s, dir).persist()
-    val a = sigs.select(col("vec_id").as("id_a"), col("e").as("ea"),
-      col("band"), col("sig"))
-    val b = sigs.select(col("vec_id").as("id_b"), col("e").as("eb"),
-      col("band"), col("sig"))
     // fixed-point integer L2 (codegen'd graft_l2q): per-element
     // quantization is order-independent and the BIGINT sum is exact, so
     // both engines rank candidates identically (ties on id). Computed
     // per band-collision row so the pair-dedup shuffle moves 24 B/row
     // instead of the two 64-dim vectors.
-    val pairs = a.join(b, Seq("band", "sig"))
+    val pairs = bandCollisions(sigs)
       .filter(col("id_a") =!= col("id_b"))
       .withColumn("dist", expr("graft_l2q(ea, eb)"))
       .groupBy("id_a", "id_b")
@@ -676,19 +651,10 @@ object ScaleQueries {
 
   private val qMutualKnnSql =
     s"""WITH ${TrainingDataQueries.BandSigsCte},
-       |pr AS (
-       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       |    any_value(a.e) AS ea, any_value(b.e) AS eb
-       |  FROM sg a JOIN sg b
-       |    ON a.band = b.band AND a.sig = b.sig AND a.vec_id <> b.vec_id
-       |  GROUP BY 1, 2),
+       |${lshPairsCte("pr", "<>", PairVecsSql)},
        |pd AS (
        |  SELECT id_a, id_b,
-       |    CAST(list_sum(list_transform(generate_series(1, len(ea)), i ->
-       |      (CAST(floor(ea[i] * 1048576.0) AS BIGINT) -
-       |       CAST(floor(eb[i] * 1048576.0) AS BIGINT)) *
-       |      (CAST(floor(ea[i] * 1048576.0) AS BIGINT) -
-       |       CAST(floor(eb[i] * 1048576.0) AS BIGINT)))) AS BIGINT) AS dist
+       |    $L2qSql AS dist
        |  FROM pr),
        |kn AS (
        |  SELECT id_a, id_b, dist,
@@ -771,20 +737,8 @@ object ScaleQueries {
   }
 
   private val qDbscanSql = {
-    val l2q =
-      """CAST(list_sum(list_transform(generate_series(1, len(ea)), i ->
-        |      (CAST(floor(ea[i] * 1048576.0) AS BIGINT) -
-        |       CAST(floor(eb[i] * 1048576.0) AS BIGINT)) *
-        |      (CAST(floor(ea[i] * 1048576.0) AS BIGINT) -
-        |       CAST(floor(eb[i] * 1048576.0) AS BIGINT)))) AS BIGINT)""".stripMargin
     s"""WITH RECURSIVE ${TrainingDataQueries.BandSigsCte},
-       |pr AS (
-       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       |    any_value(a.e) AS ea, any_value(b.e) AS eb
-       |  FROM sg a JOIN sg b
-       |    ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id
-       |  GROUP BY 1, 2),
-       |pd AS (SELECT id_a, id_b, $l2q AS dist FROM pr),
+       |${lshPairDistsCtes("pd")},
        |np AS (SELECT CAST(count(*) AS BIGINT) AS np FROM pd),
        |rk AS (
        |  SELECT dist, row_number() OVER (ORDER BY dist, id_a, id_b) AS rk
@@ -2226,8 +2180,7 @@ object ScaleQueries {
     s"""WITH ${TrainingDataQueries.BandSigsCte},
        |ed AS (
        |  SELECT DISTINCT a.vec_id AS u, b.vec_id AS v
-       |  FROM sg a JOIN sg b
-       |    ON a.band = b.band AND a.sig = b.sig AND a.vec_id <> b.vec_id),
+       |  ${lshJoinSql("<>")}),
        |seeds AS (
        |  SELECT vec_id, CAST(label AS BIGINT) AS label
        |  FROM embeddings WHERE vec_id % 3 = 0),
@@ -2544,20 +2497,8 @@ object ScaleQueries {
   }
 
   private val qBoruvkaMstSql = {
-    val l2q =
-      """CAST(list_sum(list_transform(generate_series(1, len(ea)), i ->
-        |      (CAST(floor(ea[i] * 1048576.0) AS BIGINT) -
-        |       CAST(floor(eb[i] * 1048576.0) AS BIGINT)) *
-        |      (CAST(floor(ea[i] * 1048576.0) AS BIGINT) -
-        |       CAST(floor(eb[i] * 1048576.0) AS BIGINT)))) AS BIGINT)""".stripMargin
     s"""WITH RECURSIVE ${TrainingDataQueries.BandSigsCte},
-       |pr AS (
-       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       |    any_value(a.e) AS ea, any_value(b.e) AS eb
-       |  FROM sg a JOIN sg b
-       |    ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id
-       |  GROUP BY 1, 2),
-       |ed AS (SELECT id_a, id_b, $l2q AS dist FROM pr),
+       |${lshPairDistsCtes("ed")},
        |nodes AS (
        |  SELECT DISTINCT node FROM (
        |    SELECT id_a AS node FROM ed UNION ALL SELECT id_b FROM ed)),
@@ -3396,20 +3337,8 @@ object ScaleQueries {
   }
 
   private val qNeighborhoodGrowthSql = {
-    val l2q =
-      """CAST(list_sum(list_transform(generate_series(1, len(ea)), i ->
-        |      (CAST(floor(ea[i] * 1048576.0) AS BIGINT) -
-        |       CAST(floor(eb[i] * 1048576.0) AS BIGINT)) *
-        |      (CAST(floor(ea[i] * 1048576.0) AS BIGINT) -
-        |       CAST(floor(eb[i] * 1048576.0) AS BIGINT)))) AS BIGINT)""".stripMargin
     s"""WITH ${TrainingDataQueries.BandSigsCte},
-       |pr AS (
-       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       |    any_value(a.e) AS ea, any_value(b.e) AS eb
-       |  FROM sg a JOIN sg b
-       |    ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id
-       |  GROUP BY 1, 2),
-       |ed AS (SELECT id_a, id_b, $l2q AS dist FROM pr),
+       |${lshPairDistsCtes("ed")},
        |sym AS (
        |  SELECT id_a AS u, id_b AS v, dist FROM ed
        |  UNION ALL SELECT id_b, id_a, dist FROM ed),
@@ -3612,11 +3541,7 @@ object ScaleQueries {
 
   private val qAssortativitySql = {
     s"""WITH ${TrainingDataQueries.BandSigsCte},
-       |pr AS (
-       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-       |  FROM sg a JOIN sg b
-       |    ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id
-       |  GROUP BY 1, 2),
+       |${lshPairsCte("pr", "<")},
        |deg AS (
        |  SELECT node, count(*) AS deg FROM (
        |    SELECT id_a AS node FROM pr UNION ALL SELECT id_b FROM pr)
@@ -3818,11 +3743,7 @@ object ScaleQueries {
 
   private val qKcoreSql =
     s"""WITH ${TrainingDataQueries.BandSigsCte},
-       |g0 AS (
-       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-       |  FROM sg a JOIN sg b
-       |    ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id
-       |  GROUP BY 1, 2),
+       |${lshPairsCte("g0", "<")},
        |d0 AS (
        |  SELECT node, count(*) AS deg FROM (
        |    SELECT id_a AS node FROM g0 UNION ALL SELECT id_b FROM g0) GROUP BY 1),

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.text.Tokenizer
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{call_function, floor, lit, sum}
+import org.apache.spark.sql.functions.{call_function, expr, floor, lit, sum}
 
 /** Table access for the driver-provided testdata directory. */
 object Tables {
@@ -10,7 +10,11 @@ object Tables {
     spark.read.parquet(s"$dir/$name.parquet")
 }
 
-/** Tokenizer and DuckDB fragments shared by several battery families. */
+/** Tokenizer, vector folds and DuckDB fragments shared by several battery
+  * families. Each Scala helper names its DuckDB twin; the pair must compute
+  * the same values bit for bit, so an edit to one needs the same edit to
+  * the other.
+  */
 object BatteryHelpers {
 
   /** Whitespace tokenizer (column form) of the dedup and curation
@@ -34,11 +38,41 @@ object BatteryHelpers {
       |    list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS ts
       |  FROM documents)""".stripMargin
 
+  /** Squared L2 between two BIGINT array columns as an exact left-to-right
+    * fold. DuckDB twin: [[sqL2LongSql]].
+    */
+  def sqL2Long(a: String, b: String): Column =
+    expr(s"aggregate(zip_with($a, $b, (a, b) -> (a - b) * (a - b)), 0L, (acc, v) -> acc + v)")
+
+  /** Dot product of two BIGINT array columns. DuckDB twin: [[dotLongSql]]. */
+  def dotLong(a: String, b: String): Column =
+    expr(s"aggregate(zip_with($a, $b, (a, b) -> a * b), 0L, (acc, v) -> acc + v)")
+
+  /** Dot product of two DOUBLE array columns, folded left to right.
+    * DuckDB twin: [[dotSql]].
+    */
+  def dotDouble(a: String, b: String): Column =
+    expr(s"aggregate(zip_with($a, $b, (a, b) -> a * b), 0D, (acc, x) -> acc + x)")
+
+  /** DuckDB dot product of two list expressions, folded left to right. */
+  def dotSql(a: String, b: String): String =
+    s"list_sum(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]))"
+
+  /** DuckDB squared L2 of two list expressions, folded left to right. */
+  def sqL2Sql(a: String, b: String): String =
+    s"list_sum(list_transform(generate_series(1, len($a)), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])))"
+
+  /** DuckDB twin of [[sqL2Long]]. */
+  def sqL2LongSql(a: String, b: String): String = s"CAST(${sqL2Sql(a, b)} AS BIGINT)"
+
+  /** DuckDB twin of [[dotLong]]. */
+  def dotLongSql(a: String, b: String): String = s"CAST(${dotSql(a, b)} AS BIGINT)"
+
   /** DuckDB cosine between two double-list expressions, with
     * `graft_cosine`'s left-to-right accumulation order (bit-exact).
     */
   def cosSql(a: String, b: String): String =
-    s"""(list_sum(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i])) /
+    s"""(${dotSql(a, b)} /
        |    (sqrt(list_sum(list_transform($a, x -> x * x))) *
        |     sqrt(list_sum(list_transform($b, x -> x * x)))))""".stripMargin
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.queries.BatteryHelpers.{TokensCte, cosSql, simpleTokens, stopListSql}
+import graft.queries.BatteryHelpers._
 import graft.queries.Tables.t
 import graft.text.Tokenizer
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1273,15 +1273,57 @@ object TrainingDataQueries {
        |FROM cand WHERE bit_count(xor(sa, sb)) <= 1
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  // --- ANN: brute-force cosine top-k ----------------------------------------
+  // --- embedding kernels ----------------------------------------------------
+  //
+  // The embedding family (ANN, IVF, PQ, SQ8, the ranking and recall
+  // audits, the LSH graphs, k-means, q_sem_dedup) composes its plans and
+  // its oracles from shared blocks, each written once per engine: a Scala
+  // helper and its DuckDB fragment, each naming the other in its scaladoc.
+  // A pair must compute the same values bit for bit, so an edit to one
+  // needs the same edit to the other. These two are the embeddings table
+  // in the family's two number systems; the folds over them are in
+  // [[BatteryHelpers]], and the IVF, recall, PQ, SQ8 and LSH kernels sit
+  // with the queries that introduced them.
 
-  private def embDouble(s: SparkSession, dir: String): DataFrame = {
+  /** (vec_id, e): the embeddings widened to DOUBLE. DuckDB twin:
+    * [[embDoubleCte]].
+    */
+  private[queries] def embDouble(s: SparkSession, dir: String): DataFrame = {
     // the ANN/near-dup family leans on the codegen'd graft_cosine /
     // graft_lsh_sigs expressions — make them resolvable in any session
     graft.functions.GraftFunctions.register(s)
     t(s, dir, "embeddings").select(col("vec_id"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
   }
+
+  /** DuckDB twin of [[embDouble]]: the CTE `name`; [[E0Cte]] names it `e0`. */
+  private[queries] def embDoubleCte(name: String): String =
+    s"""$name AS (
+       |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
+       |  FROM embeddings)""".stripMargin
+
+  private[queries] val E0Cte: String = embDoubleCte("e0")
+
+  /** (vec_id, x): each coordinate fixed-pointed to ⌊v·2^20⌋ as a BIGINT —
+    * exact, since a float's 24-bit mantissa times 2^20 is an exact double —
+    * so sums, distances and dots over `x` are exact and order-immune in
+    * both engines. DuckDB twin: [[FpCte]].
+    */
+  private[queries] def embFixed(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "embeddings").select(col("vec_id"),
+      expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1048576.0) AS BIGINT))").as("x"))
+
+  /** DuckDB fixed point of one double expression (see [[embFixed]]). */
+  private[queries] def fpSql(v: String): String = s"CAST(floor($v * 1048576.0) AS BIGINT)"
+
+  /** DuckDB twin of [[embFixed]]: the `fp` CTE. */
+  private[queries] val FpCte: String =
+    s"""fp AS (
+       |  SELECT vec_id,
+       |    list_transform(embedding, v -> ${fpSql("v::DOUBLE")}) AS x
+       |  FROM embeddings)""".stripMargin
+
+  // --- ANN: brute-force cosine top-k ----------------------------------------
 
   private def qAnnCosineTopk(s: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(s, dir)
@@ -1294,14 +1336,10 @@ object TrainingDataQueries {
   }
 
   private val qAnnCosineTopkSql =
-    """WITH e AS (
-      |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-      |  FROM embeddings),
+    s"""WITH ${embDoubleCte("e")},
       |q AS (SELECT e AS qe FROM e WHERE vec_id = 0)
       |SELECT vec_id,
-      |  floor((list_sum(list_transform(generate_series(1, len(e)), i -> e[i] * qe[i])) /
-      |    (sqrt(list_sum(list_transform(e, x -> x * x))) *
-      |     sqrt(list_sum(list_transform(qe, x -> x * x))))) * 1e4 + 0.5) / 1e4 AS cos
+      |  floor(${cosSql("e", "qe")} * 1e4 + 0.5) / 1e4 AS cos
       |FROM e, q WHERE vec_id <> 0
       |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin
 
@@ -1352,27 +1390,67 @@ object TrainingDataQueries {
     * are cheaper than shuffle bytes.
     */
   private[graft] def lshPairDists(s: SparkSession, dir: String): DataFrame = Shared("lshPairDists", s, dir) {
-    val sigs = bandSigs(s, dir)
-    val a = sigs.select(col("vec_id").as("id_a"), col("e").as("ea"),
-      col("band"), col("sig"))
-    val b = sigs.select(col("vec_id").as("id_b"), col("e").as("eb"),
-      col("band"), col("sig"))
-    a.join(b, Seq("band", "sig"))
+    bandCollisions(bandSigs(s, dir))
       .filter(col("id_a") < col("id_b"))
       .withColumn("dist", expr("graft_l2q(ea, eb)"))
       .groupBy("id_a", "id_b").agg(first("dist").as("dist"))
       .select("id_a", "id_b", "dist")
   }
 
+  /** Every band collision of [[bandSigs]] rows `sigs` with itself, as
+    * (band, sig, id_a, ea, id_b, eb) rows — one per pair per shared band,
+    * each pair in both orders and each vector with itself; callers filter
+    * the id order. DuckDB twin: [[lshJoinSql]].
+    */
+  private[queries] def bandCollisions(sigs: DataFrame): DataFrame = {
+    val a = sigs.select(col("vec_id").as("id_a"), col("e").as("ea"),
+      col("band"), col("sig"))
+    val b = sigs.select(col("vec_id").as("id_b"), col("e").as("eb"),
+      col("band"), col("sig"))
+    a.join(b, Seq("band", "sig"))
+  }
+
   private[graft] val BandSigsCte =
-    s"""e0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-       |  FROM embeddings),
+    s"""$E0Cte,
        |st AS ($StatsRSql),
        |sg AS (
        |  SELECT vec_id, e, u.band AS band, u.sig AS sig FROM (
        |    SELECT vec_id, e, unnest($SigsSqlStructs) AS u
        |    FROM e0 CROSS JOIN st) x)""".stripMargin
+
+  /** DuckDB twin of [[bandCollisions]]: the `sg` band self-join as a FROM
+    * clause, `a.vec_id op b.vec_id` choosing the id order.
+    */
+  private[queries] def lshJoinSql(op: String): String =
+    s"""FROM sg a JOIN sg b
+       |    ON a.band = b.band AND a.sig = b.sig AND a.vec_id $op b.vec_id""".stripMargin
+
+  /** The two vectors of a candidate pair, as `cols` of [[lshPairsCte]]. */
+  private[queries] val PairVecsSql = ", any_value(a.e) AS ea, any_value(b.e) AS eb"
+
+  /** The candidate-pair CTE `name`: one (id_a, id_b`cols`) row per band
+    * collision pair in `op` order ([[lshJoinSql]]).
+    */
+  private[queries] def lshPairsCte(name: String, op: String, cols: String = ""): String =
+    s"""$name AS (
+       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b$cols
+       |  ${lshJoinSql(op)}
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** DuckDB twin of `graft_l2q(ea, eb)`: the squared L2 of the two pair
+    * vectors after [[fpSql]] fixed point, an exact BIGINT.
+    */
+  private[queries] val L2qSql: String = {
+    val d = s"(${fpSql("ea[i]")} - ${fpSql("eb[i]")})"
+    s"CAST(list_sum(list_transform(generate_series(1, len(ea)), i -> $d * $d)) AS BIGINT)"
+  }
+
+  /** DuckDB twin of [[lshPairDists]]: the `pr` candidate pairs (id_a <
+    * id_b) and `name` (id_a, id_b, dist) over them.
+    */
+  private[queries] def lshPairDistsCtes(name: String): String =
+    s"""${lshPairsCte("pr", "<", PairVecsSql)},
+       |$name AS (SELECT id_a, id_b, $L2qSql AS dist FROM pr)""".stripMargin
 
   private def qAnnLshBucket(s: SparkSession, dir: String): DataFrame = {
     // persisted: the signature computation (b·r 64-dim hyperplane dots per
@@ -1401,9 +1479,7 @@ object TrainingDataQueries {
        |  FROM sg JOIN q ON sg.band = q.qband AND sg.sig = q.qsig
        |  WHERE sg.vec_id <> 0 GROUP BY 1)
        |SELECT vec_id, bands_hit,
-       |  floor((list_sum(list_transform(generate_series(1, len(e)), i -> e[i] * qe[i])) /
-       |    (sqrt(list_sum(list_transform(e, x -> x * x))) *
-       |     sqrt(list_sum(list_transform(qe, x -> x * x))))) * 1e4 + 0.5) / 1e4 AS cos
+       |  floor(${cosSql("e", "qe")} * 1e4 + 0.5) / 1e4 AS cos
        |FROM cand
        |ORDER BY cos DESC, vec_id LIMIT 5""".stripMargin
 
@@ -1419,12 +1495,7 @@ object TrainingDataQueries {
   private def qEmbedNeardup(s: SparkSession, dir: String): DataFrame = {
     // persisted: consumed by BOTH sides of the band self-join — without
     // the cache the b·r hyperplane signature pass runs twice
-    val sigs = bandSigs(s, dir).persist()
-    val a = sigs.select(col("vec_id").as("id_a"), col("e").as("ea"),
-      col("band"), col("sig"))
-    val b = sigs.select(col("vec_id").as("id_b"), col("e").as("eb"),
-      col("band"), col("sig"))
-    a.join(b, Seq("band", "sig"))
+    bandCollisions(bandSigs(s, dir).persist())
       .filter(col("id_a") < col("id_b"))
       // a pair can collide in several bands — count them (the OR of the
       // AND-OR), then verify. The cosine is computed per collision row
@@ -1441,12 +1512,7 @@ object TrainingDataQueries {
 
   private val qEmbedNeardupSql =
     s"""WITH $BandSigsCte,
-       |cand AS (
-       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       |    any_value(a.e) AS ea, any_value(b.e) AS eb, count(*) AS bands_hit
-       |  FROM sg a JOIN sg b
-       |    ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id
-       |  GROUP BY 1, 2),
+       |${lshPairsCte("cand", "<", PairVecsSql + ", count(*) AS bands_hit")},
        |p AS (
        |  SELECT id_a, id_b, bands_hit,
        |    list_sum(list_transform(generate_series(1, len(ea)), i -> ea[i] * eb[i])) /
@@ -1565,7 +1631,7 @@ object TrainingDataQueries {
   private def qEmbedDriftSql: String =
     s"""WITH fp AS (
        |  SELECT label, u.dim AS dim,
-       |    CAST(floor(u.x * 1048576.0) AS BIGINT) AS fp
+       |    ${fpSql("u.x")} AS fp
        |  FROM (
        |    SELECT label, unnest(list_transform(generate_series(1, len(embedding)),
        |      i -> {'dim': i - 1, 'x': embedding[i]::DOUBLE})) AS u
@@ -1596,20 +1662,40 @@ object TrainingDataQueries {
   // MULTIPROBES its top-2 cells (recovers the recall a single probe loses
   // at cell boundaries) and ranks those candidates by exact cosine.
 
+  /** IVF sizing and centroids: nlist = max(8, ⌊√N⌋) over the rows of
+    * `sized`, stamped on every row of `emb` (vec_id, e), and the first
+    * nlist vectors of `emb` as (cid, ce). DuckDB twin: [[ivfCentsCtes]].
+    */
+  private[queries] def ivfCents(emb: DataFrame, sized: DataFrame): (DataFrame, DataFrame) = {
+    val stats = sized.agg(count(lit(1)).as("n"))
+      .withColumn("nlist", greatest(lit(8L), floor(sqrt(col("n")))))
+    val withN = emb.crossJoin(broadcast(stats))
+    (withN, withN.filter(col("vec_id") < col("nlist"))
+      .select(col("vec_id").as("cid"), col("e").as("ce")))
+  }
+
+  /** Every row of `df` against every IVF centroid (cid, ce), ranked per
+    * `id` by graft_cosine(`e`, ce), highest first (ties → lower cid), in
+    * column `rn`: rn = 1 is the row's cell, rn ≤ 2 its multiprobe cells.
+    */
+  private[queries] def cellRanks(df: DataFrame, cents: DataFrame, id: String,
+      e: String): DataFrame =
+    df.crossJoin(broadcast(cents))
+      .withColumn("ccos", expr(s"graft_cosine($e, ce)"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(id).orderBy(desc("ccos"), col("cid"))))
+
+  /** DuckDB twin of [[ivfCents]] over `e0`, nlist counted over `sized`:
+    * the `st` and `cents` CTEs.
+    */
+  private[queries] def ivfCentsCtes(sized: String): String =
+    s"""st AS (SELECT greatest(8, CAST(floor(sqrt(count(*))) AS BIGINT)) AS nlist FROM $sized),
+       |cents AS (SELECT vec_id AS cid, e AS ce FROM e0 CROSS JOIN st WHERE vec_id < nlist)""".stripMargin
+
   private def qAnnIvf(s: SparkSession, dir: String): DataFrame = {
     val emb0 = embDouble(s, dir)
-    val stats = emb0.agg(count(lit(1)).as("n"))
-      .withColumn("nlist", greatest(lit(8L), floor(sqrt(col("n")))))
-    val emb = emb0.crossJoin(broadcast(stats))
-    val cents = emb.filter(col("vec_id") < col("nlist"))
-      .select(col("vec_id").as("cid"), col("e").as("ce"))
-    def cosAgainst(ecol: String, ccol: String) = expr(s"graft_cosine($ecol, $ccol)")
-    val ranked = emb.filter(col("vec_id") >= col("nlist"))
-      .crossJoin(broadcast(cents))
-      .withColumn("ccos", cosAgainst("e", "ce"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("vec_id")
-          .orderBy(desc("ccos"), col("cid"))))
+    val (emb, cents) = ivfCents(emb0, emb0)
+    val ranked = cellRanks(emb.filter(col("vec_id") >= col("nlist")), cents, "vec_id", "e")
     val assigned = ranked.filter(col("rn") === 1)
       .select(col("vec_id"), col("e"), col("cid").as("cell"), col("nlist"))
     // multiprobe: the query's top-2 cells
@@ -1617,36 +1703,99 @@ object TrainingDataQueries {
       .select(col("e").as("qe"), col("cid").as("qcell"))
     assigned.join(broadcast(qcells), col("cell") === col("qcell"))
       .filter(col("vec_id") =!= col("nlist"))
-      .withColumn("cos", cosAgainst("e", "qe"))
+      .withColumn("cos", expr("graft_cosine(e, qe)"))
       .select(col("vec_id"), col("cell"), Rounding.r(col("cos"), 4).as("cos"))
       .orderBy(desc("cos"), col("vec_id"))
       .limit(5)
   }
 
   private val qAnnIvfSql =
-    """WITH e0 AS (
-      |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-      |  FROM embeddings),
-      |st AS (SELECT greatest(8, CAST(floor(sqrt(count(*))) AS BIGINT)) AS nlist FROM e0),
-      |cents AS (SELECT vec_id AS cid, e AS ce FROM e0 CROSS JOIN st WHERE vec_id < nlist),
-      |scored AS (
-      |  SELECT e0.vec_id, e0.e, cents.cid, st.nlist,
-      |    row_number() OVER (PARTITION BY e0.vec_id ORDER BY
-      |      list_sum(list_transform(generate_series(1, len(e0.e)), i -> e0.e[i] * cents.ce[i])) /
-      |        (sqrt(list_sum(list_transform(e0.e, x -> x * x))) *
-      |         sqrt(list_sum(list_transform(cents.ce, x -> x * x)))) DESC, cents.cid) AS rn
-      |  FROM e0 CROSS JOIN st CROSS JOIN cents WHERE e0.vec_id >= st.nlist),
-      |assigned AS (SELECT vec_id, e, cid AS cell, nlist FROM scored WHERE rn = 1),
-      |q AS (SELECT e AS qe, cid AS qcell FROM scored WHERE vec_id = nlist AND rn <= 2)
-      |SELECT vec_id, cell,
-      |  floor((list_sum(list_transform(generate_series(1, len(e)), i -> e[i] * qe[i])) /
-      |    (sqrt(list_sum(list_transform(e, x -> x * x))) *
-      |     sqrt(list_sum(list_transform(qe, x -> x * x))))) * 1e4 + 0.5) / 1e4 AS cos
-      |FROM assigned JOIN q ON assigned.cell = q.qcell
-      |WHERE vec_id <> nlist
-      |ORDER BY cos DESC, vec_id LIMIT 5""".stripMargin
+    s"""WITH $E0Cte,
+       |${ivfCentsCtes("e0")},
+       |scored AS (
+       |  SELECT e0.vec_id, e0.e, cents.cid, st.nlist,
+       |    row_number() OVER (PARTITION BY e0.vec_id ORDER BY
+       |      ${dotSql("e0.e", "cents.ce")} /
+       |        (sqrt(list_sum(list_transform(e0.e, x -> x * x))) *
+       |         sqrt(list_sum(list_transform(cents.ce, x -> x * x)))) DESC, cents.cid) AS rn
+       |  FROM e0 CROSS JOIN st CROSS JOIN cents WHERE e0.vec_id >= st.nlist),
+       |assigned AS (SELECT vec_id, e, cid AS cell, nlist FROM scored WHERE rn = 1),
+       |q AS (SELECT e AS qe, cid AS qcell FROM scored WHERE vec_id = nlist AND rn <= 2)
+       |SELECT vec_id, cell,
+       |  floor(${cosSql("e", "qe")} * 1e4 + 0.5) / 1e4 AS cos
+       |FROM assigned JOIN q ON assigned.cell = q.qcell
+       |WHERE vec_id <> nlist
+       |ORDER BY cos DESC, vec_id LIMIT 5""".stripMargin
 
   // --- ANN recall measurement ----------------------------------------------
+
+  /** Per probe, the `k` rows of highest `score` (ties → lower vec_id), as
+    * (probe_id, vec_id): every ranked leg of the recall audits. DuckDB
+    * twin: [[probeTopSql]].
+    */
+  private def probeTop(scored: DataFrame, score: String, k: Int): DataFrame =
+    scored.withColumn("rn", row_number().over(
+        Window.partitionBy("probe_id").orderBy(desc(score), col("vec_id"))))
+      .filter(col("rn") <= k)
+      .select("probe_id", "vec_id")
+
+  /** The ground-truth leg of a recall audit: each probe's top 10 of
+    * `corpus` (vec_id, e) by `metric`, written to column `score`, the
+    * probe itself left out. DuckDB twin: [[exactTop10Sql]].
+    */
+  private def exactTop10(corpus: DataFrame, probes: DataFrame, score: String,
+      metric: Column): DataFrame =
+    probeTop(corpus.crossJoin(broadcast(probes))
+      .filter(col("vec_id") =!= col("probe_id"))
+      .withColumn(score, metric), score, 10)
+
+  /** Recall@10 per probe: the share of its `exact` top 10 that `approx`
+    * also returned; a probe with no hit reads n_hit 0, recall 0.0.
+    * DuckDB twin: [[RecallTailSql]].
+    */
+  private def recallAt10(probes: DataFrame, exact: DataFrame,
+      approx: DataFrame): DataFrame = {
+    val hits = exact.join(approx, Seq("probe_id", "vec_id"))
+      .groupBy("probe_id").agg(count(lit(1)).as("n_hit"))
+    probes.select("probe_id").join(hits, Seq("probe_id"), "left")
+      .na.fill(0L, Seq("n_hit"))
+      .select(col("probe_id"), col("n_hit"),
+        (col("n_hit") / 10.0).as("recall"))
+      .orderBy("probe_id")
+  }
+
+  /** The CTE `name` (probe_id, vec_id): per `p`probe_id, the `k` rows of
+    * `from` with highest `score`, ties → lower `v`vec_id. DuckDB twin of
+    * [[probeTop]]; `p` and `v` are the table prefixes of the two ids.
+    */
+  private def probeTopSql(name: String, p: String, v: String, score: String,
+      from: String, k: Int): String =
+    s"""$name AS (
+       |  SELECT probe_id, vec_id FROM (
+       |    SELECT ${p}probe_id, ${v}vec_id, row_number() OVER (PARTITION BY ${p}probe_id
+       |      ORDER BY $score DESC, ${v}vec_id) AS rn
+       |    FROM $from)
+       |  WHERE rn <= $k)""".stripMargin
+
+  /** DuckDB twin of [[exactTop10]] over the `corpus` and `probes` CTEs,
+    * `metric` written over `c.e` and `p.qe`: the `exact` CTE.
+    */
+  private def exactTop10Sql(metric: String): String =
+    probeTopSql("exact", "p.", "c.", metric,
+      "corpus c CROSS JOIN probes p WHERE c.vec_id <> p.probe_id", 10)
+
+  /** DuckDB twin of [[recallAt10]] over the `probes`, `exact` and `approx`
+    * CTEs: the `hits` CTE and the final SELECT.
+    */
+  private val RecallTailSql: String =
+    """hits AS (
+      |  SELECT e.probe_id, count(*) AS c
+      |  FROM exact e JOIN approx a ON e.probe_id = a.probe_id AND e.vec_id = a.vec_id
+      |  GROUP BY 1)
+      |SELECT p.probe_id, CAST(coalesce(h.c, 0) AS BIGINT) AS n_hit,
+      |  coalesce(h.c, 0) / 10.0 AS recall
+      |FROM probes p LEFT JOIN hits h ON p.probe_id = h.probe_id
+      |ORDER BY 1""".stripMargin
 
   /** Recall@10 of the IVF top-2-multiprobe against the exact brute-force
     * top-10, measured in-engine over 8 probe vectors — "measure, don't
@@ -1666,68 +1815,32 @@ object TrainingDataQueries {
     * The query's job is to MEASURE that, per corpus.
     */
   private def qAnnRecall(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val emb0 = embDouble(s, dir)
-    val stats = emb0.agg(count(lit(1)).as("n"))
-      .withColumn("nlist", greatest(lit(8L), floor(sqrt(col("n")))))
-    val emb = emb0.crossJoin(broadcast(stats))
-    val cents = emb.filter(col("vec_id") < col("nlist"))
-      .select(col("vec_id").as("cid"), col("e").as("ce"))
+    val (emb, cents) = ivfCents(emb0, emb0)
     val corpus = emb.filter(col("vec_id") >= col("nlist"))
     val probes = corpus.filter(col("vec_id") < col("nlist") + 8)
       .select(col("vec_id").as("probe_id"), col("e").as("qe"))
+    val exact = exactTop10(corpus, probes, "cos", expr("graft_cosine(e, qe)"))
 
-    val wProbe = Window.partitionBy("probe_id")
-      .orderBy(desc("cos"), col("vec_id"))
-    val exact = corpus.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", expr("graft_cosine(e, qe)"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= 10)
-      .select("probe_id", "vec_id")
-
-    val wVec = Window.partitionBy("vec_id").orderBy(desc("ccos"), col("cid"))
-    val assigned = corpus.crossJoin(broadcast(cents))
-      .withColumn("ccos", expr("graft_cosine(e, ce)"))
-      .withColumn("rn", row_number().over(wVec))
+    val assigned = cellRanks(corpus, cents, "vec_id", "e")
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("e"), col("cid").as("cell"))
-    val pcells = probes.crossJoin(broadcast(cents))
-      .withColumn("ccos", expr("graft_cosine(qe, ce)"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("probe_id").orderBy(desc("ccos"), col("cid"))))
+    val pcells = cellRanks(probes, cents, "probe_id", "qe")
       .filter(col("rn") <= 2)
       .select(col("probe_id"), col("cid").as("qcell"), col("qe"))
-    val approx = assigned.join(broadcast(pcells), col("cell") === col("qcell"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", expr("graft_cosine(e, qe)"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= 10)
-      .select("probe_id", "vec_id")
-
-    val hits = exact.join(approx, Seq("probe_id", "vec_id"))
-      .groupBy("probe_id").agg(count(lit(1)).as("n_hit"))
-    probes.select("probe_id").join(hits, Seq("probe_id"), "left")
-      .na.fill(0L, Seq("n_hit"))
-      .select(col("probe_id"), col("n_hit"),
-        (col("n_hit") / 10.0).as("recall"))
-      .orderBy("probe_id")
+    val approx = probeTop(
+      assigned.join(broadcast(pcells), col("cell") === col("qcell"))
+        .filter(col("vec_id") =!= col("probe_id"))
+        .withColumn("cos", expr("graft_cosine(e, qe)")), "cos", 10)
+    recallAt10(probes, exact, approx)
   }
 
   private val qAnnRecallSql =
-    s"""WITH e0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-       |  FROM embeddings),
-       |st AS (SELECT greatest(8, CAST(floor(sqrt(count(*))) AS BIGINT)) AS nlist FROM e0),
-       |cents AS (SELECT vec_id AS cid, e AS ce FROM e0 CROSS JOIN st WHERE vec_id < nlist),
+    s"""WITH $E0Cte,
+       |${ivfCentsCtes("e0")},
        |corpus AS (SELECT vec_id, e, nlist FROM e0 CROSS JOIN st WHERE vec_id >= nlist),
        |probes AS (SELECT vec_id AS probe_id, e AS qe FROM corpus WHERE vec_id < nlist + 8),
-       |exact AS (
-       |  SELECT probe_id, vec_id FROM (
-       |    SELECT p.probe_id, c.vec_id, row_number() OVER (PARTITION BY p.probe_id
-       |      ORDER BY ${cosSql("c.e", "p.qe")} DESC, c.vec_id) AS rn
-       |    FROM corpus c CROSS JOIN probes p WHERE c.vec_id <> p.probe_id)
-       |  WHERE rn <= 10),
+       |${exactTop10Sql(cosSql("c.e", "p.qe"))},
        |assigned AS (
        |  SELECT vec_id, e, cell FROM (
        |    SELECT c.vec_id, c.e, ct.cid AS cell, row_number() OVER (PARTITION BY c.vec_id
@@ -1740,21 +1853,9 @@ object TrainingDataQueries {
        |      ORDER BY ${cosSql("p.qe", "ct.ce")} DESC, ct.cid) AS rn
        |    FROM probes p CROSS JOIN cents ct)
        |  WHERE rn <= 2),
-       |approx AS (
-       |  SELECT probe_id, vec_id FROM (
-       |    SELECT p.probe_id, a.vec_id, row_number() OVER (PARTITION BY p.probe_id
-       |      ORDER BY ${cosSql("a.e", "p.qe")} DESC, a.vec_id) AS rn
-       |    FROM assigned a JOIN pcells p ON a.cell = p.qcell
-       |    WHERE a.vec_id <> p.probe_id)
-       |  WHERE rn <= 10),
-       |hits AS (
-       |  SELECT e.probe_id, count(*) AS c
-       |  FROM exact e JOIN approx a ON e.probe_id = a.probe_id AND e.vec_id = a.vec_id
-       |  GROUP BY 1)
-       |SELECT p.probe_id, CAST(coalesce(h.c, 0) AS BIGINT) AS n_hit,
-       |  coalesce(h.c, 0) / 10.0 AS recall
-       |FROM probes p LEFT JOIN hits h ON p.probe_id = h.probe_id
-       |ORDER BY 1""".stripMargin
+       |${probeTopSql("approx", "p.", "a.", cosSql("a.e", "p.qe"),
+            "assigned a JOIN pcells p ON a.cell = p.qcell WHERE a.vec_id <> p.probe_id", 10)},
+       |$RecallTailSql""".stripMargin
 
   // --- ANN: LSH recall audit (completes the audit trio with IVF + PQ) -------
   //
@@ -1772,32 +1873,17 @@ object TrainingDataQueries {
     val emb = embDouble(s, dir)
     val probes = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("probe_id"), col("e").as("qe"))
-    val wProbe = Window.partitionBy("probe_id").orderBy(desc("cos"), col("vec_id"))
-    val exact = emb.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", expr("graft_cosine(e, qe)"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= 10)
-      .select("probe_id", "vec_id")
+    val exact = exactTop10(emb, probes, "cos", expr("graft_cosine(e, qe)"))
     val pb = sigs.filter(col("vec_id") < 8)
       .select(col("vec_id").as("probe_id"),
         col("band").as("qband"), col("sig").as("qsig"))
-    val approx = sigs.join(broadcast(pb),
+    val approx = probeTop(sigs.join(broadcast(pb),
         col("band") === col("qband") && col("sig") === col("qsig") &&
           col("vec_id") =!= col("probe_id"))
       .groupBy("probe_id", "vec_id").agg(first("e").as("e"))
       .join(broadcast(probes), "probe_id")
-      .withColumn("cos", expr("graft_cosine(e, qe)"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= 10)
-      .select("probe_id", "vec_id")
-    val hits = exact.join(approx, Seq("probe_id", "vec_id"))
-      .groupBy("probe_id").agg(count(lit(1)).as("n_hit"))
-    probes.select("probe_id").join(hits, Seq("probe_id"), "left")
-      .na.fill(0L, Seq("n_hit"))
-      .select(col("probe_id"), col("n_hit"),
-        (col("n_hit") / 10.0).as("recall"))
-      .orderBy("probe_id")
+      .withColumn("cos", expr("graft_cosine(e, qe)")), "cos", 10)
+    recallAt10(probes, exact, approx)
   }
 
   private def qLshRecallSql: String =
@@ -1865,14 +1951,17 @@ object TrainingDataQueries {
   private def orderedSum(key: String, value: String): Column = expr(
     s"aggregate(transform(sort_array(collect_list(struct($key, $value))), s -> s.$value), 0D, (acc, x) -> acc + x)")
 
-  // 0-based subspace j's slice of the vector (subspace width d/m)
+  // 0-based subspace j's slice of the vector (subspace width d/m); DuckDB
+  // twin: pqSliceSql
   private val pqSvExpr = s"slice(e, j * (size(e) DIV $PqM) + 1, size(e) DIV $PqM)"
   private def pqSubspaces(df: DataFrame): DataFrame = df
     .select(col("vec_id"), explode(sequence(lit(0), lit(PqM - 1))).as("j"),
       col("e"))
     .select(col("vec_id"), col("j"), expr(pqSvExpr).as("sv"))
 
-  /** The first-ks-rows codebook of [[qAnnPq]]/[[qPqRecall]]. */
+  /** The first-ks-rows codebook of [[qAnnPq]]/[[qPqRecall]]. DuckDB twin:
+    * [[PqCodebookCte]].
+    */
   private def pqCodebook(emb: DataFrame): DataFrame =
     pqSubspaces(emb.filter(col("vec_id") < PqKs))
       .select(col("vec_id").cast("int").as("cid"), col("j"),
@@ -1884,7 +1973,8 @@ object TrainingDataQueries {
     * (d2 asc, cid asc), and unlike a row_number window the min is a
     * PARTIAL hash aggregate: each task reduces its ks candidate rows per
     * (vector, subspace) to one before the shuffle, so the exchange
-    * carries N·m rows, not N·m·ks.
+    * carries N·m rows, not N·m·ks. DuckDB twin: [[PqCodesCte]], whose
+    * row_number argmin picks the same codeword.
     */
   private def pqCodes(subv: DataFrame, cb: DataFrame): DataFrame =
     subv.join(broadcast(cb), Seq("j"))
@@ -1895,15 +1985,61 @@ object TrainingDataQueries {
       .select(col("vec_id"), col("j"), col("m.cid").as("cid"))
 
   /** ADC terms: term_j = q_sub_j · codeword(code_j), for probes
-    * `(probe_id, j, qsv)`; summed in j order by the callers.
+    * `(probe_id, j, qsv)`; summed in j order by the callers. DuckDB twin:
+    * [[pqTermsCte]].
     */
   private def pqAdcTerms(codes: DataFrame, cb: DataFrame,
       probesub: DataFrame): DataFrame =
     codes.join(broadcast(cb), Seq("j", "cid"))
       .join(broadcast(probesub), Seq("j"))
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("term", expr(
-        "aggregate(zip_with(qsv, cent, (a, b) -> a * b), 0D, (acc, x) -> acc + x)"))
+      .withColumn("term", dotDouble("qsv", "cent"))
+
+  /** DuckDB twin of `pqSvExpr`: subspace j's slice of list `v`. */
+  private def pqSliceSql(v: String): String =
+    s"$v[j * (len($v) // $PqM) + 1 : (j + 1) * (len($v) // $PqM)]"
+
+  /** The subspace index table `js` (j = 0..m−1) the PQ CTEs cross with. */
+  private val PqJsCte = s"js AS (SELECT unnest(generate_series(0, ${PqM - 1})) AS j)"
+
+  /** DuckDB twin of [[pqCodebook]] over `e0`: the `cb` CTE. */
+  private val PqCodebookCte =
+    s"""cb AS (
+       |  SELECT CAST(vec_id AS INT) AS cid, j,
+       |    ${pqSliceSql("e")} AS cent
+       |  FROM e0 CROSS JOIN js WHERE vec_id < $PqKs)""".stripMargin
+
+  /** DuckDB twin of `pqSubspaces` over the non-codebook rows of `e0`: the
+    * `subv` CTE.
+    */
+  private val PqSubvCte =
+    s"""subv AS (
+       |  SELECT vec_id, j,
+       |    ${pqSliceSql("e")} AS sv
+       |  FROM e0 CROSS JOIN js WHERE vec_id >= $PqKs)""".stripMargin
+
+  /** DuckDB twin of [[pqCodes]] over `subv` and `cb`: the `codes` CTE. */
+  private val PqCodesCte =
+    s"""codes AS (
+       |  SELECT vec_id, j, cid FROM (
+       |    SELECT v.vec_id, v.j, c.cid,
+       |      row_number() OVER (PARTITION BY v.vec_id, v.j ORDER BY
+       |        ${sqL2Sql("v.sv", "c.cent")} ASC,
+       |        c.cid) AS rn
+       |    FROM subv v JOIN cb c USING (j))
+       |  WHERE rn = 1)""".stripMargin
+
+  /** DuckDB twin of [[pqAdcTerms]] over `codes`, `cb` and the probe
+    * subvector CTE `probes` (probe_id, j, qsv): the `terms` CTE.
+    */
+  private def pqTermsCte(probes: String): String =
+    s"""terms AS (
+       |  SELECT p.probe_id, cd.vec_id, cd.j,
+       |    ${dotSql("p.qsv", "c.cent")} AS term
+       |  FROM codes cd
+       |  JOIN cb c ON cd.j = c.j AND cd.cid = c.cid
+       |  JOIN $probes p ON cd.j = p.j
+       |  WHERE cd.vec_id <> p.probe_id)""".stripMargin
 
   private def qAnnPq(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1925,38 +2061,15 @@ object TrainingDataQueries {
   }
 
   private val qAnnPqSql =
-    s"""WITH e0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-       |  FROM embeddings),
-       |js AS (SELECT unnest(generate_series(0, ${PqM - 1})) AS j),
-       |cb AS (
-       |  SELECT CAST(vec_id AS INT) AS cid, j,
-       |    e[j * (len(e) // $PqM) + 1 : (j + 1) * (len(e) // $PqM)] AS cent
-       |  FROM e0 CROSS JOIN js WHERE vec_id < $PqKs),
-       |subv AS (
-       |  SELECT vec_id, j,
-       |    e[j * (len(e) // $PqM) + 1 : (j + 1) * (len(e) // $PqM)] AS sv
-       |  FROM e0 CROSS JOIN js WHERE vec_id >= $PqKs),
-       |codes AS (
-       |  SELECT vec_id, j, cid FROM (
-       |    SELECT v.vec_id, v.j, c.cid,
-       |      row_number() OVER (PARTITION BY v.vec_id, v.j ORDER BY
-       |        list_sum(list_transform(generate_series(1, len(v.sv)),
-       |          i -> (v.sv[i] - c.cent[i]) * (v.sv[i] - c.cent[i]))) ASC,
-       |        c.cid) AS rn
-       |    FROM subv v JOIN cb c USING (j))
-       |  WHERE rn = 1),
+    s"""WITH $E0Cte,
+       |$PqJsCte,
+       |$PqCodebookCte,
+       |$PqSubvCte,
+       |$PqCodesCte,
        |probes AS (
        |  SELECT vec_id AS probe_id, j, sv AS qsv FROM subv
        |  WHERE vec_id < ${PqKs + PqNq}),
-       |terms AS (
-       |  SELECT p.probe_id, cd.vec_id, cd.j,
-       |    list_sum(list_transform(generate_series(1, len(p.qsv)),
-       |      i -> p.qsv[i] * c.cent[i])) AS term
-       |  FROM codes cd
-       |  JOIN cb c ON cd.j = c.j AND cd.cid = c.cid
-       |  JOIN probes p ON cd.j = p.j
-       |  WHERE cd.vec_id <> p.probe_id),
+       |${pqTermsCte("probes")},
        |adc AS (
        |  SELECT probe_id, vec_id,
        |    ${Rounding.rSql("list_sum(list(term ORDER BY j))", 4)} AS adc
@@ -1986,122 +2099,50 @@ object TrainingDataQueries {
     * query's job is to MEASURE that, per corpus.
     */
   private def qPqRecall(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val emb = embDouble(s, dir)
     val corpus = emb.filter(col("vec_id") >= PqKs)
     val probes = corpus.filter(col("vec_id") < PqKs + 8)
       .select(col("vec_id").as("probe_id"), col("e").as("qe"))
-    val dotQ = expr(
-      "aggregate(zip_with(e, qe, (a, b) -> a * b), 0D, (acc, x) -> acc + x)")
-    val wProbe = Window.partitionBy("probe_id").orderBy(desc("dot"), col("vec_id"))
-
-    val exact = corpus.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("dot", dotQ)
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= 10)
-      .select("probe_id", "vec_id")
+    val exact = exactTop10(corpus, probes, "dot", dotDouble("e", "qe"))
 
     val cb = pqCodebook(emb)
     val subv = pqSubspaces(corpus)
     val codes = pqCodes(subv, cb)
     val probesub = subv.filter(col("vec_id") < PqKs + 8)
       .select(col("vec_id").as("probe_id"), col("j"), col("sv").as("qsv"))
-    val fetched = pqAdcTerms(codes, cb, probesub)
+    val fetched = probeTop(pqAdcTerms(codes, cb, probesub)
       .groupBy("probe_id", "vec_id")
-      .agg(orderedSum("j", "term").as("adc"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("probe_id").orderBy(desc("adc"), col("vec_id"))))
-      .filter(col("rn") <= PqRecallFetch)
-      .select("probe_id", "vec_id")
+      .agg(orderedSum("j", "term").as("adc")), "adc", PqRecallFetch)
 
-    val approx = fetched
+    val approx = probeTop(fetched
       .join(corpus.select("vec_id", "e"), "vec_id")
       .join(broadcast(probes), "probe_id")
-      .withColumn("dot", dotQ)
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= 10)
-      .select("probe_id", "vec_id")
-
-    val hits = exact.join(approx, Seq("probe_id", "vec_id"))
-      .groupBy("probe_id").agg(count(lit(1)).as("n_hit"))
-    probes.select("probe_id").join(hits, Seq("probe_id"), "left")
-      .na.fill(0L, Seq("n_hit"))
-      .select(col("probe_id"), col("n_hit"),
-        (col("n_hit") / 10.0).as("recall"))
-      .orderBy("probe_id")
+      .withColumn("dot", dotDouble("e", "qe")), "dot", 10)
+    recallAt10(probes, exact, approx)
   }
 
   private val qPqRecallSql = {
-    val dotCE = "list_sum(list_transform(generate_series(1, len(c.e)), i -> c.e[i] * p.qe[i]))"
-    s"""WITH e0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-       |  FROM embeddings),
-       |js AS (SELECT unnest(generate_series(0, ${PqM - 1})) AS j),
-       |cb AS (
-       |  SELECT CAST(vec_id AS INT) AS cid, j,
-       |    e[j * (len(e) // $PqM) + 1 : (j + 1) * (len(e) // $PqM)] AS cent
-       |  FROM e0 CROSS JOIN js WHERE vec_id < $PqKs),
+    val dotCE = dotSql("c.e", "p.qe")
+    s"""WITH $E0Cte,
+       |$PqJsCte,
+       |$PqCodebookCte,
        |corpus AS (SELECT vec_id, e FROM e0 WHERE vec_id >= $PqKs),
        |probes AS (SELECT vec_id AS probe_id, e AS qe FROM corpus
        |  WHERE vec_id < ${PqKs + 8}),
-       |exact AS (
-       |  SELECT probe_id, vec_id FROM (
-       |    SELECT p.probe_id, c.vec_id, row_number() OVER (PARTITION BY p.probe_id
-       |      ORDER BY $dotCE DESC, c.vec_id) AS rn
-       |    FROM corpus c CROSS JOIN probes p WHERE c.vec_id <> p.probe_id)
-       |  WHERE rn <= 10),
-       |subv AS (
-       |  SELECT vec_id, j,
-       |    e[j * (len(e) // $PqM) + 1 : (j + 1) * (len(e) // $PqM)] AS sv
-       |  FROM e0 CROSS JOIN js WHERE vec_id >= $PqKs),
-       |codes AS (
-       |  SELECT vec_id, j, cid FROM (
-       |    SELECT v.vec_id, v.j, c.cid,
-       |      row_number() OVER (PARTITION BY v.vec_id, v.j ORDER BY
-       |        list_sum(list_transform(generate_series(1, len(v.sv)),
-       |          i -> (v.sv[i] - c.cent[i]) * (v.sv[i] - c.cent[i]))) ASC,
-       |        c.cid) AS rn
-       |    FROM subv v JOIN cb c USING (j))
-       |  WHERE rn = 1),
+       |${exactTop10Sql(dotCE)},
+       |$PqSubvCte,
+       |$PqCodesCte,
        |probesub AS (
        |  SELECT vec_id AS probe_id, j, sv AS qsv FROM subv
        |  WHERE vec_id < ${PqKs + 8}),
-       |terms AS (
-       |  SELECT p.probe_id, cd.vec_id, cd.j,
-       |    list_sum(list_transform(generate_series(1, len(p.qsv)),
-       |      i -> p.qsv[i] * c.cent[i])) AS term
-       |  FROM codes cd
-       |  JOIN cb c ON cd.j = c.j AND cd.cid = c.cid
-       |  JOIN probesub p ON cd.j = p.j
-       |  WHERE cd.vec_id <> p.probe_id),
+       |${pqTermsCte("probesub")},
        |adc AS (
        |  SELECT probe_id, vec_id, list_sum(list(term ORDER BY j)) AS adc
        |  FROM terms GROUP BY 1, 2),
-       |fetched AS (
-       |  SELECT probe_id, vec_id FROM (
-       |    SELECT probe_id, vec_id,
-       |      row_number() OVER (PARTITION BY probe_id
-       |        ORDER BY adc DESC, vec_id) AS rn
-       |    FROM adc)
-       |  WHERE rn <= $PqRecallFetch),
-       |approx AS (
-       |  SELECT probe_id, vec_id FROM (
-       |    SELECT f.probe_id, f.vec_id, row_number() OVER (PARTITION BY f.probe_id
-       |      ORDER BY $dotCE DESC, f.vec_id) AS rn
-       |    FROM fetched f
-       |    JOIN corpus c ON f.vec_id = c.vec_id
-       |    JOIN probes p ON f.probe_id = p.probe_id)
-       |  WHERE rn <= 10),
-       |hits AS (
-       |  SELECT e.probe_id, count(*) AS c
-       |  FROM exact e JOIN approx a
-       |    ON e.probe_id = a.probe_id AND e.vec_id = a.vec_id
-       |  GROUP BY 1)
-       |SELECT p.probe_id, CAST(coalesce(h.c, 0) AS BIGINT) AS n_hit,
-       |  coalesce(h.c, 0) / 10.0 AS recall
-       |FROM probes p LEFT JOIN hits h ON p.probe_id = h.probe_id
-       |ORDER BY 1""".stripMargin
+       |${probeTopSql("fetched", "", "", "adc", "adc", PqRecallFetch)},
+       |${probeTopSql("approx", "f.", "f.", dotCE,
+            "fetched f JOIN corpus c ON f.vec_id = c.vec_id JOIN probes p ON f.probe_id = p.probe_id", 10)},
+       |$RecallTailSql""".stripMargin
   }
 
   // --- MMR diversity rerank (Maximal Marginal Relevance) ---------------------
@@ -2126,12 +2167,10 @@ object TrainingDataQueries {
   private val MmrLDen = 3L // (1−λ)·10
 
   private def qMmrRerank(s: SparkSession, dir: String): DataFrame = {
-    val fp = t(s, dir, "embeddings").select(col("vec_id"),
-      expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1048576.0) AS BIGINT))").as("x"))
+    val fp = embFixed(s, dir)
     val qv = fp.filter(col("vec_id") === 0L).select(col("x").as("qx"))
     val cand = fp.filter(col("vec_id") =!= 0L).crossJoin(broadcast(qv))
-      .withColumn("rel",
-        expr("aggregate(zip_with(x, qx, (a, b) -> a * b), 0L, (acc, v) -> acc + v)"))
+      .withColumn("rel", dotLong("x", "qx"))
       .drop("qx")
       .orderBy(col("rel").desc, col("vec_id")).limit(MmrC)
       .localCheckpoint(true)
@@ -2143,8 +2182,7 @@ object TrainingDataQueries {
       val maxsim = cand
         .join(broadcast(sel.select("vec_id")), Seq("vec_id"), "left_anti")
         .crossJoin(broadcast(sel.select(col("x").as("sx"))))
-        .withColumn("sim",
-          expr("aggregate(zip_with(x, sx, (a, b) -> a * b), 0L, (acc, v) -> acc + v)"))
+        .withColumn("sim", dotLong("x", "sx"))
         .groupBy("vec_id").agg(max("sim").as("maxsim"))
       // exact argmax of 7·rel − 3·maxsim as a one-row struct-min (ties →
       // lowest vec_id) — no window, no sort of anything but 1 row
@@ -2163,7 +2201,7 @@ object TrainingDataQueries {
   }
 
   private val qMmrRerankSql = {
-    val dotCS = "CAST(list_sum(list_transform(generate_series(1, len(c.x)), i -> c.x[i] * s.x[i])) AS BIGINT)"
+    val dotCS = dotLongSql("c.x", "s.x")
     // MATERIALIZED is load-bearing: the selN chain re-evaluates
     // exponentially otherwise (each round references selN−1 three times)
     def round(r: Int) =
@@ -2177,14 +2215,11 @@ object TrainingDataQueries {
          |  FROM m$r m JOIN cand c USING (vec_id)
          |  ORDER BY $MmrLNum * c.rel - $MmrLDen * m.maxsim DESC, c.vec_id LIMIT 1),
          |sel$r AS MATERIALIZED (SELECT * FROM sel${r - 1} UNION ALL SELECT * FROM s$r)""".stripMargin
-    s"""WITH fp AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, v -> CAST(floor(v::DOUBLE * 1048576.0) AS BIGINT)) AS x
-       |  FROM embeddings),
+    s"""WITH $FpCte,
        |q AS (SELECT x AS qx FROM fp WHERE vec_id = 0),
        |rel AS (
        |  SELECT vec_id, x,
-       |    CAST(list_sum(list_transform(generate_series(1, len(x)), i -> x[i] * qx[i])) AS BIGINT) AS rel
+       |    ${dotLongSql("x", "qx")} AS rel
        |  FROM fp, q WHERE vec_id <> 0),
        |cand AS MATERIALIZED (SELECT * FROM rel ORDER BY rel DESC, vec_id LIMIT $MmrC),
        |sel1 AS MATERIALIZED (
@@ -2208,16 +2243,80 @@ object TrainingDataQueries {
   // exploded stream, one d-row final agg. Two small shuffles keyed on
   // dim at any corpus size; the train and encode passes share one scan.
 
-  private def qSq8Quant(s: SparkSession, dir: String): DataFrame = {
+  /** SQ8 training: every coordinate as a (vec_id, dim, v) row, and each
+    * dim's (mn, mx) range. DuckDB twin: [[sq8TrainCtes]].
+    */
+  private def sq8Train(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val ev = t(s, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("pos").as("dim"), col("col").cast("double").as("v"))
-    val st = ev.groupBy("dim").agg(min("v").as("mn"), max("v").as("mx"))
+      .select(col("vec_id"), col("pos").as("dim"), col("col").cast("double").as("v"))
+    (ev, ev.groupBy("dim").agg(min("v").as("mn"), max("v").as("mx")))
+  }
+
+  /** The SQ8 code of `v` in its dim's [mn, mx]: ⌊(v − mn)·255/(mx − mn)⌋
+    * clamped to [0, 255]; a constant dim (mx = mn) codes to 0. DuckDB twin:
+    * [[Sq8CodeSql]].
+    */
+  private val sq8Code: Column =
+    when(col("mx") === col("mn"), lit(0L))
+      .otherwise(least(lit(255L), greatest(lit(0L),
+        floor((col("v") - col("mn")) * lit(255.0) / (col("mx") - col("mn"))).cast("long"))))
+
+  /** (vec_id, ascore): the SQ8 ADC ranking score, the code-space squared
+    * L2 of every vector but vector 0 to vector 0's codes. DuckDB twin:
+    * [[sq8ScoreCtes]].
+    */
+  private def sq8Scores(s: SparkSession, dir: String): DataFrame = {
+    val (ev, st) = sq8Train(s, dir)
+    val codes = ev.join(broadcast(st), "dim")
+      .select(col("vec_id"), col("dim"), sq8Code.as("code"))
+    val qc = codes.filter(col("vec_id") === 0L)
+      .select(col("dim"), col("code").as("qcode"))
+    codes.filter(col("vec_id") =!= 0L)
+      .join(broadcast(qc), "dim")
+      .groupBy("vec_id")
+      .agg(sum((col("code") - col("qcode")) * (col("code") - col("qcode")))
+        .as("ascore"))
+  }
+
+  /** DuckDB twin of [[sq8Train]]: the `ev` and `st` CTEs, `ev` carrying
+    * vec_id only `withId`.
+    */
+  private def sq8TrainCtes(withId: Boolean): String = {
+    val id = if (withId) "vec_id, " else ""
+    s"""ev AS (
+       |  SELECT ${id}u.d AS dim, u.v::DOUBLE AS v FROM (
+       |    SELECT ${id}unnest(list_transform(generate_series(1, len(embedding)),
+       |      i -> {'d': i - 1, 'v': embedding[i]})) AS u
+       |    FROM embeddings) z),
+       |st AS (SELECT dim, min(v) AS mn, max(v) AS mx FROM ev GROUP BY 1)""".stripMargin
+  }
+
+  /** DuckDB twin of [[sq8Code]] over `ev e JOIN st s`. */
+  private val Sq8CodeSql =
+    """CASE WHEN s.mx = s.mn THEN 0
+      |      ELSE least(255, greatest(0,
+      |        CAST(floor((e.v - s.mn) * 255.0 / (s.mx - s.mn)) AS BIGINT))) END""".stripMargin
+
+  /** DuckDB twin of [[sq8Scores]]: the training CTEs, `codes`, `qc`, and
+    * the score CTE `name` (vec_id, ascore).
+    */
+  private def sq8ScoreCtes(name: String): String =
+    s"""${sq8TrainCtes(withId = true)},
+       |codes AS (
+       |  SELECT e.vec_id, e.dim,
+       |    $Sq8CodeSql AS code
+       |  FROM ev e JOIN st s USING (dim)),
+       |qc AS (SELECT dim, code AS qcode FROM codes WHERE vec_id = 0),
+       |$name AS (
+       |  SELECT c.vec_id,
+       |    CAST(sum((c.code - q.qcode) * (c.code - q.qcode)) AS BIGINT) AS ascore
+       |  FROM codes c JOIN qc q USING (dim) WHERE c.vec_id <> 0 GROUP BY 1)""".stripMargin
+
+  private def qSq8Quant(s: SparkSession, dir: String): DataFrame = {
+    val (ev, st) = sq8Train(s, dir)
     ev.join(broadcast(st), "dim")
-      .withColumn("code",
-        when(col("mx") === col("mn"), lit(0L))
-          .otherwise(least(lit(255L), greatest(lit(0L),
-            floor((col("v") - col("mn")) * lit(255.0) / (col("mx") - col("mn"))).cast("long")))))
+      .withColumn("code", sq8Code)
       .withColumn("recon",
         col("mn") + col("code") * (col("mx") - col("mn")) / lit(255.0))
       .groupBy("dim")
@@ -2230,17 +2329,10 @@ object TrainingDataQueries {
   }
 
   private val qSq8QuantSql =
-    s"""WITH ev AS (
-       |  SELECT u.d AS dim, u.v::DOUBLE AS v FROM (
-       |    SELECT unnest(list_transform(generate_series(1, len(embedding)),
-       |      i -> {'d': i - 1, 'v': embedding[i]})) AS u
-       |    FROM embeddings) z),
-       |st AS (SELECT dim, min(v) AS mn, max(v) AS mx FROM ev GROUP BY 1),
+    s"""WITH ${sq8TrainCtes(withId = false)},
        |qt AS (
        |  SELECT e.dim, e.v, s.mn, s.mx,
-       |    CASE WHEN s.mx = s.mn THEN 0
-       |      ELSE least(255, greatest(0,
-       |        CAST(floor((e.v - s.mn) * 255.0 / (s.mx - s.mn)) AS BIGINT))) END AS code
+       |    $Sq8CodeSql AS code
        |  FROM ev e JOIN st s USING (dim)),
        |re AS (
        |  SELECT dim, code, v, mn + code * (mx - mn) / 255.0 AS recon
@@ -2283,39 +2375,49 @@ object TrainingDataQueries {
   private val NdcgIdcgFp: Map[Int, Long] = NdcgCuts.map(k =>
     k -> (1 to k).map(r => ndcgGain(r) * NdcgDiscFp(r - 1)).sum).toMap
 
-  private def qNdcgEval(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val fp = t(s, dir, "embeddings").select(col("vec_id"),
-      expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1048576.0) AS BIGINT))").as("x"))
+  /** The ground truth of the SQ8 ranking audits: (vec_id, x, rel), `rel`
+    * the exact fixed-point squared L2 of every vector but vector 0 to
+    * vector 0. DuckDB twin: [[ExactL2Ctes]].
+    */
+  private def exactL2(s: SparkSession, dir: String): DataFrame = {
+    val fp = embFixed(s, dir)
     val qv = fp.filter(col("vec_id") === 0L).select(col("x").as("qx"))
-    val truth = fp.filter(col("vec_id") =!= 0L).crossJoin(broadcast(qv))
-      .withColumn("rel",
-        expr("aggregate(zip_with(x, qx, (a, b) -> (a - b) * (a - b)), 0L, (acc, v) -> acc + v)"))
-      .orderBy(col("rel"), col("vec_id")).limit(NdcgK)
-      .withColumn("tr",
-        row_number().over(Window.orderBy(col("rel"), col("vec_id"))))
+    fp.filter(col("vec_id") =!= 0L).crossJoin(broadcast(qv))
+      .withColumn("rel", sqL2Long("x", "qx"))
+  }
+
+  /** DuckDB twin of [[exactL2]]: the `fp`, `q` and `rel` CTEs. */
+  private val ExactL2Ctes =
+    s"""$FpCte,
+       |q AS (SELECT x AS qx FROM fp WHERE vec_id = 0),
+       |rel AS (
+       |  SELECT vec_id,
+       |    ${sqL2LongSql("x", "qx")} AS rel
+       |  FROM fp, q WHERE vec_id <> 0)""".stripMargin
+
+  /** The `k` rows of lowest `score` (ties → lower vec_id), ranked 1..k in
+    * column `rank`: both top-K lists of the SQ8 ranking audits. DuckDB
+    * twin: [[ascTopKSql]].
+    */
+  private def ascTopK(scored: DataFrame, score: String, k: Int, rank: String): DataFrame =
+    scored.orderBy(col(score), col("vec_id")).limit(k)
+      .withColumn(rank,
+        row_number().over(Window.orderBy(col(score), col("vec_id"))))
+
+  /** DuckDB twin of [[ascTopK]]: the CTE `name` (vec_id, `rank`) over the
+    * CTE `from`.
+    */
+  private def ascTopKSql(name: String, from: String, score: String, k: Int,
+      rank: String): String =
+    s"""$name AS (
+       |  SELECT vec_id, row_number() OVER (ORDER BY $score, vec_id) AS $rank
+       |  FROM (SELECT * FROM $from ORDER BY $score, vec_id LIMIT $k))""".stripMargin
+
+  private def qNdcgEval(s: SparkSession, dir: String): DataFrame = {
+    val truth = ascTopK(exactL2(s, dir), "rel", NdcgK, "tr")
       .select(col("vec_id"),
         expr(s"shiftleft(CAST(1 AS BIGINT), ${NdcgK + 1} - tr) - 1").as("gain"))
-    val ev = t(s, dir, "embeddings")
-      .select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("vec_id"), col("pos").as("dim"), col("col").cast("double").as("v"))
-    val st = ev.groupBy("dim").agg(min("v").as("mn"), max("v").as("mx"))
-    val codes = ev.join(broadcast(st), "dim")
-      .select(col("vec_id"), col("dim"),
-        when(col("mx") === col("mn"), lit(0L))
-          .otherwise(least(lit(255L), greatest(lit(0L),
-            floor((col("v") - col("mn")) * lit(255.0) / (col("mx") - col("mn"))).cast("long"))))
-          .as("code"))
-    val qc = codes.filter(col("vec_id") === 0L)
-      .select(col("dim"), col("code").as("qcode"))
-    val approx = codes.filter(col("vec_id") =!= 0L)
-      .join(broadcast(qc), "dim")
-      .groupBy("vec_id")
-      .agg(sum((col("code") - col("qcode")) * (col("code") - col("qcode")))
-        .as("ascore"))
-      .orderBy(col("ascore"), col("vec_id")).limit(NdcgK)
-      .withColumn("ar",
-        row_number().over(Window.orderBy(col("ascore"), col("vec_id"))))
+    val approx = ascTopK(sq8Scores(s, dir), "ascore", NdcgK, "ar")
     val disc = s.createDataFrame(
       NdcgDiscFp.zipWithIndex.map { case (d, i) => (i + 1, d) }).toDF("ar", "disc_fp")
     val cuts = s.createDataFrame(
@@ -2338,41 +2440,12 @@ object TrainingDataQueries {
       .map { case (d, i) => s"(${i + 1}, ${d}::BIGINT)" }.mkString(", ")
     val cutValues = NdcgCuts
       .map(k => s"($k, ${NdcgIdcgFp(k)}::BIGINT)").mkString(", ")
-    s"""WITH fp AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, v -> CAST(floor(v::DOUBLE * 1048576.0) AS BIGINT)) AS x
-       |  FROM embeddings),
-       |q AS (SELECT x AS qx FROM fp WHERE vec_id = 0),
-       |rel AS (
-       |  SELECT vec_id,
-       |    CAST(list_sum(list_transform(generate_series(1, len(x)),
-       |      i -> (x[i] - qx[i]) * (x[i] - qx[i]))) AS BIGINT) AS rel
-       |  FROM fp, q WHERE vec_id <> 0),
-       |truth AS (
-       |  SELECT vec_id, row_number() OVER (ORDER BY rel, vec_id) AS tr
-       |  FROM (SELECT * FROM rel ORDER BY rel, vec_id LIMIT $NdcgK)),
+    s"""WITH $ExactL2Ctes,
+       |${ascTopKSql("truth", "rel", "rel", NdcgK, "tr")},
        |gains AS (
        |  SELECT vec_id, (1::BIGINT << (${NdcgK + 1} - tr)) - 1 AS gain FROM truth),
-       |ev AS (
-       |  SELECT vec_id, u.d AS dim, u.v::DOUBLE AS v FROM (
-       |    SELECT vec_id, unnest(list_transform(generate_series(1, len(embedding)),
-       |      i -> {'d': i - 1, 'v': embedding[i]})) AS u
-       |    FROM embeddings) z),
-       |st AS (SELECT dim, min(v) AS mn, max(v) AS mx FROM ev GROUP BY 1),
-       |codes AS (
-       |  SELECT e.vec_id, e.dim,
-       |    CASE WHEN s.mx = s.mn THEN 0
-       |      ELSE least(255, greatest(0,
-       |        CAST(floor((e.v - s.mn) * 255.0 / (s.mx - s.mn)) AS BIGINT))) END AS code
-       |  FROM ev e JOIN st s USING (dim)),
-       |qc AS (SELECT dim, code AS qcode FROM codes WHERE vec_id = 0),
-       |approx AS (
-       |  SELECT c.vec_id,
-       |    CAST(sum((c.code - q.qcode) * (c.code - q.qcode)) AS BIGINT) AS ascore
-       |  FROM codes c JOIN qc q USING (dim) WHERE c.vec_id <> 0 GROUP BY 1),
-       |ranked AS (
-       |  SELECT vec_id, row_number() OVER (ORDER BY ascore, vec_id) AS ar
-       |  FROM (SELECT * FROM approx ORDER BY ascore, vec_id LIMIT $NdcgK)),
+       |${sq8ScoreCtes("approx")},
+       |${ascTopKSql("ranked", "approx", "ascore", NdcgK, "ar")},
        |disc(ar, disc_fp) AS (VALUES $discValues),
        |cuts(k, idcg_fp) AS (VALUES $cutValues),
        |j AS (
@@ -2403,8 +2476,7 @@ object TrainingDataQueries {
   private val JlM = 16
 
   private def qJlProject(s: SparkSession, dir: String): DataFrame = {
-    val fp = t(s, dir, "embeddings").select(col("vec_id"),
-      expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1048576.0) AS BIGINT))").as("x"))
+    val fp = embFixed(s, dir)
     val a = fp.filter(col("vec_id") % 8 === 0)
       .select(col("vec_id").as("pair"), col("x").as("xa"))
     val b = fp.filter(col("vec_id") % 8 === 1)
@@ -2438,10 +2510,7 @@ object TrainingDataQueries {
   }
 
   private val qJlProjectSql =
-    s"""WITH fp AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, v -> CAST(floor(v::DOUBLE * 1048576.0) AS BIGINT)) AS x
-       |  FROM embeddings),
+    s"""WITH $FpCte,
        |pa AS (SELECT vec_id AS pair, x AS xa FROM fp WHERE vec_id % 8 = 0),
        |pb AS (SELECT vec_id - 1 AS pair, x AS xb FROM fp WHERE vec_id % 8 = 1),
        |d0 AS (
@@ -2496,38 +2565,8 @@ object TrainingDataQueries {
   private val RboWcumFp: Seq[Long] = (1 to RboK).map(m => RboWFp.drop(m - 1).sum)
 
   private def qRbo(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val fp = t(s, dir, "embeddings").select(col("vec_id"),
-      expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1048576.0) AS BIGINT))").as("x"))
-    val qv = fp.filter(col("vec_id") === 0L).select(col("x").as("qx"))
-    val exact = fp.filter(col("vec_id") =!= 0L).crossJoin(broadcast(qv))
-      .withColumn("rel",
-        expr("aggregate(zip_with(x, qx, (a, b) -> (a - b) * (a - b)), 0L, (acc, v) -> acc + v)"))
-      .orderBy(col("rel"), col("vec_id")).limit(RboK)
-      .withColumn("ra",
-        row_number().over(Window.orderBy(col("rel"), col("vec_id"))))
-      .select("vec_id", "ra")
-    val ev = t(s, dir, "embeddings")
-      .select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("vec_id"), col("pos").as("dim"), col("col").cast("double").as("v"))
-    val st = ev.groupBy("dim").agg(min("v").as("mn"), max("v").as("mx"))
-    val codes = ev.join(broadcast(st), "dim")
-      .select(col("vec_id"), col("dim"),
-        when(col("mx") === col("mn"), lit(0L))
-          .otherwise(least(lit(255L), greatest(lit(0L),
-            floor((col("v") - col("mn")) * lit(255.0) / (col("mx") - col("mn"))).cast("long"))))
-          .as("code"))
-    val qc = codes.filter(col("vec_id") === 0L)
-      .select(col("dim"), col("code").as("qcode"))
-    val approx = codes.filter(col("vec_id") =!= 0L)
-      .join(broadcast(qc), "dim")
-      .groupBy("vec_id")
-      .agg(sum((col("code") - col("qcode")) * (col("code") - col("qcode")))
-        .as("ascore"))
-      .orderBy(col("ascore"), col("vec_id")).limit(RboK)
-      .withColumn("rb",
-        row_number().over(Window.orderBy(col("ascore"), col("vec_id"))))
-      .select("vec_id", "rb")
+    val exact = ascTopK(exactL2(s, dir), "rel", RboK, "ra").select("vec_id", "ra")
+    val approx = ascTopK(sq8Scores(s, dir), "ascore", RboK, "rb").select("vec_id", "rb")
     val wcum = s.createDataFrame(
       RboWcumFp.zipWithIndex.map { case (w, i) => (i + 1, w) }).toDF("m", "wcum_fp")
     exact.join(approx, "vec_id")
@@ -2542,39 +2581,10 @@ object TrainingDataQueries {
   private val qRboSql = {
     val wcumValues = RboWcumFp.zipWithIndex
       .map { case (w, i) => s"(${i + 1}, ${w}::BIGINT)" }.mkString(", ")
-    s"""WITH fp AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, v -> CAST(floor(v::DOUBLE * 1048576.0) AS BIGINT)) AS x
-       |  FROM embeddings),
-       |q AS (SELECT x AS qx FROM fp WHERE vec_id = 0),
-       |rel AS (
-       |  SELECT vec_id,
-       |    CAST(list_sum(list_transform(generate_series(1, len(x)),
-       |      i -> (x[i] - qx[i]) * (x[i] - qx[i]))) AS BIGINT) AS rel
-       |  FROM fp, q WHERE vec_id <> 0),
-       |exact AS (
-       |  SELECT vec_id, row_number() OVER (ORDER BY rel, vec_id) AS ra
-       |  FROM (SELECT * FROM rel ORDER BY rel, vec_id LIMIT $RboK)),
-       |ev AS (
-       |  SELECT vec_id, u.d AS dim, u.v::DOUBLE AS v FROM (
-       |    SELECT vec_id, unnest(list_transform(generate_series(1, len(embedding)),
-       |      i -> {'d': i - 1, 'v': embedding[i]})) AS u
-       |    FROM embeddings) z),
-       |st AS (SELECT dim, min(v) AS mn, max(v) AS mx FROM ev GROUP BY 1),
-       |codes AS (
-       |  SELECT e.vec_id, e.dim,
-       |    CASE WHEN s.mx = s.mn THEN 0
-       |      ELSE least(255, greatest(0,
-       |        CAST(floor((e.v - s.mn) * 255.0 / (s.mx - s.mn)) AS BIGINT))) END AS code
-       |  FROM ev e JOIN st s USING (dim)),
-       |qc AS (SELECT dim, code AS qcode FROM codes WHERE vec_id = 0),
-       |ap AS (
-       |  SELECT c.vec_id,
-       |    CAST(sum((c.code - q.qcode) * (c.code - q.qcode)) AS BIGINT) AS ascore
-       |  FROM codes c JOIN qc q USING (dim) WHERE c.vec_id <> 0 GROUP BY 1),
-       |approx AS (
-       |  SELECT vec_id, row_number() OVER (ORDER BY ascore, vec_id) AS rb
-       |  FROM (SELECT * FROM ap ORDER BY ascore, vec_id LIMIT $RboK)),
+    s"""WITH $ExactL2Ctes,
+       |${ascTopKSql("exact", "rel", "rel", RboK, "ra")},
+       |${sq8ScoreCtes("ap")},
+       |${ascTopKSql("approx", "ap", "ascore", RboK, "rb")},
        |wcum(m, wcum_fp) AS (VALUES $wcumValues),
        |j AS (
        |  SELECT w.wcum_fp
@@ -2600,36 +2610,9 @@ object TrainingDataQueries {
   // corpus passes (shared shape with q_ndcg_eval/q_rbo).
 
   private def qApEval(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val fp = t(s, dir, "embeddings").select(col("vec_id"),
-      expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1048576.0) AS BIGINT))").as("x"))
-    val qv = fp.filter(col("vec_id") === 0L).select(col("x").as("qx"))
-    val exact = fp.filter(col("vec_id") =!= 0L).crossJoin(broadcast(qv))
-      .withColumn("rel",
-        expr("aggregate(zip_with(x, qx, (a, b) -> (a - b) * (a - b)), 0L, (acc, v) -> acc + v)"))
-      .orderBy(col("rel"), col("vec_id")).limit(RboK)
+    val exact = exactL2(s, dir).orderBy(col("rel"), col("vec_id")).limit(RboK)
       .select("vec_id")
-    val ev = t(s, dir, "embeddings")
-      .select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("vec_id"), col("pos").as("dim"), col("col").cast("double").as("v"))
-    val st = ev.groupBy("dim").agg(min("v").as("mn"), max("v").as("mx"))
-    val codes = ev.join(broadcast(st), "dim")
-      .select(col("vec_id"), col("dim"),
-        when(col("mx") === col("mn"), lit(0L))
-          .otherwise(least(lit(255L), greatest(lit(0L),
-            floor((col("v") - col("mn")) * lit(255.0) / (col("mx") - col("mn"))).cast("long"))))
-          .as("code"))
-    val qc = codes.filter(col("vec_id") === 0L)
-      .select(col("dim"), col("code").as("qcode"))
-    val approx = codes.filter(col("vec_id") =!= 0L)
-      .join(broadcast(qc), "dim")
-      .groupBy("vec_id")
-      .agg(sum((col("code") - col("qcode")) * (col("code") - col("qcode")))
-        .as("ascore"))
-      .orderBy(col("ascore"), col("vec_id")).limit(RboK)
-      .withColumn("rb",
-        row_number().over(Window.orderBy(col("ascore"), col("vec_id"))))
-      .select("vec_id", "rb")
+    val approx = ascTopK(sq8Scores(s, dir), "ascore", RboK, "rb").select("vec_id", "rb")
     val hits = approx.join(exact, "vec_id")
       .withColumn("h", row_number().over(Window.orderBy("rb")))
       .withColumn("c",
@@ -2647,37 +2630,10 @@ object TrainingDataQueries {
   }
 
   private val qApEvalSql =
-    s"""WITH fp AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, v -> CAST(floor(v::DOUBLE * 1048576.0) AS BIGINT)) AS x
-       |  FROM embeddings),
-       |q AS (SELECT x AS qx FROM fp WHERE vec_id = 0),
-       |rel AS (
-       |  SELECT vec_id,
-       |    CAST(list_sum(list_transform(generate_series(1, len(x)),
-       |      i -> (x[i] - qx[i]) * (x[i] - qx[i]))) AS BIGINT) AS rel
-       |  FROM fp, q WHERE vec_id <> 0),
+    s"""WITH $ExactL2Ctes,
        |exact AS (SELECT vec_id FROM rel ORDER BY rel, vec_id LIMIT $RboK),
-       |ev AS (
-       |  SELECT vec_id, u.d AS dim, u.v::DOUBLE AS v FROM (
-       |    SELECT vec_id, unnest(list_transform(generate_series(1, len(embedding)),
-       |      i -> {'d': i - 1, 'v': embedding[i]})) AS u
-       |    FROM embeddings) z),
-       |st AS (SELECT dim, min(v) AS mn, max(v) AS mx FROM ev GROUP BY 1),
-       |codes AS (
-       |  SELECT e.vec_id, e.dim,
-       |    CASE WHEN s.mx = s.mn THEN 0
-       |      ELSE least(255, greatest(0,
-       |        CAST(floor((e.v - s.mn) * 255.0 / (s.mx - s.mn)) AS BIGINT))) END AS code
-       |  FROM ev e JOIN st s USING (dim)),
-       |qc AS (SELECT dim, code AS qcode FROM codes WHERE vec_id = 0),
-       |ap0 AS (
-       |  SELECT c.vec_id,
-       |    CAST(sum((c.code - q.qcode) * (c.code - q.qcode)) AS BIGINT) AS ascore
-       |  FROM codes c JOIN qc q USING (dim) WHERE c.vec_id <> 0 GROUP BY 1),
-       |approx AS (
-       |  SELECT vec_id, row_number() OVER (ORDER BY ascore, vec_id) AS rb
-       |  FROM (SELECT * FROM ap0 ORDER BY ascore, vec_id LIMIT $RboK)),
+       |${sq8ScoreCtes("ap0")},
+       |${ascTopKSql("approx", "ap0", "ascore", RboK, "rb")},
        |hits AS (
        |  SELECT rb, row_number() OVER (ORDER BY rb) AS h
        |  FROM approx JOIN exact USING (vec_id)),
@@ -2710,10 +2666,6 @@ object TrainingDataQueries {
   // over-j sum is j-ordered in both engines, so the doubles agree
   // bit-for-bit; only the displayed score is rounded.
 
-  /** Expression: dot(e, ce) as a left-to-right fold. */
-  private val ivfDotEC = expr(
-    "aggregate(zip_with(e, ce, (a, b) -> a * b), 0D, (acc, x) -> acc + x)")
-
   /** The IVFADC oracle's quantizer artifacts — (emb, cents, routed, cb,
     * codes) — shared by [[qAnnIvfPq]] and `IvfPqEquivalenceSpec`, which
     * writes them into the [[graft.retrieval.IvfPqIndex]] on-disk layout
@@ -2722,13 +2674,9 @@ object TrainingDataQueries {
     */
   private[graft] def ivfPqOracleParts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     val emb0 = embDouble(s, dir)
-    val stats = emb0.agg(count(lit(1)).as("n"))
-      .withColumn("nlist", greatest(lit(8L), floor(sqrt(col("n")))))
-    val emb = emb0.crossJoin(broadcast(stats)).select("vec_id", "e", "nlist")
-    val cents = emb.filter(col("vec_id") < col("nlist"))
-      .select(col("vec_id").as("cid"), col("e").as("ce"))
+    val (withN, cents) = ivfCents(emb0, emb0)
+    val emb = withN.select("vec_id", "e", "nlist")
 
     // cell routing (argmax dot, ties → lowest cid) + in-place residual;
     // the real index does this as one codegen'd narrow pass
@@ -2736,7 +2684,7 @@ object TrainingDataQueries {
     // keeps the math SQL-expressible for the oracle
     val routed = emb.filter(col("vec_id") >= col("nlist"))
       .crossJoin(broadcast(cents))
-      .withColumn("dot", ivfDotEC)
+      .withColumn("dot", dotDouble("e", "ce"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("vec_id").orderBy(desc("dot"), col("cid"))))
       .filter(col("rn") === 1)
@@ -2754,9 +2702,7 @@ object TrainingDataQueries {
   }
 
   private def qAnnIvfPq(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (emb, cents, routed, cb, codes) = ivfPqOracleParts(s, dir)
-    val dotEC = ivfDotEC
 
     // probes: the 4 corpus vectors after the codebook rows; the shared
     // LUT terms come from the probe's FULL subvectors (codewords decode
@@ -2773,7 +2719,7 @@ object TrainingDataQueries {
     // per-(probe, cell) constant q·centroid — 4·nlist rows, broadcast
     val qc = probes.select(col("vec_id").as("probe_id"), col("e"))
       .crossJoin(broadcast(cents))
-      .withColumn("qc", dotEC)
+      .withColumn("qc", dotDouble("e", "ce"))
       .select(col("probe_id"), col("cid").as("cell"), col("qc"))
 
     adc.join(routed.select("vec_id", "cell"), "vec_id")
@@ -2786,60 +2732,39 @@ object TrainingDataQueries {
       .orderBy("probe_id", "vec_id")
   }
 
-  private val qAnnIvfPqSql = {
-    val sl = s"[j * (len(r) // $PqM) + 1 : (j + 1) * (len(r) // $PqM)]"
-    s"""WITH e0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-       |  FROM embeddings),
-       |st AS (SELECT greatest(8, CAST(floor(sqrt(count(*))) AS BIGINT)) AS nlist FROM e0),
-       |cents AS (SELECT vec_id AS cid, e AS ce FROM e0 CROSS JOIN st WHERE vec_id < nlist),
+  private val qAnnIvfPqSql =
+    s"""WITH $E0Cte,
+       |${ivfCentsCtes("e0")},
        |routed AS (
        |  SELECT vec_id, nlist, cid AS cell,
        |    list_transform(generate_series(1, len(e)), i -> e[i] - ce[i]) AS r
        |  FROM (
        |    SELECT e0.vec_id, st.nlist, c.cid, e0.e, c.ce,
        |      row_number() OVER (PARTITION BY e0.vec_id ORDER BY
-       |        list_sum(list_transform(generate_series(1, len(e0.e)),
-       |          i -> e0.e[i] * c.ce[i])) DESC, c.cid) AS rn
+       |        ${dotSql("e0.e", "c.ce")} DESC, c.cid) AS rn
        |    FROM e0 CROSS JOIN st CROSS JOIN cents c WHERE e0.vec_id >= st.nlist)
        |  WHERE rn = 1),
-       |js AS (SELECT unnest(generate_series(0, ${PqM - 1})) AS j),
+       |$PqJsCte,
        |cb AS (
-       |  SELECT CAST(vec_id - nlist AS INT) AS cid, j, r$sl AS cent
+       |  SELECT CAST(vec_id - nlist AS INT) AS cid, j, ${pqSliceSql("r")} AS cent
        |  FROM routed CROSS JOIN js WHERE vec_id < nlist + $PqKs),
        |subv AS (
-       |  SELECT vec_id, j, r$sl AS sv FROM routed CROSS JOIN js),
-       |codes AS (
-       |  SELECT vec_id, j, cid FROM (
-       |    SELECT v.vec_id, v.j, c.cid,
-       |      row_number() OVER (PARTITION BY v.vec_id, v.j ORDER BY
-       |        list_sum(list_transform(generate_series(1, len(v.sv)),
-       |          i -> (v.sv[i] - c.cent[i]) * (v.sv[i] - c.cent[i]))) ASC,
-       |        c.cid) AS rn
-       |    FROM subv v JOIN cb c USING (j))
-       |  WHERE rn = 1),
+       |  SELECT vec_id, j, ${pqSliceSql("r")} AS sv FROM routed CROSS JOIN js),
+       |$PqCodesCte,
        |probes AS (
        |  SELECT vec_id AS probe_id, e AS qe FROM e0 CROSS JOIN st
        |  WHERE vec_id >= nlist + $PqKs AND vec_id < nlist + ${PqKs + PqNq}),
        |probesub AS (
        |  SELECT probe_id, j,
-       |    qe[j * (len(qe) // $PqM) + 1 : (j + 1) * (len(qe) // $PqM)] AS qsv
+       |    ${pqSliceSql("qe")} AS qsv
        |  FROM probes CROSS JOIN js),
-       |terms AS (
-       |  SELECT p.probe_id, cd.vec_id, cd.j,
-       |    list_sum(list_transform(generate_series(1, len(p.qsv)),
-       |      i -> p.qsv[i] * c.cent[i])) AS term
-       |  FROM codes cd
-       |  JOIN cb c ON cd.j = c.j AND cd.cid = c.cid
-       |  JOIN probesub p ON cd.j = p.j
-       |  WHERE cd.vec_id <> p.probe_id),
+       |${pqTermsCte("probesub")},
        |adc AS (
        |  SELECT probe_id, vec_id, list_sum(list(term ORDER BY j)) AS adc0
        |  FROM terms GROUP BY 1, 2),
        |qc AS (
        |  SELECT p.probe_id, c.cid AS cell,
-       |    list_sum(list_transform(generate_series(1, len(p.qe)),
-       |      i -> p.qe[i] * c.ce[i])) AS qc
+       |    ${dotSql("p.qe", "c.ce")} AS qc
        |  FROM probes p CROSS JOIN cents c),
        |sc AS (
        |  SELECT a.probe_id, a.vec_id,
@@ -2853,7 +2778,6 @@ object TrainingDataQueries {
        |      ORDER BY score DESC, vec_id) AS rn
        |  FROM sc)
        |WHERE rn <= $PqTopK ORDER BY probe_id, vec_id""".stripMargin
-  }
 
   // --- cluster × source mixture audit ---------------------------------------
   //
@@ -2879,8 +2803,7 @@ object TrainingDataQueries {
       .select(col("vec_id").as("cid"), col("e").as("ce"))
     val assigned = emb.filter(col("vec_id") >= MixK)
       .crossJoin(broadcast(cents))
-      .withColumn("dot", expr(
-        "aggregate(zip_with(e, ce, (a, b) -> a * b), 0D, (acc, x) -> acc + x)"))
+      .withColumn("dot", dotDouble("e", "ce"))
       .groupBy("vec_id")
       .agg(min(struct(negate(col("dot")), col("cid"))).as("m"))
       .select(col("vec_id").as("doc_id"), col("m.cid").as("cluster"))
@@ -2896,16 +2819,13 @@ object TrainingDataQueries {
   }
 
   private val qClusterMixSql =
-    s"""WITH e0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-       |  FROM embeddings),
+    s"""WITH $E0Cte,
        |cents AS (SELECT vec_id AS cid, e AS ce FROM e0 WHERE vec_id < $MixK),
        |assigned AS (
        |  SELECT vec_id AS doc_id, cid AS cluster FROM (
        |    SELECT v.vec_id, c.cid,
        |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |        list_sum(list_transform(generate_series(1, len(v.e)),
-       |          i -> v.e[i] * c.ce[i])) DESC, c.cid) AS rn
+       |        ${dotSql("v.e", "c.ce")} DESC, c.cid) AS rn
        |    FROM e0 v CROSS JOIN cents c WHERE v.vec_id >= $MixK)
        |  WHERE rn = 1),
        |mix AS (

@@ -2,8 +2,9 @@
 # North-rule launcher: the extraction job submitted via spark-submit to
 # separate executor JVMs at N and 4N executors (local-cluster — the
 # sandbox stand-in for a standalone/YARN cluster; on a real cluster only
-# --master changes). Prints per-leg turns/sec; BASELINE.md carries the
-# interpretation (per-socket membw ceiling, executor JIT warmup).
+# --master changes). Prints ClusterProbe's JSON line per run, turns/sec
+# in "tps"; BASELINE.md carries the interpretation (per-socket membw
+# ceiling, executor JIT warmup).
 #
 # Usage: scripts/spark_submit_bench.sh [nConvs] [runsPerLeg]
 set -euo pipefail
@@ -28,5 +29,5 @@ for W in 2 8; do
     --conf spark.driver.host=localhost \
     --class graft.ClusterProbe \
     "$JAR" "$W" 4 "$CONVS" 4096 "$RUNS" full 2>&1 |
-    grep "cluster-probe\]"
+    grep "\"tps\":"
 done

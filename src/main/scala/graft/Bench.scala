@@ -1,10 +1,12 @@
 package graft
 
+import graft.JsonCodec.Fixed
 import graft.fixtures.TranscriptGen
 import graft.pipeline.ExtractionPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.Files
+import scala.collection.immutable.SortedMap
 
 /** Benchmark main. Prints ONE JSON line.
   *
@@ -208,37 +210,121 @@ object Bench {
       p.waitFor()
     }
     import scala.jdk.CollectionConverters._
-    val Tps = """.*\[cluster-probe\] FULL run\d+ workers=\d+ cores=\d+ turns=\d+ sec=[\d.]+ tps=(\d+).*""".r
-    lines.iterator().asScala.toVector.collect { case Tps(t) => t.toDouble }
+    fullRunTps(lines.iterator().asScala.toVector)
   }
 
-  /** A JSON string literal: backslash, quote and every control char
-    * (< 0x20) escaped, `\n`, `\r` and `\t` by name and the rest as
-    * `\u00XX`, so a tab or CR in a query name, a failure reason or the
-    * oracle SQL cannot break a reader's `json.load`.
+  /** The tps of each full-job [[ClusterProbe.Run]] line among a leg's
+    * output lines (the rest is Spark's log).
     */
-  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private[graft] def fullRunTps(lines: Seq[String]): Seq[Double] =
+    lines.filter(_.startsWith("{"))
+      .flatMap(l => scala.util.Try(JsonCodec.read[ClusterProbe.Run](l)).toOption)
+      .collect { case r if r.mode == "full" => r.tps }
 
   /** The effective values of the knobs that change what the battery
-    * computes, as a JSON object: `cs_win`, the `q_common_substring` audit
-    * window (`SPARK_GRAFT_CS_WIN`; full text reads as its cap), and
-    * `decimal38`, whether integer moments run at DECIMAL(38,0)
-    * (`SPARK_GRAFT_DECIMAL38`). Verify writes it as `knobs.json`.
+    * computes: `cs_win`, the `q_common_substring` audit window
+    * (`SPARK_GRAFT_CS_WIN`; full text reads as its cap), and `decimal38`,
+    * whether integer moments run at DECIMAL(38,0)
+    * (`SPARK_GRAFT_DECIMAL38`). Verify writes it as `knobs.json`;
+    * bench.json carries it as `"knobs"`.
     */
-  private[graft] def knobsObject: String =
-    s"""{"cs_win":${graft.queries.CurationQueries.CsWin},""" +
-      s""""decimal38":${graft.queries.WideStats.wide}}"""
+  private[graft] final case class Knobs(cs_win: Int, decimal38: Boolean)
 
-  /** [[knobsObject]] as bench.json's `"knobs"` field. */
-  private[graft] def knobsJson: String = s""""knobs":$knobsObject"""
+  private[graft] def knobs: Knobs =
+    Knobs(graft.queries.CurationQueries.CsWin, graft.queries.WideStats.wide)
+
+  /** One N→4N executor pair of the `cluster` phase: each leg's per-run
+    * full-job tps and the best-of efficiency
+    * `(max(high) / max(low)) / (workers_high / workers_low)`.
+    */
+  private[graft] final case class ClusterPair(workers_low: Int, workers_high: Int,
+      cores_per_worker: Int, convs: Long, runs_per_leg: Int,
+      tps_low_runs: Seq[Fixed], tps_high_runs: Seq[Fixed], tps_low: Fixed, tps_high: Fixed,
+      scaling_efficiency: Fixed) extends ClusterBlock
+
+  private[graft] def clusterPair(workersLow: Int, workersHigh: Int, cores: Int, convs: Long,
+      runsPerLeg: Int, low: Seq[Double], high: Seq[Double]): ClusterPair = {
+    val eff = (high.max / low.max) / (workersHigh.toDouble / workersLow)
+    ClusterPair(workersLow, workersHigh, cores, convs, runsPerLeg,
+      low.map(Fixed(_, 0)), high.map(Fixed(_, 0)), Fixed(low.max, 0), Fixed(high.max, 0),
+      Fixed(eff, 3))
+  }
+
+  /** bench.json's `cluster` field: the 2×4 → 8×4 [[ClusterPair]], or
+    * why there is none.
+    */
+  private[graft] sealed trait ClusterBlock
+  private[graft] final case class ClusterSkipped(skipped: Boolean = true) extends ClusterBlock
+  private[graft] final case class ClusterError(error: String) extends ClusterBlock
+
+  /** The extraction scaling phase as the second partial write records it. */
+  private[graft] final case class ExtractionPartial(turns_per_sec_low: Fixed,
+      turns_per_sec_high: Fixed, scaling_efficiency: Fixed,
+      paired_efficiency_per_rep: Seq[Fixed], machine_calibration_efficiency: Fixed,
+      machine_membw_efficiency: Fixed)
+
+  /** The extraction scaling phase and the machine calibration around it. */
+  private[graft] final case class Extraction(turns: Long, convs: Long,
+      cores_low: Int, turns_per_sec_low: Fixed, cores_high: Int, turns_per_sec_high: Fixed,
+      scaling_efficiency: Fixed, compute_turns_per_sec_low: Fixed,
+      compute_turns_per_sec_high: Fixed, compute_scaling_efficiency: Fixed,
+      shuffle_write_bytes_per_turn: Fixed, zstd_level: Int, reps_interleaved_best_of: Int,
+      paired_efficiency_per_rep: Seq[Fixed], paired_efficiency_median: Fixed,
+      machine_calibration_efficiency: Fixed, machine_membw_efficiency: Fixed,
+      membw_low_gbps: Fixed, membw_high_gbps: Fixed, efficiency_vs_machine: Fixed,
+      efficiency_vs_membw: Fixed, compute_efficiency_vs_machine: Fixed)
+
+  /** bench.json. The partial writes (after the battery, and after the
+    * scaling phase with `extraction_partial`) set `partial`; the final
+    * write sets `extraction` and `cluster`, and, when the 1×2 → 4×2 pair
+    * ran, `cluster_linear` with its headline copied to the top level.
+    * `None` fields are left out.
+    */
+  private[graft] final case class Report(
+      metric: String = "turns_per_sec_extraction",
+      value: Fixed,
+      unit: String = "turns/sec",
+      partial: Option[Boolean] = None,
+      scaling_efficiency_n_to_4n_executors: Option[Fixed] = None,
+      scaling_n_to_4n_runs_per_leg: Option[Int] = None,
+      scaling_n_to_4n_tps_low_runs: Option[Seq[Fixed]] = None,
+      scaling_n_to_4n_tps_high_runs: Option[Seq[Fixed]] = None,
+      scaling_note: Option[String] = None,
+      queries: Map[String, Fixed],
+      sf: String,
+      extraction: Option[Extraction] = None,
+      cluster: Option[ClusterBlock] = None,
+      cluster_linear: Option[ClusterPair] = None,
+      battery_cal_before_gops: Fixed,
+      battery_cal_after_gops: Fixed,
+      query_warm_reps: Int,
+      queries_total_sec: Fixed,
+      query_failures: SortedMap[String, String],
+      knobs: Knobs,
+      queries_cold_total_sec: Fixed,
+      extraction_partial: Option[ExtractionPartial] = None) {
+
+    /** The final report: `linear` (the 1×2 → 4×2 pair) promoted to the
+      * top level — THE number that answers the north rule's ≥0.8 N→4N
+      * bar (saturation-free executor JVMs), not the box's DRAM-bus
+      * ceiling that caps every within-socket pair.
+      */
+    def withLinear(linear: Option[ClusterPair]): Report = copy(
+      scaling_efficiency_n_to_4n_executors = linear.map(_.scaling_efficiency),
+      scaling_n_to_4n_runs_per_leg = linear.map(_.runs_per_leg),
+      scaling_n_to_4n_tps_low_runs = linear.map(_.tps_low_runs),
+      scaling_n_to_4n_tps_high_runs = linear.map(_.tps_high_runs),
+      scaling_note = linear.map(_ => ScalingNote),
+      cluster_linear = linear)
+  }
+
+  private val ScalingNote = "scaling_efficiency_n_to_4n_executors is the " +
+    "saturation-free N->4N EXECUTOR measurement (cluster_linear: 1x2 -> 4x2 " +
+    "executor JVMs via literal spark-submit) and answers the north rule's " +
+    ">=0.8 bar; extraction.scaling_efficiency and the `cluster` 2x4 -> 8x4 " +
+    "pair saturate this box's single DRAM bus (ceiling = " +
+    "extraction.machine_membw_efficiency, measured in the same run) " +
+    "which a real multi-node 4N cluster does not replicate"
 
   /** One battery pass over `queries`: seconds for each query that ran,
     * and `name → reason` for each that threw. A failed query gets no
@@ -343,8 +429,6 @@ object Bench {
     val Battery(coldTotal, results, failures) =
       if (sys.env.contains("SPARK_GRAFT_SKIP_QUERIES")) Battery(0.0, Map.empty, Map.empty)
       else runBattery(spark, sfDir, SparkEntry.queries, warmReps)
-    val failuresJson = failures.toSeq.sorted
-      .map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }.mkString("{", ",", "}")
     val calAfter = if (sys.env.contains("SPARK_GRAFT_SKIP_QUERIES")) 0.0 else calStamp()
     graft.queries.Shared.disable() // battery-scoped; the scaling legs don't use it
 
@@ -354,23 +438,22 @@ object Bench {
     // numbers + calibration stamps on disk as valid JSON (marked
     // "partial") instead of nothing — the r3 lesson that the artifact's
     // existence outranks its completeness.
-    def writePartial(fields: String, value: Double = 0.0): Unit = {
+    // The metrics JSON is the SOLE content of a fixed, well-known file so
+    // the driver's parse never fights sbt's [info]/[error] stream mixing.
+    def writeReport(r: Report): String = {
+      val json = JsonCodec.write(r)
       val f = java.nio.file.Paths.get("target", "bench.json")
       Files.createDirectories(f.getParent)
-      val qs0 = results.map { case (k, v) => jsonStr(k) + ":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      Files.write(f,
-        (s"""{"metric":"turns_per_sec_extraction","value":${f"$value%.1f"},""" +
-          s""""unit":"turns/sec","partial":true,"queries":$qs0,""" +
-          s""""sf":${jsonStr(sfDir)},"battery_cal_before_gops":${f"$calBefore%.2f"},""" +
-          s""""battery_cal_after_gops":${f"$calAfter%.2f"},""" +
-          s""""query_warm_reps":$warmReps,""" +
-          s""""queries_total_sec":${f"${results.values.sum}%.2f"},""" +
-          s""""query_failures":$failuresJson,$knobsJson,""" +
-          s""""queries_cold_total_sec":${f"$coldTotal%.2f"}$fields}""" + "\n")
-          .getBytes("UTF-8"))
+      Files.write(f, (json + "\n").getBytes("UTF-8"))
+      json
     }
-    writePartial("")
+    val battery = Report(value = Fixed(0.0, 1),
+      queries = results.map { case (k, v) => k -> Fixed(v, 3) }, sf = sfDir,
+      battery_cal_before_gops = Fixed(calBefore, 2), battery_cal_after_gops = Fixed(calAfter, 2),
+      query_warm_reps = warmReps, queries_total_sec = Fixed(results.values.sum, 2),
+      query_failures = SortedMap.from(failures), knobs = knobs,
+      queries_cold_total_sec = Fixed(coldTotal, 2))
+    writeReport(battery.copy(partial = Some(true)))
 
     // ---- phase 2: extraction scaling (identical input, two sizes) ----
     val base = shm match {
@@ -474,47 +557,27 @@ object Bench {
 
     // second insurance checkpoint: battery + scaling + calibration are
     // on disk before the (longest) cluster phase begins
-    writePartial(
-      s""","extraction_partial":{"turns_per_sec_low":${f"$thrLow%.1f"},""" +
-        s""""turns_per_sec_high":${f"$thrHigh%.1f"},""" +
-        s""""scaling_efficiency":${f"$efficiency%.3f"},""" +
-        s""""paired_efficiency_per_rep":[${pairedEffs.map(e => f"$e%.3f").mkString(",")}],""" +
-        s""""machine_calibration_efficiency":${f"$calEfficiency%.3f"},""" +
-        s""""machine_membw_efficiency":${f"$memEfficiency%.3f"}}""",
-      value = thrHigh)
+    val pairedFixed = pairedEffs.map(Fixed(_, 3))
+    writeReport(battery.copy(value = Fixed(thrHigh, 1), partial = Some(true),
+      extraction_partial = Some(ExtractionPartial(Fixed(thrLow, 1), Fixed(thrHigh, 1),
+        Fixed(efficiency, 3), pairedFixed, Fixed(calEfficiency, 3), Fixed(memEfficiency, 3)))))
 
     // ---- phase 4: separate-executor-JVM legs via the LITERAL
     // spark-submit path, folded into THIS artifact (VERDICT r3 #2: the
     // 0.8-bar evidence lives in one driver-parseable file, not prose) ----
-    var linearEff: Option[Double] = None
-    var linearRuns: Option[(Seq[Double], Seq[Double])] = None
-    val clusterJson =
-      if (sys.env.contains("SPARK_GRAFT_SKIP_CLUSTER"))
-        """"cluster":{"skipped":true}"""
+    val (cluster, linear): (ClusterBlock, Option[ClusterPair]) =
+      if (sys.env.contains("SPARK_GRAFT_SKIP_CLUSTER")) (ClusterSkipped(), None)
       else try {
         val jar = buildJar().getOrElse(
           throw new IllegalStateException("target/scala-2.13/classes missing"))
         val clusterConvs =
           sys.env.get("SPARK_GRAFT_CLUSTER_CONVS").map(_.toLong).getOrElse(nConvs)
         def pair(name: String, wLo: Int, wHi: Int, cores: Int, memMb: Int,
-            convs: Long, runsPerLeg: Int): String = {
+            convs: Long, runsPerLeg: Int): ClusterPair = {
           val lo = clusterLeg(jar, wLo, cores, memMb, convs, runsPerLeg)
           val hi = clusterLeg(jar, wHi, cores, memMb, convs, runsPerLeg)
           require(lo.nonEmpty && hi.nonEmpty, s"cluster pair $name: no runs")
-          val eff = (hi.max / lo.max) / (wHi.toDouble / wLo)
-          // the saturation-free executor pair is THE number that answers
-          // the north rule's ≥0.8 N→4N bar — promote it into the parsed
-          // summary block next to `value` (VERDICT r4 task #1)
-          if (name == "cluster_linear") {
-            linearEff = Some(eff)
-            linearRuns = Some((lo, hi))
-          }
-          s""""$name":{"workers_low":$wLo,"workers_high":$wHi,""" +
-            s""""cores_per_worker":$cores,"convs":$convs,""" +
-            s""""tps_low_runs":[${lo.map(v => f"$v%.0f").mkString(",")}],""" +
-            s""""tps_high_runs":[${hi.map(v => f"$v%.0f").mkString(",")}],""" +
-            s""""tps_low":${f"${lo.max}%.0f"},"tps_high":${f"${hi.max}%.0f"},""" +
-            s""""scaling_efficiency":${f"$eff%.3f"}}"""
+          clusterPair(wLo, wHi, cores, convs, runsPerLeg, lo, hi)
         }
         // TWO N→4N executor pairs tell the whole story on one socket:
         // 1×2 → 4×2 (2→8 cores) stays under the DRAM-bus saturation
@@ -533,73 +596,25 @@ object Bench {
         // legs spread ±15% (box scheduling state), and best-of-2 drew
         // 0.678/0.857/0.813 — the extra high-leg draw is the same
         // steal-robustness argument as the battery's min-over-reps,
-        // applied to the headline the rule grades.
-        pair("cluster", 2, 8, 4, 4096, clusterConvs, 2) + "," +
-          pair("cluster_linear", 1, 4, 2, 3072, clusterConvs,
-            sys.env.getOrElse("SPARK_GRAFT_LINEAR_RUNS", "3").toInt)
+        // applied to the headline the rule grades; `runs_per_leg` is
+        // recorded beside it.
+        val wide = pair("cluster", 2, 8, 4, 4096, clusterConvs, 2)
+        (wide, Some(pair("cluster_linear", 1, 4, 2, 3072, clusterConvs,
+          sys.env.getOrElse("SPARK_GRAFT_LINEAR_RUNS", "3").toInt)))
       } catch {
-        case e: Throwable =>
-          s""""cluster":{"error":${jsonStr(e.toString.take(200))}}"""
+        case e: Throwable => (ClusterError(e.toString.take(200)), None)
       }
 
-    val qs = results.map { case (k, v) => jsonStr(k) + ":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val queriesSec = results.values.sum
-    // North-rule headline, promoted to the top level so a naive parser of
-    // the summary block reads the ENGINE's N→4N number (saturation-free
-    // 1×2 → 4×2 executor-JVM spark-submit pair), not the box's DRAM-bus
-    // ceiling that caps every within-socket pair (VERDICT r4 task #1).
-    val linearSummary = (linearEff, linearRuns) match {
-      case (Some(e), Some((lo, hi))) =>
-        s""""scaling_efficiency_n_to_4n_executors":${f"$e%.3f"},""" +
-          s""""scaling_n_to_4n_tps_low_runs":[${lo.map(v => f"$v%.0f").mkString(",")}],""" +
-          s""""scaling_n_to_4n_tps_high_runs":[${hi.map(v => f"$v%.0f").mkString(",")}],""" +
-          s""""scaling_note":${jsonStr("scaling_efficiency_n_to_4n_executors is the " +
-            "saturation-free N->4N EXECUTOR measurement (cluster_linear: 1x2 -> 4x2 " +
-            "executor JVMs via literal spark-submit) and answers the north rule's " +
-            ">=0.8 bar; extraction.scaling_efficiency and the `cluster` 2x4 -> 8x4 " +
-            "pair saturate this box's single DRAM bus (ceiling = " +
-            "extraction.machine_membw_efficiency, measured in the same run) " +
-            "which a real multi-node 4N cluster does not replicate")},"""
-      case _ => ""
-    }
-    val json =
-      s"""{"metric":"turns_per_sec_extraction","value":${f"$thrHigh%.1f"},""" +
-      s""""unit":"turns/sec",""" + linearSummary +
-      s""""queries":$qs,"sf":${jsonStr(sfDir)},""" +
-      s""""extraction":{"turns":$nTurns,"convs":$nConvs,""" +
-      s""""cores_low":$lowCpus,"turns_per_sec_low":${f"$thrLow%.1f"},""" +
-      s""""cores_high":$cpus,"turns_per_sec_high":${f"$thrHigh%.1f"},""" +
-      s""""scaling_efficiency":${f"$efficiency%.3f"},""" +
-      s""""compute_turns_per_sec_low":${f"$cThrLow%.1f"},""" +
-      s""""compute_turns_per_sec_high":${f"$cThrHigh%.1f"},""" +
-      s""""compute_scaling_efficiency":${f"$computeEfficiency%.3f"},""" +
-      s""""shuffle_write_bytes_per_turn":${f"$shufPerTurn%.1f"},""" +
-      s""""zstd_level":$ZstdLevel,""" +
-      s""""reps_interleaved_best_of":$reps,""" +
-      s""""paired_efficiency_per_rep":[${pairedEffs.map(e => f"$e%.3f").mkString(",")}],""" +
-      s""""paired_efficiency_median":${f"$pairedMedian%.3f"},""" +
-      s""""machine_calibration_efficiency":${f"$calEfficiency%.3f"},""" +
-      s""""machine_membw_efficiency":${f"$memEfficiency%.3f"},""" +
-      s""""membw_low_gbps":${f"${memBest(lowCpus) / 1e9}%.1f"},""" +
-      s""""membw_high_gbps":${f"${memBest(cpus) / 1e9}%.1f"},""" +
-      s""""efficiency_vs_machine":${f"${efficiency / calEfficiency}%.3f"},""" +
-      s""""efficiency_vs_membw":${f"${efficiency / memEfficiency}%.3f"},""" +
-      s""""compute_efficiency_vs_machine":${f"${computeEfficiency / calEfficiency}%.3f"}},""" +
-      clusterJson + "," +
-      s""""battery_cal_before_gops":${f"$calBefore%.2f"},""" +
-      s""""battery_cal_after_gops":${f"$calAfter%.2f"},""" +
-      s""""query_warm_reps":$warmReps,""" +
-      s""""queries_total_sec":${f"$queriesSec%.2f"},""" +
-      s""""query_failures":$failuresJson,$knobsJson,""" +
-      s""""queries_cold_total_sec":${f"$coldTotal%.2f"}}"""
-
-    // the metrics JSON is the SOLE content of a fixed, well-known file so
-    // the driver's parse never fights sbt's [info]/[error] stream mixing;
-    // stdout still carries the same single line for humans/greps
-    val outFile = java.nio.file.Paths.get("target", "bench.json")
-    Files.createDirectories(outFile.getParent)
-    Files.write(outFile, (json + "\n").getBytes("UTF-8"))
+    val json = writeReport(battery.copy(value = Fixed(thrHigh, 1),
+      extraction = Some(Extraction(nTurns, nConvs, lowCpus, Fixed(thrLow, 1), cpus,
+        Fixed(thrHigh, 1), Fixed(efficiency, 3), Fixed(cThrLow, 1), Fixed(cThrHigh, 1),
+        Fixed(computeEfficiency, 3), Fixed(shufPerTurn, 1), ZstdLevel, reps, pairedFixed,
+        Fixed(pairedMedian, 3), Fixed(calEfficiency, 3), Fixed(memEfficiency, 3),
+        Fixed(memBest(lowCpus) / 1e9, 1), Fixed(memBest(cpus) / 1e9, 1),
+        Fixed(efficiency / calEfficiency, 3), Fixed(efficiency / memEfficiency, 3),
+        Fixed(computeEfficiency / calEfficiency, 3))),
+      cluster = Some(cluster)).withLinear(linear))
+    // stdout carries the same single line for humans/greps
     println(json)
 
     // tmpfs hygiene: RAM-backed scratch does not outlive the bench

@@ -5,10 +5,18 @@ import org.apache.spark.sql.SparkSession
 /** Scratch main: validates `local-cluster[n,cores,mem]` mode — real
   * separate executor JVMs, the honest sandbox stand-in for the north
   * rule's "N vs 4N executors" — and times the extraction compute pass
-  * (and optionally the full pipeline) on it.
+  * (and optionally the full pipeline) on it. Prints one [[Run]] JSON
+  * line per run, which `Bench` parses for its `cluster` block.
   * Args: nWorkers coresPerWorker [nConvs] [memMb] [nRuns] [full].
   */
 object ClusterProbe {
+
+  /** One timed run: `mode` is `full` (the whole extraction pipeline) or
+    * `compute` (the extraction pass alone); `tps` is turns per second.
+    */
+  final case class Run(mode: String, run: Int, workers: Int, cores: Int, turns: Long,
+      sec: Double, tps: Double)
+
   def main(args: Array[String]): Unit = {
     val nWorkers = args.headOption.map(_.toInt).getOrElse(2)
     val cores = args.lift(1).map(_.toInt).getOrElse(4)
@@ -57,25 +65,19 @@ object ClusterProbe {
       graft.extract.Extractor.extract(t.text).text.length.toLong)).reduce(_ + _)
 
     (1 to nRuns).foreach { i =>
-      if (fullJob) {
-        val out = s"/dev/shm/cluster-probe-out-$nWorkers-$i"
-        val t0 = System.nanoTime()
-        val stats = graft.pipeline.ExtractionPipeline.run(spark, turns,
+      val out = s"/dev/shm/cluster-probe-out-$nWorkers-$i"
+      val t0 = System.nanoTime()
+      val n =
+        if (fullJob) graft.pipeline.ExtractionPipeline.run(spark, turns,
           graft.pipeline.ExtractionPipeline.Config(out, nBuckets = 256,
-            waves = 1, resume = false))
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[cluster-probe] FULL run$i workers=$nWorkers cores=$cores " +
-          f"turns=${stats.turns} sec=$sec%.2f tps=${stats.turns / sec}%.0f")
-        deleteDir(out)
-      } else {
-        val t0 = System.nanoTime()
-        val n = turns.mapPartitions(_.map { t =>
+            waves = 1, resume = false)).turns
+        else turns.mapPartitions(_.map { t =>
           graft.extract.Extractor.extract(t.text); 1L
         }).reduce(_ + _)
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[cluster-probe] run$i workers=$nWorkers cores=$cores turns=$n " +
-          f"sec=$sec%.2f tps=${n / sec}%.0f")
-      }
+      val sec = (System.nanoTime() - t0) / 1e9
+      println(JsonCodec.write(Run(if (fullJob) "full" else "compute", i, nWorkers, cores,
+        n, sec, n / sec)))
+      if (fullJob) deleteDir(out)
     }
     spark.stop()
   }

@@ -20,8 +20,10 @@ object SparkEntry {
     * funnel) over the sf0.001 documents table; driver smoke-checks
     * rows > 0.
     */
-  def entry(spark: SparkSession): DataFrame = {
-    val dir = "/root/testdata/sf0.001"
+  def entry(spark: SparkSession): DataFrame = entry(spark, "/root/testdata/sf0.001")
+
+  /** [[entry]] over the documents table under `dir`. */
+  def entry(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.t(spark, dir, "documents")
     // deterministic stand-in for the external embedding scorer
     // (SURVEY.md §7.3: external-model scores are pluggable columns)

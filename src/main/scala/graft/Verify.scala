@@ -2,7 +2,7 @@ package graft
 import graft.pipeline.TableIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json for the DuckDB compare and knobs.json. */
 object Verify {
@@ -44,14 +44,12 @@ object Verify {
 
   /** The dump's two JSON files beside the query outputs: `oracle_sql.json`,
     * each battery query's DuckDB SQL, and `knobs.json`, the effective knob
-    * values the outputs were computed under ([[Bench.knobsObject]], the
-    * same object bench.json carries as `"knobs"`).
+    * values the outputs were computed under ([[Bench.knobs]], the same
+    * object bench.json carries as `"knobs"`).
     */
   def writeArtifacts(outDir: String): Unit = {
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Bench.jsonStr(k)}: ${Bench.jsonStr(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Files.writeString(Paths.get(s"$outDir/knobs.json"), Bench.knobsObject)
+    JsonCodec.writeFile(Paths.get(outDir, "oracle_sql.json"), SparkEntry.oracleSql)
+    JsonCodec.writeFile(Paths.get(outDir, "knobs.json"), Bench.knobs)
   }
 
   /** Write one query's result to `$outDir/$name` as parquet, after

@@ -34,19 +34,6 @@ final case class ExtractedTurn(
     skip_reason: String,
     bucket: Int)
 
-/** One chunk of a turn's extracted text (reference chunker F4 semantics,
-  * `app/processing/chunker.py:223-270`), with exact source spans into the
-  * EXTRACTED text (the reference only estimates positions).
-  */
-final case class TurnChunk(
-    conv_id: String,
-    turn_idx: Int,
-    chunk_index: Int,
-    content: String,
-    start: Int,
-    end: Int,
-    bucket: Int)
-
 /** Chunk payload carried as an ARRAY COLUMN next to its extracted turn in
   * the single-pass pipeline (chunks computed inside the same mapPartitions
   * as extraction, exploded at write — no read-back scan, no second
@@ -61,22 +48,6 @@ final case class StructChunkLite(
     page: Int,
     section_boundary: Boolean,
     section_heading: String)
-
-/** One structure-aware chunk (reference `chunk_with_structure` F6,
-  * `app/processing/chunker.py:106-221` — the ingestion default,
-  * `document_service.py:249-252`): heading-delimited sections, small
-  * sections kept whole with `section_boundary = true`, large sections
-  * overlap-split with the heading re-prefixed as context.
-  */
-final case class StructTurnChunk(
-    conv_id: String,
-    turn_idx: Int,
-    chunk_index: Int,
-    content: String,
-    page: Int,
-    section_boundary: Boolean,
-    section_heading: String,
-    bucket: Int)
 
 /** One embedded chunk (reference `EmbeddedChunk`, `app/models/chunk.py:
   * 44-49`: chunk + embedding + modality). The embedding column is the

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.security.MessageDigest
 import java.time.Instant
@@ -87,9 +86,4 @@ object FileStore {
 
   def delete(root: String, fileId: String, filename: String): Boolean =
     Files.deleteIfExists(storagePath(root, fileId, filename))
-
-  /** Convenience for text payloads (the transcript-turn case). */
-  def saveText(root: String, fileId: String, filename: String,
-      text: String): FileMeta =
-    save(root, fileId, filename, text.getBytes(StandardCharsets.UTF_8))
 }

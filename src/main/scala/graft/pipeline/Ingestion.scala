@@ -81,29 +81,27 @@ object Ingestion {
     v
   }
 
-  /** Embeddings dataset over a pipeline output's chunks table (one narrow
-    * pass, no shuffle; bucket carried through from the source).
+  /** EMBEDDING stage: chunks table → embeddings table (one narrow pass,
+    * no shuffle; bucket-partitioned like the source). Returns the rows
+    * written, counted by the write's own tasks (no read-back scan).
     */
-  private def embeddedChunks(
-      spark: SparkSession, pipelineOut: String, dim: Int) = {
+  def embedChunks(spark: SparkSession, outDir: String, dim: Int = DefaultDim): Long = {
     import spark.implicits._
+    // a result-stage accumulator: Spark applies each partition's update
+    // once, however often its task is retried
+    val written = spark.sparkContext.longAccumulator("embedded chunks")
     spark.read.schema(ExtractionPipeline.ChunksReadSchema.add("bucket", IntegerType))
-      .parquet(ExtractionPipeline.chunksDir(pipelineOut))
+      .parquet(ExtractionPipeline.chunksDir(outDir))
       .select(col("conv_id"), col("turn_idx"), col("chunk_index"),
         col("content"), col("bucket"))
       .as[(String, Int, Int, String, Int)]
       .mapPartitions(_.map { case (cid, tidx, cidx, content, bucket) =>
+        written.add(1L)
         ChunkEmbedding(cid, tidx, cidx, "text", hashedEmbedding(content, dim), bucket)
       })
-  }
-
-  /** EMBEDDING stage: chunks table → embeddings table (one narrow pass,
-    * no shuffle; bucket-partitioned like the source).
-    */
-  def embedChunks(spark: SparkSession, outDir: String, dim: Int = DefaultDim): Long = {
-    embeddedChunks(spark, outDir, dim).write.mode("overwrite").partitionBy("bucket")
+      .write.mode("overwrite").partitionBy("bucket")
       .parquet(embeddingsDir(outDir))
-    spark.read.schema(EmbeddingsReadSchema).parquet(embeddingsDir(outDir)).count()
+    written.value
   }
 
   /** STORING stage (keyword side): chunks table → BM25 postings/doclens

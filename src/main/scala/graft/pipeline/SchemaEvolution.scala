@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets
+import com.fasterxml.jackson.annotation.{JsonProperty, JsonPropertyOrder}
+import graft.JsonCodec
+
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
@@ -19,7 +21,10 @@ import org.apache.spark.sql.functions.{col, lit}
   * reads backfill NULL). `TableIO`'s parquet-name emulation could only do
   * the add half (round-2 verdict gap); this sidecar carries the id
   * mapping as `schema-v<id>.json` next to each `manifest-v<id>.json`,
-  * with the same atomic-swap commit discipline.
+  * with the same atomic-swap commit discipline. Its format
+  * ([[JsonCodec]]): `{"last_assigned_id":<n>,"fields":[<field>,…]}`,
+  * each field `{"id":…,"name":"…"}` plus `"widened":"bigint"|"double"`
+  * when declared.
   *
   * Read strategy (`readMerged`): group committed buckets by the snapshot
   * that WROTE them (derivable from the retained manifest history — each
@@ -59,7 +64,9 @@ object SchemaEvolution {
     * would compute the same max+1 id and resurrect the dropped data
     * (caught by `SchemaEvolutionSpec`'s re-add round-trip).
     */
-  final case class TableSchema(fields: Vector[Field], lastAssignedId: Int) {
+  @JsonPropertyOrder(Array("last_assigned_id", "fields"))
+  final case class TableSchema(fields: Vector[Field],
+      @JsonProperty("last_assigned_id") lastAssignedId: Int) {
     require(fields.map(_.id).distinct.size == fields.size, "duplicate field id")
     require(fields.map(_.name).distinct.size == fields.size, "duplicate column name")
     require(fields.forall(_.id <= lastAssignedId),
@@ -122,8 +129,7 @@ object SchemaEvolution {
 
   /** Record `schema` as snapshot `snapshotId`'s schema (atomic swap). */
   def commitSchema(tableDir: String, snapshotId: Long, schema: TableSchema): Unit =
-    TableIO.writeAtomically(schemaPath(tableDir, snapshotId),
-      render(schema).getBytes(StandardCharsets.UTF_8))
+    JsonCodec.writeFile(schemaPath(tableDir, snapshotId), schema)
 
   /** The schema in force AT snapshot `id`: the newest committed schema
     * with version ≤ id (schemas only change on commits that declare one).
@@ -137,11 +143,8 @@ object SchemaEvolution {
           n.stripPrefix("schema-v").stripSuffix(".json").toLongOption
         case _ => None
       }.toVector)
-    versions.filter(_ <= id).sorted.lastOption.flatMap { v =>
-      try Some(parse(new String(Files.readAllBytes(schemaPath(tableDir, v)),
-        StandardCharsets.UTF_8)))
-      catch { case scala.util.control.NonFatal(_) => None }
-    }
+    versions.filter(_ <= id).sorted.lastOption
+      .flatMap(v => JsonCodec.readFile[TableSchema](schemaPath(tableDir, v)))
   }
 
   /** bucket → snapshot id that committed it (its writer). The primary
@@ -214,25 +217,5 @@ object SchemaEvolution {
         f.widened.fold(lit(null))(t => lit(null).cast(t)).as(f.name))
       spark.range(0).select(cols: _*)
     } else parts.reduceLeft(_ unionByName _)
-  }
-
-  // -- sidecar JSON (same hand-rolled flat style as TableIO) -----------------
-
-  private def render(s: TableSchema): String =
-    s.fields.map { f =>
-      val w = f.widened.fold("")(t => s""","widened":"$t"""")
-      s"""{"id":${f.id},"name":"${f.name}"$w}"""
-    }.mkString(s"""{"last_assigned_id":${s.lastAssignedId},"fields":[""", ",", "]}")
-
-  private val FieldRe =
-    """\{"id":(\d+),"name":"([A-Za-z_][A-Za-z0-9_]*)"(?:,"widened":"(bigint|double)")?\}""".r
-  private val LastIdRe = """"last_assigned_id":(\d+)""".r
-
-  private def parse(s: String): TableSchema = {
-    val fields = FieldRe.findAllMatchIn(s)
-      .map(m => Field(m.group(1).toInt, m.group(2), Option(m.group(3)))).toVector
-    val last = LastIdRe.findFirstMatchIn(s).map(_.group(1).toInt)
-      .getOrElse((fields.map(_.id) :+ 0).max)
-    TableSchema(fields, last)
   }
 }

@@ -1,8 +1,9 @@
 package graft.pipeline
 
+import com.fasterxml.jackson.annotation.JsonProperty
+import graft.JsonCodec
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
@@ -24,6 +25,10 @@ import scala.jdk.CollectionConverters._
   * `readMerged` remaps/prunes/backfills every bucket to the current
   * schema by id. With a real Iceberg catalog both drop in unchanged.
   *
+  * Manifest format ([[JsonCodec]]):
+  * `{"snapshot_id":<id>,"completed":[<entry>,…]}`, entries in bucket
+  * order, each `{"bucket":…,"rows":…,"bytes":…,"wall_ms":…,"writer":…}`.
+  *
   * Commit protocol: write JSON to `manifest.json.tmp`, then atomic
   * `Files.move(..., ATOMIC_MOVE)` over `manifest.json` — readers never see
   * a torn manifest (same single-file-swap discipline Iceberg uses for its
@@ -36,10 +41,11 @@ object TableIO {
     * schema attribution ([[SchemaEvolution.writerSnapshots]]) survives
     * [[expireSnapshots]] deleting the writer's own manifest file. -1 =
     * legacy entry predating the stamp (attribution falls back to
-    * first-retained-snapshot derivation).
+    * first-retained-snapshot derivation); an entry without `"writer"`
+    * reads as -1.
     */
-  final case class BucketEntry(bucket: Int, rows: Long, bytes: Long, wallMs: Long,
-      writer: Long = -1L)
+  final case class BucketEntry(bucket: Int, rows: Long, bytes: Long,
+      @JsonProperty("wall_ms") wallMs: Long, writer: Long = -1L)
 
   final case class Manifest(
       snapshotId: Long,
@@ -49,22 +55,22 @@ object TableIO {
 
   val Empty: Manifest = Manifest(0L, Map.empty)
 
+  /** A manifest as its file holds it: the entries as a list. */
+  private final case class ManifestFile(
+      @JsonProperty("snapshot_id") snapshotId: Long, completed: Seq[BucketEntry])
+
+  private def readManifest(p: Path): Option[Manifest] =
+    JsonCodec.readFile[ManifestFile](p)
+      .map(f => Manifest(f.snapshotId, f.completed.map(e => e.bucket -> e).toMap))
+
   private def manifestPath(tableDir: String): Path =
     Paths.get(tableDir, "manifest.json")
 
-  def read(tableDir: String): Manifest = {
-    val p = manifestPath(tableDir)
-    if (!Files.exists(p)) return Empty
-    // decode leniently: `readAllLines` THROWS MalformedInputException on
-    // invalid UTF-8, so a bit-flipped manifest would kill resume instead
-    // of degrading to re-processing (found by TableIOFuzzSpec). The
-    // String constructor replaces malformed sequences and never throws.
-    val content =
-      try new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      catch { case scala.util.control.NonFatal(_) => return Empty }
-    try parse(content)
-    catch { case scala.util.control.NonFatal(_) => Empty }
-  }
+  /** The live manifest; Empty when it is absent, torn or corrupted, so
+    * resume degrades to re-processing instead of failing.
+    */
+  def read(tableDir: String): Manifest =
+    readManifest(manifestPath(tableDir)).getOrElse(Empty)
 
   private def snapshotPath(tableDir: String, id: Long): Path =
     Paths.get(tableDir, s"manifest-v$id.json")
@@ -80,7 +86,8 @@ object TableIO {
     // buckets re-listed from prev keep their original stamp
     val next = Manifest(id,
       prev.completed ++ done.map(e => e.bucket -> e.copy(writer = id)))
-    writeAtomically(manifestPath(tableDir), render(next).getBytes(StandardCharsets.UTF_8))
+    JsonCodec.writeFile(manifestPath(tableDir),
+      ManifestFile(id, next.completed.values.toSeq.sortBy(_.bucket)))
     // history copy strictly AFTER the atomic swap: a crash between the
     // two then loses only the snapshot file (readAt → Empty), never
     // publishes an id the table never committed — the reverse order
@@ -109,12 +116,8 @@ object TableIO {
     * once and never rewritten, so the bucket set of an old manifest
     * exactly reproduces that snapshot's table contents.
     */
-  def readAt(tableDir: String, id: Long): Manifest = {
-    val p = snapshotPath(tableDir, id)
-    if (!Files.exists(p)) return Empty
-    try parse(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-    catch { case scala.util.control.NonFatal(_) => Empty }
-  }
+  def readAt(tableDir: String, id: Long): Manifest =
+    readAtStrict(tableDir, id).getOrElse(Empty)
 
   /** [[readAt]] that DISTINGUISHES "snapshot absent/torn" (None) from a
     * committed empty manifest. Consumers whose correctness depends on
@@ -122,23 +125,11 @@ object TableIO {
     * point-in-time degradable reads — must use this: a torn
     * `manifest-v<id>.json` (the documented [[commit]] crash window)
     * degrading to Empty would silently turn "delta since id" into
-    * "everything".
+    * "everything". The decode is strict, so a truncated file reads as
+    * None, never as a partial bucket set.
     */
-  def readAtStrict(tableDir: String, id: Long): Option[Manifest] = {
-    val p = snapshotPath(tableDir, id)
-    if (!Files.exists(p)) return None
-    val raw =
-      try new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      catch { case scala.util.control.NonFatal(_) => return None }
-    val m =
-      try parse(raw)
-      catch { case scala.util.control.NonFatal(_) => return None }
-    // integrity: snapshot files are only ever produced by render(), so
-    // an intact file round-trips byte-for-byte; a TRUNCATED file would
-    // otherwise regex-parse to a silently PARTIAL bucket set — the
-    // worst failure mode for a delta (missing rows, no error)
-    if (render(m) == raw) Some(m) else None
-  }
+  def readAtStrict(tableDir: String, id: Long): Option[Manifest] =
+    readManifest(snapshotPath(tableDir, id))
 
   /** Expire old snapshots, keeping the newest `keepLast` (Iceberg's
     * `expireSnapshots` emulation — bounds metadata growth on a table
@@ -203,30 +194,5 @@ object TableIO {
         .toVector)
       history.foreach(Files.delete)
     }
-  }
-
-  // -- tiny hand-rolled JSON (flat, numeric-only payload; no deps) ----------
-
-  private def render(m: Manifest): String = {
-    val entries = m.completed.values.toSeq.sortBy(_.bucket).map { e =>
-      s"""{"bucket":${e.bucket},"rows":${e.rows},"bytes":${e.bytes},""" +
-        s""""wall_ms":${e.wallMs},"writer":${e.writer}}"""
-    }.mkString("[", ",", "]")
-    s"""{"snapshot_id":${m.snapshotId},"completed":$entries}"""
-  }
-
-  private val EntryRe =
-    """\{"bucket":(\d+),"rows":(\d+),"bytes":(\d+),"wall_ms":(\d+)(?:,"writer":(-?\d+))?\}""".r
-  private val SnapRe = """"snapshot_id":(\d+)""".r
-
-  private def parse(s: String): Manifest = {
-    val snap = SnapRe.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(0L)
-    val entries = EntryRe.findAllMatchIn(s).map { m =>
-      val e = BucketEntry(m.group(1).toInt, m.group(2).toLong,
-        m.group(3).toLong, m.group(4).toLong,
-        Option(m.group(5)).map(_.toLong).getOrElse(-1L))
-      e.bucket -> e
-    }.toMap
-    Manifest(snap, entries)
   }
 }

@@ -1,14 +1,14 @@
 package graft.streaming
 
+import com.fasterxml.jackson.annotation.JsonProperty
+import graft.JsonCodec
 import graft.model.Turn
-import graft.pipeline.TableIO
 import graft.pipeline.TableIO.deleteTree
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -34,8 +34,9 @@ import scala.jdk.CollectionConverters._
   *    globally consistent across the stream's lifetime.
   *
   * Crash safety: shards and fingerprints are partitioned by batch id;
-  * the state file `state/v<batch>.json` is written LAST via tmp +
-  * atomic move and doubles as the commit marker. Replay of a committed
+  * the state file `state/v<batch>.json`
+  * (`{"batch":…,"cursor":…,"bloom":[<256 words>]}`, [[JsonCodec]]) is
+  * written LAST via tmp + atomic move and doubles as the commit marker. Replay of a committed
   * batch is a no-op; replay of an uncommitted one scrubs its
   * partitions and redoes the work — exactly-once end to end.
   */
@@ -50,27 +51,19 @@ object StreamingCorpusBuild {
   def fingerprintsDir(buildDir: String): String = s"$buildDir/_history/fingerprints"
   private def stateDir(buildDir: String) = Paths.get(buildDir, "_history", "state")
 
-  final case class State(batchId: Long, cursor: Long, bloom: Array[Long])
+  final case class State(@JsonProperty("batch") batchId: Long, cursor: Long,
+      bloom: Array[Long])
 
-  private def render(s: State): String =
-    s"""{"batch":${s.batchId},"cursor":${s.cursor},"bloom":[${s.bloom.mkString(",")}]}"""
+  private def emptyState = State(-1L, 0L, new Array[Long](BloomWords))
 
-  private def parse(raw: String): Option[State] = {
-    val m = """\{"batch":(\d+),"cursor":(\d+),"bloom":\[([-0-9,]*)\]\}""".r
-    raw match {
-      case m(b, c, ws) =>
-        val words = if (ws.isEmpty) Array.empty[Long]
-          else ws.split(',').map(_.toLong)
-        if (words.length == BloomWords) Some(State(b.toLong, c.toLong, words))
-        else None
-      case _ => None
-    }
-  }
+  /** Record `st` as batch `st.batchId`'s committed state (atomic swap). */
+  private[graft] def commitState(buildDir: String, st: State): Unit =
+    JsonCodec.writeFile(stateDir(buildDir).resolve(s"v${st.batchId}.json"), st)
 
   /** Latest committed state (empty filter, zero cursor before batch 0). */
   def lastState(buildDir: String): State = {
     val d = stateDir(buildDir)
-    if (!Files.isDirectory(d)) return State(-1L, 0L, new Array[Long](BloomWords))
+    if (!Files.isDirectory(d)) return emptyState
     val versions = scala.util.Using.resource(Files.list(d))(_.iterator().asScala
       .map(_.getFileName.toString)
       .flatMap { n =>
@@ -78,11 +71,10 @@ object StreamingCorpusBuild {
           n.stripPrefix("v").stripSuffix(".json").toLongOption
         else None
       }.toVector.sorted)
-    versions.reverse.iterator.flatMap { id =>
-      try parse(new String(Files.readAllBytes(d.resolve(s"v$id.json")),
-        StandardCharsets.UTF_8))
-      catch { case scala.util.control.NonFatal(_) => None }
-    }.nextOption().getOrElse(State(-1L, 0L, new Array[Long](BloomWords)))
+    versions.reverse.iterator
+      .flatMap(id => JsonCodec.readFile[State](d.resolve(s"v$id.json")))
+      .find(_.bloom.length == BloomWords)
+      .getOrElse(emptyState)
   }
 
   private def committed(buildDir: String, batchId: Long): Boolean =
@@ -188,8 +180,7 @@ object StreamingCorpusBuild {
     clean.unpersist(); packed.unpersist()
 
     // commit: state write is the atomic marker, strictly last
-    TableIO.writeAtomically(stateDir(buildDir).resolve(s"v$batchId.json"),
-      render(State(batchId, st.cursor + keptTokens, bloom)).getBytes(StandardCharsets.UTF_8))
+    commitState(buildDir, State(batchId, st.cursor + keptTokens, bloom))
   }
 
   /** Continuous build: wire a streaming Dataset[Turn] through

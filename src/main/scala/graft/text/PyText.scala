@@ -91,27 +91,6 @@ object PyText {
     hasCased
   }
 
-  /** Python `re.split(pattern, s)` including zero-width matches (the
-    * chunker's sentence pattern ends in a zero-width `(?<=[.!?])$`).
-    * After a zero-width match the scan resumes one char later, as CPython
-    * does, so the loop terminates.
-    */
-  def reSplit(p: Pattern, s: String): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    val m = p.matcher(s)
-    var last = 0
-    var from = 0
-    var continue = true
-    while (continue && from <= s.length && m.find(from)) {
-      out += s.substring(last, m.start)
-      last = m.end
-      from = if (m.end == m.start) m.end + 1 else m.end
-      if (from > s.length) continue = false
-    }
-    out += s.substring(last)
-    out.result()
-  }
-
   /** Compile with Python-equivalent class semantics: `\s`/`\w`/`\d`
     * unicode-aware, `$` recognizing only `\n` as a line terminator.
     */

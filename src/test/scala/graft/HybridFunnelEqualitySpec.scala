@@ -3,7 +3,7 @@ package graft
 import graft.queries.{RetrievalQueries, Rounding}
 import graft.queries.Tables.t
 import graft.retrieval.Retrieval
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,9 +39,25 @@ class HybridFunnelEqualitySpec extends AnyFunSuite {
   }
 
   test("rare variation terms: the keyed funnel returns the per-variation funnel's rows") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("hybrid-funnel").toString
-    val terms = PerVariationFunnel.Variations.flatMap(_.split(" "))
+    val docs = RareTermsCorpus.write(spark, dir,
+      PerVariationFunnel.Variations.flatMap(_.split(" ")))
+    val positive = Retrieval.bm25ScoresFromIndex(
+        Retrieval.postings(docs, "doc_id", "text"), Retrieval.corpusStats(docs, "doc_id", "text"),
+        "doc_id", PerVariationFunnel.Variations.zipWithIndex.map(_.swap))
+      .filter(col("score") > 0).select("v").distinct().count()
+    assert(positive == 3, "every variation has a keyword list")
+    assertSameRows(dir)
+  }
+}
+
+/** A 240-document `documents` table whose filler vocabulary is common
+  * and whose `terms` are rare, so a query over the terms has positive
+  * BM25 scores (the TESTDATA corpora's do not).
+  */
+object RareTermsCorpus {
+  def write(spark: SparkSession, dir: String, terms: Seq[String]): DataFrame = {
+    import spark.implicits._
     val docs = (0L until 240L).map { i =>
       val filler = (0 until 6).map(j => s"w${(i * 7 + j * 13) % 61}")
       val rare = terms.zipWithIndex.collect {
@@ -50,12 +66,7 @@ class HybridFunnelEqualitySpec extends AnyFunSuite {
       (i, (filler ++ rare).mkString(" "))
     }.toDF("doc_id", "text")
     docs.write.parquet(s"$dir/documents.parquet")
-    val positive = Retrieval.bm25ScoresFromIndex(
-        Retrieval.postings(docs, "doc_id", "text"), Retrieval.corpusStats(docs, "doc_id", "text"),
-        "doc_id", PerVariationFunnel.Variations.zipWithIndex.map(_.swap))
-      .filter(col("score") > 0).select("v").distinct().count()
-    assert(positive == 3, "every variation has a keyword list")
-    assertSameRows(dir)
+    docs
   }
 }
 

@@ -51,6 +51,7 @@ class IngestionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val chunks = spark.read.parquet(ExtractionPipeline.chunksDir(out))
     val emb = spark.read.parquet(Ingestion.embeddingsDir(out))
     assert(nEmb == chunks.count(), "one embedding per chunk")
+    assert(nEmb == emb.count(), "the returned count is the embeddings table's")
     assert(emb.select("conv_id", "turn_idx", "chunk_index").distinct().count() == nEmb)
     // all non-empty chunks produce unit vectors
     val norms = emb.select(expr(
@@ -67,12 +68,13 @@ class IngestionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(hits.count() > 0)
   }
 
-  /** Spark jobs of one `Ingestion.run`: the embeddings write, its row
-    * count, and the doclens and postings writes, each one narrow pass
-    * over declared-schema reads (9 while every read inferred its schema
-    * and the postings were a grouped count behind an exchange).
+  /** Spark jobs of one `Ingestion.run`: the embeddings write, which
+    * counts its own rows, and the doclens and postings writes, each one
+    * narrow pass over declared-schema reads (9 while every read inferred
+    * its schema and the postings were a grouped count behind an
+    * exchange; 5 while the embeddings were read back to be counted).
     */
-  private val RunJobs = 5
+  private val RunJobs = 4
 
   test("Ingestion.run runs in pinned jobs and writes postings without an exchange") {
     val out = Files.createTempDirectory("ingest-jobs").toString

@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
 /** Keeps the program's entry points and environment knobs a reviewed
   * list: both allow-lists are EXACT, so a new `main` or `SPARK_GRAFT_*`
   * knob under `src/main/scala` — or a stale entry — fails here and shows
-  * up as a test diff.
+  * up as a test diff. JSON goes through one codec: one file builds a
+  * Jackson mapper.
   */
 class MainSurfaceGuardSpec extends AnyFunSuite {
 
@@ -47,5 +48,13 @@ class MainSurfaceGuardSpec extends AnyFunSuite {
       "SPARK_GRAFT_LINEAR_RUNS", "SPARK_GRAFT_NO_AQE", "SPARK_GRAFT_NO_SHARE",
       "SPARK_GRAFT_QUERY_REPS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_SKIP_CLUSTER",
       "SPARK_GRAFT_SKIP_QUERIES"))
+  }
+
+  test("a Jackson mapper is built in one src/main file: the JSON codec") {
+    val Mapper = """\bnew\s+(?:ObjectMapper|JsonMapper)\b|\bJsonMapper\s*\.\s*builder\b""".r
+    val builders = sources.collect {
+      case (p, src) if Mapper.findFirstIn(src).nonEmpty => root.relativize(p).toString
+    }
+    assert(builders == Seq("graft/JsonCodec.scala"))
   }
 }

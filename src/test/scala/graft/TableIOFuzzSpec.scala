@@ -85,4 +85,20 @@ class TableIOFuzzSpec extends AnyFunSuite {
     writeManifest(dir, Array.emptyByteArray)
     assert(TableIO.read(dir) == TableIO.Empty)
   }
+
+  test("every strict prefix of a committed manifest reads as Empty, and as None strictly") {
+    val dir = Files.createTempDirectory("tio").toString
+    TableIO.commit(dir, TableIO.Empty,
+      (0 until 6).map(b => TableIO.BucketEntry(b, b * 100L, b * 1000L, b.toLong)))
+    val snapshot = Paths.get(dir, "manifest-v1.json")
+    val full = Files.readAllBytes(snapshot)
+    assert(TableIO.readAtStrict(dir, 1L).map(_.completed.keySet) == Some((0 until 6).toSet))
+    (0 until full.length).foreach { n =>
+      Files.write(snapshot, full.take(n))
+      assert(TableIO.readAt(dir, 1L) == TableIO.Empty, s"prefix of $n bytes")
+      assert(TableIO.readAtStrict(dir, 1L).isEmpty, s"prefix of $n bytes")
+      writeManifest(dir, full.take(n))
+      assert(TableIO.read(dir) == TableIO.Empty, s"live manifest prefix of $n bytes")
+    }
+  }
 }

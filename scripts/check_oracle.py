@@ -11,10 +11,8 @@ only the named queries (comma-separated, as Verify's filter).
 
 DuckDB runs under a memory limit of half the memory this process may use
 and spills to a temporary directory beyond it. The limit covers only
-DuckDB's buffer manager: the LSH-pair graph oracles (q_dbscan,
-q_boruvka_mst, q_mutual_knn, q_neighborhood_growth) allocate past it,
-over 7 GB within seconds even at sf0.001, so leave them out of the filter
-on a small host, or cap the process (`ulimit -v`) to fail fast.
+DuckDB's buffer manager; cap the process (`ulimit -v`) to make an oracle
+that allocates past it fail fast instead of meeting the OOM killer.
 """
 
 import json

@@ -551,15 +551,50 @@ object CurationQueries {
   private def bpeBest(pairs: DataFrame): DataFrame =
     pairs.orderBy(desc("freq"), asc("p")).limit(1)
 
+  /** A word's characters double-separator-joined: "the" -> "_t__h__e_".
+    * DuckDB twin: [[bpeInitSql]].
+    */
+  private def bpeInitTok: Column =
+    expr("substring(concat('_', regexp_replace(word, '(.)', '$1__')), 1, length(word)*3)")
+
+  /** DuckDB twin of [[bpeInitTok]]: the CTE `t0(carry… tok, wc)` over the
+    * (word, wc) relation `from`.
+    */
+  private def bpeInitSql(carry: String, from: String): String =
+    s"""t0 AS (
+       |  SELECT ${carry}substr('_' || regexp_replace(word, '(.)', '\\1__', 'g'),
+       |                1, length(word)*3) AS tok, wc
+       |  FROM $from)""".stripMargin
+
+  /** DuckDB twin of three rounds of [[bpePairs]], [[bpeBest]] and
+    * [[bpeApplyKeyed]] over `t0`: round i's `pc<i>` counts the pairs of
+    * `t<i-1>`, `b<i>` keeps the best one and `t<i>` applies it. `carry`
+    * (e.g. `"word, "`) lists the columns each `t<i>` carries through
+    * besides `tok` and `wc`.
+    */
+  private def bpeRoundsSql(carry: String): String = (1 to 3).map { i =>
+    s"""pc$i AS (
+       |  SELECT p, CAST(sum(wc) AS BIGINT) AS freq FROM (
+       |    SELECT unnest(list_transform(generate_series(1, len(a)-1),
+       |      j -> '_' || a[j] || '__' || a[j+1] || '_')) AS p, wc
+       |    FROM (SELECT string_split(substr(tok, 2, length(tok)-2), '__') AS a, wc
+       |          FROM t${i - 1})
+       |    WHERE len(a) >= 2)
+       |  GROUP BY 1),
+       |b$i AS (SELECT p, freq FROM pc$i ORDER BY freq DESC, p LIMIT 1),
+       |t$i AS (
+       |  SELECT ${carry}replace(tok, (SELECT p FROM b$i),
+       |    '_' || replace(substr((SELECT p FROM b$i), 2,
+       |      length((SELECT p FROM b$i)) - 2), '__', '') || '_') AS tok, wc
+       |  FROM t${i - 1})""".stripMargin
+  }.mkString(",\n")
+
   private def qBpeMerges(s: SparkSession, dir: String): DataFrame = {
     val words = t(s, dir, "documents")
       .select(explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
       .filter(length(col("word")).between(2, 12))
       .groupBy("word").agg(count(lit(1)).as("wc"))
-    // chars double-separator-joined: "the" -> "_t__h__e_"
-    val t0 = words.select(
-      expr("substring(concat('_', regexp_replace(word, '(.)', '$1__')), 1, length(word)*3)").as("tok"),
-      col("wc"))
+    val t0 = words.select(bpeInitTok.as("tok"), col("wc"))
       .persist()
     var toks = t0
     val rounds = (1 to 3).map { r =>
@@ -573,40 +608,19 @@ object CurationQueries {
     rounds.reduce(_.unionAll(_)).orderBy("round")
   }
 
-  private val qBpeMergesSql = {
-    def round(i: Int): String =
-      s"""pc$i AS (
-         |  SELECT p, CAST(sum(wc) AS BIGINT) AS freq FROM (
-         |    SELECT unnest(list_transform(generate_series(1, len(a)-1),
-         |      j -> '_' || a[j] || '__' || a[j+1] || '_')) AS p, wc
-         |    FROM (SELECT string_split(substr(tok, 2, length(tok)-2), '__') AS a, wc
-         |          FROM t${i - 1})
-         |    WHERE len(a) >= 2)
-         |  GROUP BY 1),
-         |b$i AS (SELECT p, freq FROM pc$i ORDER BY freq DESC, p LIMIT 1),
-         |t$i AS (
-         |  SELECT replace(tok, (SELECT p FROM b$i),
-         |    '_' || replace(substr((SELECT p FROM b$i), 2,
-         |      length((SELECT p FROM b$i)) - 2), '__', '') || '_') AS tok, wc
-         |  FROM t${i - 1})""".stripMargin
+  private val qBpeMergesSql =
     s"""WITH words AS (
        |  SELECT word, count(*) AS wc FROM (
        |    SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
        |    FROM documents)
        |  WHERE length(word) BETWEEN 2 AND 12 GROUP BY 1),
-       |t0 AS (
-       |  SELECT substr('_' || regexp_replace(word, '(.)', '\\1__', 'g'),
-       |                1, length(word)*3) AS tok, wc
-       |  FROM words),
-       |${round(1)},
-       |${round(2)},
-       |${round(3)}
+       |${bpeInitSql("", "words")},
+       |${bpeRoundsSql("")}
        |SELECT round, replace(substr(p, 2, length(p)-2), '__', ' ') AS pair, freq
        |FROM (SELECT 1 AS round, p, freq FROM b1 UNION ALL
        |      SELECT 2, p, freq FROM b2 UNION ALL
        |      SELECT 3, p, freq FROM b3)
        |ORDER BY round""".stripMargin
-  }
 
   // --- BPE encode: apply the learned merges to the corpus -------------------
   //
@@ -628,9 +642,7 @@ object CurationQueries {
       .groupBy("source", "word").agg(count(lit(1)).as("cnt"))
       .persist()
     var enc = srcWords.groupBy("word").agg(sum("cnt").as("wc"))
-      .select(col("word"),
-        expr("substring(concat('_', regexp_replace(word, '(.)', '$1__')), 1, length(word)*3)").as("tok"),
-        col("wc"))
+      .select(col("word"), bpeInitTok.as("tok"), col("wc"))
       .persist()
     (1 to 3).foreach { _ =>
       val best = bpeBest(bpePairs(enc.select("tok", "wc"))).persist()
@@ -649,37 +661,15 @@ object CurationQueries {
       .orderBy("source")
   }
 
-  private val qBpeEncodeSql = {
-    // word-carrying twin of qBpeMergesSql's round(): same pair counting and
-    // greedy replace, but t_i keeps the word key for the encode join-back.
-    def round(i: Int): String =
-      s"""pc$i AS (
-         |  SELECT p, CAST(sum(wc) AS BIGINT) AS freq FROM (
-         |    SELECT unnest(list_transform(generate_series(1, len(a)-1),
-         |      j -> '_' || a[j] || '__' || a[j+1] || '_')) AS p, wc
-         |    FROM (SELECT string_split(substr(tok, 2, length(tok)-2), '__') AS a, wc
-         |          FROM t${i - 1})
-         |    WHERE len(a) >= 2)
-         |  GROUP BY 1),
-         |b$i AS (SELECT p, freq FROM pc$i ORDER BY freq DESC, p LIMIT 1),
-         |t$i AS (
-         |  SELECT word, replace(tok, (SELECT p FROM b$i),
-         |    '_' || replace(substr((SELECT p FROM b$i), 2,
-         |      length((SELECT p FROM b$i)) - 2), '__', '') || '_') AS tok, wc
-         |  FROM t${i - 1})""".stripMargin
+  private val qBpeEncodeSql =
     s"""WITH sw AS (
        |  SELECT source, word, CAST(count(*) AS BIGINT) AS cnt FROM (
        |    SELECT source, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
        |    FROM documents)
        |  WHERE length(word) BETWEEN 2 AND 12 GROUP BY 1, 2),
        |vocab AS (SELECT word, CAST(sum(cnt) AS BIGINT) AS wc FROM sw GROUP BY 1),
-       |t0 AS (
-       |  SELECT word, substr('_' || regexp_replace(word, '(.)', '\\1__', 'g'),
-       |                1, length(word)*3) AS tok, wc
-       |  FROM vocab),
-       |${round(1)},
-       |${round(2)},
-       |${round(3)},
+       |${bpeInitSql("word, ", "vocab")},
+       |${bpeRoundsSql("word, ")},
        |tc AS (
        |  SELECT word,
        |    (length(tok) - length(replace(tok, '__', ''))) // 2 + 1 AS ntok
@@ -690,7 +680,6 @@ object CurationQueries {
        |  CAST(sum(cnt * length(word)) - sum(cnt * ntok) AS BIGINT) AS saved
        |FROM sw JOIN tc USING (word)
        |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
 
   // --- trained linear quality probe (in-engine learning) --------------------
   //

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.queries.BatteryHelpers.{sqL2Long, sqL2LongSql}
 import graft.queries.Tables.t
-import graft.queries.TrainingDataQueries.{FpCte, PairVecsSql, L2qSql, bandCollisions,
+import graft.queries.TrainingDataQueries.{FpCte, bandCollisions,
   embFixed, lshJoinSql, lshPairDistsCtes, lshPairsCte}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -651,11 +651,7 @@ object ScaleQueries {
 
   private val qMutualKnnSql =
     s"""WITH ${TrainingDataQueries.BandSigsCte},
-       |${lshPairsCte("pr", "<>", PairVecsSql)},
-       |pd AS (
-       |  SELECT id_a, id_b,
-       |    $L2qSql AS dist
-       |  FROM pr),
+       |${lshPairDistsCtes("pd", "<>")},
        |kn AS (
        |  SELECT id_a, id_b, dist,
        |    row_number() OVER (PARTITION BY id_a ORDER BY dist, id_b) AS rk

@@ -159,11 +159,16 @@ object TrainingDataQueries {
       .select(col("doc_id"), explode(expr("graft_shingles(text)")).as("tok"))
   }
 
-  private val ShinglesCte =
-    """sh AS (
-      |  SELECT doc_id, unnest(list_distinct(list_transform(
-      |    generate_series(1, len(ts)-1), i -> ts[i] || ' ' || ts[i+1]))) AS tok
-      |  FROM toks WHERE len(ts) >= 2)""".stripMargin
+  /** DuckDB twin of [[bigramShingles]] over `toks`: the CTE `name`,
+    * with `slice` an extra predicate on the shingled docs (empty for all).
+    */
+  private def shinglesCte(name: String, slice: String): String =
+    s"""$name AS (
+       |  SELECT doc_id, unnest(list_distinct(list_transform(
+       |    generate_series(1, len(ts)-1), i -> ts[i] || ' ' || ts[i+1]))) AS tok
+       |  FROM toks WHERE len(ts) >= 2$slice)""".stripMargin
+
+  private val ShinglesCte = shinglesCte("sh", "")
 
   // --- train→holdout n-gram novelty (memorization / split-leakage audit) -----
   //
@@ -232,28 +237,38 @@ object TrainingDataQueries {
        |FROM per JOIN documents d USING (doc_id)
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Near-dup blocking: only docs in the same (lang, length-decile) block
-    * are compared — the standard trick that keeps the inverted-index
-    * self-join sub-quadratic (near-dups rarely cross language or differ
-    * 10× in length).
+  // --- near-dup kernels ------------------------------------------------------
+  //
+  // The shingle-pair, minhash-candidate and dedup-label blocks below are
+  // shared by the near-dup family (q_ngram_jaccard, q_containment,
+  // q_dedup_recall, the CC-label queries and the candidate-graph
+  // queries). Each is written once per engine, a Scala helper beside its
+  // DuckDB fragment, each naming the other; a pair must compute the same
+  // values bit for bit, so an edit to one needs the same edit to the other.
+
+  /** Shingle-pair counts within blocks of equal `key` columns: the
+    * (doc_b, doc_a, inter, ca, cb) rows of every doc pair (doc_a < doc_b)
+    * sharing at least one bigram shingle, with `inter` the shared count
+    * and `ca`/`cb` each side's shingle count. The inverted-index
+    * self-join costs Σ df(shingle)² per block, not N². DuckDB twin:
+    * [[shinglePairCtes]].
     */
-  private def qNgramJaccard(s: SparkSession, dir: String): DataFrame = {
+  private def shinglePairs(s: SparkSession, dir: String, key: Column*): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val docs = t(s, dir, "documents")
-      .select(col("doc_id"), col("text"),
-        col("lang"), floor(col("n_chars") / lit(200)).cast("int").as("lb"))
+    val docs = t(s, dir, "documents").select(Seq(col("doc_id"), col("text")) ++ key: _*)
+    val keys = docs.columns.drop(2).toSeq
     // persisted: consumed by the df-cap pass, both sides of the self-join
     // AND the size agg — without the cache the shingling explode re-runs
     val sh0 = docs
-      .select(col("doc_id"), col("lang"), col("lb"),
-        explode(expr("graft_shingles(text)")).as("tok"))
+      .select((col("doc_id") +: keys.map(col)) :+
+        explode(expr("graft_shingles(text)")).as("tok"): _*)
       .persist()
     // DF-CAP: drop corpus-frequent shingles BEFORE the inverted-index
     // self-join — its cost is Σ df(shingle)², so one "of the"-grade bigram
     // with df ~ N contributes N² pairs on its own at 100 TB. The cap
     // scales with the corpus (N/20, floor 20); dropped shingles leave the
-    // UNIVERSE too (per-doc sizes shrink with them), keeping the Jaccard
-    // a true set similarity over the capped shingle space.
+    // UNIVERSE too (per-doc sizes shrink with them), keeping the scores
+    // true set similarities over the capped shingle space.
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val capped = sh0.groupBy("tok").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
@@ -261,29 +276,28 @@ object TrainingDataQueries {
       .select("tok")
     val sh = sh0.join(broadcast(capped), Seq("tok"), "left_anti")
     val n = sh.groupBy("doc_id").agg(count(lit(1)).as("c"))
+    val sameBlock = keys.foldLeft(col("a.tok") === col("b.tok"))((c, k) =>
+      c && col(s"a.$k") === col(s"b.$k"))
     val pairs = sh.as("a").join(sh.as("b"),
-        col("a.tok") === col("b.tok") && col("a.lang") === col("b.lang") &&
-          col("a.lb") === col("b.lb") && col("a.doc_id") < col("b.doc_id"))
+        sameBlock && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("inter"))
     pairs
       .join(n.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("c", "ca"), "doc_a")
       .join(n.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("c", "cb"), "doc_b")
-      .withColumn("jacc",
-        Rounding.r(col("inter") / (col("ca") + col("cb") - col("inter")), 5))
-      .filter(col("jacc") >= 0.01)
-      .select("doc_a", "doc_b", "jacc")
-      .orderBy(desc("jacc"), col("doc_a"), col("doc_b"))
-      .limit(200)
   }
 
-  private val qNgramJaccardSql =
-    s"""WITH toksb AS (
-       |  SELECT doc_id, lang, CAST(n_chars // 200 AS INT) AS lb,
+  /** DuckDB twin of [[shinglePairs]]: CTEs ending in `n(doc_id, c)` and
+    * `p(doc_a, doc_b, inter)`. `keySel` selects the block key from
+    * `documents`, `key` names its columns.
+    */
+  private def shinglePairCtes(keySel: String, key: String*): String =
+    s"""toksb AS (
+       |  SELECT doc_id, $keySel,
        |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS ts
        |  FROM documents),
        |sh0 AS (
-       |  SELECT doc_id, lang, lb, unnest(list_distinct(list_transform(
+       |  SELECT doc_id, ${key.mkString(", ")}, unnest(list_distinct(list_transform(
        |    generate_series(1, len(ts)-1), i -> ts[i] || ' ' || ts[i+1]))) AS tok
        |  FROM toksb WHERE len(ts) >= 2),
        |nd AS (SELECT count(*) AS n_docs FROM toksb),
@@ -294,9 +308,26 @@ object TrainingDataQueries {
        |n AS (SELECT doc_id, count(*) AS c FROM sh GROUP BY 1),
        |p AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-       |  FROM sh a JOIN sh b ON a.tok = b.tok AND a.lang = b.lang
-       |    AND a.lb = b.lb AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
+       |  FROM sh a JOIN sh b ON a.tok = b.tok${key.map(k => s" AND a.$k = b.$k").mkString}
+       |    AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** Near-dup blocking: only docs in the same (lang, length-decile) block
+    * are compared — the standard trick that keeps the inverted-index
+    * self-join sub-quadratic (near-dups rarely cross language or differ
+    * 10× in length).
+    */
+  private def qNgramJaccard(s: SparkSession, dir: String): DataFrame =
+    shinglePairs(s, dir, col("lang"), floor(col("n_chars") / lit(200)).cast("int").as("lb"))
+      .withColumn("jacc",
+        Rounding.r(col("inter") / (col("ca") + col("cb") - col("inter")), 5))
+      .filter(col("jacc") >= 0.01)
+      .select("doc_a", "doc_b", "jacc")
+      .orderBy(desc("jacc"), col("doc_a"), col("doc_b"))
+      .limit(200)
+
+  private val qNgramJaccardSql =
+    s"""WITH ${shinglePairCtes("lang, CAST(n_chars // 200 AS INT) AS lb", "lang", "lb")}
        |SELECT doc_a, doc_b,
        |  floor((inter / (na.c + nb.c - inter)) * 1e5 + 0.5) / 1e5 AS jacc
        |FROM p JOIN n na ON p.doc_a = na.doc_id JOIN n nb ON p.doc_b = nb.doc_id
@@ -314,62 +345,22 @@ object TrainingDataQueries {
   // side's coverage instead, so a fully-quoted doc scores 1.0 at any
   // length ratio.
   //
-  // Scale shape: same df-capped inverted-index self-join as the Jaccard
-  // plan (cost Σdf² with df capped at max(20, N/20)), blocked on lang
-  // only — length blocking is semantically wrong here. The per-pair
-  // intersection count is one partial+final agg; sizes join back from a
-  // broadcast-sized per-doc count table.
-  private def qContainment(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val docs = t(s, dir, "documents")
-      .select(col("doc_id"), col("text"), col("lang"))
-    val sh0 = docs
-      .select(col("doc_id"), col("lang"),
-        explode(expr("graft_shingles(text)")).as("tok"))
-      .persist()
-    val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    val capped = sh0.groupBy("tok").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(nDocs))
-      .filter(col("df") > greatest(lit(20), col("n_docs") / 20))
-      .select("tok")
-    val sh = sh0.join(broadcast(capped), Seq("tok"), "left_anti")
-    val n = sh.groupBy("doc_id").agg(count(lit(1)).as("c"))
-    val pairs = sh.as("a").join(sh.as("b"),
-        col("a.tok") === col("b.tok") && col("a.lang") === col("b.lang") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    pairs
-      .join(n.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("c", "ca"), "doc_a")
-      .join(n.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("c", "cb"), "doc_b")
+  // Scale shape: the same df-capped inverted-index self-join as the
+  // Jaccard plan ([[shinglePairs]]), blocked on lang only — length
+  // blocking is semantically wrong here. The per-pair intersection count
+  // is one partial+final agg; sizes join back from a broadcast-sized
+  // per-doc count table.
+  private def qContainment(s: SparkSession, dir: String): DataFrame =
+    shinglePairs(s, dir, col("lang"))
       .withColumn("containment",
         Rounding.r(col("inter") / least(col("ca"), col("cb")), 5))
       .filter(col("containment") >= 0.5)
       .select("doc_a", "doc_b", "containment")
       .orderBy(desc("containment"), col("doc_a"), col("doc_b"))
       .limit(200)
-  }
 
   private val qContainmentSql =
-    s"""WITH toksb AS (
-       |  SELECT doc_id, lang,
-       |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS ts
-       |  FROM documents),
-       |sh0 AS (
-       |  SELECT doc_id, lang, unnest(list_distinct(list_transform(
-       |    generate_series(1, len(ts)-1), i -> ts[i] || ' ' || ts[i+1]))) AS tok
-       |  FROM toksb WHERE len(ts) >= 2),
-       |nd AS (SELECT count(*) AS n_docs FROM toksb),
-       |capped AS (
-       |  SELECT tok FROM sh0 CROSS JOIN nd GROUP BY tok, n_docs
-       |  HAVING count(*) > greatest(20, n_docs / 20)),
-       |sh AS (SELECT * FROM sh0 WHERE tok NOT IN (SELECT tok FROM capped)),
-       |n AS (SELECT doc_id, count(*) AS c FROM sh GROUP BY 1),
-       |p AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-       |  FROM sh a JOIN sh b ON a.tok = b.tok AND a.lang = b.lang
-       |    AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
+    s"""WITH ${shinglePairCtes("lang", "lang")}
        |SELECT doc_a, doc_b,
        |  floor((inter / least(na.c, nb.c)) * 1e5 + 0.5) / 1e5 AS containment
        |FROM p JOIN n na ON p.doc_a = na.doc_id JOIN n nb ON p.doc_b = nb.doc_id
@@ -382,8 +373,9 @@ object TrainingDataQueries {
   private val HashB = Seq(7L, 11L, 13L, 17L, 19L, 23L, 29L, 31L)
 
   /** LSH candidate pairs (doc_a < doc_b) from the banded minhashes over
-    * `dt` (the shingle table). Shared by the jaccard-verify query and
-    * the duplicate-clustering query.
+    * `dt` (the shingle table). Shared by the jaccard-verify query, the
+    * recall audit and the candidate-graph queries. DuckDB twin:
+    * [[minhashCandCtes]].
     */
   private[graft] def minhashCandidates(dt: DataFrame): DataFrame = {
     val withSid = dt.withColumn("sid", md5Sid(col("tok"), 10))
@@ -427,15 +419,18 @@ object TrainingDataQueries {
       .orderBy(desc("jacc"), col("doc_a"), col("doc_b"))
   }
 
-  /** Shared SQL CTE prefix ending in `cand(doc_a, doc_b)` — the DuckDB
-    * twin of [[minhashCandidates]].
+  /** Shared SQL CTE prefix ending in `dt(doc_id, tok)` (the shingles)
+    * and `cand(doc_a, doc_b)` — the DuckDB twin of [[minhashCandidates]]
+    * over [[bigramShingles]]. `slice` (e.g. `doc_id % 4 = 0`) keeps only
+    * the matching docs' shingles, in a CTE named `sh1`; empty keeps all.
     */
-  private def minhashCandCtes: String = {
+  private def minhashCandCtes(slice: String = ""): String = {
     val values = HashA.indices
       .map(i => s"(${i}, ${HashA(i)}, ${HashB(i)})").mkString(", ")
+    val (sh, where) = if (slice.isEmpty) ("sh", "") else ("sh1", s" AND $slice")
     s"""$TokensCte,
-       |$ShinglesCte,
-       |dt AS (SELECT doc_id, tok FROM sh),
+       |${shinglesCte(sh, where)},
+       |dt AS (SELECT doc_id, tok FROM $sh),
        |ws AS (SELECT doc_id, ${md5SidSql("tok", 10)} AS sid FROM dt),
        |params(i, a, b) AS (VALUES $values),
        |mh AS (
@@ -454,7 +449,7 @@ object TrainingDataQueries {
   }
 
   private def qMinhashLshSql: String = {
-    s"""WITH $minhashCandCtes,
+    s"""WITH ${minhashCandCtes()},
        |n AS (SELECT doc_id, count(*) AS c FROM dt GROUP BY 1),
        |inter AS (
        |  SELECT c.doc_a, c.doc_b, count(*) AS inter
@@ -609,28 +604,7 @@ object TrainingDataQueries {
   }
 
   private def qDedupRecallSql: String =
-    s"""WITH $TokensCte,
-       |sh1 AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(
-       |    generate_series(1, len(ts)-1), i -> ts[i] || ' ' || ts[i+1]))) AS tok
-       |  FROM toks WHERE len(ts) >= 2 AND doc_id % 4 = 0),
-       |dt AS (SELECT doc_id, tok FROM sh1),
-       |ws AS (SELECT doc_id, ${md5SidSql("tok", 10)} AS sid FROM dt),
-       |params(i, a, b) AS (VALUES ${HashA.indices
-        .map(i => s"(${i}, ${HashA(i)}, ${HashB(i)})").mkString(", ")}),
-       |mh AS (
-       |  SELECT doc_id, i, min((a * sid + b) % $P31) AS mh
-       |  FROM ws CROSS JOIN params GROUP BY 1, 2),
-       |bands AS (
-       |  SELECT doc_id, (i // 2) AS band,
-       |    min(CASE WHEN i % 2 = 0 THEN mh END) AS m0,
-       |    min(CASE WHEN i % 2 = 1 THEN mh END) AS m1
-       |  FROM mh GROUP BY 1, 2),
-       |cand AS (
-       |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-       |  FROM bands x JOIN bands y
-       |    ON x.band = y.band AND x.m0 = y.m0 AND x.m1 = y.m1
-       |    AND x.doc_id < y.doc_id),
+    s"""WITH ${minhashCandCtes("doc_id % 4 = 0")},
        |n AS (SELECT doc_id, count(*) AS c FROM dt GROUP BY 1),
        |p AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
@@ -804,9 +778,36 @@ object TrainingDataQueries {
       StructType(Seq(StructField("node", dt), StructField("label", dt))))
   }
 
+  /** (node, label): the near-dup clusters, min-label connected components
+    * of the minhash candidate graph over every doc's bigram shingles.
+    * DuckDB twin: [[dedupLabelCtes]].
+    */
+  private def dedupLabels(s: SparkSession, dir: String): DataFrame =
+    connectedComponents(minhashCandidates(bigramShingles(s, dir)))
+
+  /** The undirected edge list `edges(doc_a, doc_b)` as the directed CTE
+    * `sym(src, dst)`, both orders — the twin of the `sym` frames of
+    * [[connectedComponents]] and [[pageRank]].
+    */
+  private def symCte(edges: String): String =
+    s"""sym AS (
+       |  SELECT doc_a AS src, doc_b AS dst FROM $edges
+       |  UNION ALL SELECT doc_b, doc_a FROM $edges)""".stripMargin
+
+  /** DuckDB twin of [[dedupLabels]]: a CTE prefix (for `WITH RECURSIVE`)
+    * ending in `labels(node, label)`, the min reachable id per node.
+    */
+  private def dedupLabelCtes: String =
+    s"""${minhashCandCtes()},
+       |${symCte("cand")},
+       |reach(node, lab) AS (
+       |  SELECT src, src FROM (SELECT DISTINCT src FROM sym)
+       |  UNION
+       |  SELECT sym.src, reach.lab FROM sym JOIN reach ON sym.dst = reach.node),
+       |labels AS (SELECT node, min(lab) AS label FROM reach GROUP BY 1)""".stripMargin
+
   private def qDedupClusters(s: SparkSession, dir: String): DataFrame = {
-    val dt = bigramShingles(s, dir)
-    val labels = connectedComponents(minhashCandidates(dt))
+    val labels = dedupLabels(s, dir)
     labels.groupBy("label")
       .agg(count(lit(1)).as("n_docs"), max("node").as("max_doc"))
       .select(col("label").as("cluster_rep"), col("n_docs"), col("max_doc"))
@@ -814,15 +815,7 @@ object TrainingDataQueries {
   }
 
   private def qDedupClustersSql: String =
-    s"""WITH RECURSIVE $minhashCandCtes,
-       |sym AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM cand
-       |  UNION ALL SELECT doc_b, doc_a FROM cand),
-       |reach(node, lab) AS (
-       |  SELECT src, src FROM (SELECT DISTINCT src FROM sym)
-       |  UNION
-       |  SELECT sym.src, reach.lab FROM sym JOIN reach ON sym.dst = reach.node),
-       |labels AS (SELECT node, min(lab) AS label FROM reach GROUP BY 1)
+    s"""WITH RECURSIVE $dedupLabelCtes
        |SELECT label AS cluster_rep, count(*) AS n_docs,
        |  CAST(max(node) AS BIGINT) AS max_doc
        |FROM labels GROUP BY 1 ORDER BY 1""".stripMargin
@@ -839,8 +832,7 @@ object TrainingDataQueries {
   // table is the (small) multi-doc-cluster membership, not the corpus.
 
   private def qClusterRep(s: SparkSession, dir: String): DataFrame = {
-    val labels = connectedComponents(
-      minhashCandidates(bigramShingles(s, dir)))
+    val labels = dedupLabels(s, dir)
     val docs = t(s, dir, "documents").select(col("doc_id"), col("n_chars"))
     val sized = labels.join(docs, labels("node") === docs("doc_id"))
     val w = Window.partitionBy("label").orderBy(desc("n_chars"), col("node"))
@@ -854,15 +846,7 @@ object TrainingDataQueries {
   }
 
   private def qClusterRepSql: String =
-    s"""WITH RECURSIVE $minhashCandCtes,
-       |sym AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM cand
-       |  UNION ALL SELECT doc_b, doc_a FROM cand),
-       |reach(node, lab) AS (
-       |  SELECT src, src FROM (SELECT DISTINCT src FROM sym)
-       |  UNION
-       |  SELECT sym.src, reach.lab FROM sym JOIN reach ON sym.dst = reach.node),
-       |labels AS (SELECT node, min(lab) AS label FROM reach GROUP BY 1),
+    s"""WITH RECURSIVE $dedupLabelCtes,
        |sz AS (SELECT label, count(*) AS n_docs FROM labels GROUP BY 1),
        |rk AS (
        |  SELECT l.label, l.node, d.n_chars,
@@ -890,7 +874,7 @@ object TrainingDataQueries {
   // source-grain agg, and AQE broadcasts the weight table while it fits.
 
   private def qSoftDedup(s: SparkSession, dir: String): DataFrame = {
-    val labels = connectedComponents(minhashCandidates(bigramShingles(s, dir)))
+    val labels = dedupLabels(s, dir)
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("n"))
     val wts = labels.join(sizes, "label")
       .select(col("node").as("doc_id"), col("n"))
@@ -906,15 +890,7 @@ object TrainingDataQueries {
   }
 
   private def qSoftDedupSql: String =
-    s"""WITH RECURSIVE $minhashCandCtes,
-       |sym AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM cand
-       |  UNION ALL SELECT doc_b, doc_a FROM cand),
-       |reach(node, lab) AS (
-       |  SELECT src, src FROM (SELECT DISTINCT src FROM sym)
-       |  UNION
-       |  SELECT sym.src, reach.lab FROM sym JOIN reach ON sym.dst = reach.node),
-       |labels AS (SELECT node, min(lab) AS label FROM reach GROUP BY 1),
+    s"""WITH RECURSIVE $dedupLabelCtes,
        |sz AS (SELECT label, count(*) AS n FROM labels GROUP BY 1),
        |w AS (SELECT l.node AS doc_id, s.n FROM labels l JOIN sz s USING (label)),
        |j AS (
@@ -983,7 +959,7 @@ object TrainingDataQueries {
       .limit(10)
 
   private def qTrianglesSql: String =
-    s"""WITH $minhashCandCtes,
+    s"""WITH ${minhashCandCtes()},
        |deg AS (
        |  SELECT v, CAST(count(*) AS BIGINT) AS d FROM (
        |    SELECT doc_a AS v FROM cand UNION ALL SELECT doc_b FROM cand)
@@ -1031,7 +1007,7 @@ object TrainingDataQueries {
     * (doc_a < doc_b); rank mass starts at `scale` per node and updates
     * as r' = 0.15·scale + 0.85·Σ_in (r div deg), all in Long arithmetic
     * (deterministic — no float sum-order dependence). Public for the
-    * brute-force parity fuzz.
+    * brute-force parity fuzz. DuckDB twin: [[pageRankCtes]].
     */
   def pageRank(edges: DataFrame, iters: Int = 3, scale: Long = 1000000000L): DataFrame = {
     val sym = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -1053,16 +1029,12 @@ object TrainingDataQueries {
     state.select(col("node").as("doc_id"), col("r").as("rank"))
   }
 
-  private def qPagerank(s: SparkSession, dir: String): DataFrame =
-    pageRank(minhashCandidates(bigramShingles(s, dir)).persist())
-      .orderBy(desc("rank"), col("doc_id"))
-      .limit(20)
-
-  /** DuckDB twin: the three iterations unrolled as CTEs replaying the
-    * identical integer arithmetic (`//` floor-division on positive
-    * operands == Spark `div`).
+  /** DuckDB twin of [[pageRank]] at its defaults (3 rounds, scale 1e9)
+    * over the undirected `edges(doc_a, doc_b)` CTE: the rounds unrolled
+    * as CTEs ending in `r3(node, deg, r)`, replaying the identical integer
+    * arithmetic (`//` floor-division on positive operands == Spark `div`).
     */
-  private def qPagerankSql: String = {
+  private def pageRankCtes(edges: String): String = {
     def round(prev: String, out: String): String =
       s"""$out AS (
          |  SELECT d.src AS node, d.deg,
@@ -1070,18 +1042,24 @@ object TrainingDataQueries {
          |  FROM sym JOIN $prev p ON sym.src = p.node
          |  JOIN deg d ON sym.dst = d.src
          |  GROUP BY 1, 2)""".stripMargin
-    s"""WITH $minhashCandCtes,
-       |sym AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM cand
-       |  UNION ALL SELECT doc_b, doc_a FROM cand),
+    s"""${symCte(edges)},
        |deg AS (SELECT src, count(*) AS deg FROM sym GROUP BY 1),
        |r0 AS (SELECT src AS node, deg, 1000000000 AS r FROM deg),
        |${round("r0", "r1")},
        |${round("r1", "r2")},
-       |${round("r2", "r3")}
+       |${round("r2", "r3")}""".stripMargin
+  }
+
+  private def qPagerank(s: SparkSession, dir: String): DataFrame =
+    pageRank(minhashCandidates(bigramShingles(s, dir)).persist())
+      .orderBy(desc("rank"), col("doc_id"))
+      .limit(20)
+
+  private def qPagerankSql: String =
+    s"""WITH ${minhashCandCtes()},
+       |${pageRankCtes("cand")}
        |SELECT node AS doc_id, CAST(r AS BIGINT) AS rank
        |FROM r3 ORDER BY rank DESC, doc_id LIMIT 20""".stripMargin
-  }
 
   // --- TextRank keyword extraction --------------------------------------------
   //
@@ -1119,13 +1097,6 @@ object TrainingDataQueries {
   }
 
   private def qTextrankKeywordsSql: String = {
-    def round(prev: String, out: String): String =
-      s"""$out AS (
-         |  SELECT d.src AS node, d.deg,
-         |    150000000 + (85 * sum(p.r // p.deg)) // 100 AS r
-         |  FROM sym JOIN $prev p ON sym.src = p.node
-         |  JOIN deg d ON sym.dst = d.src
-         |  GROUP BY 1, 2)""".stripMargin
     s"""WITH $TokensCte,
        |kt AS (
        |  SELECT doc_id,
@@ -1151,14 +1122,7 @@ object TrainingDataQueries {
        |    SELECT ${md5SidSql("ta", 10)} AS sid, ta AS tok FROM adj
        |    UNION ALL SELECT ${md5SidSql("tb", 10)}, tb FROM adj) v
        |  GROUP BY 1),
-       |sym AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM edges
-       |  UNION ALL SELECT doc_b, doc_a FROM edges),
-       |deg AS (SELECT src, count(*) AS deg FROM sym GROUP BY 1),
-       |r0 AS (SELECT src AS node, deg, 1000000000 AS r FROM deg),
-       |${round("r0", "r1")},
-       |${round("r1", "r2")},
-       |${round("r2", "r3")}
+       |${pageRankCtes("edges")}
        |SELECT v.tok, CAST(r.r AS BIGINT) AS rank
        |FROM r3 r JOIN vocab v ON r.node = v.sid
        |ORDER BY rank DESC, tok LIMIT 15""".stripMargin
@@ -1445,12 +1409,21 @@ object TrainingDataQueries {
     s"CAST(list_sum(list_transform(generate_series(1, len(ea)), i -> $d * $d)) AS BIGINT)"
   }
 
-  /** DuckDB twin of [[lshPairDists]]: the `pr` candidate pairs (id_a <
-    * id_b) and `name` (id_a, id_b, dist) over them.
+  /** DuckDB twin of [[lshPairDists]]: the `pr` candidate pairs (id_a
+    * `op` id_b) and `name` (id_a, id_b, dist) over them. `pr` carries
+    * ids only and `name` joins `e0` for the two vectors: list values
+    * carried through the band join and its GROUP BY are held outside
+    * DuckDB's buffer manager, where `memory_limit` cannot bound them.
+    * `name` is MATERIALIZED because the graph queries read it many times,
+    * some inside a recursive CTE, which would otherwise recompute the
+    * band join at each reference.
     */
-  private[queries] def lshPairDistsCtes(name: String): String =
-    s"""${lshPairsCte("pr", "<", PairVecsSql)},
-       |$name AS (SELECT id_a, id_b, $L2qSql AS dist FROM pr)""".stripMargin
+  private[queries] def lshPairDistsCtes(name: String, op: String = "<"): String =
+    s"""${lshPairsCte("pr", op)},
+       |$name AS MATERIALIZED (
+       |  SELECT pr.id_a, pr.id_b, $L2qSql AS dist
+       |  FROM pr JOIN (SELECT vec_id, e AS ea FROM e0) x ON x.vec_id = pr.id_a
+       |  JOIN (SELECT vec_id, e AS eb FROM e0) y ON y.vec_id = pr.id_b)""".stripMargin
 
   private def qAnnLshBucket(s: SparkSession, dir: String): DataFrame = {
     // persisted: the signature computation (b·r 64-dim hyperplane dots per
@@ -3911,6 +3884,182 @@ object TrainingDataQueries {
       |    THEN octet_length(encode(text)) % 7 + 1 ELSE 1 END AS INT) AS n_frames
       |FROM documents ORDER BY doc_id""".stripMargin
 
+  // --- sketch kernels -------------------------------------------------------
+  //
+  // The KMV and HLL queries read the same item tables and merge sketches
+  // over the same source pairs. Each shared block is written once per
+  // engine, a Scala helper beside its DuckDB fragment, each naming the
+  // other; a pair must compute the same values bit for bit, so an edit to
+  // one needs the same edit to the other.
+
+  /** (source, tok): every whitespace token of every document. DuckDB
+    * twin: [[SourceToksCte]].
+    */
+  private def sourceToks(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .select(col("source"), explode(simpleTokens(col("text"))).as("tok"))
+
+  /** DuckDB twin of [[sourceToks]]: the `toks` CTE. */
+  private val SourceToksCte =
+    s"""toks AS (
+       |  SELECT source,
+       |    unnest(list_filter(string_split_regex(lower(text), '\\s+'),
+       |      x -> x <> '')) AS tok
+       |  FROM documents)""".stripMargin
+
+  /** (source, tok): every adjacent-token bigram of every document with at
+    * least two tokens. DuckDB twin: the `toks` CTE of [[SketchSrcsCtes]].
+    */
+  private def sourceBigrams(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .select(col("source"), simpleTokens(col("text")).as("ts"))
+      .filter(size(col("ts")) >= 2)
+      .select(col("source"), explode(expr(
+        "transform(sequence(0, size(ts)-2), i -> concat_ws(' ', element_at(ts, i+1), element_at(ts, i+2)))"))
+        .as("tok"))
+
+  /** (source): the 3 lexicographically smallest sources of `toks`, the
+    * set-algebra queries' deterministic, corpus-size-independent cut.
+    * DuckDB twin: the `srcs` CTE of [[SketchSrcsCtes]].
+    */
+  private def sketchSrcs(toks: DataFrame): DataFrame =
+    toks.select("source").distinct().orderBy("source").limit(3).persist()
+
+  /** DuckDB twin of [[sourceBigrams]] and [[sketchSrcs]]: the `toks` and
+    * `srcs` CTEs.
+    */
+  private val SketchSrcsCtes =
+    s"""toks AS (
+       |  SELECT source, unnest(list_transform(generate_series(1, len(ts)-1),
+       |    i -> ts[i] || ' ' || ts[i+1])) AS tok
+       |  FROM (SELECT source,
+       |          list_filter(string_split_regex(lower(text), '\\s+'),
+       |            x -> x <> '') AS ts
+       |        FROM documents)
+       |  WHERE len(ts) >= 2),
+       |srcs AS (
+       |  SELECT source FROM (SELECT DISTINCT source FROM toks)
+       |  ORDER BY source LIMIT 3)""".stripMargin
+
+  /** (sa, sb): the pairs of `srcs` with sa < sb. DuckDB twin: [[PairsCte]]. */
+  private def srcPairs(srcs: DataFrame): DataFrame =
+    srcs.toDF("sa").join(srcs.toDF("sb"), col("sa") < col("sb")).persist()
+
+  /** DuckDB twin of [[srcPairs]]: the `pairs` CTE over `srcs`. */
+  private val PairsCte =
+    """pairs AS (
+      |  SELECT a.source AS sa, b.source AS sb
+      |  FROM srcs a JOIN srcs b ON a.source < b.source)""".stripMargin
+
+  /** (sa, sb, cols…): each pair's rows of the per-source table
+    * `perSrc(source, cols…)`, from both of its sources (duplicates kept).
+    * DuckDB twin: [[pairLegsSql]].
+    */
+  private def pairLegs(pairs: DataFrame, perSrc: DataFrame, cols: String*): DataFrame =
+    pairs.join(perSrc.toDF("sa" +: cols: _*), "sa")
+      .unionByName(pairs.join(perSrc.toDF("sb" +: cols: _*), "sb")
+        .select("sa", "sb" +: cols: _*))
+
+  /** DuckDB twin of [[pairLegs]] over the CTEs `pairs` and `perSrc`. */
+  private def pairLegsSql(perSrc: String, cols: String*): String = {
+    val sel = cols.map(c => s"$perSrc.$c").mkString(", ")
+    s"""SELECT pairs.sa, pairs.sb, $sel FROM pairs
+       |      JOIN $perSrc ON $perSrc.source = pairs.sa
+       |    UNION ALL
+       |    SELECT pairs.sa, pairs.sb, $sel FROM pairs
+       |      JOIN $perSrc ON $perSrc.source = pairs.sb""".stripMargin
+  }
+
+  /** (sa, sb, exact_union): the exact distinct-item count of each pair's
+    * union over `st(source, tok)`. DuckDB twin: [[ExactUnionCte]].
+    */
+  private def exactUnion(pairs: DataFrame, st: DataFrame): DataFrame =
+    pairLegs(pairs, st, "tok")
+      .groupBy("sa", "sb").agg(countDistinct("tok").as("exact_union"))
+
+  /** DuckDB twin of [[exactUnion]]: the `eu` CTE over `pairs` and `st`. */
+  private val ExactUnionCte =
+    s"""eu AS (
+       |  SELECT sa, sb, CAST(count(DISTINCT tok) AS BIGINT) AS exact_union FROM (
+       |    ${pairLegsSql("st", "tok")})
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** One HyperLogLog shape: `m` registers over hashes `h` below 2^48, a
+    * register's rank at most `maxRho`, bias constant `alpha`. The
+    * harmonic-mean denominator is the INTEGER sum S of 2^(maxRho − mj)
+    * register weights, so summation order cannot perturb a float; the
+    * estimate num / S is one exact division at the end. Each Spark helper
+    * names its DuckDB twin below it.
+    */
+  private final case class Hll(m: Int, maxRho: Int, alpha: Double) {
+
+    /** alpha·m²·2^maxRho, the estimate's numerator. */
+    val num: Double = alpha * m * m * (1L << maxRho).toDouble
+
+    /** (keys…, bucket, mj): the registers of `hashed`'s `h` per `keys`
+      * group. The rank comes from `bin()`'s string length, identical in
+      * both engines (no log2/clz). DuckDB twin: [[regsCte]].
+      */
+    def regs(hashed: DataFrame, keys: String*): DataFrame =
+      hashed
+        .select(keys.map(col) :+ pmod(col("h"), lit(m)).as("bucket") :+
+          expr(s"h div $m").as("w"): _*)
+        .withColumn("rho",
+          when(col("w") === 0, lit(maxRho))
+            .otherwise(lit(maxRho) - length(bin(col("w")))))
+        .groupBy(keys.head, keys.tail :+ "bucket": _*).agg(max("rho").as("mj"))
+
+    /** DuckDB twin of [[regs]]: the `regs` CTE over the relation `from`. */
+    def regsCte(keys: Seq[String], from: String): String =
+      s"""regs AS (
+         |  SELECT ${keys.mkString(", ")}, h % $m AS bucket,
+         |    max(CASE WHEN h // $m = 0 THEN $maxRho
+         |      ELSE $maxRho - length(bin(h // $m)) END) AS mj
+         |  FROM $from GROUP BY ${(1 to keys.size + 1).mkString(", ")})""".stripMargin
+
+    /** 2^(maxRho − mj) of the register column `mj`. DuckDB twin: [[weightSql]]. */
+    def weight(mj: String): Column = expr(s"shiftleft(1L, cast($maxRho - $mj AS int))")
+
+    def weightSql(mj: String): String = s"1::BIGINT << CAST($maxRho - $mj AS INT)"
+
+    /** (keys…, occ, nocc): the filled registers' weight sum and count per
+      * `keys` group. DuckDB twin: [[sumsCte]].
+      */
+    def sums(regs: DataFrame, keys: String*): DataFrame =
+      regs.groupBy(keys.head, keys.tail: _*)
+        .agg(sum(weight("mj")).as("occ"), count(lit(1)).as("nocc"))
+
+    /** DuckDB twin of [[sums]]: the CTE `name` over the registers `from`. */
+    def sumsCte(name: String, keys: Seq[String], from: String): String =
+      s"""$name AS (
+         |  SELECT ${keys.mkString(", ")},
+         |    CAST(sum(${weightSql("mj")}) AS BIGINT) AS occ,
+         |    count(*) AS nocc
+         |  FROM $from GROUP BY ${(1 to keys.size).mkString(", ")})""".stripMargin
+
+    /** S: the filled weights plus 2^maxRho per empty register. DuckDB twin:
+      * [[sIntSql]].
+      */
+    def sInt(occ: Column, nocc: Column): Column =
+      occ + (lit(m.toLong) - nocc) * lit(1L << maxRho)
+
+    def sIntSql(occ: String, nocc: String): String =
+      s"$occ + ($m - $nocc) * (1::BIGINT << $maxRho)"
+
+    /** The estimate num / S, rounded to 4 places. DuckDB twin: [[estSql]]. */
+    def est(sInt: Column): Column = Rounding.r(lit(num) / sInt.cast("double"), 4)
+
+    def estSql(sInt: String): String = Rounding.rSql(s"$num / CAST($sInt AS DOUBLE)", 4)
+
+    def zeroRegisters(nocc: Column): Column = lit(m.toLong) - nocc
+
+    /** The estimate `name` and `zero_registers` from a [[sumsCte]] row. */
+    def estZerosSql(name: String): String =
+      s"""${estSql(sIntSql("occ", "nocc"))}
+         |    AS $name,
+         |  CAST($m - nocc AS BIGINT) AS zero_registers""".stripMargin
+  }
+
   // --- KMV distinct-count sketch --------------------------------------------
   //
   // k-minimum-values sketch of the distinct-token count per document
@@ -3930,8 +4079,7 @@ object TrainingDataQueries {
 
   private def qKmvSketch(s: SparkSession, dir: String): DataFrame = {
     val denom = math.pow(2.0, 4.0 * KmvHexLen)
-    val hashes = t(s, dir, "documents")
-      .select(col("source"), explode(simpleTokens(col("text"))).as("tok"))
+    val hashes = sourceToks(s, dir)
       .select(col("source"), col("tok"), md5Sid(col("tok"), KmvHexLen).as("h"))
     val distinctH = hashes.select("source", "h").distinct()
     val shardW = Window.partitionBy(col("source"), pmod(col("h"), lit(256)))
@@ -3954,11 +4102,7 @@ object TrainingDataQueries {
 
   private val qKmvSketchSql = {
     val denom = BigDecimal(math.pow(2.0, 4.0 * KmvHexLen)).toBigInt.toString
-    s"""WITH toks AS (
-       |  SELECT source,
-       |    unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-       |      x -> x <> '')) AS tok
-       |  FROM documents),
+    s"""WITH $SourceToksCte,
        |h AS (
        |  SELECT DISTINCT source, ${md5SidSql("tok", KmvHexLen)} AS h FROM toks),
        |kmin AS (
@@ -3996,14 +4140,8 @@ object TrainingDataQueries {
     // corpus is a few dozen tokens — below k, where the sketch would
     // degenerate to exact counting; bigrams give ~10k-scale sets so the
     // (k-1)/max_k estimator branch is genuinely exercised)
-    val toks = t(s, dir, "documents")
-      .select(col("source"), simpleTokens(col("text")).as("ts"))
-      .filter(size(col("ts")) >= 2)
-      .select(col("source"), explode(expr(
-        "transform(sequence(0, size(ts)-2), i -> concat_ws(' ', element_at(ts, i+1), element_at(ts, i+2)))"))
-        .as("tok"))
-    val srcs = toks.select("source").distinct()
-      .orderBy("source").limit(3).persist()
+    val toks = sourceBigrams(s, dir)
+    val srcs = sketchSrcs(toks)
     val st = toks.join(broadcast(srcs), "source")
       .select("source", "tok").distinct().persist()
     val mins = st
@@ -4014,28 +4152,22 @@ object TrainingDataQueries {
       .select("source", "h").persist()
     val perSrc = mins.groupBy("source")
       .agg(max("h").as("hk"), count(lit(1)).as("kk"))
-    val pairs = srcs.toDF("sa")
-      .join(srcs.toDF("sb"), col("sa") < col("sb")).persist()
+    val pairs = srcPairs(srcs)
     // merged union sketch: k smallest of the two k-min lists
-    val uRows = pairs.join(mins.toDF("sa", "h"), "sa")
-      .unionByName(pairs.join(mins.toDF("sb", "h"), "sb").select("sa", "sb", "h"))
-      .select("sa", "sb", "h").distinct()
+    val uRows = pairLegs(pairs, mins, "h").select("sa", "sb", "h").distinct()
     val uk = uRows
       .withColumn("rn", row_number().over(
         Window.partitionBy("sa", "sb").orderBy("h")))
       .filter(col("rn") <= KmvK)
       .groupBy("sa", "sb").agg(max("h").as("hku"), count(lit(1)).as("kku"))
-    // exact truths per pair
-    val exactU = pairs.join(st.toDF("sa", "tok"), "sa")
-      .unionByName(pairs.join(st.toDF("sb", "tok"), "sb").select("sa", "sb", "tok"))
-      .groupBy("sa", "sb").agg(countDistinct("tok").as("exact_union"))
+    // exact truths per pair; a pair sharing no item has no `exactI` row
     val exactI = st.toDF("sa", "tok")
       .join(st.toDF("sb", "tok"), Seq("tok"))
       .filter(col("sa") < col("sb"))
       .groupBy("sa", "sb").agg(count(lit(1)).as("exact_inter"))
     uk.join(perSrc.toDF("sa", "hka", "kka"), "sa")
       .join(perSrc.toDF("sb", "hkb", "kkb"), "sb")
-      .join(exactU, Seq("sa", "sb"))
+      .join(exactUnion(pairs, st), Seq("sa", "sb"))
       .join(exactI, Seq("sa", "sb"), "left").na.fill(0, Seq("exact_inter"))
       .select(col("sa").as("src_a"), col("sb").as("src_b"),
         col("exact_union"), col("exact_inter"),
@@ -4049,17 +4181,7 @@ object TrainingDataQueries {
     val denom = BigDecimal(math.pow(2.0, 4.0 * KmvHexLen)).toBigInt.toString
     def est(hk: String, kk: String): String =
       s"CASE WHEN $kk < $KmvK THEN $kk::DOUBLE ELSE (${KmvK - 1}) / ($hk / $denom.0) END"
-    s"""WITH toks AS (
-       |  SELECT source, unnest(list_transform(generate_series(1, len(ts)-1),
-       |    i -> ts[i] || ' ' || ts[i+1])) AS tok
-       |  FROM (SELECT source,
-       |          list_filter(string_split_regex(lower(text), '\\s+'),
-       |            x -> x <> '') AS ts
-       |        FROM documents)
-       |  WHERE len(ts) >= 2),
-       |srcs AS (
-       |  SELECT source FROM (SELECT DISTINCT source FROM toks)
-       |  ORDER BY source LIMIT 3),
+    s"""WITH $SketchSrcsCtes,
        |st AS (
        |  SELECT DISTINCT source, tok FROM toks JOIN srcs USING (source)),
        |mins AS (
@@ -4068,28 +4190,15 @@ object TrainingDataQueries {
        |    FROM (SELECT DISTINCT source, ${md5SidSql("tok", KmvHexLen)} AS h FROM st))
        |  WHERE rn <= $KmvK),
        |persrc AS (SELECT source, max(h) AS hk, count(*) AS kk FROM mins GROUP BY 1),
-       |pairs AS (
-       |  SELECT a.source AS sa, b.source AS sb
-       |  FROM srcs a JOIN srcs b ON a.source < b.source),
+       |$PairsCte,
        |u AS (
        |  SELECT DISTINCT sa, sb, h FROM (
-       |    SELECT pairs.sa, pairs.sb, mins.h FROM pairs
-       |      JOIN mins ON mins.source = pairs.sa
-       |    UNION ALL
-       |    SELECT pairs.sa, pairs.sb, mins.h FROM pairs
-       |      JOIN mins ON mins.source = pairs.sb)),
+       |    ${pairLegsSql("mins", "h")})),
        |uk AS (
        |  SELECT sa, sb, max(h) AS hku, count(*) AS kku FROM (
        |    SELECT sa, sb, h, row_number() OVER (PARTITION BY sa, sb ORDER BY h) AS rn
        |    FROM u) WHERE rn <= $KmvK GROUP BY 1, 2),
-       |eu AS (
-       |  SELECT sa, sb, CAST(count(DISTINCT tok) AS BIGINT) AS exact_union FROM (
-       |    SELECT pairs.sa, pairs.sb, st.tok FROM pairs
-       |      JOIN st ON st.source = pairs.sa
-       |    UNION ALL
-       |    SELECT pairs.sa, pairs.sb, st.tok FROM pairs
-       |      JOIN st ON st.source = pairs.sb)
-       |  GROUP BY 1, 2),
+       |$ExactUnionCte,
        |ei AS (
        |  SELECT a.source AS sa, b.source AS sb,
        |    CAST(count(*) AS BIGINT) AS exact_inter
@@ -4127,70 +4236,38 @@ object TrainingDataQueries {
   // estimate plus the V=zero_registers column is reported instead.
   // Exact truth rides alongside for the oracle to certify the error.
 
-  private val HllM = 256 // registers (p = 8 bucket bits)
   private val HllHexLen = 12 // h < 2^48; 40 payload bits after bucketing
-  private val HllMaxRho = 41 // rank when all 40 payload bits are zero
+  /** m = 256 registers (p = 8 bucket bits); rank 41 when all 40 payload
+    * bits are zero.
+    */
+  private val DocsHll = Hll(256, 41, 0.7213 / (1 + 1.079 / 256))
 
   private def qHllSketch(s: SparkSession, dir: String): DataFrame = {
-    val alpha = 0.7213 / (1 + 1.079 / HllM)
-    // estimate = alpha·m² / (S / 2^maxRho) with S the integer register sum
-    val num = alpha * HllM * HllM * (1L << HllMaxRho).toDouble
-    val hashed = t(s, dir, "documents")
-      .select(col("source"), explode(simpleTokens(col("text"))).as("tok"))
+    val hashed = sourceToks(s, dir)
       .select(col("source"), col("tok"), md5Sid(col("tok"), HllHexLen).as("h"))
-    val regs = hashed
-      .select(col("source"), pmod(col("h"), lit(HllM)).as("bucket"),
-        expr(s"h div $HllM").as("w"))
-      .withColumn("rho",
-        when(col("w") === 0, lit(HllMaxRho))
-          .otherwise(lit(HllMaxRho) - length(bin(col("w")))))
-      .groupBy("source", "bucket").agg(max("rho").as("mj"))
-    val sums = regs.groupBy("source")
-      .agg(sum(expr(s"shiftleft(1L, cast($HllMaxRho - mj AS int))")).as("occ"),
-        count(lit(1)).as("nocc"))
-      .select(col("source"),
-        (col("occ") + (lit(HllM.toLong) - col("nocc")) * lit(1L << HllMaxRho))
-          .as("s_int"),
-        (lit(HllM.toLong) - col("nocc")).as("zero_registers"))
+    val sums = DocsHll.sums(DocsHll.regs(hashed, "source"), "source")
+      .select(col("source"), DocsHll.sInt(col("occ"), col("nocc")).as("s_int"),
+        DocsHll.zeroRegisters(col("nocc")).as("zero_registers"))
     val exact = hashed.groupBy("source")
       .agg(countDistinct("tok").as("exact_distinct"))
     sums.join(exact, "source")
       .select(col("source"), col("exact_distinct"),
-        Rounding.r(lit(num) / col("s_int").cast("double"), 4).as("est_distinct"),
-        col("zero_registers"))
+        DocsHll.est(col("s_int")).as("est_distinct"), col("zero_registers"))
       .orderBy("source")
   }
 
-  private val qHllSketchSql = {
-    val alpha = 0.7213 / (1 + 1.079 / HllM)
-    val num = alpha * HllM * HllM * (1L << HllMaxRho).toDouble
-    s"""WITH toks AS (
-       |  SELECT source,
-       |    unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-       |      x -> x <> '')) AS tok
-       |  FROM documents),
+  private val qHllSketchSql =
+    s"""WITH $SourceToksCte,
        |h AS (
        |  SELECT source, tok, ${md5SidSql("tok", HllHexLen)} AS h FROM toks),
-       |regs AS (
-       |  SELECT source, h % $HllM AS bucket,
-       |    max(CASE WHEN h // $HllM = 0 THEN $HllMaxRho
-       |      ELSE $HllMaxRho - length(bin(h // $HllM)) END) AS mj
-       |  FROM h GROUP BY 1, 2),
-       |sums AS (
-       |  SELECT source,
-       |    CAST(sum(1::BIGINT << CAST($HllMaxRho - mj AS INT)) AS BIGINT) AS occ,
-       |    count(*) AS nocc
-       |  FROM regs GROUP BY 1),
+       |${DocsHll.regsCte(Seq("source"), "h")},
+       |${DocsHll.sumsCte("sums", Seq("source"), "regs")},
        |exact AS (
        |  SELECT source, count(DISTINCT tok) AS exact_distinct FROM toks GROUP BY 1)
        |SELECT sums.source, exact.exact_distinct,
-       |  ${Rounding.rSql(
-             s"$num / CAST(occ + ($HllM - nocc) * (1::BIGINT << $HllMaxRho) AS DOUBLE)", 4)}
-       |    AS est_distinct,
-       |  CAST($HllM - nocc AS BIGINT) AS zero_registers
+       |  ${DocsHll.estZerosSql("est_distinct")}
        |FROM sums JOIN exact ON sums.source = exact.source
        |ORDER BY 1""".stripMargin
-  }
 
   // --- HLL SET ALGEBRA: union via elementwise register max ------------------
   //
@@ -4204,100 +4281,38 @@ object TrainingDataQueries {
   // alongside. Per-pair state is m=256 register rows; the union costs a
   // (pair, bucket)-keyed max — O(m) per pair at any corpus size.
   private def qHllUnion(s: SparkSession, dir: String): DataFrame = {
-    val alpha = 0.7213 / (1 + 1.079 / HllM)
-    val num = alpha * HllM * HllM * (1L << HllMaxRho).toDouble
-    val toks = t(s, dir, "documents")
-      .select(col("source"), simpleTokens(col("text")).as("ts"))
-      .filter(size(col("ts")) >= 2)
-      .select(col("source"), explode(expr(
-        "transform(sequence(0, size(ts)-2), i -> concat_ws(' ', element_at(ts, i+1), element_at(ts, i+2)))"))
-        .as("tok"))
-    val srcs = toks.select("source").distinct()
-      .orderBy("source").limit(3).persist()
+    val toks = sourceBigrams(s, dir)
+    val srcs = sketchSrcs(toks)
     val st = toks.join(broadcast(srcs), "source").persist()
-    val regs = st
-      .select(col("source"), md5Sid(col("tok"), HllHexLen).as("h"))
-      .select(col("source"), pmod(col("h"), lit(HllM)).as("bucket"),
-        expr(s"h div $HllM").as("w"))
-      .withColumn("rho",
-        when(col("w") === 0, lit(HllMaxRho))
-          .otherwise(lit(HllMaxRho) - length(bin(col("w")))))
-      .groupBy("source", "bucket").agg(max("rho").as("mj"))
+    val regs = DocsHll.regs(
+      st.select(col("source"), md5Sid(col("tok"), HllHexLen).as("h")), "source")
       .persist()
-    val pairs = srcs.toDF("sa")
-      .join(srcs.toDF("sb"), col("sa") < col("sb")).persist()
-    val uregs = pairs.join(regs.toDF("sa", "bucket", "mj"), "sa")
-      .unionByName(pairs.join(regs.toDF("sb", "bucket", "mj"), "sb")
-        .select("sa", "sb", "bucket", "mj"))
+    val pairs = srcPairs(srcs)
+    val uregs = pairLegs(pairs, regs, "bucket", "mj")
       .groupBy("sa", "sb", "bucket").agg(max("mj").as("mj"))
-    val usums = uregs.groupBy("sa", "sb")
-      .agg(sum(expr(s"shiftleft(1L, cast($HllMaxRho - mj AS int))")).as("occ"),
-        count(lit(1)).as("nocc"))
-    val exactU = pairs.join(st.toDF("sa", "tok"), "sa")
-      .unionByName(pairs.join(st.toDF("sb", "tok"), "sb").select("sa", "sb", "tok"))
-      .groupBy("sa", "sb").agg(countDistinct("tok").as("exact_union"))
-    usums.join(exactU, Seq("sa", "sb"))
+    DocsHll.sums(uregs, "sa", "sb").join(exactUnion(pairs, st), Seq("sa", "sb"))
       .select(col("sa").as("src_a"), col("sb").as("src_b"), col("exact_union"),
-        Rounding.r(lit(num) /
-          (col("occ") + (lit(HllM.toLong) - col("nocc")) * lit(1L << HllMaxRho))
-            .cast("double"), 4).as("est_union"),
-        (lit(HllM.toLong) - col("nocc")).as("zero_registers"))
+        DocsHll.est(DocsHll.sInt(col("occ"), col("nocc"))).as("est_union"),
+        DocsHll.zeroRegisters(col("nocc")).as("zero_registers"))
       .orderBy("src_a", "src_b")
   }
 
-  private val qHllUnionSql = {
-    val alpha = 0.7213 / (1 + 1.079 / HllM)
-    val num = alpha * HllM * HllM * (1L << HllMaxRho).toDouble
-    s"""WITH toks AS (
-       |  SELECT source, unnest(list_transform(generate_series(1, len(ts)-1),
-       |    i -> ts[i] || ' ' || ts[i+1])) AS tok
-       |  FROM (SELECT source,
-       |          list_filter(string_split_regex(lower(text), '\\s+'),
-       |            x -> x <> '') AS ts
-       |        FROM documents)
-       |  WHERE len(ts) >= 2),
-       |srcs AS (
-       |  SELECT source FROM (SELECT DISTINCT source FROM toks)
-       |  ORDER BY source LIMIT 3),
+  private val qHllUnionSql =
+    s"""WITH $SketchSrcsCtes,
        |st AS (SELECT source, tok FROM toks JOIN srcs USING (source)),
-       |regs AS (
-       |  SELECT source, h % $HllM AS bucket,
-       |    max(CASE WHEN h // $HllM = 0 THEN $HllMaxRho
-       |      ELSE $HllMaxRho - length(bin(h // $HllM)) END) AS mj
-       |  FROM (SELECT source, ${md5SidSql("tok", HllHexLen)} AS h FROM st)
-       |  GROUP BY 1, 2),
-       |pairs AS (
-       |  SELECT a.source AS sa, b.source AS sb
-       |  FROM srcs a JOIN srcs b ON a.source < b.source),
+       |${DocsHll.regsCte(Seq("source"),
+            s"(SELECT source, ${md5SidSql("tok", HllHexLen)} AS h FROM st)")},
+       |$PairsCte,
        |uregs AS (
        |  SELECT sa, sb, bucket, max(mj) AS mj FROM (
-       |    SELECT pairs.sa, pairs.sb, regs.bucket, regs.mj FROM pairs
-       |      JOIN regs ON regs.source = pairs.sa
-       |    UNION ALL
-       |    SELECT pairs.sa, pairs.sb, regs.bucket, regs.mj FROM pairs
-       |      JOIN regs ON regs.source = pairs.sb)
+       |    ${pairLegsSql("regs", "bucket", "mj")})
        |  GROUP BY 1, 2, 3),
-       |usums AS (
-       |  SELECT sa, sb,
-       |    CAST(sum(1::BIGINT << CAST($HllMaxRho - mj AS INT)) AS BIGINT) AS occ,
-       |    count(*) AS nocc
-       |  FROM uregs GROUP BY 1, 2),
-       |eu AS (
-       |  SELECT sa, sb, CAST(count(DISTINCT tok) AS BIGINT) AS exact_union FROM (
-       |    SELECT pairs.sa, pairs.sb, st.tok FROM pairs
-       |      JOIN st ON st.source = pairs.sa
-       |    UNION ALL
-       |    SELECT pairs.sa, pairs.sb, st.tok FROM pairs
-       |      JOIN st ON st.source = pairs.sb)
-       |  GROUP BY 1, 2)
+       |${DocsHll.sumsCte("usums", Seq("sa", "sb"), "uregs")},
+       |$ExactUnionCte
        |SELECT usums.sa AS src_a, usums.sb AS src_b, eu.exact_union,
-       |  ${Rounding.rSql(
-             s"$num / CAST(occ + ($HllM - nocc) * (1::BIGINT << $HllMaxRho) AS DOUBLE)", 4)}
-       |    AS est_union,
-       |  CAST($HllM - nocc AS BIGINT) AS zero_registers
+       |  ${DocsHll.estZerosSql("est_union")}
        |FROM usums JOIN eu ON eu.sa = usums.sa AND eu.sb = usums.sb
        |ORDER BY 1, 2""".stripMargin
-  }
 
   // --- HLL over TIME: rolling 7-day distinct via register-max merge ---------
   //
@@ -4322,44 +4337,33 @@ object TrainingDataQueries {
   // linear counting — whose ln() is not cross-engine bit-exact, so the
   // repo's sketch discipline is "size m to the population" instead.
 
-  private val HllDailyM = 32
-  private val HllDailyMaxRho = 44 // 43 payload bits after 5 bucket bits
+  /** m = 32 registers, 43 payload bits after 5 bucket bits, the standard
+    * alpha for m = 32.
+    */
+  private val DailyHll = Hll(32, 44, 0.697)
 
   private def qHllDaily(s: SparkSession, dir: String): DataFrame = {
-    val alpha = 0.697 // standard HLL alpha for m = 32
-    val num = alpha * HllDailyM * HllDailyM * (1L << HllDailyMaxRho).toDouble
     val ev = t(s, dir, "events")
       .select(to_date(col("ts")).as("d"), col("user_id"))
       .withColumn("dk", datediff(col("d"), lit("2020-01-01").cast("date")))
       .persist() // feeds registers, the day grid, and both exact truths
-    val regs = ev
+    val regs = DailyHll.regs(ev
       .select(col("d"), col("dk"),
-        md5Sid(col("user_id").cast("string"), HllHexLen).as("h"))
-      .select(col("d"), col("dk"), pmod(col("h"), lit(HllDailyM)).as("bucket"),
-        expr(s"h div $HllDailyM").as("w"))
-      .withColumn("rho", when(col("w") === 0, lit(HllDailyMaxRho))
-        .otherwise(lit(HllDailyMaxRho) - length(bin(col("w")))))
-      .groupBy("d", "dk", "bucket").agg(max("rho").as("mj"))
+        md5Sid(col("user_id").cast("string"), HllHexLen).as("h")), "d", "dk")
     val days = ev.select("d", "dk").distinct()
     val grid = days.select(col("d"), col("dk"),
-      explode(sequence(lit(0), lit(HllDailyM - 1))).as("bucket"))
+      explode(sequence(lit(0), lit(DailyHll.m - 1))).as("bucket"))
     val win = Window.partitionBy("bucket").orderBy("dk").rangeBetween(-6, 0)
     val dense = grid
       .join(regs.select("dk", "bucket", "mj"), Seq("dk", "bucket"), "left")
       .withColumn("mj7", max("mj").over(win))
-    def est(sInt: Column): Column = Rounding.r(lit(num) / sInt.cast("double"), 4)
-    val daily = regs.groupBy("d").agg(
-      sum(expr(s"shiftleft(1L, cast($HllDailyMaxRho - mj AS int))")).as("occ"),
-      count(lit(1)).as("nocc"))
-      .select(col("d"), est(col("occ") +
-        (lit(HllDailyM.toLong) - col("nocc")) * lit(1L << HllDailyMaxRho)).as("est_daily"))
+    val daily = DailyHll.sums(regs, "d")
+      .select(col("d"), DailyHll.est(DailyHll.sInt(col("occ"), col("nocc"))).as("est_daily"))
     val roll = dense.groupBy("d").agg(
-      sum(when(col("mj7").isNotNull,
-        expr(s"shiftleft(1L, cast($HllDailyMaxRho - mj7 AS int))"))
+      sum(when(col("mj7").isNotNull, DailyHll.weight("mj7"))
         .otherwise(lit(0L))).as("occ7"),
       count(col("mj7")).as("nocc7"))
-      .select(col("d"), est(col("occ7") +
-        (lit(HllDailyM.toLong) - col("nocc7")) * lit(1L << HllDailyMaxRho)).as("est_7d"))
+      .select(col("d"), DailyHll.est(DailyHll.sInt(col("occ7"), col("nocc7"))).as("est_7d"))
     val exactDaily = ev.groupBy("d")
       .agg(countDistinct("user_id").as("exact_daily"))
     val exact7 = ev
@@ -4374,10 +4378,7 @@ object TrainingDataQueries {
   }
 
   private val qHllDailySql = {
-    val alpha = 0.697 // standard HLL alpha for m = 32
-    val num = alpha * HllDailyM * HllDailyM * (1L << HllDailyMaxRho).toDouble
-    def estSql(sInt: String): String =
-      Rounding.rSql(s"$num / CAST($sInt AS DOUBLE)", 4)
+    val hll = DailyHll
     s"""WITH ev AS (
        |  SELECT CAST(ts AS DATE) AS d,
        |    date_diff('day', DATE '2020-01-01', CAST(ts AS DATE)) AS dk, user_id
@@ -4386,14 +4387,10 @@ object TrainingDataQueries {
        |  SELECT d, dk,
        |    ${md5SidSql("CAST(user_id AS VARCHAR)", HllHexLen)} AS h
        |  FROM ev),
-       |regs AS (
-       |  SELECT d, dk, h % $HllDailyM AS bucket,
-       |    max(CASE WHEN h // $HllDailyM = 0 THEN $HllDailyMaxRho
-       |      ELSE $HllDailyMaxRho - length(bin(h // $HllDailyM)) END) AS mj
-       |  FROM h GROUP BY 1, 2, 3),
+       |${hll.regsCte(Seq("d", "dk"), "h")},
        |days AS (SELECT DISTINCT d, dk FROM ev),
        |grid AS (
-       |  SELECT d, dk, unnest(generate_series(0, ${HllDailyM - 1})) AS bucket
+       |  SELECT d, dk, unnest(generate_series(0, ${hll.m - 1})) AS bucket
        |  FROM days),
        |dense AS (
        |  SELECT g.d, g.dk, g.bucket,
@@ -4401,13 +4398,13 @@ object TrainingDataQueries {
        |      RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS mj7
        |  FROM grid g LEFT JOIN regs r ON r.dk = g.dk AND r.bucket = g.bucket),
        |daily AS (
-       |  SELECT d, ${estSql(
-             s"sum(1::BIGINT << CAST($HllDailyMaxRho - mj AS INT)) + ($HllDailyM - count(*)) * (1::BIGINT << $HllDailyMaxRho)")}
+       |  SELECT d, ${hll.estSql(hll.sIntSql(s"sum(${hll.weightSql("mj")})", "count(*)"))}
        |    AS est_daily
        |  FROM regs GROUP BY 1),
        |roll AS (
-       |  SELECT d, ${estSql(
-             s"sum(CASE WHEN mj7 IS NOT NULL THEN 1::BIGINT << CAST($HllDailyMaxRho - mj7 AS INT) ELSE 0 END) + ($HllDailyM - count(mj7)) * (1::BIGINT << $HllDailyMaxRho)")}
+       |  SELECT d, ${hll.estSql(hll.sIntSql(
+             s"sum(CASE WHEN mj7 IS NOT NULL THEN ${hll.weightSql("mj7")} ELSE 0 END)",
+             "count(mj7)"))}
        |    AS est_7d
        |  FROM dense GROUP BY 1),
        |ed AS (
@@ -4587,8 +4584,7 @@ object TrainingDataQueries {
 
   private def qHllAgg(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    t(s, dir, "documents")
-      .select(col("source"), explode(simpleTokens(col("text"))).as("tok"))
+    sourceToks(s, dir)
       .select(col("source"), md5Sid(col("tok"), HllHexLen).as("h"))
       .groupBy("source")
       .agg(expr("graft_hll(h, 8)").as("sk"))
@@ -4598,34 +4594,16 @@ object TrainingDataQueries {
       .orderBy("source")
   }
 
-  private val qHllAggSql = {
-    val alpha = 0.7213 / (1 + 1.079 / HllM)
-    val num = alpha * HllM * HllM * (1L << HllMaxRho).toDouble
-    s"""WITH toks AS (
-       |  SELECT source,
-       |    unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-       |      x -> x <> '')) AS tok
-       |  FROM documents),
+  private val qHllAggSql =
+    s"""WITH $SourceToksCte,
        |h AS (
        |  SELECT source, ${md5SidSql("tok", HllHexLen)} AS h FROM toks),
-       |regs AS (
-       |  SELECT source, h % $HllM AS bucket,
-       |    max(CASE WHEN h // $HllM = 0 THEN $HllMaxRho
-       |      ELSE $HllMaxRho - length(bin(h // $HllM)) END) AS mj
-       |  FROM h GROUP BY 1, 2),
-       |sums AS (
-       |  SELECT source,
-       |    CAST(sum(1::BIGINT << CAST($HllMaxRho - mj AS INT)) AS BIGINT) AS occ,
-       |    count(*) AS nocc
-       |  FROM regs GROUP BY 1)
+       |${DocsHll.regsCte(Seq("source"), "h")},
+       |${DocsHll.sumsCte("sums", Seq("source"), "regs")}
        |SELECT source,
-       |  ${Rounding.rSql(
-             s"$num / CAST(occ + ($HllM - nocc) * (1::BIGINT << $HllMaxRho) AS DOUBLE)", 4)}
-       |    AS est_distinct,
-       |  CAST($HllM - nocc AS BIGINT) AS zero_registers
+       |  ${DocsHll.estZerosSql("est_distinct")}
        |FROM sums
        |ORDER BY 1""".stripMargin
-  }
 
   // --- sampled quantile estimation (deterministic bottom-k sample) ----------
   //

@@ -3,6 +3,7 @@ package graft.streaming
 import com.fasterxml.jackson.annotation.JsonProperty
 import graft.JsonCodec
 import graft.model.Turn
+import graft.pipeline.CorpusBuild
 import graft.pipeline.TableIO.deleteTree
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -42,7 +43,13 @@ import scala.jdk.CollectionConverters._
   */
 object StreamingCorpusBuild {
 
-  val WindowTokens = 512L
+  val WindowTokens: Long = CorpusBuild.WindowTokens
+
+  /** Pack shards per micro-batch (the batch build uses 2^16). Window ids
+    * depend on it, so a store keeps this count for life.
+    */
+  private val PackShards = 1L << 12
+
   private val BloomWords = 256
   private val BloomK = 4
   private val BloomBits = BloomWords * 63
@@ -77,6 +84,16 @@ object StreamingCorpusBuild {
       .getOrElse(emptyState)
   }
 
+  /** `df` (…, h) with one row per Bloom probe `j` < BloomK of its content
+    * hash `h`: bit position `p`, filter word `w` and bit mask `m`.
+    */
+  private def bloomBits(df: DataFrame): DataFrame =
+    df.select(col("*"), explode(typedLit((0 until BloomK).toList)).as("j"))
+      .withColumn("p", pmod(conv(substring(md5(concat(col("h"),
+        col("j").cast("string"))), 1, 12), 16, 10).cast("long"), lit(BloomBits.toLong)))
+      .withColumn("w", expr("CAST(p DIV 63 AS INT)"))
+      .withColumn("m", expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 63 AS INT))"))
+
   private def committed(buildDir: String, batchId: Long): Boolean =
     Files.exists(stateDir(buildDir).resolve(s"v$batchId.json"))
 
@@ -95,11 +112,8 @@ object StreamingCorpusBuild {
     val ex = StreamingExtraction.extracted(batch)
       .filter(col("skip_reason") === "")
       .select(col("conv_id"), col("turn_idx"), col("text"))
-    val toks = size(filter(split(lower(col("text")), "\\s+"), x => x =!= ""))
-    val alphaFrac = (length(regexp_replace(col("text"), "[^a-zA-Z]", "")) + 1.0) /
-      (length(col("text")) + 1.0)
-    val gated = ex.withColumn("n_toks", toks.cast("long"))
-      .filter(col("n_toks").between(3, 100000) && alphaFrac > 0.25)
+    val gated = CorpusBuild.withTokenCount(ex)
+      .filter(CorpusBuild.gatePass)
       .withColumn("h", md5(col("text")))
 
     // in-batch exact dedup, first wins
@@ -109,13 +123,7 @@ object StreamingCorpusBuild {
 
     // history dedup: broadcast-literal Bloom probe, exact verify on hits
     val bloomLit = typedLit(st.bloom.toSeq)
-    val js = explode(typedLit((0 until BloomK).toList)).as("j")
-    val withBits = inBatch.select(col("conv_id"), col("turn_idx"), col("h"), js)
-      .withColumn("p", pmod(conv(substring(md5(concat(col("h"),
-        col("j").cast("string"))), 1, 12), 16, 10).cast("long"), lit(BloomBits.toLong)))
-      .withColumn("w", expr("CAST(p DIV 63 AS INT)"))
-      .withColumn("m", expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 63 AS INT))"))
-    val bloomHits = withBits
+    val bloomHits = bloomBits(inBatch.select(col("h")))
       .withColumn("set",
         when((element_at(bloomLit, col("w") + 1).bitwiseAND(col("m"))) =!= 0, 1)
           .otherwise(0))
@@ -129,31 +137,11 @@ object StreamingCorpusBuild {
     val fresh = inBatch.join(broadcast(confirmedDups), Seq("h"), "leftanti")
 
     // decontamination (keyed broadcast anti-join on eval trigram hashes)
-    val withGrams = fresh
-      .withColumn("tks", filter(split(lower(col("text")), "\\s+"), x => x =!= ""))
-      .filter(size(col("tks")) >= 3)
-      .select(col("conv_id"), col("turn_idx"),
-        explode(expr("transform(sequence(0, size(tks)-3)," +
-          " i -> hash(tks[i], tks[i+1], tks[i+2]))")).as("g"))
-    val contaminatedIds = withGrams
-      .join(broadcast(evalTrigrams.select("g")), "g")
-      .select("conv_id", "turn_idx").distinct()
-    val clean = fresh.join(contaminatedIds, Seq("conv_id", "turn_idx"), "leftanti")
-      .persist()
+    val clean = CorpusBuild.decontaminate(fresh, evalTrigrams).persist()
 
-    // pack from the committed cursor (two-level prefix sum, offsets
-    // globally consistent across batches)
-    val sharded = clean.withColumn("shard", pmod(xxhash64(col("conv_id")), lit(1L << 12)))
-    val inShard = sharded.withColumn("cum", sum("n_toks").over(
-      Window.partitionBy("shard").orderBy("conv_id", "turn_idx")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val bases = sharded.groupBy("shard").agg(sum("n_toks").as("stk"))
-      .withColumn("base", sum("stk").over(Window.orderBy("shard")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)) - col("stk"))
-      .select("shard", "base")
-    val packed = inShard.join(broadcast(bases), "shard")
-      .withColumn("off", lit(st.cursor) + col("base") + col("cum") - col("n_toks"))
-      .withColumn("window_id", expr(s"off DIV $WindowTokens"))
+    // pack from the committed cursor (offsets globally consistent across
+    // batches)
+    val packed = CorpusBuild.pack(clean, PackShards, st.cursor)
       .withColumn("batch_id", lit(batchId))
       .select("batch_id", "conv_id", "turn_idx", "text", "n_toks", "off", "window_id")
       .persist()
@@ -168,11 +156,7 @@ object StreamingCorpusBuild {
       .parquet(fingerprintsDir(buildDir))
 
     // fold this batch's kept hashes into the Bloom words (KB-scale agg)
-    val newBits = clean.select(col("h"), js)
-      .withColumn("p", pmod(conv(substring(md5(concat(col("h"),
-        col("j").cast("string"))), 1, 12), 16, 10).cast("long"), lit(BloomBits.toLong)))
-      .select(expr("CAST(p DIV 63 AS INT)").as("w"),
-        expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 63 AS INT))").as("m"))
+    val newBits = bloomBits(clean.select(col("h")))
       .groupBy("w").agg(expr("bit_or(m)").as("wd"))
       .collect().map(r => r.getAs[Int]("w") -> r.getAs[Long]("wd")).toMap
     val bloom = st.bloom.clone()

@@ -10,7 +10,8 @@ import scala.jdk.CollectionConverters._
   * list: both allow-lists are EXACT, so a new `main` or `SPARK_GRAFT_*`
   * knob under `src/main/scala` — or a stale entry — fails here and shows
   * up as a test diff. JSON goes through one codec: one file builds a
-  * Jackson mapper.
+  * Jackson mapper. Copied blocks are a reviewed list too: a new
+  * six-line verbatim run fails here.
   */
 class MainSurfaceGuardSpec extends AnyFunSuite {
 
@@ -48,6 +49,31 @@ class MainSurfaceGuardSpec extends AnyFunSuite {
       "SPARK_GRAFT_LINEAR_RUNS", "SPARK_GRAFT_NO_AQE", "SPARK_GRAFT_NO_SHARE",
       "SPARK_GRAFT_QUERY_REPS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_SKIP_CLUSTER",
       "SPARK_GRAFT_SKIP_QUERIES"))
+  }
+
+  test("the six-line verbatim runs of src/main/scala are exactly the reviewed set") {
+    // A run is six consecutive trimmed lines, each longer than 3
+    // characters and not a `//` or `*` comment line, that occur at two
+    // or more places. Counted: the lines inside any run, per file.
+    val window = 6
+    def counts(l: String) = l.length > 3 && !l.startsWith("//") && !l.startsWith("*")
+    val files = sources.map { case (p, src) =>
+      root.relativize(p).toString -> src.split("\n", -1).map(_.trim).toVector
+    }
+    val at = scala.collection.mutable.HashMap.empty[Vector[String], Vector[(String, Int)]]
+    for ((f, ls) <- files; i <- 0 to ls.length - window) {
+      val w = ls.slice(i, i + window)
+      if (w.forall(counts)) at(w) = at.getOrElse(w, Vector.empty) :+ (f -> i)
+    }
+    val inRuns = at.values.filter(_.size >= 2).flatten
+      .flatMap { case (f, i) => (i until i + window).map(f -> _) }.toSet
+    val perFile = inRuns.groupBy(_._1).map { case (f, ls) => f -> ls.size }
+    // the typed merge loops (and imports) of the Long and Double vector
+    // aggregates, and the shared overrides of the two as-of join execs
+    assert(perFile == Map(
+      "graft/functions/GramAgg.scala" -> 13,
+      "graft/functions/VecSumAgg.scala" -> 13,
+      "graft/plans/AsofJoin.scala" -> 12))
   }
 
   test("a Jackson mapper is built in one src/main file: the JSON codec") {
